@@ -253,37 +253,19 @@ def reference_singlenode_baseline(n_docs: int = 2000) -> dict:
     }
 
 
-def time_index_build(
-    cores: int,
-    corpus_path: str,
-    out_dir: str,
-    mode: str = "classic",
-    metrics_path: str | None = None,
-) -> dict:
+def time_index_build(cores: int, corpus_path: str, out_dir: str) -> dict:
     """Full index build (clean → ids → tokenize → aggregate → layout →
-    write), timed from first action to committed parquet; session setup
-    excluded.  Wall AND cgroup CPU-seconds are recorded (classic also gets
-    a per-phase CPU split at the tokenize/layout boundary).
-
-    ``mode``:
-      * ``classic``   — indexer.build_index + write_index (serial phases,
-        exposes the tokenize/layout boundary the ceiling attribution
-        needs);
-      * ``pipelined`` — checkpoint.build_index_pipelined (each segment's
-        bucket layout overlaps the next segment's tokenize in a second
-        FAIR pool; no phase boundary — phase secs reported as None);
-      * ``auto``      — checkpoint.build_index_auto dispatching on the
-        metrics recorded at ``metrics_path`` (the bench seeds it from the
-        same round's classic AND pipelined builds, so the dispatch
-        decision compares SAME-EPOCH measured walls at the same core
-        count — the ``measured_both`` basis).
+    write) with indexer.build_index + write_index, timed from first action
+    to committed parquet; session setup excluded.  Wall AND cgroup
+    CPU-seconds are recorded, plus a per-phase split at the
+    tokenize/layout boundary (build_index runs the Python-CPU-bound work
+    eagerly; write_index is the JVM shuffle/parquet layout).
     """
-    from modernsearchengines_spark.operators import checkpoint, indexer
+    from modernsearchengines_spark.operators import indexer
     from modernsearchengines_spark.session import get_spark
 
-    extra = {} if mode == "classic" else {"spark.scheduler.mode": "FAIR"}
     spark = get_spark(
-        f"bench-index-{mode[0]}{cores}",
+        f"bench-index-c{cores}",
         cores=cores,
         # 4x cores + no AQE coalescing for the BUILD session: the tokenize
         # and posting stages are Python-CPU-bound, and AQE's byte-based
@@ -304,7 +286,6 @@ def time_index_build(
             # per fixture row group; a real 100 TB table has thousands of
             # splits per executor and this shape for free.
             "spark.sql.files.maxPartitionBytes": "4m",
-            **extra,
         },
     )
     docs = spark.read.parquet(corpus_path)
@@ -315,41 +296,28 @@ def time_index_build(
     from pyspark.sql import functions as F
 
     docs.agg(F.sum(F.length("text")), F.sum(F.length("html"))).collect()
-    report: dict = {}
     c0 = cpu_ns()
     t0 = time.time()
     clean = indexer.clean_docs(docs)
-    tok_sec = lay_sec = tok_cpu = lay_cpu = None
-    if mode == "pipelined":
-        checkpoint.build_index_pipelined(spark, clean, out_dir, report=report)
-    elif mode == "auto":
-        checkpoint.build_index_auto(
-            spark, clean, out_dir,
-            metrics_path=metrics_path, n_docs_hint=n_input, report=report,
-        )
-    else:
-        # Phase split for ceiling attribution: build_index runs the
-        # Python-CPU-bound work eagerly (clean + simhash + tokenize/encode
-        # UDF + enriched segment write + stats); write_index is the JVM
-        # shuffle/parquet layout (df agg, bucket exchange,
-        # postings/blocks/terms writes).
-        idx = indexer.build_index(spark, clean)
-        t1 = time.time()
-        tok_cpu = _cpu_delta_sec(c0)
-        c1 = cpu_ns()
-        indexer.write_index(idx, out_dir)
-        tok_sec, lay_sec = round(t1 - t0, 3), round(time.time() - t1, 3)
-        lay_cpu = _cpu_delta_sec(c1)
+    # Phase split for ceiling attribution: build_index runs the
+    # Python-CPU-bound work eagerly (clean + simhash + tokenize/encode
+    # UDF + enriched segment write + stats); write_index is the JVM
+    # shuffle/parquet layout (df agg, bucket exchange,
+    # postings/blocks/terms writes).
+    idx = indexer.build_index(spark, clean)
+    t1 = time.time()
+    tok_cpu = _cpu_delta_sec(c0)
+    c1 = cpu_ns()
+    indexer.write_index(idx, out_dir)
+    tok_sec, lay_sec = round(t1 - t0, 3), round(time.time() - t1, 3)
+    lay_cpu = _cpu_delta_sec(c1)
     wall = time.time() - t0
     cpu_sec = _cpu_delta_sec(c0)
+    indexer.unpersist_index(idx)
     n_postings = spark.read.parquet(f"{out_dir}/postings").count()
     spark.stop()
     return {
         "cores": cores,
-        "mode": mode,
-        "auto_decision": report.get("decision"),
-        "auto_basis": report.get("basis"),
-        "auto_segments": report.get("n_segments"),
         "n_docs": n_input,
         "wall_sec": round(wall, 3),
         "cpu_sec": cpu_sec,
@@ -631,39 +599,7 @@ def calibrate(low: int, high: int) -> dict:
     return {**hw_parallel_ceiling(low, high), **mem_parallel_ceiling(low, high)}
 
 
-def _seed_auto_metrics(path: str, build_row: dict, kind: str) -> None:
-    """Record a measured build into the auto-dispatch sidecar so
-    build_index_auto dispatches on SAME-EPOCH measurements at the same
-    core count.  ``kind='classic'`` records the phase split;
-    ``kind='pipelined'`` records the measured pipelined wall — with both
-    present the dispatcher compares measured walls directly
-    (basis=measured_both)."""
-    m = {}
-    if os.path.exists(path):
-        with open(path) as fh:
-            m = json.load(fh)
-    rec = m.setdefault(str(build_row["cores"]), {})
-    if kind == "classic":
-        rec.update(
-            tokenize_sec=build_row["tokenize_phase_sec"],
-            layout_sec=build_row["layout_phase_sec"],
-            n_docs=build_row["n_docs"],
-        )
-    else:
-        rec.update(
-            pipelined_wall_sec=build_row["wall_sec"],
-            pipelined_n_docs=build_row["n_docs"],
-            pipelined_n_segments=build_row.get("auto_segments") or 4,
-        )
-    with open(path, "w") as fh:
-        json.dump(m, fh)
-
-
-BUILD_CONFIGS = (
-    "classic_low", "classic_high",
-    "pipelined_low", "pipelined_high",
-    "auto_low", "auto_high",
-)
+BUILD_CONFIGS = ("classic_low", "classic_high")
 
 
 def lowpair_scaling(
@@ -697,7 +633,7 @@ def lowpair_scaling(
         for cores in order:
             lvl = "low" if cores == low else "high"
             builds[lvl] = time_index_build(
-                cores, corpus_path, f"{CORPUS_CACHE}/idx_lp_{lvl}", "classic"
+                cores, corpus_path, f"{CORPUS_CACHE}/idx_lp_{lvl}"
             )
         rounds.append({"order": list(order), **builds})
 
@@ -893,27 +829,14 @@ def _lowpair_history_lines(runs: list[dict]) -> list[str]:
 def scaling_rounds(
     low: int, high: int, corpus_path: str, repeat: int = 1
 ) -> dict:
-    """A/B build protocol, one round by default (VERDICT r4 item 1 — the
+    """N→4N build protocol, one round by default (VERDICT r4 item 1 — the
     r4 three-round default overran the driver budget; repeat>1 restores
     the interleaved epoch-forensic protocol).
 
     Each ROUND runs, back-to-back inside one hypervisor epoch: a CPU+DRAM
-    calibration, then a classic → pipelined → auto TRIPLET at the low
-    core count, then the same triplet at the high count.  The classic
-    builds seed the auto dispatcher's sidecar with their phase split AND
-    the pipelined builds seed their measured walls, so the auto builds
-    dispatch by comparing same-epoch measured walls (basis=measured_both)
-    — the r4 failure mode (model-constant dispatch off a thin margin) is
-    structurally gone.  Grouping by core count (r5) keeps each auto build
-    within ~2 builds of its OWN comparators: the graded auto-vs-fixed
-    check is within-core-count, and the old ordering (all three
-    strategies at low, then all at high) ran auto 4 builds after its
-    classic comparator — runs 2 and 3 show auto eating the degraded
-    epoch tail (auto_high cpu 6447 vs classic 3707 in run 3) with zero
-    intrinsic overhead when adjacency holds (run 1: auto cpu BELOW the
-    fixed strategy it dispatched).  The N→4N ratio spans the triplet
-    boundary either way; its headline metric (CPU-work) is
-    steal-insensitive by construction.
+    calibration, then one build (indexer.build_index + write_index) at
+    the low core count and one at the high count.  The N→4N ratio's
+    headline metric (CPU-work) is steal-insensitive by construction.
 
     HEADLINE (VERDICT r4 item 3): wall-clock scaling on this box is
     bimodal-epoch-noise three rounds running, so the headline scaling
@@ -929,24 +852,12 @@ def scaling_rounds(
     scheduled-CPU, so this number is comparable across epochs.  Wall
     speedups and the composite Amdahl ceiling are still reported.
     """
-    mpath = os.path.join(CORPUS_CACHE, "auto_metrics.json")
-    if os.path.exists(mpath):
-        os.remove(mpath)
     rounds: list[dict] = []
     for _ in range(repeat):
         row: dict = {"calibration": calibrate(low, high)}
         for lvl, cores in (("low", low), ("high", high)):
-            idx_dir = f"{CORPUS_CACHE}/idx_{lvl}"
             row[f"classic_{lvl}"] = time_index_build(
-                cores, corpus_path, idx_dir, "classic"
-            )
-            _seed_auto_metrics(mpath, row[f"classic_{lvl}"], "classic")
-            row[f"pipelined_{lvl}"] = time_index_build(
-                cores, corpus_path, idx_dir, "pipelined"
-            )
-            _seed_auto_metrics(mpath, row[f"pipelined_{lvl}"], "pipelined")
-            row[f"auto_{lvl}"] = time_index_build(
-                cores, corpus_path, idx_dir, "auto", mpath
+                cores, corpus_path, f"{CORPUS_CACHE}/idx_{lvl}"
             )
         rounds.append(row)
 
@@ -984,34 +895,33 @@ def scaling_rounds(
             "cpu_sec_median": round(_median(cpus), 3) if cpus else None,
         }
 
-    # --- within-round speedups per strategy ---------------------------------
-    speedups = {}
-    for strat in ("classic", "pipelined", "auto"):
-        per_round = [
-            r[f"{strat}_high"]["docs_per_sec"]
-            / r[f"{strat}_low"]["docs_per_sec"]
-            for r in accepted
-        ]
-        speedups[strat] = {
+    # --- within-round speedups ----------------------------------------------
+    per_round = [
+        r["classic_high"]["docs_per_sec"] / r["classic_low"]["docs_per_sec"]
+        for r in accepted
+    ]
+    speedups = {
+        "classic": {
             "median": round(_median(per_round), 3),
             "runs": [round(x, 3) for x in per_round],
         }
+    }
 
     # --- CPU-work scaling headline (steal-insensitive) ----------------------
-    def _cpu_eff(strat: str, r: dict) -> float | None:
-        lo, hi = r[f"{strat}_low"]["cpu_sec"], r[f"{strat}_high"]["cpu_sec"]
+    def _cpu_eff(r: dict) -> float | None:
+        lo, hi = r["classic_low"]["cpu_sec"], r["classic_high"]["cpu_sec"]
         infl = r["calibration"].get("hw_cpu_inflation")
         if not (lo and hi and infl):
             return None
         return round(infl / (hi / lo), 3)
 
-    cpu_eff = {}
-    for strat in ("classic", "pipelined", "auto"):
-        vals = [v for r in accepted if (v := _cpu_eff(strat, r)) is not None]
-        cpu_eff[strat] = {
+    vals = [v for r in accepted if (v := _cpu_eff(r)) is not None]
+    cpu_eff = {
+        "classic": {
             "median": round(_median(vals), 3) if vals else None,
             "runs": vals,
         }
+    }
     tok_eff_runs = []
     for r in accepted:
         lo = r["classic_low"]["tokenize_cpu_sec"]
@@ -1041,13 +951,11 @@ def scaling_rounds(
         mem_s = max(r["calibration"]["mem_speedup"], 1.0)
         comp = (tok + lay) / (tok / hw_s + lay / mem_s)
         composites.append(round(comp, 3))
-        auto_sp = (
-            r["auto_high"]["docs_per_sec"] / r["auto_low"]["docs_per_sec"]
-        )
-        eff_comp.append(round(auto_sp / comp, 3))
+        sp = r["classic_high"]["docs_per_sec"] / r["classic_low"]["docs_per_sec"]
+        eff_comp.append(round(sp / comp, 3))
 
     ratio = high / low
-    auto_sp_med = speedups["auto"]["median"]
+    sp_med = speedups["classic"]["median"]
     return {
         "low_cores": low,
         "high_cores": high,
@@ -1066,8 +974,8 @@ def scaling_rounds(
             "runs": tok_eff_runs,
         },
         "layout_shuffle_rows_per_core_sec": shuffle_rates,
-        "engine_speedup": auto_sp_med,
-        "scaling_efficiency_raw": round(auto_sp_med / ratio, 3),
+        "engine_speedup": sp_med,
+        "scaling_efficiency_raw": round(sp_med / ratio, 3),
         "composite_hw_speedups": composites,
         "composite_hw_speedup": round(_median(composites), 3),
         "eff_composite_runs": eff_comp,
@@ -1083,24 +991,6 @@ def scaling_rounds(
             ],
             "mem_speedup": [
                 r["calibration"]["mem_speedup"] for r in rounds
-            ],
-        },
-        "winner_low": min(
-            ("classic", "pipelined"),
-            key=lambda s: summary[f"{s}_low"]["wall_sec_median"],
-        ),
-        "winner_high": min(
-            ("classic", "pipelined"),
-            key=lambda s: summary[f"{s}_high"]["wall_sec_median"],
-        ),
-        "auto_decisions": {
-            "low": [
-                (r["auto_low"]["auto_decision"], r["auto_low"]["auto_basis"])
-                for r in rounds
-            ],
-            "high": [
-                (r["auto_high"]["auto_decision"], r["auto_high"]["auto_basis"])
-                for r in rounds
             ],
         },
     }
@@ -1176,11 +1066,12 @@ def _compact_from(result: dict, suite_t0: float, partial: bool) -> dict:
         compact["eff_composite"] = scaling[
             "scaling_efficiency_vs_composite_ceiling"
         ]
-        compact["eff_cpu"] = scaling["cpu_work_efficiency"]["auto"]["median"]
-        compact["eff_cpu_classic"] = scaling["cpu_work_efficiency"][
-            "classic"
-        ]["median"]
-        compact["docs_per_sec"] = scaling["summary"]["auto_high"][
+        # eff_cpu and eff_cpu_classic both report the one build
+        compact["eff_cpu"] = scaling["cpu_work_efficiency"]["classic"][
+            "median"
+        ]
+        compact["eff_cpu_classic"] = compact["eff_cpu"]
+        compact["docs_per_sec"] = scaling["summary"]["classic_high"][
             "docs_per_sec_median"
         ]
     # lowpair headline: the N→4N pair inside the box's physical envelope
@@ -1260,36 +1151,26 @@ def _repro_section(scaling: dict) -> list[str]:
         "files committed as BENCH/scaling_runN.json).  The headline is "
         "reproducible when consecutive runs agree within 10%:",
         "",
-        "| run | eff_cpu classic | eff_cpu pipelined | eff_cpu auto | tokenize-only | DRAM cal (GB/s proxy) |",
-        "|---|---|---|---|---|---|",
+        "| run | eff_cpu | tokenize-only | DRAM cal (GB/s proxy) |",
+        "|---|---|---|---|",
     ]
     meds = []
     for name, s in runs:
-        ce = s.get("cpu_work_efficiency", {})
         tok = s.get("cpu_work_efficiency_tokenize", {}).get("median")
         cal = s.get("calibration_medians", {}).get("mem_thr_low")
-        row = [
-            ce.get("classic", {}).get("median"),
-            ce.get("pipelined", {}).get("median"),
-            ce.get("auto", {}).get("median"),
-        ]
-        meds.append(row)
-        lines.append(
-            f"| {name} | {row[0]} | {row[1]} | {row[2]} | {tok} | {cal} |"
-        )
+        # the eff_cpu the compact line reports: classic in current runs,
+        # the auto-dispatched build in runs recorded before it was removed
+        ce = s.get("cpu_work_efficiency", {})
+        med = (ce.get("auto") or ce.get("classic") or {}).get("median")
+        meds.append(med)
+        lines.append(f"| {name} | {med} | {tok} | {cal} |")
     a, b = meds[-2], meds[-1]
-    rel = [
-        round(abs(x - y) / max(abs(x), 1e-9), 3)
-        if x is not None and y is not None
+    rel = (
+        round(abs(a - b) / max(abs(a), 1e-9), 3)
+        if a is not None and b is not None
         else None
-        for x, y in zip(a, b)
-    ]
-    # The verdict gates on the HEADLINE strategy (auto — the eff_cpu the
-    # compact JSON line reports); classic/pipelined deltas are disclosed
-    # as supporting rows.  Fixed-strategy walls ride each epoch's DRAM
-    # mode harder because they always run both phases in full.
-    auto_rel = rel[2]
-    ok = auto_rel is not None and auto_rel <= 0.10
+    )
+    ok = rel is not None and rel <= 0.10
     cals = [
         s.get("calibration_medians", {}).get("mem_thr_low")
         for _, s in runs[-2:]
@@ -1311,11 +1192,8 @@ def _repro_section(scaling: dict) -> list[str]:
     )
     lines += [
         "",
-        f"Latest two runs' relative deltas (classic/pipelined/auto): {rel} "
-        f"→ headline (auto) delta {auto_rel} — "
-        f"**{verdict}** "
-        "(verdict gates on the auto strategy, the eff_cpu the compact "
-        f"artifact reports; all three deltas disclosed).{note}",
+        f"Latest two runs' relative eff_cpu delta: {rel} — "
+        f"**{verdict}**.{note}",
         "",
     ]
     return lines
@@ -1347,7 +1225,7 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
     if scaling:
         s = scaling["summary"]
         ratio = round(
-            s["auto_high"]["docs_per_sec_median"]
+            s["classic_high"]["docs_per_sec_median"]
             / ref_baseline["docs_per_sec"],
             1,
         )
@@ -1379,25 +1257,17 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
         if north_ptr:
             lines += [north_ptr, ""]
         lines += [
-            f"The Spark engine at local[{scaling['high_cores']}] (auto-"
-            f"dispatched build) indexes **{ratio}× the reference "
+            f"The Spark engine at local[{scaling['high_cores']}] "
+            f"indexes **{ratio}× the reference "
             "single-node throughput** on the same corpus generator.",
             "",
             "### Protocol",
             "",
             f"{scaling['repeat']} round(s); each round runs a CPU+DRAM "
-            "calibration, then a classic → pipelined → auto TRIPLET per "
-            "core count (low first, then high) back-to-back inside one "
-            "hypervisor epoch — grouping by core count keeps each auto "
-            "build adjacent to the fixed strategies it is graded against, "
-            "so minute-scale epoch drift cannot masquerade as dispatcher "
-            "overhead (runs 2-3 artifact under the old ordering).  The "
-            "classic builds seed the auto dispatcher's sidecar with their "
-            "phase split and the pipelined builds seed their measured "
-            "walls, so each auto build dispatches by comparing SAME-EPOCH "
-            "measured walls at its core count (basis=measured_both; the "
-            "auto_decisions row discloses the basis actually used per "
-            "round).  Speedups are WITHIN-round ratios — low and high "
+            "calibration, then one build (indexer.build_index + "
+            "write_index) per core count (low first, then high) "
+            "back-to-back inside one hypervisor epoch.  Speedups are "
+            "WITHIN-round ratios — low and high "
             "cores are never compared across epochs.  "
             f"{scaling['accepted_rounds']} round(s) accepted, "
             f"{scaling['rejected_rounds']} rejected by the 15% calibration "
@@ -1418,15 +1288,6 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
         ce = scaling["cpu_work_efficiency"]
         lines += [
             "",
-            f"Winner by median wall: local[{scaling['low_cores']}] → "
-            f"**{scaling['winner_low']}**, local[{scaling['high_cores']}] → "
-            f"**{scaling['winner_high']}**; build_index_auto decided "
-            f"{scaling['auto_decisions']['low']} at low / "
-            f"{scaling['auto_decisions']['high']} at high per round "
-            "((decision, basis) pairs — measured_both = dispatched by "
-            "comparing the same-round measured classic and pipelined "
-            "walls).",
-            "",
             "### CPU-work scaling at 8→32 (bus-saturated pair — "
             "steal-insensitive DIAGNOSTIC; the headline N→4N evidence is "
             "the 2→8 section below)",
@@ -1445,11 +1306,8 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "1.0 = all extra CPU at 4N is hardware-attributable; <1 = "
             "engine-attributable contention/overhead.  Target ≥0.8.",
             "",
-            "| strategy | eff_cpu (median) | runs |",
-            "|---|---|---|",
-            f"| classic | {ce['classic']['median']} | {ce['classic']['runs']} |",
-            f"| pipelined | {ce['pipelined']['median']} | {ce['pipelined']['runs']} |",
-            f"| auto (headline) | {ce['auto']['median']} | {ce['auto']['runs']} |",
+            f"eff_cpu (median): **{ce['classic']['median']}** "
+            f"(runs {ce['classic']['runs']}).",
             "",
             f"Tokenize-phase-only eff_cpu (classic phase split): "
             f"**{scaling['cpu_work_efficiency_tokenize']['median']}** "
@@ -1463,18 +1321,13 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "",
             "### Wall-clock view (epoch-dependent, reported for continuity)",
             "",
-            "| strategy | N→4N wall speedup (median within-round) | per-round |",
-            "|---|---|---|",
-            f"| classic | {sp['classic']['median']} | {sp['classic']['runs']} |",
-            f"| pipelined | {sp['pipelined']['median']} | {sp['pipelined']['runs']} |",
-            f"| auto (headline) | {sp['auto']['median']} | {sp['auto']['runs']} |",
-            "",
-            f"Engine wall speedup N→4N: **{scaling['engine_speedup']}×** "
-            f"(auto); raw efficiency thr(4N)/(4·thr(N)) = "
+            f"Engine wall speedup N→4N (median within-round): "
+            f"**{scaling['engine_speedup']}×** (per round "
+            f"{sp['classic']['runs']}); raw efficiency thr(4N)/(4·thr(N)) = "
             f"**{scaling['scaling_efficiency_raw']}**.  Composite Amdahl "
             "ceiling (per-round classic phase mix over its own "
             f"calibration): {scaling['composite_hw_speedups']}, median "
-            f"**{scaling['composite_hw_speedup']}×**; auto speedup / "
+            f"**{scaling['composite_hw_speedup']}×**; speedup / "
             f"ceiling = {scaling['eff_composite_runs']} (median "
             f"**{scaling['scaling_efficiency_vs_composite_ceiling']}**).",
             "",
@@ -1720,6 +1573,7 @@ def main() -> None:
         result["query_latency"] = time_queries(
             spark, index, sf_dir, budget_left=budget_left
         )
+        indexer.unpersist_index(index)
         spark.stop()
         emit("query_latency", final=True)
         return

@@ -3,18 +3,20 @@
 checkpoint at /root/reference/WebCrawler_basis.py:13-24).
 
 The corpus is split into ``n_segments`` deterministic url-hash segments.
-Each segment's RAW postings (term, doc_id, tf, positions_vb — no corpus-global
-stats yet) and doc stats are built and committed independently; a
-``_segments`` manifest row records lineage + metrics (n_docs, n_tokens,
-n_postings, wall_ms, status).  A crashed build resumes by skipping segments
-whose manifest row is ``done`` — the anti-join resume of SURVEY O-14.
+Each segment's enriched table (doc stats + local postings — no
+corpus-global stats yet, indexer.write_enriched) is built and committed
+independently; a ``_segments`` manifest row records lineage + metrics
+(n_docs, n_tokens, n_postings, wall_ms, status).  A crashed build resumes
+by skipping segments whose manifest row is ``done`` — the anti-join resume
+of SURVEY O-14.
 
-The merge step (global N, avg_doc_len, df, IDF, BM25, df>5 prune, blocks)
-runs over the union of segment outputs.  Global stats CANNOT be finalized
-per-segment (Q2/Q3: N and avg span the whole corpus), which is exactly why
-the reference's single-shot design doesn't scale and the rebuild separates
-raw-posting construction (resumable, embarrassingly parallel) from the
-cheap stats finalization pass.
+The merge step (global N, avg_doc_len, collision guard, df, IDF, blocks)
+runs over the union of segment outputs through the same
+indexer.score_and_layout that build_index uses.  Global stats CANNOT be
+finalized per-segment (Q2/Q3: N and avg span the whole corpus), which is
+exactly why the reference's single-shot design doesn't scale and the
+rebuild separates raw-posting construction (resumable, embarrassingly
+parallel) from the cheap stats finalization pass.
 
 Target layout is an Iceberg ``_segments`` table + snapshot per segment; in
 this sandbox each segment is a Parquet directory plus a JSON manifest file
@@ -63,35 +65,17 @@ def read_manifest(spark: SparkSession, out_dir: str) -> dict[int, dict]:
     return out
 
 
-def write_enriched_segment(seg_docs: DataFrame, out_dir: str, seg: int) -> None:
-    """One Arrow crossing per segment: the enriched (doc stats + local
-    postings) table IS the committed segment artifact; everything else
-    derives from the written parquet at merge time.  Length-capped docs
-    ride along with NULL-gated text exactly as in indexer.build_index —
-    they stay in the segment's doc stats (and hence in N / avg_doc_len,
-    Q2/Q3) with doc_len=0 / NULL aug_len, so the checkpointed and
-    single-shot builds return identical doc_stats (the reference keeps all
-    pages in its pages table)."""
-    (
-        seg_docs.withColumn(
-            "dp",
-            indexer.doc_postings_udf(
-                "url",
-                F.when(
-                    F.length("text") <= indexer.MAX_DOC_CHARS,
-                    F.col("text"),
-                ),
-            ),
-        )
-        .select(
-            "doc_id", "url", "warc_ts",
-            F.col("dp.aug_len").alias("aug_len"),
-            F.col("dp.doc_len").alias("doc_len"),
-            F.col("dp.postings").alias("postings"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/enriched/segment={seg}")
-    )
+def write_enriched_segment(
+    seg_docs: DataFrame, out_dir: str, seg: int | str
+) -> None:
+    """Commit one segment's enriched table (indexer.write_enriched — doc
+    stats + local postings, the build's one Arrow crossing) at
+    ``enriched/segment=<seg>``; everything else derives from the written
+    parquet at merge time.  Length-capped docs stay in the segment's doc
+    stats (and hence in N / avg_doc_len, Q2/Q3) with doc_len=0 / NULL
+    aug_len, so the checkpointed and single-shot builds return identical
+    doc_stats (the reference keeps all pages in its pages table)."""
+    indexer.write_enriched(seg_docs, f"{out_dir}/enriched/segment={seg}")
 
 
 def build_segments(
@@ -101,7 +85,7 @@ def build_segments(
     n_segments: int = 8,
     fail_after: int | None = None,
 ) -> list[dict]:
-    """Build raw posting segments, committing one manifest row per segment.
+    """Build enriched segments, committing one manifest row per segment.
 
     ``fail_after`` aborts after that many segments (crash-injection for the
     resume test).  Returns the manifest rows written this run.
@@ -149,14 +133,15 @@ def build_segments(
 def merge_segments(
     spark: SparkSession,
     out_dir: str,
-    n_total: int,
     n_segments: int,
     term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
     n_blocks: int = indexer.DEFAULT_N_BLOCKS,
     df_prune: int = indexer.DF_PRUNE,
 ) -> dict[str, DataFrame]:
     """Finalize the global index from completed segments (SURVEY M3 merge:
-    unionByName + re-aggregation; df/IDF/BM25 need corpus-global stats).
+    the union of the committed enriched segments through the shared
+    indexer.score_and_layout — N, avg_doc_len, the doc_id collision guard,
+    df/IDF and blocks need corpus-global stats).
 
     Validation is against the EXPECTED segment count, not just the manifest
     rows that happen to exist: a crash between a segment's (partial)
@@ -179,41 +164,7 @@ def merge_segments(
         spark.read.option("basePath", f"{out_dir}/enriched")
         .parquet(*[f"{out_dir}/enriched/segment={s}" for s in done])
     )
-    doc_stats = enriched.select(
-        "doc_id", "url", "warc_ts", "aug_len", "doc_len", "segment"
-    )
-
-    char_sum = enriched.agg(F.sum("aug_len")).collect()[0][0] or 0
-    avg_doc_len = char_sum / n_total if n_total else 0.0
-    corpus_stats = spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
-    )
-
-    postings_with_len = enriched.select(
-        "doc_id", "doc_len", F.explode("postings").alias("p")
-    ).select(
-        "doc_id",
-        "doc_len",
-        F.col("p.term").alias("term"),
-        F.col("p.tf").alias("tf"),
-        F.col("p.positions_vb").alias("positions_vb"),
-    )
-    postings, blocks, terms = indexer.score_and_layout(
-        postings_with_len,
-        n_total,
-        float(avg_doc_len),
-        term_buckets,
-        n_blocks,
-        df_prune,
-        term_df=indexer.term_doc_frequency(enriched),
-    )
-    return {
-        "postings": postings,
-        "blocks": blocks,
-        "terms": terms,
-        "doc_stats": doc_stats.drop("segment"),
-        "corpus_stats": corpus_stats,
-    }
+    return indexer.score_and_layout(enriched, term_buckets, n_blocks, df_prune)
 
 
 def build_index_checkpointed(
@@ -226,392 +177,33 @@ def build_index_checkpointed(
     """Segmented equivalent of indexer.build_index; returns None if the run
     was aborted before all segments completed (caller resumes later)."""
     docs = indexer.assign_doc_ids(clean)
-    n_total = docs.count()
     build_segments(spark, docs, out_dir, n_segments, fail_after)
     manifest = read_manifest(spark, out_dir)
     if len([r for r in manifest.values() if r["status"] == "done"]) < n_segments:
         return None
-    return merge_segments(spark, out_dir, n_total, n_segments)
+    return merge_segments(spark, out_dir, n_segments)
 
-
-# ---------------------------------------------------------------------------
-# Pipelined build: overlap tokenize (Python-CPU) with layout (shuffle/IO)
-# ---------------------------------------------------------------------------
 
 def layout_segment(
     spark: SparkSession,
     out_dir: str,
-    seg: int,
+    seg: int | str,
     term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
     n_blocks: int = indexer.DEFAULT_N_BLOCKS,
 ) -> None:
-    """Bucket-layout one committed enriched segment into the global
-    postings table (append).  Deferred scoring (indexer.bm25_expr) makes
-    this possible: the persisted posting row is (tf, dl, positions_vb) —
-    corpus-global-free — so the layout shuffle+write can run while LATER
-    segments are still tokenizing, instead of waiting behind the global
-    stats barrier.  The df>5 prune is NOT applied to the stored rows
-    (global df is unknown mid-pipeline); it is enforced at query time by
-    the terms-table join (query.attach_scoring_stats inner semantics),
-    which yields identical results — the skipped rows are ~2% of postings
-    (df≤5 terms hold ≤5 postings each; Zipf tail).
-    """
-    enriched = spark.read.parquet(f"{out_dir}/enriched/segment={seg}")
+    """Append one committed enriched segment's postings
+    (indexer.layout_postings) to ``out_dir/postings``, leaving every
+    existing posting file untouched.  The layout needs no corpus-global
+    stat, so this is all an append has to write into the fat table; the
+    df>5 prune stays a rule of the terms table."""
     (
-        enriched.select(
-            "doc_id",
-            F.col("doc_len").cast("int").alias("dl"),
-            F.explode("postings").alias("p"),
-        )
-        .select(
-            F.pmod(F.xxhash64("p.term"), F.lit(term_buckets))
-            .cast("int")
-            .alias("term_bucket"),
-            F.col("p.term").alias("term"),
-            "doc_id",
-            F.col("p.tf").alias("tf"),
-            "dl",
-            F.col("p.positions_vb").alias("positions_vb"),
-            F.pmod(F.col("doc_id"), F.lit(n_blocks))
-            .cast("int")
-            .alias("block_id"),
+        indexer.layout_postings(
+            spark.read.parquet(f"{out_dir}/enriched/segment={seg}"),
+            term_buckets,
+            n_blocks,
         )
         .repartition("term_bucket")
         .write.mode("append")
         .partitionBy("term_bucket")
         .parquet(f"{out_dir}/postings")
     )
-
-
-def build_index_pipelined(
-    spark: SparkSession,
-    clean: DataFrame,
-    out_dir: str,
-    n_segments: int = 4,
-    term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
-    n_blocks: int = indexer.DEFAULT_N_BLOCKS,
-    df_prune: int = indexer.DF_PRUNE,
-    report: dict | None = None,
-) -> dict[str, DataFrame]:
-    """Segmented build where segment i's bucket layout (JVM shuffle +
-    parquet encode — DRAM/IO-bound) runs CONCURRENTLY with segment i+1's
-    tokenize (Python-CPU-bound Arrow UDF): the two phases use complementary
-    resources, so the pipelined wall approaches max(tokenize, layout)
-    instead of their sum.  On a real cluster the same structure holds per
-    executor; here the overlap is driven by two driver threads in separate
-    FAIR scheduler pools (run the session with
-    spark.scheduler.mode=FAIR — under FIFO the layout job would starve the
-    next tokenize instead of sharing slots).
-
-    Structure (two driver threads; main = tokenize+finalize, background =
-    layout, each in its own scheduler pool):
-
-      1. ONE columnar pre-pass partitions the cleaned+id'd corpus by
-         url-hash segment — each tokenize job then scans ONLY its slice
-         (without this, every segment re-scans and re-cleans the full
-         corpus: measured +8% wall at 4 segments).
-      2. Per segment: tokenize → enriched parquet (main thread), then the
-         segment's bucket layout is handed to the background thread while
-         the next segment tokenizes.
-      3. The moment the LAST tokenize lands, the enriched-only finalize
-         (N/avgdl/collision guard, doc_stats, df agg → terms) runs on the
-         main thread CONCURRENTLY with the still-draining layout jobs —
-         only blocks (which reads the written postings) waits for the true
-         barrier.  It is exactly the corpus-global work that CANNOT be
-         segmented (Q2/Q3), and under deferred scoring it touches no
-         posting row.
-
-    Layout jobs run serially on ONE background thread: concurrent
-    append-mode writers into the same parquet root would race in the
-    commit protocol's staging directories.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    # fresh build: clear prior artifacts (append-mode layout accumulates)
-    for sub in ("postings", "enriched", "docs_seg", MANIFEST_DIR):
-        fsio.rmtree(spark, fsio.join(out_dir, sub))
-
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", "tokenize")
-
-    t_start = time.time()
-    # -- 1. segment-partitioned corpus materialization (one JVM pass; no
-    # repartition — each scan task appends to ≤ n_segments dirs, and the
-    # many small files it leaves are exactly the read-parallelism the
-    # per-segment tokenize scan wants)
-    (
-        indexer.assign_doc_ids(clean)
-        .withColumn("_seg", segment_of(F.col("url"), n_segments))
-        .write.mode("overwrite")
-        .partitionBy("_seg")
-        .parquet(f"{out_dir}/docs_seg")
-    )
-    if report is not None:
-        # Measured pre-pass wall: build_index_auto calibrates its cost
-        # model's BUILD_PREPASS_FRAC from this instead of the hardcoded
-        # local-mode guess (VERDICT r4 item 2).
-        report["prepass_sec"] = round(time.time() - t_start, 3)
-        report["n_segments"] = n_segments
-
-    def _layout(seg: int) -> None:
-        sc.setLocalProperty("spark.scheduler.pool", "layout")
-        layout_segment(spark, out_dir, seg, term_buckets, n_blocks)
-
-    futs = []
-    with ThreadPoolExecutor(max_workers=1) as layout_pool:
-        for seg in range(n_segments):
-            seg_docs = spark.read.parquet(f"{out_dir}/docs_seg/_seg={seg}")
-            write_enriched_segment(seg_docs, out_dir, seg)
-            futs.append(layout_pool.submit(_layout, seg))
-
-        # -- 3. enriched-only finalize, overlapped with draining layout --
-        enriched = spark.read.option(
-            "basePath", f"{out_dir}/enriched"
-        ).parquet(
-            *[f"{out_dir}/enriched/segment={s}" for s in range(n_segments)]
-        )
-        stats_row = enriched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("aug_len").alias("chars"),
-            F.countDistinct("url").alias("n_urls"),
-            F.countDistinct("doc_id").alias("n_ids"),
-        ).collect()[0]
-        if stats_row.n_ids != stats_row.n_urls:
-            raise ValueError(
-                f"doc_id hash collision: {stats_row.n_urls} distinct urls "
-                f"map to {stats_row.n_ids} distinct xxhash64 ids; rebuild "
-                "with assign_doc_ids(mode='dense') or a wider key"
-            )
-        n_total = stats_row.n
-        avg_doc_len = (stats_row.chars or 0) / n_total if n_total else 0.0
-        corpus_stats = spark.createDataFrame(
-            [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
-        )
-        corpus_stats.write.mode("overwrite").parquet(
-            f"{out_dir}/corpus_stats"
-        )
-
-        enriched.select(
-            "doc_id", "url", "warc_ts", "aug_len", "doc_len"
-        ).write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
-
-        terms = (
-            indexer.term_doc_frequency(enriched)
-            .filter(F.col("df") > df_prune)
-            .withColumn(
-                "idf",
-                F.log(
-                    (F.lit(n_total) - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-            )
-            .withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
-            )
-        )
-        terms.repartition("term_bucket").write.mode("overwrite").partitionBy(
-            "term_bucket"
-        ).parquet(f"{out_dir}/terms")
-
-        for f in futs:
-            f.result()
-    sc.setLocalProperty("spark.scheduler.pool", None)
-
-    fsio.rmtree(spark, fsio.join(out_dir, "docs_seg"))
-
-    indexer.write_blocks(
-        {
-            "postings": spark.read.parquet(f"{out_dir}/postings"),
-            "terms": spark.read.parquet(f"{out_dir}/terms"),
-            "corpus_stats": spark.read.parquet(f"{out_dir}/corpus_stats"),
-        },
-        out_dir,
-    )
-    return indexer.read_index(spark, out_dir)
-
-
-# ---------------------------------------------------------------------------
-# Self-dispatching build: classic vs pipelined by measured phase ratio
-# ---------------------------------------------------------------------------
-
-# Pipelined-build cost constants — FALLBACKS for the cold-start dispatch
-# only (first pipelined run at a given core count): the segment pre-pass
-# re-materializes the id'd corpus (~15% of a tokenize phase: one columnar
-# read + partitioned write, no shuffle), and every segment adds two
-# scheduler round-trips (tokenize job + layout job).  Once a pipelined
-# build has run, build_index_auto dispatches on its MEASURED wall (and
-# calibrates the pre-pass fraction from the measured pre-pass), not on
-# these constants (VERDICT r4 item 2).
-BUILD_PREPASS_FRAC = 0.15
-BUILD_SEG_OVERHEAD_SEC = 1.5
-# Switch away from classic only when the predicted/measured saving clears
-# this fraction of the classic wall: the bench box's epoch-to-epoch
-# variance swamps smaller margins (r4: auto dispatched pipelined at 8
-# cores off a predicted ~8% saving and lost), and classic is the safer
-# default — its serial phase split refreshes the dispatch metrics.
-DISPATCH_NOISE_FRAC = 0.15
-
-
-def auto_segments(min_phase_sec: float) -> int:
-    """Segment count minimizing (un-overlapped slot) + (per-segment
-    overhead): the first layout has nothing to hide behind and the last
-    tokenize nothing to hide, wasting ~min_phase/s, while each segment
-    costs ~BUILD_SEG_OVERHEAD_SEC of job latency — minimized at
-    s* = sqrt(min_phase / overhead), clamped to [4, 16] (4 was the fixed
-    round-3 default; >16 segments fragment the parquet layout)."""
-    s = round((max(min_phase_sec, 0.0) / BUILD_SEG_OVERHEAD_SEC) ** 0.5)
-    return max(4, min(16, int(s)))
-
-
-def predict_pipelined_win(
-    tokenize_sec: float,
-    layout_sec: float,
-    n_segments: int | None = None,
-    prepass_frac: float | None = None,
-    noise_frac: float = DISPATCH_NOISE_FRAC,
-) -> tuple[bool, int, float, float]:
-    """(win, n_segments, predicted_saving, predicted_cost) for overlapping
-    the two phases at their measured durations.
-
-    Overlap hides min(tokenize, layout) behind the other phase, except the
-    un-overlapped first/last slots (~1/s of it); the price is the segment
-    pre-pass plus per-segment job overhead.  This is why the round-3 bench
-    saw pipelined WIN at 8 cores (both phases long, saving ≫ overhead) and
-    LOSE at 32 (tokenize shrinks 4×; saving ~ overhead) — the choice is
-    parallelism-dependent and must be made from measurements at the
-    CURRENT parallelism, which is exactly what build_index_auto does.
-
-    ``win`` requires the net saving to clear a NOISE BAND of
-    ``noise_frac`` × the classic wall (VERDICT r4: a predicted saving
-    smaller than the epoch's own variance is not a reason to switch).
-    ``prepass_frac`` overrides the hardcoded pre-pass constant with a
-    measured calibration when one exists.
-    """
-    s = n_segments or auto_segments(min(tokenize_sec, layout_sec))
-    frac = BUILD_PREPASS_FRAC if prepass_frac is None else prepass_frac
-    saving = min(tokenize_sec, layout_sec) * (1 - 1 / s)
-    cost = frac * tokenize_sec + s * BUILD_SEG_OVERHEAD_SEC
-    band = noise_frac * (tokenize_sec + layout_sec)
-    return saving - cost > band, s, saving, cost
-
-
-def build_index_auto(
-    spark: SparkSession,
-    clean: DataFrame,
-    out_dir: str,
-    metrics_path: str | None = None,
-    n_docs_hint: int | None = None,
-    force: str | None = None,
-    report: dict | None = None,
-) -> dict[str, DataFrame]:
-    """One build entry point that picks classic-serial vs pipelined from
-    MEASUREMENTS at the current parallelism (VERDICT r3 item 2 / r4 item 2).
-
-    Protocol: per core-count records live in a small JSON sidecar
-    (``metrics_path``, default ``<out_dir>_metrics.json`` — a sibling so
-    the build's own directory resets don't erase it; fsio, so any scheme
-    works).  Dispatch ladder, most-evidence-first:
-
-    1. BOTH strategies measured at this core count → pick the faster
-       measured wall, but switch away from classic only when pipelined's
-       measured win clears the :data:`DISPATCH_NOISE_FRAC` band (epoch
-       variance swamps smaller margins, and the classic path refreshes
-       the phase metrics the model needs).
-    2. Only a classic phase split recorded → :func:`predict_pipelined_win`
-       cost model, with the pre-pass fraction calibrated from a measured
-       pipelined pre-pass when one exists, and the same noise band.
-    3. Nothing recorded → classic (it exposes the tokenize/layout phase
-       boundary and records it for the next dispatch).
-
-    Recorded walls scale by ``n_docs_hint``/recorded docs when the corpus
-    size differs.  Every run RECORDS its own measurements back into the
-    sidecar — classic its phase split, pipelined its wall + pre-pass —
-    so the dispatcher converges on same-machine evidence either way.
-    ``force``: ``"classic"``/``"pipelined"`` pins the strategy (bench A/B).
-    ``report``: optional dict the call fills with its decision
-    (``decision``, ``n_segments``, ``from_metrics``, ``basis``) for bench
-    disclosure.
-    """
-    cores = spark.sparkContext.defaultParallelism
-    metrics_path = metrics_path or out_dir.rstrip("/") + "_metrics.json"
-    metrics: dict = {}
-    if fsio.exists(spark, metrics_path):
-        text = fsio.read_text_or_none(spark, metrics_path)
-        metrics = json.loads(text) if text is not None else {}
-
-    decision, n_seg, basis = "classic", None, "cold_start"
-    rec = metrics.get(str(cores)) or {}
-    has_classic = "tokenize_sec" in rec
-    has_pipelined = "pipelined_wall_sec" in rec
-
-    def _scaled(sec: float, rec_docs) -> float:
-        if n_docs_hint and rec_docs:
-            return sec * (n_docs_hint / rec_docs)
-        return sec
-
-    if has_classic and has_pipelined:
-        basis = "measured_both"
-        classic_wall = _scaled(
-            rec["tokenize_sec"] + rec["layout_sec"], rec.get("n_docs")
-        )
-        pipe_wall = _scaled(
-            rec["pipelined_wall_sec"], rec.get("pipelined_n_docs")
-        )
-        n_seg = rec.get("pipelined_n_segments")
-        if pipe_wall < (1 - DISPATCH_NOISE_FRAC) * classic_wall:
-            decision = "pipelined"
-    elif has_classic:
-        basis = "classic_model"
-        prepass_frac = None
-        if rec.get("prepass_sec") and rec.get("tokenize_sec"):
-            prepass_frac = rec["prepass_sec"] / rec["tokenize_sec"]
-        win, n_seg, _, _ = predict_pipelined_win(
-            _scaled(rec["tokenize_sec"], rec.get("n_docs")),
-            _scaled(rec["layout_sec"], rec.get("n_docs")),
-            prepass_frac=prepass_frac,
-        )
-        decision = "pipelined" if win else "classic"
-    if force in ("classic", "pipelined"):
-        decision = force
-        n_seg = n_seg or 4
-        basis = f"forced_{force}"
-    if report is not None:
-        report.update(
-            decision=decision, n_segments=n_seg,
-            from_metrics=bool(rec), basis=basis,
-        )
-
-    def _record() -> None:
-        metrics[str(cores)] = rec
-        fsio.write_text_atomic(spark, metrics_path, json.dumps(metrics))
-
-    if decision == "pipelined":
-        pipe_report: dict = {}
-        t0 = time.time()
-        idx = build_index_pipelined(
-            spark, clean, out_dir, n_segments=n_seg or 4, report=pipe_report
-        )
-        rec.update(
-            pipelined_wall_sec=round(time.time() - t0, 3),
-            pipelined_n_docs=n_docs_hint or rec.get("n_docs"),
-            pipelined_n_segments=pipe_report.get("n_segments", n_seg or 4),
-            prepass_sec=pipe_report.get("prepass_sec"),
-        )
-        _record()
-        return idx
-
-    t0 = time.time()
-    idx = indexer.build_index(spark, clean)
-    t1 = time.time()
-    indexer.write_index(idx, out_dir)
-    t2 = time.time()
-    n_docs = int(idx["corpus_stats"].select("n_docs").collect()[0][0])
-    rec.update(
-        tokenize_sec=round(t1 - t0, 3),
-        layout_sec=round(t2 - t1, 3),
-        n_docs=n_docs,
-    )
-    _record()
-    return indexer.read_index(spark, out_dir)

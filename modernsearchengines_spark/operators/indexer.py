@@ -7,18 +7,29 @@ the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
          ──doc_id = xxhash64(url)──length-cap gate (Q2/Q3)
          ──*doc_postings (url-words Q4 + tokenize + per-doc term agg +
             varbyte position encode — the ONE Arrow crossing of the whole
-            build, NO token shuffle)──parquet segment
-    then (pure JVM): stats (one agg) ── flatten ── salted df agg [two-level,
-    head-term skew R5] ── IDF/BM25 column exprs ── df>5 prune ──
-    hash-block ids ── write bucketed by term ── blocks table from the
-    written postings (narrow columnar read)
+            build, NO token shuffle)──enriched parquet segment
+    then (pure JVM) three pieces, each defined once in this module and
+    shared by build_index, the checkpointed build (checkpoint.py), the
+    corpus append (sources/corpus_io.py) and the streaming ingest
+    (:func:`score_and_layout` composes them over enriched segments):
+      * layout   — :func:`layout_postings`: enriched → unpruned deferred
+        (term_bucket, term, doc_id, tf, dl, positions_vb, block_id) rows;
+      * finalize — :func:`finalize_stats` (N, avg_doc_len, doc_id
+        collision guard) and :func:`terms_table` over
+        :func:`term_doc_frequency` (salted df agg [two-level, head-term
+        skew R5] → df>5 prune → IDF → term_bucket);
+      * blocks   — :func:`block_maxima` over the postings and terms.
 
 Reference semantics replicated: length cap counts toward N and avg_doc_len
 (Q2/Q3, reference indexing.py:182,193-200), token-count doc length over
 char-count average length (Q1, indexing.py:166-167,197), URL words prepended
-(Q4, indexing.py:195), char-offset positions (Q5), df>5 persisted prune (Q6,
-indexing.py:236-237), IDF/BM25 formulas with k1=1.5, b=0.75
-(indexing.py:162-171,217).
+(Q4, indexing.py:195), char-offset positions (Q5), IDF/BM25 formulas with
+k1=1.5, b=0.75 (indexing.py:162-171,217).  The df>5 prune (Q6,
+indexing.py:236-237) is a rule of the TERMS table: postings keep every
+(term, doc) row, and the query-time terms join
+(query.query_terms_df inner semantics) drops df≤5 terms, so results equal
+a pruned layout while an append can lift a term over the threshold without
+rewriting a posting file.
 
 Storage note: the target table layout is Iceberg
 ``CREATE TABLE postings ... USING iceberg PARTITIONED BY (bucket(K, term))``;
@@ -30,10 +41,11 @@ query time.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -63,12 +75,12 @@ def bm25_expr(idf, tf, dl, avgdl):
     materialized bm25 freezes idf/avgdl (corpus-global stats) into every
     posting row, so ANY corpus append would invalidate and rewrite the
     whole index.  Storing (tf, dl) makes appends touch only the new
-    segment's postings plus the small terms/corpus_stats tables, and lets
-    the bucket-layout shuffle start before the global stats exist (the
-    build pipeline overlap in build_index_pipelined).  Consumers
-    materialize bm25 with this expression right after their (broadcast)
-    query-terms join — per-query cost is a fused multiply over already-
-    matched rows inside whole-stage codegen.
+    segment's postings plus the small terms/corpus_stats/blocks tables,
+    and makes the layout independent of every corpus-global stat
+    (:func:`layout_postings`).  Consumers materialize bm25 with this
+    expression right after their (broadcast) query-terms join — per-query
+    cost is a fused multiply over already-matched rows inside whole-stage
+    codegen.
 
     Operand order matches the former build-time materialization
     (idf·num/den, left-to-right) so scores are bit-identical to the
@@ -78,6 +90,8 @@ def bm25_expr(idf, tf, dl, avgdl):
         F.col(c) if isinstance(c, str) else c for c in (idf, tf, dl, avgdl)
     )
     return idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * (dl / avgdl)))
+
+
 MAX_DOC_CHARS = 800_000
 DF_PRUNE = 5
 DEFAULT_TERM_BUCKETS = 64
@@ -86,13 +100,6 @@ DEFAULT_N_BLOCKS = 256  # hash blocks per term for block-max pruning
 # WebCrawler_basis.py:213-214 and the retroactive topic.py:156-174 cleanup)
 MEDIA_URL_SUFFIXES = (".jpg", ".png", ".pdf")
 DF_SALT = 16  # salt fan-out for the head-term df aggregation
-
-TOKEN_TYPE = ArrayType(
-    StructType(
-        [StructField("term", StringType()), StructField("pos", IntegerType())]
-    )
-)
-
 
 # --------------------------------------------------------------------------
 # Arrow UDFs (vectorized; the only Python in the plan)
@@ -103,18 +110,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     from ..functions.html_extract import extract_text
 
     return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
-
-
-@F.pandas_udf(StringType())
-def url_words_udf(url: pd.Series) -> pd.Series:
-    """URL → comma-separated words (O-67, reference indexing.py:89-105)."""
-    return url.map(url_to_words)
-
-
-@F.pandas_udf(TOKEN_TYPE)
-def tokenize_udf(text: pd.Series) -> pd.Series:
-    """Reference-parity tokenize (O-74): [(stem, char_offset)] per doc."""
-    return text.map(lambda t: tokenize(t) if t is not None else [])
 
 
 DOC_POSTINGS_TYPE = StructType(
@@ -324,97 +319,20 @@ def assign_doc_ids(docs: DataFrame, mode: str = "hash", n_ranges: int = 32) -> D
 # --------------------------------------------------------------------------
 # Index build
 # --------------------------------------------------------------------------
-def tokenize_docs(docs_with_ids: DataFrame) -> DataFrame:
-    """→ (doc_id, aug_len, tok_idx, term, pos) exploded token stream.
+def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
+    """The build's ONE Arrow crossing: per doc, (aug_len, doc_len) and the
+    local postings array, written as the enriched parquet segment that the
+    layout and finalize steps below read.
 
-    aug text = url words + " " + text (Q4); aug_len is its CHAR length
-    (feeds the Q1/Q2 avg_doc_len).
+    Length-capped docs (Q2/Q3) ride along with NULL text into the UDF,
+    which emits (aug_len=NULL, doc_len=0, postings=[]) for them: they stay
+    in N but out of the char sum and the index, exactly the reference
+    semantics.  Parquet (not .persist()): Spark's in-memory columnar cache
+    falls back to slow row-based access for nested array<struct> columns,
+    while parquet keeps nested reads vectorized.
     """
-    aug = docs_with_ids.withColumn(
-        "aug_text", F.concat(url_words_udf("url"), F.lit(" "), F.col("text"))
-    ).withColumn("aug_len", F.length("aug_text"))
-    return aug.select(
-        "doc_id",
-        "aug_len",
-        F.posexplode_outer(tokenize_udf("aug_text")).alias("tok_idx", "token"),
-    ).select(
-        "doc_id",
-        "aug_len",
-        "tok_idx",
-        F.col("token.term").alias("term"),
-        F.col("token.pos").alias("pos"),
-    )
-
-
-def term_doc_frequency(enriched: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
-    """(term, df) from the enriched segment via a NARROW nested scan.
-
-    Document frequency needs only ``postings.term`` — extracting the term
-    subfield BEFORE the explode lets Parquet nested-schema pruning skip the
-    fat positions_vb blobs entirely, so this pass streams a few MB of
-    dictionary-encoded strings instead of the whole segment.  Keeping it a
-    separate scan (instead of forking the one fat flatten) matters under
-    AQE: forked branches of a shared exchange materialize as two full
-    shuffles of the wide posting rows (measured: two ~4-5s × 32-task stages
-    at 400k docs), while this narrow re-scan costs less than either.
-
-    Two-level salted aggregation for head-term skew (R5: "tuebingen" is in
-    nearly every doc by design): pre-aggregate per (term, salt-of-doc_id),
-    then merge the ≤ df_salt partials per term.  Exact counts.
-    """
-    terms = enriched.select(
-        "doc_id", F.explode(F.col("postings.term")).alias("term")
-    )
-    salted = (
-        terms.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(df_salt)))
-        .groupBy("term", "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial_df"))
-    )
-    return salted.groupBy("term").agg(F.sum("_partial_df").alias("df"))
-
-
-def build_index(
-    spark: SparkSession,
-    clean: DataFrame,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    n_blocks: int = DEFAULT_N_BLOCKS,
-    df_prune: int = DF_PRUNE,
-    work_dir: str | None = None,
-) -> dict[str, DataFrame]:
-    """Build postings/doc_stats/corpus_stats from a cleaned corpus.
-
-    Evaluation discipline (this is where the 100 TB story lives):
-
-      * ``docs`` (post-dedup, with assigned ids) is persisted ONCE — every
-        downstream branch reuses the same materialization, so the simhash +
-        doc-id assignment never re-runs and ids are consistent across
-        branches by construction;
-      * the expensive tokenize UDF is evaluated EXACTLY ONCE: the compact
-        (term, doc_id, tf, positions_vb) aggregate is persisted and doc lengths
-        are derived from it (``doc_len = Σ tf``) instead of re-tokenizing;
-      * at cluster scale the persists become parquet segment writes — that
-        is precisely the checkpoint.py path; this in-memory variant keeps
-        the same single-evaluation structure.
-
-    Returns DataFrames; callers persist via :func:`write_index` (or the
-    segment/checkpoint path).  Call ``unpersist_index`` when done.
-    """
-    docs = assign_doc_ids(clean)
-
-    # Map-side local index: the WHOLE cleaning+tokenize pipeline is ONE job
-    # ending in a parquet write — no persist, no re-evaluation anywhere.
-    # Length-capped docs (Q2/Q3) ride along with NULL text into the UDF,
-    # which emits (aug_len=NULL, doc_len=0, postings=[]) for them: they stay
-    # in N but out of the char sum and the index, exactly the reference
-    # semantics.  Parquet (not .persist()): Spark's in-memory columnar cache
-    # falls back to slow row-based access for nested array<struct> columns,
-    # while parquet keeps nested reads vectorized — and this transient table
-    # IS the per-segment artifact of the checkpointed build (checkpoint.py).
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="msengines_idx_")
-    enriched_path = f"{work_dir}/enriched"
     (
-        docs.withColumn(
+        docs_with_ids.withColumn(
             "dp",
             doc_postings_udf(
                 "url",
@@ -428,104 +346,28 @@ def build_index(
             F.col("dp.postings").alias("postings"),
         )
         .write.mode("overwrite")
-        .parquet(enriched_path)
-    )
-    enriched = spark.read.parquet(enriched_path)
-
-    doc_stats = enriched.select("doc_id", "url", "warc_ts", "aug_len", "doc_len")
-
-    # ONE stats job over the written parquet: N counts ALL cleaned docs even
-    # length-capped ones (Q2/Q3); char sum skips them (NULL aug_len, Q1/Q2).
-    # The same pass checks the doc_id collision invariant: doc_id =
-    # xxhash64(url) merges two documents iff distinct urls exceed distinct
-    # ids (birthday bound ≈ n²/2^65 expected colliding pairs — ~27k at
-    # 10^12 docs; see functions/hashing.py).  Failing here beats silently
-    # merging postings; escape hatches: assign_doc_ids(mode="dense") or a
-    # wider two-column key.
-    stats_row = enriched.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("aug_len").alias("chars"),
-        F.countDistinct("url").alias("n_urls"),
-        F.countDistinct("doc_id").alias("n_ids"),
-    ).collect()[0]
-    if stats_row.n_ids != stats_row.n_urls:
-        raise ValueError(
-            f"doc_id hash collision: {stats_row.n_urls} distinct urls map to "
-            f"{stats_row.n_ids} distinct xxhash64 ids; rebuild with "
-            "assign_doc_ids(mode='dense') or a wider key"
-        )
-    n_total, char_sum = stats_row.n, stats_row.chars or 0
-    avg_doc_len = char_sum / n_total if n_total else 0.0
-    corpus_stats = spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
+        .parquet(path)
     )
 
-    # Flatten to posting rows; doc_len rides along (no doc-stats join later).
-    # This fat scan (blobs included) runs exactly ONCE — the df aggregation
-    # uses its own narrow term-only scan (term_doc_frequency).
-    postings_raw = enriched.select(
-        "doc_id",
-        "doc_len",
-        F.explode("postings").alias("p"),
-    ).select(
-        "doc_id",
-        "doc_len",
-        F.col("p.term").alias("term"),
-        F.col("p.tf").alias("tf"),
-        F.col("p.positions_vb").alias("positions_vb"),
-    )
 
-    postings, blocks, terms = score_and_layout(
-        postings_raw, n_total, avg_doc_len, term_buckets, n_blocks, df_prune,
-        term_df=term_doc_frequency(enriched),
-    )
-    return {
-        "postings": postings,
-        "blocks": blocks,
-        "terms": terms,
-        "doc_stats": doc_stats,
-        "corpus_stats": corpus_stats,
-        "_enriched": enriched,
-    }
+def _term_bucket(term, term_buckets: int):
+    return F.pmod(F.xxhash64(term), F.lit(term_buckets)).cast("int")
 
 
-def score_and_layout(
-    postings_raw: DataFrame,
-    n_total: int,
-    avg_doc_len: float,
+def layout_postings(
+    enriched: DataFrame,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
     n_blocks: int = DEFAULT_N_BLOCKS,
-    df_prune: int = DF_PRUNE,
-    term_df: DataFrame | None = None,
-    broadcast_terms: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """df → IDF → df>5 prune → deferred-scoring block layout (pure JVM —
-    positions arrive already varbyte-encoded from doc_postings_udf).
+) -> DataFrame:
+    """Enriched segment(s) → the persisted postings rows
+    (term_bucket, term, doc_id, tf, dl, positions_vb, block_id).
 
-    Returns ``(postings, blocks, terms)`` where postings carry (tf, dl)
-    and NO bm25 — consumers materialize it via :func:`bm25_expr` after
-    their terms join (idf/avgdl ride the broadcast query-terms frame, see
-    query.attach_scoring_stats).  Per-term attributes (df, idf) are
-    NORMALIZED OUT of the fat postings table into the compact ``terms``
-    table: repeating 8-byte per-term constants on every posting row
-    inflated the layout shuffle + parquet by ~30% for values any consumer
-    can re-join from a table 100× smaller (measured at 400k docs: 1.26 GB
-    layout exchange with them).
-
-    ``postings_raw`` must carry (term, doc_id, tf, positions_vb, doc_len).
-    Callers holding the enriched segment table should pass
-    ``term_df=term_doc_frequency(enriched)`` so the df pass reads only the
-    term subfield; the fallback here derives df from ``postings_raw``
-    itself, which re-evaluates that (possibly fat) subtree a second time.
-
-    ``broadcast_terms``: hint the postings⨝terms join to broadcast.  The
-    static planner cannot estimate the aggregated term table's size and
-    plans a sort-merge join, which materializes a full shuffle of the fat
-    posting rows before AQE's runtime broadcast conversion can kick in
-    (measured: an 890 MB dead exchange at 400k docs).  Vocabulary grows
-    sublinearly (Heaps' law): ~400k terms here, and an estimated few GB at
-    10^12 docs — set False past ~10^10 docs and let AQE + skew-join handle
-    the merge join instead.
+    DEFERRED SCORING (see bm25_expr): rows carry (tf, dl) and no bm25, and
+    no df prune — both need corpus-global stats, and keeping them out makes
+    the layout a pure per-segment projection, so an append lays out only
+    its own segment.  df/idf live in the terms table; the df>5 rule is
+    applied by the query-time terms join.  Positions arrive already
+    varbyte-encoded from doc_postings_udf.
 
     Block layout: ``block_id = pmod(doc_id, n_blocks)`` — a BOUNDED hash
     partition of each term's postings (≤ n_blocks per-block maxima per term)
@@ -540,79 +382,114 @@ def score_and_layout(
     blocks table as large as postings, zero pruning — observed as WAND
     slower than exhaustive at 400k docs).
     """
-    if term_df is None:
-        # Fallback: derive df from the posting rows themselves (same
-        # two-level salted agg as term_doc_frequency, R5 head-term skew).
-        salted = (
-            postings_raw.withColumn(
-                "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(DF_SALT))
-            )
-            .groupBy("term", "_salt")
-            .agg(F.count(F.lit(1)).alias("_partial_df"))
-        )
-        term_df = salted.groupBy("term").agg(
-            F.sum("_partial_df").alias("df")
-        )
-
-    pruned_terms = term_df.filter(F.col("df") > df_prune).withColumn(
-        "idf",
-        F.log(
-            (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        ),
-    )
-    prune_side = pruned_terms.select("term")
-    if broadcast_terms:
-        prune_side = F.broadcast(prune_side)
-
-    # DEFERRED SCORING (see bm25_expr): the layout stores (tf, dl) and NO
-    # bm25 column — the df>5 prune is a LEFT SEMI join (no term attributes
-    # ride on the fat posting rows at all), so the bucket exchange carries
-    # 4 fewer bytes/row than the round-2 bm25 layout and, crucially, the
-    # whole layout branch has NO dependence on corpus-global stats
-    # (n_total/avgdl feed only the small terms/blocks tables).  That
-    # independence is what lets build_index_pipelined overlap segment
-    # tokenize (Python-CPU) with segment layout (shuffle/parquet,
-    # DRAM-bound).
-    layout = (
-        postings_raw.join(prune_side, "term", "left_semi")
-        .withColumn(
-            "block_id",
-            F.pmod(F.col("doc_id"), F.lit(n_blocks)).cast("int"),
-        )
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
-        )
-    )
-    # Persisted layout stores ONLY the compressed blob (SURVEY schema),
-    # already encoded upstream in doc_postings_udf.  Consumers decode via
-    # proximity.min_span_score_vb_udf / codec.varbyte_decode_udf.  df/idf
-    # live in the terms table, not on every posting row.
-    postings = layout.select(
-        "term_bucket",
-        "term",
+    return enriched.select(
         "doc_id",
-        "tf",
         F.col("doc_len").cast("int").alias("dl"),
-        "positions_vb",
-        "block_id",
+        F.explode("postings").alias("p"),
+    ).select(
+        _term_bucket(F.col("p.term"), term_buckets).alias("term_bucket"),
+        F.col("p.term").alias("term"),
+        "doc_id",
+        F.col("p.tf").alias("tf"),
+        "dl",
+        F.col("p.positions_vb").alias("positions_vb"),
+        F.pmod(F.col("doc_id"), F.lit(n_blocks)).cast("int").alias("block_id"),
     )
 
-    # Block maxima: max over the idf-free length-normalized part g(tf, dl),
-    # scaled by idf afterwards on the ALREADY-AGGREGATED (small) frame —
-    # idf > 0 so max(idf·g) = idf·max(g).  The 1-ulp reassociation risk vs
-    # the query-time idf·num/den order is absorbed by wand.py's relative
-    # guard on every ub ≥ θ comparison.
+
+def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
+    """(N, avg_doc_len, corpus_stats frame) from ONE aggregation over doc
+    stats rows (doc_id, url, aug_len).  N counts ALL cleaned docs even
+    length-capped ones (Q2/Q3); the char sum skips them (NULL aug_len,
+    Q1/Q2).
+
+    The same pass checks the doc_id collision invariant: doc_id =
+    xxhash64(url) merges two documents iff distinct urls exceed distinct
+    ids (birthday bound ≈ n²/2^65 expected colliding pairs — ~27k at
+    10^12 docs; see functions/hashing.py).  Failing here beats silently
+    merging postings; escape hatches: assign_doc_ids(mode="dense") or a
+    wider two-column key.
+    """
+    row = doc_stats.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("aug_len").alias("chars"),
+        F.countDistinct("url").alias("n_urls"),
+        F.countDistinct("doc_id").alias("n_ids"),
+    ).collect()[0]
+    if row.n_ids != row.n_urls:
+        raise ValueError(
+            f"doc_id hash collision: {row.n_urls} distinct urls map to "
+            f"{row.n_ids} distinct xxhash64 ids; rebuild with "
+            "assign_doc_ids(mode='dense') or a wider key"
+        )
+    n_total = row.n
+    avg_doc_len = float((row.chars or 0) / n_total) if n_total else 0.0
+    corpus_stats = doc_stats.sparkSession.createDataFrame(
+        [(n_total, avg_doc_len)], "n_docs long, avg_doc_len double"
+    )
+    return n_total, avg_doc_len, corpus_stats
+
+
+def term_doc_frequency(rows: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
+    """(term, df) from (term, doc_id) rows, one per (term, doc) pair.
+
+    Two-level salted aggregation for head-term skew (R5: "tuebingen" is in
+    nearly every doc by design): pre-aggregate per (term, salt-of-doc_id),
+    then merge the ≤ df_salt partials per term.  Exact counts.
+    """
+    salted = (
+        rows.select("term", "doc_id")
+        .withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(df_salt)))
+        .groupBy("term", "_salt")
+        .agg(F.count(F.lit(1)).alias("_partial_df"))
+    )
+    return salted.groupBy("term").agg(F.sum("_partial_df").alias("df"))
+
+
+def terms_table(
+    term_df: DataFrame,
+    n_total: int,
+    df_prune: int = DF_PRUNE,
+    term_buckets: int = DEFAULT_TERM_BUCKETS,
+) -> DataFrame:
+    """(term, df) → the terms table (term, df, idf, term_bucket): the df>5
+    prune (Q6) and the reference IDF.  Per-term attributes live here, NOT
+    on every posting row: repeating 8-byte per-term constants on the fat
+    postings inflated the layout shuffle + parquet by ~30% (measured at
+    400k docs) for values any consumer re-joins from a table 100× smaller.
+    """
+    return (
+        term_df.filter(F.col("df") > df_prune)
+        .withColumn(
+            "idf",
+            F.log(
+                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+                + 1.0
+            ),
+        )
+        .withColumn("term_bucket", _term_bucket(F.col("term"), term_buckets))
+    )
+
+
+def block_maxima(
+    postings: DataFrame, terms: DataFrame, avg_doc_len: float
+) -> DataFrame:
+    """Per-(term, block_id) BM25 maxima for block-max WAND (wand.py).
+
+    Max over the idf-free length-normalized part g(tf, dl), scaled by idf
+    afterwards on the ALREADY-AGGREGATED (small) frame — idf > 0 so
+    max(idf·g) = idf·max(g).  The 1-ulp reassociation risk vs the
+    query-time idf·num/den order is absorbed by wand.py's relative guard on
+    every ub ≥ θ comparison.  The inner terms join drops the blocks of
+    df-pruned terms.
+    """
     g = bm25_expr(
         F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(float(avg_doc_len))
     )
-    idf_side = pruned_terms.select("term", "idf")
-    if broadcast_terms:
-        idf_side = F.broadcast(idf_side)
-    blocks = (
+    return (
         postings.groupBy("term_bucket", "term", "block_id")
         .agg(F.max(g).alias("_max_g"))
-        .join(idf_side, "term")
+        .join(F.broadcast(terms.select("term", "idf")), "term")
         .select(
             "term_bucket",
             "term",
@@ -620,11 +497,93 @@ def score_and_layout(
             (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
         )
     )
-    terms = pruned_terms.withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
+
+
+def score_and_layout(
+    enriched: DataFrame,
+    term_buckets: int = DEFAULT_TERM_BUCKETS,
+    n_blocks: int = DEFAULT_N_BLOCKS,
+    df_prune: int = DF_PRUNE,
+) -> dict[str, DataFrame]:
+    """Enriched segment(s) → the index tables (postings, blocks, terms,
+    doc_stats, corpus_stats): the finalize step every build entry point
+    shares (build_index, checkpoint.merge_segments, the streaming ingest's
+    segments).  One eager job (:func:`finalize_stats`); everything else is
+    lazy until :func:`write_index`.
+
+    Postings carry (tf, dl) and NO bm25 — consumers materialize it via
+    :func:`bm25_expr` after their terms join (idf/avgdl ride the broadcast
+    query-terms frame, see query.query_terms_df) — and keep every
+    (term, doc) row; the df>5 prune is a rule of the terms table.
+    """
+    n_total, avg_doc_len, corpus_stats = finalize_stats(enriched)
+    postings = layout_postings(enriched, term_buckets, n_blocks)
+    # df from a NARROW nested scan: extracting the term subfield BEFORE
+    # the explode lets Parquet nested-schema pruning skip the fat
+    # positions_vb blobs, so this pass streams a few MB of dictionary-
+    # encoded strings instead of the whole segment.  Keeping it a separate
+    # scan (instead of forking the one fat flatten) matters under AQE:
+    # forked branches of a shared exchange materialize as two full
+    # shuffles of the wide posting rows (measured: two ~4-5s × 32-task
+    # stages at 400k docs), while this narrow re-scan costs less than
+    # either.
+    term_rows = enriched.select(
+        "doc_id", F.explode(F.col("postings.term")).alias("term")
     )
-    return postings, blocks, terms
+    terms = terms_table(
+        term_doc_frequency(term_rows), n_total, df_prune, term_buckets
+    )
+    return {
+        "postings": postings,
+        "blocks": block_maxima(postings, terms, avg_doc_len),
+        "terms": terms,
+        "doc_stats": enriched.select(
+            "doc_id", "url", "warc_ts", "aug_len", "doc_len"
+        ),
+        "corpus_stats": corpus_stats,
+    }
+
+
+def build_index(
+    spark: SparkSession,
+    clean: DataFrame,
+    term_buckets: int = DEFAULT_TERM_BUCKETS,
+    n_blocks: int = DEFAULT_N_BLOCKS,
+    df_prune: int = DF_PRUNE,
+    work_dir: str | None = None,
+) -> dict[str, DataFrame]:
+    """Build postings/blocks/terms/doc_stats/corpus_stats from a cleaned
+    corpus: one enriched segment (:func:`write_enriched`) under
+    ``work_dir``, then :func:`score_and_layout`.
+
+    Evaluation discipline: the WHOLE cleaning + tokenize pipeline is ONE
+    job ending in a parquet write — the simhash, doc-id assignment and
+    tokenize UDF each run exactly once, and every downstream branch reads
+    the written segment.  At cluster scale the segment is split and made
+    resumable by checkpoint.build_index_checkpointed, which shares the
+    same finalize.
+
+    Returns lazy DataFrames over the segment; persist them via
+    :func:`write_index`, then call :func:`unpersist_index`.  With
+    ``work_dir=None`` the segment goes to a fresh temporary directory that
+    unpersist_index deletes; a caller's ``work_dir`` is left in place.
+    """
+    owned = work_dir is None
+    if owned:
+        work_dir = tempfile.mkdtemp(prefix="msengines_idx_")
+    try:
+        write_enriched(assign_doc_ids(clean), f"{work_dir}/enriched")
+        index = score_and_layout(
+            spark.read.parquet(f"{work_dir}/enriched"),
+            term_buckets, n_blocks, df_prune,
+        )
+    except BaseException:
+        if owned:
+            shutil.rmtree(work_dir, ignore_errors=True)
+        raise
+    if owned:
+        index["_work_dir"] = work_dir
+    return index
 
 
 def write_index(
@@ -701,7 +660,7 @@ def write_index(
 
 def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
     """(Re)derive the block-max table from the WRITTEN postings files (a
-    narrow columnar re-read beats re-evaluating the scoring subtree) and
+    narrow columnar re-read beats re-evaluating the layout subtree) and
     the current terms/corpus_stats.  Under deferred scoring this is also
     the append-time refresh: after a corpus append changes idf/avgdl, only
     this small derived table (≤ |terms|·n_blocks rows) is recomputed — the
@@ -713,31 +672,22 @@ def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
             F.max("bm25").alias("block_max_bm25")
         )
     else:
-        avgdl = float(
-            index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-        )
-        g = bm25_expr(F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(avgdl))
-        blocks = (
-            written.groupBy("term_bucket", "term", "block_id")
-            .agg(F.max(g).alias("_max_g"))
-            .join(F.broadcast(index["terms"].select("term", "idf")), "term")
-            .select(
-                "term_bucket",
-                "term",
-                "block_id",
-                (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
-            )
-        )
+        avgdl = index["corpus_stats"].select("avg_doc_len").collect()[0][0]
+        blocks = block_maxima(written, index["terms"], avgdl)
     blocks.write.mode("overwrite").parquet(f"{out_dir}/blocks")
 
 
 def unpersist_index(index: dict[str, DataFrame]) -> None:
-    """Release the persists taken by build_index (best-effort)."""
+    """Release the persists taken on the index frames, and delete the
+    temporary enriched segment when build_index created it (a caller's
+    ``work_dir`` is left alone).  The frames build_index returned read
+    that segment, so call this once they are written or no longer used."""
+    work_dir = index.pop("_work_dir", None)
     for df in index.values():
-        try:
+        if isinstance(df, DataFrame):
             df.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+    if work_dir is not None:
+        shutil.rmtree(work_dir, ignore_errors=True)
 
 
 def _dir_bytes(spark: SparkSession, path: str) -> int:

@@ -52,9 +52,9 @@ def query_terms_df(
       bucketed terms table for idf (the only job), avgdl cached on the
       index dict across batches.  INNER semantics: a query term absent
       from the terms table (df-pruned, O-19) is dropped here, so its
-      postings — which MAY exist on disk under the pipelined unpruned
-      segment layout — never enter the retrieval join; identical results
-      to pruned storage (same matched rows, match_count, scores);
+      postings — which the unpruned layout keeps on disk — never enter
+      the retrieval join.  This is the df>5 prune rule; results equal a
+      pruned store (same matched rows, match_count, scores);
     * the distinct (term_bucket, term) pairs ride along as
       ``df._pruning_pairs`` so :func:`pruned_postings` never needs a
       ``distinct().collect()`` job to recover what the driver already

@@ -13,7 +13,6 @@ same batch is a no-op (exactly-once by key).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import fsio
 
@@ -77,24 +76,25 @@ def append_to_index(
     are never rewritten (the whole point of the deferred-scoring (tf, dl)
     layout, indexer.bm25_expr).  Returns the number of docs appended.
 
-    Steps:
+    Steps (the build's own pieces, indexer module docstring):
       1. clean + id the batch, drop urls already in doc_stats (INSERT OR
          IGNORE semantics, same key as :func:`append_new_docs`);
-      2. tokenize the survivors into a new enriched segment and bucket-
-         layout it APPEND-mode into ``postings/`` (checkpoint.layout_segment
-         — the unpruned layout, df>5 enforced at query time);
-      3. refresh doc_stats (append), corpus_stats (recount), terms (df
-         re-agg over a NARROW term-column scan of the written postings +
-         new idf), and blocks (indexer.write_blocks) — all small relative
-         to postings.
+      2. tokenize the survivors into a new enriched segment and run the
+         collision guard over old ∪ new doc stats (indexer.finalize_stats)
+         before any table is touched;
+      3. bucket-layout the segment APPEND-mode into ``postings/``
+         (checkpoint.layout_segment — the unpruned layout every build
+         writes, so a term whose df crosses the threshold through this
+         batch finds all its postings already on disk);
+      4. refresh doc_stats (append), corpus_stats, terms (df re-agg over a
+         NARROW term/doc_id scan of the written postings + new idf) and
+         blocks (indexer.write_blocks) — all small relative to postings —
+         and drop the consumed enriched segment.
 
-    Requires an index whose postings store (tf, dl) WITHOUT a build-time
-    df prune (build_index_pipelined / layout_segment); a classic pruned
-    build would need its dropped df≤5 rows back when a term's df crosses
-    the threshold.  Near-duplicates of ALREADY-INDEXED docs are not
-    detected here (the batch is deduped internally; url is the append
-    key) — cross-batch simhash dedup is a periodic compaction concern,
-    matching the reference's retroactive cleanup (topic.py:156-174).
+    Near-duplicates of ALREADY-INDEXED docs are not detected here (the
+    batch is deduped internally; url is the append key) — cross-batch
+    simhash dedup is a periodic compaction concern, matching the
+    reference's retroactive cleanup (topic.py:156-174).
     """
     import uuid
 
@@ -104,7 +104,7 @@ def append_to_index(
     # identical-text simhash dupes, so two same-url rows with different text
     # would otherwise both survive, share doc_id=xxhash64(url), and append
     # duplicate doc_id rows + doubled postings — invisible to the collision
-    # guard below (both countDistincts collapse identically).  Keep-first is
+    # guard (both countDistincts collapse identically).  Keep-first is
     # arbitrary-but-deterministic only per-batch, matching append_new_docs.
     new_docs = new_docs.dropDuplicates(["url"])
     df_prune = indexer.DF_PRUNE if df_prune is None else df_prune
@@ -124,69 +124,28 @@ def append_to_index(
     if n_new == 0:
         return 0
 
-    # -- 2. enriched segment + append-mode bucket layout ------------------
     seg = f"append-{uuid.uuid4().hex[:8]}"
     checkpoint.write_enriched_segment(docs, index_dir, seg)
-    checkpoint.layout_segment(spark, index_dir, seg, term_buckets, n_blocks)
-
-    # -- 3a. doc_stats append / corpus_stats recount ----------------------
-    enriched = spark.read.parquet(f"{index_dir}/enriched/segment={seg}")
-    enriched.select(
+    new_stats = spark.read.parquet(f"{index_dir}/enriched/segment={seg}").select(
         "doc_id", "url", "warc_ts", "aug_len", "doc_len"
-    ).write.mode("append").parquet(doc_stats_path)
+    )
+    n_total, _, corpus_stats = indexer.finalize_stats(
+        existing.unionByName(new_stats)
+    )
 
-    all_stats = spark.read.parquet(doc_stats_path)
-    row = all_stats.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("aug_len").alias("chars"),
-        F.countDistinct("url").alias("n_urls"),
-        F.countDistinct("doc_id").alias("n_ids"),
-    ).collect()[0]
-    if row.n_ids != row.n_urls:
-        raise ValueError(
-            f"doc_id hash collision after append: {row.n_urls} urls vs "
-            f"{row.n_ids} ids — rebuild with assign_doc_ids(mode='dense')"
-        )
-    n_total = row.n
-    avg_doc_len = (row.chars or 0) / n_total if n_total else 0.0
-    spark.createDataFrame(
-        [(n_total, float(avg_doc_len))], "n_docs long, avg_doc_len double"
-    ).write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
+    checkpoint.layout_segment(spark, index_dir, seg, term_buckets, n_blocks)
+    new_stats.write.mode("append").parquet(doc_stats_path)
+    corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
 
-    # -- 3b. terms: df over the term column of the WRITTEN postings -------
-    # (narrow columnar scan; every posting row is one (term, doc) pair, so
-    # count == document frequency).  Same two-level salted agg as the
-    # build's term_doc_frequency (R5 head-term skew).
+    # every posting row is one (term, doc) pair, so the written postings'
+    # term/doc_id columns are the df source (narrow columnar scan)
     written = spark.read.parquet(f"{index_dir}/postings")
-    salted = (
-        written.select("term", "doc_id")
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(indexer.DF_SALT))
-        )
-        .groupBy("term", "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial_df"))
-    )
-    terms = (
-        salted.groupBy("term")
-        .agg(F.sum("_partial_df").alias("df"))
-        .filter(F.col("df") > df_prune)
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(term_buckets)).cast("int"),
-        )
-    )
-    terms.repartition("term_bucket").write.mode("overwrite").partitionBy(
+    indexer.terms_table(
+        indexer.term_doc_frequency(written), n_total, df_prune, term_buckets
+    ).repartition("term_bucket").write.mode("overwrite").partitionBy(
         "term_bucket"
     ).parquet(f"{index_dir}/terms")
 
-    # -- 3c. blocks from written postings + fresh terms/corpus_stats ------
     indexer.write_blocks(
         {
             "postings": written,
@@ -195,4 +154,5 @@ def append_to_index(
         },
         index_dir,
     )
+    fsio.rmtree(spark, f"{index_dir}/enriched/segment={seg}")
     return n_new

@@ -3,10 +3,12 @@
 The reference has NO streaming surface (SURVEY §2.10): its crawler is an
 incremental batch process with a pickle checkpoint.  The Spark-native
 analogue offered here is a ``foreachBatch`` pipeline: a stream of docs
-(file source in production; any streaming DataFrame here) is cleaned and
-appended as RAW posting segments per micro-batch — the same raw-segment
-shape the checkpointed batch build uses (operators/checkpoint.py), so the
-merge/finalize pass turns accumulated micro-batches into a queryable index.
+(file source in production; any streaming DataFrame here) is cleaned, given
+xxhash64(url) doc ids and written per micro-batch as an enriched segment
+``enriched/segment=stream<epoch>`` by checkpoint.write_enriched_segment —
+the same segment the batch builds write (doc stats + local postings,
+length cap included), so indexer.score_and_layout over the accumulated
+segments turns them into a queryable index.
 
 This keeps exactly-once semantics via the streaming checkpoint + idempotent
 per-batch parquet directories, mirroring the `_segments` lineage protocol.
@@ -17,28 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators import indexer
-
-
-def raw_postings_for_batch(batch_df: DataFrame, epoch_id: int) -> DataFrame:
-    """Cleaned micro-batch → raw (term, doc_id, tf, positions_vb) postings.
-
-    doc_id here is the stable xxhash64(url) (a streaming batch cannot assign
-    global dense ranks); the merge pass can re-map ids if dense ids are
-    required.
-    """
-    clean = indexer.clean_docs(batch_df)
-    with_ids = clean.withColumn("doc_id", F.xxhash64("url"))
-    return (
-        with_ids.withColumn("dp", indexer.doc_postings_udf("url", "text"))
-        .select("doc_id", F.explode("dp.postings").alias("p"))
-        .select(
-            "doc_id",
-            F.col("p.term").alias("term"),
-            F.col("p.tf").alias("tf"),
-            F.col("p.positions_vb").alias("positions_vb"),
-        )
-    )
+from ..operators import checkpoint, indexer
 
 
 def windowed_counts_stream(
@@ -72,13 +53,12 @@ def windowed_counts_stream(
 
 
 def start_ingest(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
-    """writeStream.foreachBatch appending one raw segment per micro-batch."""
+    """writeStream.foreachBatch writing one enriched segment per
+    micro-batch under ``out_dir/enriched``."""
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        postings = raw_postings_for_batch(batch_df, epoch_id)
-        postings.write.mode("overwrite").parquet(
-            f"{out_dir}/raw_postings/segment=stream{epoch_id}"
-        )
+        docs = indexer.assign_doc_ids(indexer.clean_docs(batch_df))
+        checkpoint.write_enriched_segment(docs, out_dir, f"stream{epoch_id}")
 
     return (
         stream_df.writeStream.foreachBatch(_write)

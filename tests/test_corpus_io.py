@@ -39,18 +39,24 @@ def test_append_dedups_within_batch(spark, tmp_path):
 
 
 def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
-    """VERDICT r3 item 6: build → append_to_index → queries equal a
-    from-scratch rebuild of the union corpus, WITHOUT touching any
-    pre-existing posting file (the deferred-scoring append claim)."""
+    """build → append_to_index → queries equal a from-scratch rebuild of
+    the union corpus, WITHOUT touching any pre-existing posting file (the
+    deferred-scoring append claim) — on the layout build_index writes,
+    including terms that cross the df prune only through the batch."""
     import glob
     import os
 
     import pytest
     from pyspark.sql import functions as F
 
-    from modernsearchengines_spark.operators import checkpoint, indexer, query
+    from modernsearchengines_spark.operators import indexer, query
     from modernsearchengines_spark.sources.corpus_io import append_to_index
     from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
+
+    def build(clean, out):
+        idx = indexer.build_index(spark, clean)
+        indexer.write_index(idx, out)
+        indexer.unpersist_index(idx)
 
     # Split AFTER full-corpus cleaning so cross-batch near-dups cannot
     # diverge the two paths (append_to_index docstring caveat).
@@ -61,7 +67,13 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
 
     out_inc = str(tmp_path / "idx_inc")
     out_full = str(tmp_path / "idx_full")
-    checkpoint.build_index_pipelined(spark, first, out_inc, n_segments=2)
+    build(first, out_inc)
+    idx_first = indexer.read_index(spark, out_inc)
+    terms_before = {r.term for r in idx_first["terms"].collect()}
+    df_first = {
+        r.term: r["count"]
+        for r in idx_first["postings"].groupBy("term").count().collect()
+    }
 
     before = {
         p: os.path.getmtime(p)
@@ -80,7 +92,7 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     assert all(after[p] == before[p] for p in before)
     assert len(after) > len(before)
 
-    checkpoint.build_index_pipelined(spark, clean_full, out_full, n_segments=2)
+    build(clean_full, out_full)
     idx_inc = indexer.read_index(spark, out_inc)
     idx_full = indexer.read_index(spark, out_full)
 
@@ -97,6 +109,10 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         r.term: (r.df, r.idf) for r in idx_full["terms"].collect()
     }
     assert t_inc.keys() == t_full.keys()
+    # some term reaches df > DF_PRUNE only through the appended batch, and
+    # its df≤5 postings from the first build count toward that df
+    crossed = t_inc.keys() - terms_before
+    assert any(0 < df_first.get(t, 0) <= indexer.DF_PRUNE for t in crossed)
     for term, (df_i, idf_i) in t_inc.items():
         assert df_i == t_full[term][0]
         assert idf_i == pytest.approx(t_full[term][1], rel=1e-12)

@@ -295,9 +295,13 @@ def test_ivf_topk_recall_vs_brute_force(spark):
 
 
 def test_streaming_ingest_foreachbatch(spark, docs_parquet, tmp_path):
-    from modernsearchengines_spark.streaming.ingest import start_ingest
-
+    """Streamed micro-batches land as enriched segments that, through the
+    shared indexer.score_and_layout, index exactly like build_index on the
+    same docs."""
     import shutil
+
+    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.streaming.ingest import start_ingest
 
     schema = spark.read.parquet(docs_parquet).schema
     in_dir = tmp_path / "stream_in"
@@ -308,6 +312,21 @@ def test_streaming_ingest_foreachbatch(spark, docs_parquet, tmp_path):
         stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out" / "raw_postings"))
-    assert out.count() > 0
-    assert {"term", "doc_id", "tf", "positions_vb"} <= set(out.columns)
+    streamed = indexer.score_and_layout(
+        spark.read.parquet(str(tmp_path / "out" / "enriched"))
+    )
+    built = indexer.build_index(
+        spark, indexer.clean_docs(spark.read.parquet(docs_parquet))
+    )
+
+    def postings(idx):
+        rows = idx["postings"].select("term", "doc_id", "tf", "dl").collect()
+        return sorted(tuple(r) for r in rows)
+
+    def terms(idx):
+        return {r.term: (r.df, r.idf) for r in idx["terms"].collect()}
+
+    assert postings(streamed)
+    assert postings(streamed) == postings(built)
+    assert terms(streamed) == terms(built)
+    indexer.unpersist_index(built)

@@ -23,8 +23,9 @@ def oracle_index(corpus_rows):
 
 @pytest.fixture(scope="module")
 def spark_index(spark, docs_df):
-    clean = indexer.clean_docs(docs_df)
-    return indexer.build_index(spark, clean)
+    idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
+    yield idx
+    indexer.unpersist_index(idx)
 
 
 def test_extraction_invariant_byte_identical(spark, docs_df):
@@ -124,14 +125,44 @@ def test_postings_match_oracle(spark_index, oracle_index):
         assert exp_positions == sorted(exp_positions), key
 
 
-def test_df_prune_applied(spark_index):
-    """Q6: persisted index has no term with df ≤ 5."""
+def test_df_prune_applied(spark, spark_index, oracle_index):
+    """Q6: the terms table holds no term with df ≤ 5, and the prune holds
+    at query time: the postings keep the df≤5 rows, but a query containing
+    such a term gets no terms row for it and ranks like the oracle's
+    pruned index."""
+    from modernsearchengines_spark.operators import query
+    from modernsearchengines_spark.operators.expansion import compile_query
+
     assert spark_index["terms"].filter(F.col("df") <= 5).count() == 0
-    # and every posting's term survives in the pruned terms table
-    orphans = spark_index["postings"].join(
-        spark_index["terms"].select("term"), "term", "left_anti"
-    ).count()
-    assert orphans == 0
+    rare = {
+        r.term
+        for r in spark_index["postings"]
+        .join(spark_index["terms"].select("term"), "term", "left_anti")
+        .select("term")
+        .distinct()
+        .collect()
+    }
+    text = next(
+        f"castle {t}"
+        for t in sorted(rare)
+        if t in compile_query(1, f"castle {t}").terms
+    )
+    cq = compile_query(1, text)
+    got_terms = {
+        r.term
+        for r in query.query_terms_df(spark, [cq], index=spark_index).collect()
+    }
+    assert set(cq.terms) & rare
+    assert not got_terms & rare
+
+    got = sorted(
+        query.run_query_batch(spark, spark_index, [(1, text)]).collect(),
+        key=lambda r: r.rank,
+    )
+    expected = oracle.run_query(oracle_index, text)
+    assert [r.doc_id for r in got] == [e.doc_id for e in expected]
+    for g, e in zip(got, expected):
+        assert math.isclose(g.score, e.score, rel_tol=0, abs_tol=1e-9)
 
 
 def test_block_max_consistency(spark_index):
@@ -166,18 +197,57 @@ def test_block_max_consistency(spark_index):
     assert mis == 0
 
 
-def test_collision_guard_detects_forced_collision(spark, docs_df, monkeypatch):
-    """build_index fails loudly when two distinct urls map to one doc_id
-    (the 10^12-scale birthday-collision regime, functions/hashing.py):
+def test_collision_guard_detects_forced_collision(
+    spark, docs_df, monkeypatch, tmp_path
+):
+    """build_index and the checkpointed build (through the shared
+    finalize) fail loudly when two distinct urls map to one doc_id (the
+    10^12-scale birthday-collision regime, functions/hashing.py):
     monkeypatch the id assignment to a constant hash and expect the
     countDistinct(url) == countDistinct(doc_id) invariant to raise."""
+    from modernsearchengines_spark.operators import checkpoint
 
     def colliding_ids(docs, mode="hash", n_ranges=32):
         return docs.withColumn("doc_id", F.lit(12345).cast("long"))
 
     monkeypatch.setattr(indexer, "assign_doc_ids", colliding_ids)
+    clean = indexer.clean_docs(docs_df)
     with pytest.raises(ValueError, match="collision"):
-        indexer.build_index(spark, indexer.clean_docs(docs_df))
+        indexer.build_index(spark, clean)
+    with pytest.raises(ValueError, match="collision"):
+        checkpoint.build_index_checkpointed(
+            spark, clean, str(tmp_path / "segidx"), n_segments=2
+        )
+
+
+def test_unpersist_removes_owned_work_dir(spark, docs_df, tmp_path):
+    """build_index(work_dir=None) puts its enriched segment in a temporary
+    directory that unpersist_index deletes; the written index still
+    serves, and a caller's work_dir is left in place."""
+    import glob
+    import os
+    import tempfile
+
+    from modernsearchengines_spark.operators import query
+    from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), "msengines_idx_*")
+    clean = indexer.clean_docs(docs_df)
+    before = set(glob.glob(pattern))
+    idx = indexer.build_index(spark, clean)
+    created = set(glob.glob(pattern)) - before
+    assert len(created) == 1
+    out = str(tmp_path / "idx")
+    indexer.write_index(idx, out)
+    indexer.unpersist_index(idx)
+    assert not any(os.path.exists(d) for d in created)
+    served = indexer.read_index(spark, out)
+    assert query.run_query_batch(spark, served, REFERENCE_QUERIES).count() > 0
+
+    mine = tmp_path / "work"
+    idx = indexer.build_index(spark, clean, work_dir=str(mine))
+    indexer.unpersist_index(idx)
+    assert (mine / "enriched").is_dir()
 
 
 def test_write_salt_layout_is_query_identical(spark, docs_df, tmp_path):
@@ -192,6 +262,7 @@ def test_write_salt_layout_is_query_identical(spark, docs_df, tmp_path):
     d0, d4 = str(tmp_path / "plain"), str(tmp_path / "salted")
     indexer.write_index(idx, d0)
     indexer.write_index(idx, d4, write_salt=4)
+    indexer.unpersist_index(idx)
 
     p0 = spark.read.parquet(f"{d0}/postings")
     p4 = spark.read.parquet(f"{d4}/postings")

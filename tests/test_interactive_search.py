@@ -14,7 +14,8 @@ def search_setup(spark, docs_df):
     clean = indexer.clean_docs(docs_df)
     idx = indexer.build_index(spark, clean)
     docs = indexer.assign_doc_ids(clean).select("doc_id", "text")
-    return idx, docs
+    yield idx, docs
+    indexer.unpersist_index(idx)
 
 
 def test_search_returns_top10_with_snippets(spark, search_setup):

@@ -32,7 +32,8 @@ def spark_index(spark, docs_df):
     idx = indexer.build_index(spark, clean)
     idx["postings"] = idx["postings"].cache()
     idx["doc_stats"] = idx["doc_stats"].cache()
-    return idx
+    yield idx
+    indexer.unpersist_index(idx)
 
 
 @pytest.fixture(scope="module")

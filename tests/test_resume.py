@@ -68,6 +68,7 @@ def test_partial_build_then_resume_identical(spark, clean, tmp_path):
         }
 
     assert _doc_stats_sig(result) == _doc_stats_sig(single)
+    indexer.unpersist_index(single)
     capped = [
         r for r in result["doc_stats"].collect() if r.aug_len is None
     ]
@@ -100,7 +101,7 @@ def test_merge_refuses_partial_uncommitted_segment(spark, clean, tmp_path):
     src = f"{out}/enriched/{done_dirs[0]}"
     shutil.copytree(src, f"{out}/enriched/segment=2")
     with pytest.raises(RuntimeError, match="without a committed manifest"):
-        checkpoint.merge_segments(spark, out, clean.count(), n_segments=4)
+        checkpoint.merge_segments(spark, out, n_segments=4)
 
 
 def test_segment_assignment_is_deterministic(spark, clean):

@@ -21,7 +21,8 @@ QUERIES = REFERENCE_QUERIES + [
 def spark_index(spark, docs_df):
     idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
     idx["postings"] = idx["postings"].cache()
-    return idx
+    yield idx
+    indexer.unpersist_index(idx)
 
 
 @pytest.fixture(scope="module")
