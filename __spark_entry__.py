@@ -19,20 +19,21 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from contextlib import contextmanager
 from functools import lru_cache
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modernsearchengines_spark.functions import text_analysis as ta
-from modernsearchengines_spark.operators import dedup, similarity
+from modernsearchengines_spark.operators import dedup, indexer, similarity
 
 # ---------------------------------------------------------------------------
 # shared helpers
 # ---------------------------------------------------------------------------
 
 BM25_QUERY_TERMS = ["spark", "join", "merge", "window"]
-K1, B = 1.5, 0.75
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -172,18 +173,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    def idf(i: int):
-        return F.log(
-            (F.lit(n_docs) - F.col(f"_df{i}") + 0.5)
-            / (F.col(f"_df{i}") + 0.5)
-            + 1.0
-        )
-
     def bm25(i: int):
-        tf = F.col(f"_tf{i}")
-        return idf(i) * (tf * (K1 + 1)) / (
-            tf + K1 * (1 - B + B * (F.col("dl") / F.col("avgdl")))
-        )
+        idf = indexer.idf_expr(n_docs, f"_df{i}")
+        return indexer.bm25_expr(idf, f"_tf{i}", "dl", "avgdl")
 
     matched = [F.col(f"_tf{i}") > 0 for i in range(len(BM25_QUERY_TERMS))]
     score_terms = [
@@ -225,60 +217,82 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextmanager
 def _payload_index(spark: SparkSession, sf_dir: str):
-    """postings/blocks/query-terms layout over `documents` shared by the
-    payload-retrieval contract entries (q_payload_topk, q_plm_topk)."""
+    """Yields (postings, blocks, query terms) over `documents` for the
+    pruned and payload contract entries (q_wand_pruned_topk, q_payload_topk,
+    q_plm_topk), laid out and scored by the engine's own code: an enriched
+    frame built from the JVM whitespace tokens goes through
+    indexer.score_and_layout, and the query-terms side gets (idf, avgdl)
+    from query.attach_scoring_stats.
+
+    Per doc the frame carries doc_id, url = doc_id as a string, a NULL
+    warc_ts, aug_len = doc_len = token count, and postings for the four
+    query terms only (positions = token indices), so the varbyte UDF
+    encodes only those lists.  df_prune=0: the oracle prunes no term.
+
+    The enriched frame is persisted for the duration of the ``with``
+    block and released on exit: every index table and the idf lookup
+    read it, and recomputing its Python UDF per reader made the entries
+    1.5-2.2× slower (sf0.1, local[4]).  Collect results inside the block
+    (:func:`_collected`)."""
+    from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.operators.codec import varbyte_encode_udf
 
-    raw = _t(spark, sf_dir, "documents")
-    n_docs = raw.count()
-    docs = _spread(spark, raw, f"{sf_dir}/documents.parquet", "doc_id")
-    tokens = _doc_tokens(docs)
-    doc_len = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    avgdl = doc_len.agg((F.sum("dl") / F.lit(n_docs)).alias("avgdl"))
-    grouped = tokens.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf"),
-        F.sort_array(F.collect_list("pos")).alias("_positions"),
+    # Unspread: the per-doc work is four array scans and four short
+    # encodes, computed once into the cache — one scan task beats a text
+    # shuffle here (measured 5-12% faster at sf0.1).
+    toks = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("_t")
     )
-    terms_lit = spark.createDataFrame(
-        [(t,) for t in BM25_QUERY_TERMS], "token string"
-    )
-    df = grouped.join(F.broadcast(terms_lit), "token").groupBy("token").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    postings = (
-        grouped.join(F.broadcast(terms_lit), "token")
-        .join(F.broadcast(df), "token")
-        .join(doc_len, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .withColumn(
-            "idf",
-            F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+
+    def posting(term: str):
+        pos = F.filter(
+            F.transform("_t", lambda t, i: F.when(t == term, i)),
+            lambda p: p.isNotNull(),
         )
-        .withColumn(
-            "bm25",
-            F.col("idf") * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * (F.col("dl") / F.col("avgdl")))),
+        return F.struct(
+            F.lit(term).alias("term"),
+            F.size(pos).alias("tf"),
+            varbyte_encode_udf(pos).alias("positions_vb"),
         )
-        .withColumn("positions_vb", varbyte_encode_udf("_positions"))
-        .withColumn("block_id", F.pmod("doc_id", F.lit(256)).cast("int"))
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("token"), F.lit(64)).cast("int")
+
+    enriched = toks.select(
+        "doc_id",
+        F.col("doc_id").cast("string").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.size("_t").cast("long").alias("aug_len"),
+        F.size("_t").cast("long").alias("doc_len"),
+        F.filter(
+            F.array(*[posting(t) for t in BM25_QUERY_TERMS]),
+            lambda p: p["tf"] > 0,
+        ).alias("postings"),
+    ).persist()
+    try:
+        index = indexer.score_and_layout(enriched, df_prune=0)
+        # from pandas, a local relation: collecting its pruning pairs and
+        # broadcasting it need no Spark job (a list makes an RDD scan)
+        qterms = spark.createDataFrame(
+            pd.DataFrame({"qnum": 1, "term": BM25_QUERY_TERMS}),
+            "qnum int, term string",
+        ).withColumn(
+            "term_bucket",
+            F.pmod(F.xxhash64("term"), F.lit(indexer.DEFAULT_TERM_BUCKETS))
+            .cast("int"),
         )
-        .select(
-            "term_bucket", F.col("token").alias("term"), "doc_id", "tf",
-            "bm25", "positions_vb", "block_id",
+        yield (
+            index["postings"],
+            index["blocks"],
+            query.attach_scoring_stats(qterms, index),
         )
-    )
-    blocks = postings.groupBy("term_bucket", "term", "block_id").agg(
-        F.max("bm25").alias("block_max_bm25")
-    )
-    qterms = spark.createDataFrame(
-        [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
-    ).withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(64)).cast("int")
-    )
-    return postings, blocks, qterms
+    finally:
+        enriched.unpersist()
+
+
+def _collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a local frame (via pandas, a local relation), so it
+    outlives the caches it read."""
+    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
 
 
 def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,11 +307,11 @@ def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the full pruned payload pipeline's VALUES, not just rows."""
     from modernsearchengines_spark.operators import wand
 
-    postings, blocks, qterms = _payload_index(spark, sf_dir)
-    out = wand.bm25_prox_topk_wand(postings, blocks, qterms, k=20)
-    return out.select(
-        "rank", "doc_id", F.round("score", 6).alias("score")
-    )
+    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
+        out = wand.bm25_prox_topk_wand(postings, blocks, qterms, k=20)
+        return _collected(
+            out.select("rank", "doc_id", F.round("score", 6).alias("score"))
+        )
 
 
 def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,13 +328,13 @@ def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from modernsearchengines_spark.operators import wand
     from modernsearchengines_spark.operators.proximity import plm_score_vb_udf
 
-    postings, blocks, qterms = _payload_index(spark, sf_dir)
-    out = wand.bm25_prox_topk_wand(
-        postings, blocks, qterms, k=20, scorer=plm_score_vb_udf
-    )
-    return out.select(
-        "rank", "doc_id", F.round("score", 6).alias("score")
-    )
+    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
+        out = wand.bm25_prox_topk_wand(
+            postings, blocks, qterms, k=20, scorer=plm_score_vb_udf
+        )
+        return _collected(
+            out.select("rank", "doc_id", F.round("score", 6).alias("score"))
+        )
 
 
 def q_wand_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,11 +346,13 @@ def q_wand_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately locked by tests/test_wand.py."""
     from modernsearchengines_spark.operators import wand
 
-    postings, blocks, qterms = _payload_index(spark, sf_dir)
-    out = wand.bm25_topk_wand(postings, blocks, qterms, k=20)
-    return out.select(
-        "qnum", "rank", "doc_id", F.round("score", 6).alias("score")
-    )
+    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
+        out = wand.bm25_topk_wand(postings, blocks, qterms, k=20)
+        return _collected(
+            out.select(
+                "qnum", "rank", "doc_id", F.round("score", 6).alias("score")
+            )
+        )
 
 
 def q_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,16 +441,7 @@ def q_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > 5)
-        .withColumn(
-            "idf",
-            F.round(
-                F.log(
-                    (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-                6,
-            ),
-        )
+        .withColumn("idf", F.round(indexer.idf_expr(n_docs, "df"), 6))
         .select("token", "df", "idf")
     )
 
@@ -910,36 +917,36 @@ def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
-    # Exact integer-cents arithmetic (guide §2.3 narrower types): the 2-dp
-    # decimals become longs scaled by 100, so disc_price/charge are exact
-    # long products summed on the primitive fast path instead of
-    # widened-decimal (37,4)/(38,6) products summed through BigDecimal.
-    # Values are bit-identical to the r5 decimal formulation (verified at
-    # sf 0.001/0.01/0.1/1.0): every intermediate is an exact integer and
-    # long/10^k division is correctly rounded like the decimal→double
-    # cast.  Overflow headroom: charge-cents·10⁴ ≤ ~1.2e11 per row, so a
-    # group's long sum is exact up to ~7.6e7 rows/group (≈ TPC-H sf 75);
-    # beyond that, switch the two product sums to decimal(38,0) over the
-    # same long products.
+    # Exact integer-cents arithmetic: the 2-dp decimals become longs scaled
+    # by 100, so each row's disc_price/charge is an exact long product
+    # (charge-cents·10⁴ ≤ ~1.2e11 per TPC-H row, < 9.2e18 up to ~9e11 per
+    # price).  The per-group SUMS are decimal(38,0): a long sum would
+    # overflow past ~7.6e7 rows per group (≈ TPC-H sf 75) — an
+    # ARITHMETIC_OVERFLOW under ANSI mode, a silent wrap without it.  Each
+    # sum is decoded by ONE exact decimal divide by its 10^k scale, and
+    # the decimal → double cast is the only rounding, as in the oracle's
+    # CAST(SUM(decimal) AS DOUBLE).
     c100 = lambda c: (F.col(c).cast("decimal(18,2)") * 100).cast("long")
     qty_c, price_c = c100("l_quantity"), c100("l_extendedprice")
     disc_c, tax_c = c100("l_discount"), c100("l_tax")
+    dsum = lambda e: F.sum(e.cast("decimal(38,0)"))
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(qty_c).alias("_sq_c"),
-        F.sum(price_c).alias("_sbp_c"),
-        F.sum(price_c * (100 - disc_c)).alias("_sdp_c"),
-        F.sum(price_c * (100 - disc_c) * (100 + tax_c)).alias("_sc_c"),
+        dsum(qty_c).alias("_sq_c"),
+        dsum(price_c).alias("_sbp_c"),
+        dsum(price_c * (100 - disc_c)).alias("_sdp_c"),
+        dsum(price_c * (100 - disc_c) * (100 + tax_c)).alias("_sc_c"),
         F.count(F.lit(1)).alias("count_order"),
     )
+    dec = lambda c, k: (F.col(c) / F.lit(10**k)).cast("double")
     return agg.select(
         "l_returnflag",
         "l_linestatus",
-        F.round(F.col("_sq_c") / 100.0, 2).alias("sum_qty"),
-        F.round(F.col("_sbp_c") / 100.0, 2).alias("sum_base_price"),
-        F.round(F.col("_sdp_c") / 10000.0, 2).alias("sum_disc_price"),
-        F.round(F.col("_sc_c") / 1000000.0, 2).alias("sum_charge"),
-        F.round((F.col("_sq_c") / 100.0) / F.col("count_order"), 6).alias("avg_qty"),
-        F.round((F.col("_sbp_c") / 100.0) / F.col("count_order"), 6).alias("avg_price"),
+        F.round(dec("_sq_c", 2), 2).alias("sum_qty"),
+        F.round(dec("_sbp_c", 2), 2).alias("sum_base_price"),
+        F.round(dec("_sdp_c", 4), 2).alias("sum_disc_price"),
+        F.round(dec("_sc_c", 6), 2).alias("sum_charge"),
+        F.round(dec("_sq_c", 2) / F.col("count_order"), 6).alias("avg_qty"),
+        F.round(dec("_sbp_c", 2) / F.col("count_order"), 6).alias("avg_price"),
         "count_order",
     )
 
@@ -1330,12 +1337,12 @@ tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token IN ('spark','join','merge','window') GROUP BY doc_id, token),
 df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
 scored AS (
-    SELECT tf.doc_id,
+    SELECT tf.doc_id, tf.token,
            ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
              * (tf.tf * 2.5) / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * (dl.dl / stats.avgdl))) AS bm25
     FROM tf JOIN df USING (token) JOIN dl USING (doc_id), stats
 ),
-per_doc AS (SELECT doc_id, SUM(bm25) AS raw_score, COUNT(*) AS n_terms
+per_doc AS (SELECT doc_id, SUM(bm25 ORDER BY token) AS raw_score, COUNT(*) AS n_terms
             FROM scored GROUP BY doc_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (ORDER BY raw_score DESC, doc_id ASC) AS rank
            FROM per_doc)
@@ -1353,12 +1360,12 @@ tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token IN ('spark','join','merge','window') GROUP BY doc_id, token),
 df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
 scored AS (
-    SELECT tf.doc_id,
+    SELECT tf.doc_id, tf.token,
            ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
              * (tf.tf * 2.5) / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * (dl.dl / stats.avgdl))) AS bm25
     FROM tf JOIN df USING (token) JOIN dl USING (doc_id), stats
 ),
-per_doc AS (SELECT doc_id, SUM(bm25) AS score FROM scored GROUP BY doc_id),
+per_doc AS (SELECT doc_id, SUM(bm25 ORDER BY token) AS score FROM scored GROUP BY doc_id),
 ranked AS (SELECT *, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rank
            FROM per_doc)
 SELECT CAST(1 AS INT) AS qnum, CAST(rank AS INT) AS rank, doc_id,
@@ -1486,12 +1493,12 @@ tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token IN ('spark','join','merge','window') GROUP BY doc_id, token),
 df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
 scored AS (
-    SELECT tf.doc_id,
+    SELECT tf.doc_id, tf.token,
            ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
              * (tf.tf * 2.5) / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * (dl.dl / stats.avgdl))) AS bm25
     FROM tf JOIN df USING (token) JOIN dl USING (doc_id), stats
 ),
-per_doc AS (SELECT doc_id, SUM(bm25) AS bm25_sum FROM scored GROUP BY doc_id),
+per_doc AS (SELECT doc_id, SUM(bm25 ORDER BY token) AS bm25_sum FROM scored GROUP BY doc_id),
 qpos AS (SELECT doc_id, token, pos FROM toks
          WHERE token IN ('spark','join','merge','window')),
 m AS (SELECT doc_id,
@@ -1544,12 +1551,12 @@ tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token IN ('spark','join','merge','window') GROUP BY doc_id, token),
 df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
 scored AS (
-    SELECT tf.doc_id,
+    SELECT tf.doc_id, tf.token,
            ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
              * (tf.tf * 2.5) / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * (dl.dl / stats.avgdl))) AS bm25
     FROM tf JOIN df USING (token) JOIN dl USING (doc_id), stats
 ),
-per_doc AS (SELECT doc_id, SUM(bm25) AS bm25_sum FROM scored GROUP BY doc_id),
+per_doc AS (SELECT doc_id, SUM(bm25 ORDER BY token) AS bm25_sum FROM scored GROUP BY doc_id),
 qpos AS (SELECT doc_id, token, pos FROM toks
          WHERE token IN ('spark','join','merge','window')),
 nl AS (SELECT doc_id, COUNT(DISTINCT token) AS n_lists FROM qpos GROUP BY doc_id),

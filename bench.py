@@ -342,10 +342,10 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
     reported for a full 300+ MB blob scan), while footer sizes are exact
     and deterministic.
 
-    Evidences the bm25_topk_auto cost model: the pruned path's phase-A
-    upper-bound pass (term, doc_id, block_id) is a small fraction of the
-    payload scan (term, doc_id, bm25, positions_vb) because the position
-    blobs dominate on-disk bytes.
+    Evidences bm25_topk_auto's strategy choice: the pruned path's phase-A
+    upper-bound pass (term, doc_id, block_id, tf, dl) is a small fraction
+    of the payload scan (term, doc_id, tf, dl, positions_vb) because the
+    position blobs dominate on-disk bytes.
     """
     import glob as _glob
 
@@ -381,9 +381,8 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
     blocks_mb = 0.0
     for path in _glob.glob(f"{index_dir}/blocks/*.parquet"):
         blocks_mb += os.path.getsize(path) / 1e6
-    # Scoring columns: the legacy layout materializes bm25; the
-    # deferred-scoring layout reads (tf, dl) instead (indexer.bm25_expr).
-    score = ["bm25"] if "bm25" in col_bytes else ["tf", "dl"]
+    # Scoring columns: (tf, dl), scored at query time (indexer.bm25_expr).
+    score = ["tf", "dl"]
     return {
         "available": True,
         "n_pruned_bucket_files": n_files,
@@ -1462,7 +1461,7 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "| pass | MB fetched |",
             "|---|---|",
             f"| pruned path phase A (term/doc_id/block_id + blocks table) | {strategy_bytes['ub_pass_mb']} |",
-            f"| light exhaustive (term/doc_id + 8-byte bm25, NO blobs) | {strategy_bytes['light_exhaustive_mb']} |",
+            f"| light exhaustive (term/doc_id + tf/dl, NO blobs) | {strategy_bytes['light_exhaustive_mb']} |",
             f"| payload exhaustive (adds position blobs) | {strategy_bytes['payload_exhaustive_mb']} |",
             f"| pruned buckets, all columns ({strategy_bytes['n_pruned_bucket_files']} of 64 bucket dirs) | {strategy_bytes['bucket_total_mb']} |",
             "",
@@ -1470,7 +1469,8 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "(every query expands to 16 boost terms matching ~all docs, "
             "Q14), so parity mode scores the whole corpus per query — "
             "reference semantics, not an engine limit. Strategy selection "
-            "(wand.bm25_topk_auto) follows the measured cost model: the "
+            "(wand.bm25_topk_auto) is by scoring mode: payload scoring "
+            "takes the pruned plan, light scoring the exhaustive pass. The "
             "pruned path's win is PROCESSING — the cascade bound "
             "payload-scores ~38x fewer docs (pruning_payload_cascade row) "
             "— not storage bytes (partition pruning cuts 64→N bucket dirs "

@@ -92,6 +92,14 @@ def bm25_expr(idf, tf, dl, avgdl):
     return idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * (dl / avgdl)))
 
 
+def idf_expr(n_docs, df):
+    """Reference IDF ``ln((N − df + 0.5)/(df + 0.5) + 1)`` as a column
+    expression; ``n_docs`` is a Python int (the corpus N), ``df`` a column
+    or column name."""
+    df = F.col(df) if isinstance(df, str) else df
+    return F.log((F.lit(n_docs) - df + 0.5) / (df + 0.5) + 1.0)
+
+
 MAX_DOC_CHARS = 800_000
 DF_PRUNE = 5
 DEFAULT_TERM_BUCKETS = 64
@@ -460,13 +468,7 @@ def terms_table(
     """
     return (
         term_df.filter(F.col("df") > df_prune)
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(n_total) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
+        .withColumn("idf", idf_expr(n_total, "df"))
         .withColumn("term_bucket", _term_bucket(F.col("term"), term_buckets))
     )
 
@@ -667,14 +669,10 @@ def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
     fat postings stay untouched."""
     spark = index["postings"].sparkSession
     written = spark.read.parquet(f"{out_dir}/postings")
-    if "bm25" in written.columns:  # legacy materialized-score layout
-        blocks = written.groupBy("term_bucket", "term", "block_id").agg(
-            F.max("bm25").alias("block_max_bm25")
-        )
-    else:
-        avgdl = index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-        blocks = block_maxima(written, index["terms"], avgdl)
-    blocks.write.mode("overwrite").parquet(f"{out_dir}/blocks")
+    avgdl = index["corpus_stats"].select("avg_doc_len").collect()[0][0]
+    block_maxima(written, index["terms"], avgdl).write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/blocks")
 
 
 def unpersist_index(index: dict[str, DataFrame]) -> None:

@@ -13,6 +13,7 @@ top-k with deterministic (−score, doc_id) tie order (Q16 decision).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,13 +48,12 @@ def query_terms_df(
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
       locked by tests/test_hashing.py) instead of a ``withColumn`` the
       executors evaluate;
-    * with ``index`` on a deferred-scoring (tf, dl) layout, (idf, avgdl)
-      are fused INTO the created rows — one literal-pruned scan of the
-      bucketed terms table for idf (the only job), avgdl cached on the
-      index dict across batches.  INNER semantics: a query term absent
-      from the terms table (df-pruned, O-19) is dropped here, so its
-      postings — which the unpruned layout keeps on disk — never enter
-      the retrieval join.  This is the df>5 prune rule; results equal a
+    * with ``index``, (idf, avgdl) are fused INTO the created rows — one
+      literal-pruned scan of the bucketed terms table for idf (the only
+      job), avgdl cached on the index dict across batches.  INNER
+      semantics: a query term absent from the terms table (df-pruned,
+      O-19) is dropped here, so its postings — which the unpruned layout
+      keeps on disk — never enter the retrieval join.  This is the df>5 prune rule; results equal a
       pruned store (same matched rows, match_count, scores);
     * the distinct (term_bucket, term) pairs ride along as
       ``df._pruning_pairs`` so :func:`pruned_postings` never needs a
@@ -80,7 +80,7 @@ def query_terms_df(
         "qnum int, term string, is_original boolean, is_tueb boolean, "
         "term_bucket int"
     )
-    if index is not None and "bm25" not in index["postings"].columns:
+    if index is not None:
         pairs = sorted({(r[4], r[1]) for r in rows})
         idf_map = _idf_lut(index, pairs)
         avgdl = _cached_avgdl(index)
@@ -127,20 +127,40 @@ def _cached_avgdl(index: dict[str, DataFrame]) -> float:
 def attach_scoring_stats(
     terms: DataFrame, index: dict[str, DataFrame]
 ) -> DataFrame:
-    """Attach (idf, avgdl) to an ARBITRARY query-terms frame for
-    deferred-scoring (tf, dl) postings layouts (see indexer.bm25_expr),
-    with the df>5 inner-join semantics documented in
-    :func:`query_terms_df` (which fuses these columns driver-side and is
-    the fast path — this broadcast-join form remains for terms frames not
-    built by it)."""
-    rows = pruned_postings(index["terms"], terms).select("term", "idf").collect()
-    spark = terms.sparkSession
-    lut = spark.createDataFrame(
-        [(r.term, float(r.idf)) for r in rows], "term string, idf double"
+    """Attach (idf, avgdl) to an ARBITRARY (qnum, term, term_bucket, ...)
+    query-terms frame, with the df-prune inner-join semantics documented
+    in :func:`query_terms_df` (which fuses these columns driver-side for
+    compiled queries — this broadcast-join form serves terms frames not
+    built by it).  The surviving (term_bucket, term) pairs ride along as
+    ``_pruning_pairs`` like query_terms_df's."""
+    pairs = _pruning_pairs(terms)
+    idf_map = _idf_lut(index, pairs)
+    # a local relation (from pandas): broadcast without a Spark job
+    lut = terms.sparkSession.createDataFrame(
+        pd.DataFrame(sorted(idf_map.items()), columns=["term", "idf"]),
+        "term string, idf double",
     )
-    return terms.join(F.broadcast(lut), "term", "inner").withColumn(
+    out = terms.join(F.broadcast(lut), "term", "inner").withColumn(
         "avgdl", F.lit(_cached_avgdl(index))
     )
+    out._pruning_pairs = [p for p in pairs if p[1] in idf_map]
+    return out
+
+
+def _pruning_pairs(terms: DataFrame) -> list[tuple[int, str]]:
+    """The (term_bucket, term) pairs of a query-terms frame: free from
+    ``terms._pruning_pairs`` when the frame was built by
+    :func:`query_terms_df` or :func:`attach_scoring_stats` (zero jobs).
+    Frames from other sources are collected and deduplicated driver-side:
+    a query-terms frame is O(#query terms) rows, and a local frame
+    collects without a Spark job where ``distinct()`` would run one."""
+    pairs = getattr(terms, "_pruning_pairs", None)
+    if pairs is None:
+        pairs = sorted(
+            {(r.term_bucket, r.term)
+             for r in terms.select("term_bucket", "term").collect()}
+        )
+    return pairs
 
 
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
@@ -149,17 +169,8 @@ def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
     ``term IN (...)`` filters.  The bucket predicate prunes partition
     directories (the Iceberg bucket-pruning equivalent); the term predicate
     hits parquet row-group min/max stats.  Relying on runtime DPP for this
-    is fragile — the literal filters make the pruning unconditional.
-
-    The pair list comes free from ``terms._pruning_pairs`` when the frame
-    was built by :func:`query_terms_df` (zero jobs); the
-    ``distinct().collect()`` fallback covers frames from other sources."""
-    pairs = getattr(terms, "_pruning_pairs", None)
-    if pairs is None:
-        pairs = [
-            (r.term_bucket, r.term)
-            for r in terms.select("term_bucket", "term").distinct().collect()
-        ]
+    is fragile — the literal filters make the pruning unconditional."""
+    pairs = _pruning_pairs(terms)
     buckets = sorted({b for b, _ in pairs})
     term_list = sorted({t for _, t in pairs})
     return postings.filter(
@@ -167,24 +178,16 @@ def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
     )
 
 
-def score_cols(postings: DataFrame) -> list[str]:
-    """The columns a scoring scan must read: the materialized bm25 on
-    legacy layouts, the (tf, dl) pair under deferred scoring."""
-    return ["bm25"] if "bm25" in postings.columns else ["tf", "dl"]
-
-
 def ensure_bm25(matched: DataFrame) -> DataFrame:
-    """Materialize bm25 on a postings⨝query-terms frame when the layout
-    defers scoring (indexer.bm25_expr over tf/dl/idf/avgdl, all present
-    post-join via attach_scoring_stats); pass-through when the postings
-    already carry bm25.  Scratch columns are dropped either way."""
+    """Materialize bm25 on a postings⨝query-terms frame
+    (indexer.bm25_expr over the postings' (tf, dl) and the terms side's
+    (idf, avgdl), see query_terms_df / attach_scoring_stats), dropping
+    those four scratch columns."""
     from .indexer import bm25_expr
 
-    if "bm25" not in matched.columns:
-        matched = matched.withColumn(
-            "bm25", bm25_expr("idf", "tf", "dl", "avgdl")
-        )
-    return matched.drop("tf", "dl", "idf", "avgdl")
+    return matched.withColumn(
+        "bm25", bm25_expr("idf", "tf", "dl", "avgdl")
+    ).drop("tf", "dl", "idf", "avgdl")
 
 
 def _with_minmax(df: DataFrame, col: str, lo: str, hi: str) -> DataFrame:
@@ -277,9 +280,9 @@ def rank(
     # subset only (columnar IO win).
     postings = pruned_postings(postings, terms)
     matched = ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", *score_cols(postings)
-        ).join(F.broadcast(terms), ["term_bucket", "term"], "inner")
+        postings.select("term_bucket", "term", "doc_id", "tf", "dl").join(
+            F.broadcast(terms), ["term_bucket", "term"], "inner"
+        )
     )
     if prefilter is not None:
         matched = matched.join(prefilter, ["qnum", "doc_id"], "left_semi")
@@ -482,10 +485,9 @@ def search(
     ``parity=True`` (default) reproduces the reference scoring quirks
     exactly (weight ladder, +100 boost, global min-max couplings Q8/Q11 —
     necessarily exhaustive, the normalizations read every matched score).
-    ``parity=False`` routes through the cost-based dispatcher
-    (wand.bm25_topk_auto): plain BM25 top-k — optionally blended with the
-    min-span payload when ``payload=True`` — served by the cascade-pruned
-    plan whenever its measured cost model predicts a win.  This is the
+    ``parity=False`` routes through wand.bm25_topk_auto: plain BM25 top-k
+    by the exhaustive pass, or — with ``payload=True`` — blended with the
+    min-span payload and served by the cascade-pruned plan.  This is the
     non-reference deployment surface; scores are pure BM25(+α·prox), not
     the reference ladder.
     """

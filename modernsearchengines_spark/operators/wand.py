@@ -19,10 +19,16 @@ upper-bound pass (narrow columns, map-side-combined sum) cuts the set of
 docs that reach the expensive scoring stage (payload decode + heap scan +
 collect_list shuffle) by the pruning ratio (~3× on the bench fixture).  It
 is NOT a storage-bytes win — the candidate semi-join runs after the scan —
-so the dispatch criterion in :func:`bm25_topk_auto` is the payload-to-scan
-cost ratio, with the measured crossover documented there.  Exactness
-(pruned ≡ exhaustive, both scoring modes) is asserted by tests/test_wand.py
-over the whole query batch.
+so it pays only when per-doc scoring is expensive: :func:`bm25_topk_auto`
+serves payload scoring with the cascade-pruned plan and pure BM25 with
+the single exhaustive pass (measurements there).  Exactness (pruned ≡
+exhaustive, both scoring modes) is asserted by tests/test_wand.py over the
+whole query batch.
+
+Postings carry (tf, dl); every scan here scores them with
+``indexer.bm25_expr`` against the (idf, avgdl) of the query-terms frame,
+which must come from ``query.query_terms_df(..., index=)`` or
+``query.attach_scoring_stats``.
 
 The reference-parity ranking mode (operators/query.py) stays exhaustive BY
 DESIGN: its query-global min-max normalizations (Q8/Q11) couple every
@@ -38,62 +44,48 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _qterm_side(terms: DataFrame):
-    """Broadcast side of the retrieval join; carries (idf, avgdl) when the
-    query-terms frame was enriched for a deferred-scoring layout
-    (query.attach_scoring_stats)."""
-    cols = ["term_bucket", "term", "qnum"]
-    if "idf" in terms.columns:
-        cols += ["idf", "avgdl"]
-    return F.broadcast(terms.select(*cols))
+def _matched(postings: DataFrame, terms: DataFrame, *extra: str) -> DataFrame:
+    """(term_bucket, term, doc_id, *extra, qnum, bm25) rows of the
+    bucket-pruned postings ⨝ broadcast query-terms join; only the
+    ``extra`` posting columns beyond the scoring pair are read."""
+    from .query import ensure_bm25, pruned_postings
 
-
-def _matched(postings: DataFrame, terms: DataFrame) -> DataFrame:
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
+    qside = F.broadcast(
+        terms.select("term_bucket", "term", "qnum", "idf", "avgdl")
+    )
     return ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", *score_cols(postings)
-        ).join(_qterm_side(terms), ["term_bucket", "term"])
-    ).select("qnum", "doc_id", "bm25")
+        pruned_postings(postings, terms)
+        .select("term_bucket", "term", "doc_id", *extra, "tf", "dl")
+        .join(qside, ["term_bucket", "term"])
+    )
 
 
 def _ub_and_exact(
-    postings: DataFrame,
-    blocks: DataFrame,
-    terms: DataFrame,
-    ub_extra: float = 0.0,
+    postings: DataFrame, blocks: DataFrame, terms: DataFrame
 ) -> DataFrame:
     """The fused phase-A/B pass: ONE narrow scan of the light posting
-    columns (term, doc_id, block_id, bm25 — positions blobs stay unread via
-    Parquet column pruning) joined with the compact blocks table, then ONE
-    per-(qnum, doc_id) aggregation producing BOTH
+    columns (term, doc_id, block_id, tf, dl — positions blobs stay unread
+    via Parquet column pruning) joined with the compact blocks table, then
+    ONE per-(qnum, doc_id) aggregation producing BOTH
 
-      ``ub``       = Σ_t block_max(t, block_t(d)) + ub_extra   (upper bound)
-      ``bm25_sum`` = Σ_t bm25(t, d)                            (exact light score)
+      ``ub``       = Σ_t block_max(t, block_t(d))   (upper bound)
+      ``bm25_sum`` = Σ_t bm25(t, d)                 (exact light score)
 
     Carrying the 8-byte bm25 column through the ub pass costs ~nothing and
     collapses the round-2 design's separate exact-scoring scan: the seed
     threshold θ and (for pure-BM25 scoring) the final scores come from this
     same frame, so the light pruned path runs ONE scan total and the payload
     pruned path saves its phase-B fat scan."""
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
-    t = _qterm_side(terms)
-    narrow = ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", "block_id", *score_cols(postings)
-        ).join(t, ["term_bucket", "term"])
-    ).select("qnum", "term_bucket", "term", "doc_id", "block_id", "bm25")
-    b = blocks.join(t.select("term_bucket", "term").distinct(),
-                    ["term_bucket", "term"])
+    b = blocks.join(
+        F.broadcast(terms.select("term_bucket", "term").distinct()),
+        ["term_bucket", "term"],
+    )
     return (
-        narrow.join(F.broadcast(b), ["term_bucket", "term", "block_id"])
+        _matched(postings, terms, "block_id")
+        .join(F.broadcast(b), ["term_bucket", "term", "block_id"])
         .groupBy("qnum", "doc_id")
         .agg(
-            (F.sum("block_max_bm25") + F.lit(ub_extra)).alias("ub"),
+            F.sum("block_max_bm25").alias("ub"),
             F.sum("bm25").alias("bm25_sum"),
         )
     )
@@ -251,18 +243,6 @@ def _payload_scores(
     )
 
 
-def _matched_payload(postings: DataFrame, terms: DataFrame) -> DataFrame:
-    from .query import ensure_bm25, pruned_postings, score_cols
-
-    postings = pruned_postings(postings, terms)
-    return ensure_bm25(
-        postings.select(
-            "term_bucket", "term", "doc_id", "positions_vb",
-            *score_cols(postings),
-        ).join(_qterm_side(terms), ["term_bucket", "term"])
-    ).select("qnum", "doc_id", "bm25", "positions_vb")
-
-
 def bm25_prox_topk_exhaustive(
     postings: DataFrame, terms: DataFrame, k: int = 100,
     alpha: float = PROX_ALPHA, scorer=None,
@@ -270,7 +250,9 @@ def bm25_prox_topk_exhaustive(
     """Payload-refined top-k, exhaustive: decode positions and run the
     payload scorer for EVERY matched doc.  score = Σ bm25 + α·prox
     (Q13-style proximity accumulation as a first-class scale operator)."""
-    scores = _payload_scores(_matched_payload(postings, terms), alpha, scorer)
+    scores = _payload_scores(
+        _matched(postings, terms, "positions_vb"), alpha, scorer
+    )
     return _topk_per_qnum(scores, k)
 
 
@@ -291,13 +273,13 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
     costs the same one scan+agg the ub pass already runs — so the cascade
     bound is the correct distributed formulation (measured on the 400k
     index, α=1, k=100, 8-query bench set: candidates 2.6% of matched docs
-    vs 41% under block-max — pruning_stats bound="cascade"/"blockmax").
+    vs 41% under the block-max bound Σ block_max + α).
     This is rank-safe first-stage cascading (cf. Wang/Lin/Metzler 2011)
     with the block-max path retained for pure-BM25 scoring.
     """
-    matched = _matched(postings, terms)  # narrow: qnum, doc_id, bm25
     return (
-        matched.groupBy("qnum", "doc_id")
+        _matched(postings, terms)  # narrow: no blobs
+        .groupBy("qnum", "doc_id")
         .agg(
             F.sum("bm25").alias("bm25_sum"),
             F.count(F.lit(1)).alias("_n_lists"),
@@ -313,7 +295,7 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
 
 def bm25_prox_topk_wand(
     postings: DataFrame, blocks: DataFrame, terms: DataFrame, k: int = 100,
-    alpha: float = PROX_ALPHA, scorer=None, exact_theta: bool = False,
+    alpha: float = PROX_ALPHA, scorer=None,
 ) -> DataFrame:
     """Payload-refined top-k with rank-safe candidate pruning — identical
     output to :func:`bm25_prox_topk_exhaustive` (tests/test_wand.py).
@@ -332,20 +314,13 @@ def bm25_prox_topk_wand(
     plus the payload cap (``blocks`` is accepted for API symmetry with the
     pure-BM25 path but unused: the cascade bound strictly dominates block
     maxima here).  The narrow pass also yields each doc's exact Σ bm25,
-    used two ways:
-
-      * ``exact_theta=False`` (default): θ = k-th Σ bm25 among the seeds —
-        sound (Σ bm25 ≤ payload score pointwise, and the true k-th best
-        payload score dominates the seeds' k-th best lower bound), zero
-        extra scans, but looser by up to α·PROX_MAX, admitting more
-        candidates.  Measured faster for both built-in scorers (min-span
-        9.0 s vs 13.8 s; PLM 13.8 s vs 17.1 s): skipping the seed-scoring
-        job outruns the extra admitted candidates at α=1.
-      * ``exact_theta=True``: θ = k-th exact payload score of the
-        top-k-by-Σbm25 seeds — the tightest sound threshold; costs one fat
-        scan semi-joined down to the ≤ k·nq seed docs (the scorer runs on
-        seeds only).  Right when the scorer is so expensive that every
-        avoided candidate matters more than one extra small job.
+    and θ = the k-th Σ bm25 among the top-k-by-Σbm25 seeds — sound
+    (Σ bm25 ≤ payload score pointwise, so the true k-th best payload score
+    dominates the seeds' k-th best lower bound) and free of extra scans,
+    though looser by up to α·PROX_MAX than the seeds' k-th exact payload
+    score.  The exact-payload θ was measured slower for both built-in
+    scorers (min-span 13.8 s vs 9.0 s; PLM 17.1 s vs 13.8 s): its
+    seed-scoring job costs more than the extra candidates it cuts at α=1.
 
     Phase C scans blobs ONLY (no bm25 column — Σ bm25 rides in from the
     narrow pass), semi-joined to candidates, so the expensive stage's rows
@@ -353,26 +328,9 @@ def bm25_prox_topk_wand(
     """
     agg = _cascade_agg(postings, terms, alpha).localCheckpoint(eager=False)
     seeds = _topk_per_qnum(agg, k, value_col="bm25_sum")
-
-    if exact_theta:
-        payload = _matched_payload(postings, terms)
-        theta = _theta_literal(
-            _payload_scores(
-                payload.join(
-                    F.broadcast(seeds.select("qnum", "doc_id")),
-                    ["qnum", "doc_id"],
-                    "left_semi",
-                ),
-                alpha,
-                scorer,
-            ),
-            k,
-        )
-    else:
-        theta = _theta_literal(
-            seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")),
-            k,
-        )
+    theta = _theta_literal(
+        seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")), k
+    )
 
     # Same 1-ulp relative guard as the pure-BM25 path (ub ≥ score holds
     # mathematically; float reduction order can land one ulp under θ).
@@ -408,59 +366,30 @@ def bm25_prox_topk_wand(
     return _topk_per_qnum(scores, k)
 
 
-AUTO_CROSSOVER = 1.6
-
-
 def bm25_topk_auto(
     postings: DataFrame,
     blocks: DataFrame,
     terms: DataFrame,
     k: int = 100,
     payload: bool = False,
-    payload_cost_ratio: float = 3.6,
     alpha: float = PROX_ALPHA,
     scorer=None,
-    force_pruned: bool = False,
 ) -> DataFrame:
-    """Cost-based dispatch between exhaustive and cascade-pruned top-k.
+    """Top-k with the measured-faster plan per scoring mode: payload
+    scoring → cascade-pruned :func:`bm25_prox_topk_wand`; pure BM25 → the
+    single :func:`bm25_topk_exhaustive` pass (``blocks`` unused there).
 
-    Measured cost model (BENCH/BASELINE.md, 400k docs, 32 cores; S = one
-    scan+join+agg pass over the matched posting rows, P = payload scoring
-    over them, r = pruning ratio from :func:`pruning_stats`, 38× cascade
-    bound at α=1).  With the fused narrow pass the pruned path costs
-
-        exhaustive ≈ S + P·[payload]
-        pruned     ≈ S_narrow + S_seedscan·[exact_theta] + S_blob + P/r
-
-    so pruning pays iff P·(1 − 1/r) outruns the extra narrow+blob passes —
-    estimated crossover P/S ≈ AUTO_CROSSOVER, and both built-in payloads
-    sit well above it (tools/measure_wand.py, 400k index, 32 cores, warm):
-    min-span at P/S ≈ 3.6 runs 9.0 s pruned vs 17.6 s exhaustive (2.0×);
-    the PLM reranker at P/S ≈ 26 runs 13.8 s vs 102.1 s (7.4×); the light
-    path (P = 0) runs 3.8 s exhaustive vs 7.3 s pruned.  The
-    saving is PROCESSING — the pruned path payload-scores (varbyte decode
-    + position scan + collect_list shuffle) r× fewer docs — not storage
-    bytes: the candidate semi-join runs after the scan and the narrow ub
-    pass ADDS reads (strategy-bytes table in BENCH/BASELINE.md), so a
-    cold-storage deployment where scan bytes dominate should pass its own
-    measured ``payload_cost_ratio`` (or ``force_pruned=True`` /
-    ``exact_theta=False`` to pin a plan).
-
-    ``payload_cost_ratio``: the caller's measured-or-estimated P/S for its
-    scorer; the default 3.6 is the measured ratio of the default min-span
-    scorer, so payload dispatch defaults to the (measured-faster) pruned
-    plan.  Above AUTO_CROSSOVER the pruned plan is selected.  For
-    ``payload=False`` P = 0 and the single exhaustive pass always wins —
-    blocks are unused on that branch; ``force_pruned=True`` overrides both
-    branches for deployments whose measured S differs from this sandbox.
+    Measurements (tools/measure_wand.py, 400k-doc index, 32 cores, warm):
+    min-span payload 9.0 s pruned vs 17.6 s exhaustive (2.0×); the PLM
+    reranker 13.8 s vs 102.1 s (7.4×); light scoring 3.8 s exhaustive vs
+    7.3 s pruned.  The saving is PROCESSING — the pruned path
+    payload-scores (varbyte decode + position scan + collect_list shuffle)
+    the cascade pruning ratio fewer docs (38× at α=1) — not storage bytes:
+    the candidate semi-join runs after the scan and the narrow ub pass
+    ADDS reads (strategy-bytes table in BENCH/BASELINE.md).
     """
-    if payload and (force_pruned or payload_cost_ratio > AUTO_CROSSOVER):
-        return bm25_prox_topk_wand(postings, blocks, terms, k, alpha, scorer)
     if payload:
-        return bm25_prox_topk_exhaustive(postings, terms, k, alpha, scorer)
-    if force_pruned:
-        return bm25_topk_wand(postings, blocks, terms, k)
-    # Light scoring has P = 0 — the single pass always wins.
+        return bm25_prox_topk_wand(postings, blocks, terms, k, alpha, scorer)
     return bm25_topk_exhaustive(postings, terms, k)
 
 
@@ -471,27 +400,21 @@ def pruning_stats(
     k: int = 100,
     alpha: float | None = None,
     scorer=None,
-    bound: str = "cascade",
 ) -> dict:
     """Diagnostic: matched docs vs docs surviving the θ cut.
 
     ``alpha=None`` reports the light (pure-BM25) path's ratio (block-max
     ub, exact-Σbm25 θ of the seeds — mirroring :func:`bm25_topk_wand`).
-    Passing an alpha reports the payload path's: with ``bound="cascade"``
-    (the default, mirroring :func:`bm25_prox_topk_wand`) ub is the cascade
-    bound Σbm25 + α·PROX_MAX·[multi-term] and θ the k-th exact payload
-    score of the top-k-by-ub seeds; ``bound="blockmax"`` swaps in the
-    round-2 Σ block_max + α·PROX_MAX bound for comparison.
+    Passing an alpha reports the payload path's under the cascade bound of
+    :func:`bm25_prox_topk_wand` (Σbm25 + α·PROX_MAX·[multi-term]) with θ
+    the k-th exact payload score of the top-k-by-ub seeds (the pruned path
+    itself skips that seed-scoring job and cuts at the Σbm25 θ).
     """
-    if alpha is not None and bound == "cascade":
-        agg = _cascade_agg(postings, terms, alpha).localCheckpoint(
-            eager=False
-        )
+    if alpha is None:
+        agg = _ub_and_exact(postings, blocks, terms)
     else:
-        ub_extra = 0.0 if alpha is None else alpha * PROX_MAX
-        agg = _ub_and_exact(
-            postings, blocks, terms, ub_extra=ub_extra
-        ).localCheckpoint(eager=False)
+        agg = _cascade_agg(postings, terms, alpha)
+    agg = agg.localCheckpoint(eager=False)
     n_matched = agg.count()
     seeds = _topk_per_qnum(agg, k, value_col="ub", keep=("bm25_sum",))
     if alpha is None:
@@ -502,7 +425,7 @@ def pruning_stats(
     else:
         theta = _theta_literal(
             _payload_scores(
-                _matched_payload(postings, terms).join(
+                _matched(postings, terms, "positions_vb").join(
                     F.broadcast(seeds.select("qnum", "doc_id")),
                     ["qnum", "doc_id"],
                     "left_semi",

@@ -41,15 +41,36 @@ def canon(rows, cols):
     return sorted(out)
 
 
+def oracle_connection(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per test table under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in tables:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def mismatch(srows: list[dict], scols: list[str], ddf) -> str | None:
+    """Compare collected Spark rows against the DuckDB oracle frame:
+    column names, row count, then order-insensitive ``canon`` values.
+    Returns None on a match, else the reason."""
+    dcols = list(ddf.columns)
+    drows = ddf.to_dict("records")
+    if sorted(scols) != sorted(dcols):
+        return f"schema {sorted(scols)} vs {sorted(dcols)}"
+    if len(srows) != len(drows):
+        return f"rowcount {len(srows)} vs {len(drows)}"
+    a, b = canon(srows, scols), canon(drows, dcols)
+    if a != b:
+        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        return f"values differ, first diffs: {diff}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("contract-check", cores=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -75,21 +96,10 @@ def main() -> int:
             failures.append((name, f"duckdb error: {e}"))
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        dcols = list(ddf.columns)
-        drows = ddf.to_dict("records")
-        if sorted(scols) != sorted(dcols):
-            failures.append((name, f"schema mismatch {sorted(scols)} vs {sorted(dcols)}"))
-            print(f"FAIL  {name}: schema {sorted(scols)} vs {sorted(dcols)}")
-            continue
-        if len(srows) != len(drows):
-            failures.append((name, f"rowcount {len(srows)} vs {len(drows)}"))
-            print(f"FAIL  {name}: rowcount {len(srows)} vs {len(drows)}")
-            continue
-        a, b = canon(srows, scols), canon(drows, dcols)
-        if a != b:
-            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            failures.append((name, f"value mismatch, first diffs: {diff}"))
-            print(f"FAIL  {name}: values differ; e.g. {diff[:1]}")
+        why = mismatch(srows, scols, ddf)
+        if why is not None:
+            failures.append((name, why))
+            print(f"FAIL  {name}: {why}")
             continue
         print(f"OK    {name}: {len(srows)} rows")
     print()

@@ -30,11 +30,9 @@ P, B = index["postings"], index["blocks"]
 out["light_exhaustive"] = warm(lambda: wand.bm25_topk_exhaustive(P, terms, 100).collect())
 out["light_wand"] = warm(lambda: wand.bm25_topk_wand(P, B, terms, 100).collect())
 out["minspan_exhaustive"] = warm(lambda: wand.bm25_prox_topk_exhaustive(P, terms, 100).collect())
-out["minspan_wand_exact"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100).collect())
-out["minspan_wand_lb"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100, exact_theta=False).collect())
+out["minspan_wand"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100).collect())
 out["plm_exhaustive"] = warm(lambda: wand.bm25_prox_topk_exhaustive(P, terms, 100, scorer=plm_score_vb_udf).collect(), n=2)
-out["plm_wand_exact"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100, scorer=plm_score_vb_udf).collect(), n=2)
-out["plm_wand_lb"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100, scorer=plm_score_vb_udf, exact_theta=False).collect(), n=2)
+out["plm_wand"] = warm(lambda: wand.bm25_prox_topk_wand(P, B, terms, 100, scorer=plm_score_vb_udf).collect(), n=2)
 out["stats_light"] = wand.pruning_stats(P, B, terms, 100)
 out["stats_payload"] = wand.pruning_stats(P, B, terms, 100, alpha=wand.PROX_ALPHA)
 print(json.dumps(out))
