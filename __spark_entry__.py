@@ -22,7 +22,6 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from functools import lru_cache
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -270,11 +269,10 @@ def _payload_index(spark: SparkSession, sf_dir: str):
     ).persist()
     try:
         index = indexer.score_and_layout(enriched, df_prune=0)
-        # from pandas, a local relation: collecting its pruning pairs and
-        # broadcasting it need no Spark job (a list makes an RDD scan)
-        qterms = spark.createDataFrame(
-            pd.DataFrame({"qnum": 1, "term": BM25_QUERY_TERMS}),
-            "qnum int, term string",
+        # a local relation: collecting its pruning pairs and broadcasting
+        # it need no Spark job
+        qterms = query.local_frame(
+            spark, [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
         ).withColumn(
             "term_bucket",
             F.pmod(F.xxhash64("term"), F.lit(indexer.DEFAULT_TERM_BUCKETS))
@@ -289,10 +287,15 @@ def _payload_index(spark: SparkSession, sf_dir: str):
         enriched.unpersist()
 
 
-def _collected(df: DataFrame) -> DataFrame:
+def _collected(df: DataFrame, ranked: DataFrame) -> DataFrame:
     """``df``'s rows as a local frame (via pandas, a local relation), so it
-    outlives the caches it read."""
-    return df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+    outlives the caches it read; then frees the frames the wand result
+    ``ranked`` (which ``df`` selects from) persisted."""
+    from modernsearchengines_spark.operators import query
+
+    out = df.sparkSession.createDataFrame(df.toPandas(), df.schema)
+    query.release(ranked)
+    return out
 
 
 def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,7 +313,8 @@ def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
         out = wand.bm25_prox_topk_wand(postings, blocks, qterms, k=20)
         return _collected(
-            out.select("rank", "doc_id", F.round("score", 6).alias("score"))
+            out.select("rank", "doc_id", F.round("score", 6).alias("score")),
+            out,
         )
 
 
@@ -333,7 +337,8 @@ def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             postings, blocks, qterms, k=20, scorer=plm_score_vb_udf
         )
         return _collected(
-            out.select("rank", "doc_id", F.round("score", 6).alias("score"))
+            out.select("rank", "doc_id", F.round("score", 6).alias("score")),
+            out,
         )
 
 
@@ -351,7 +356,8 @@ def q_wand_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _collected(
             out.select(
                 "qnum", "rank", "doc_id", F.round("score", 6).alias("score")
-            )
+            ),
+            out,
         )
 
 

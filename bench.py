@@ -401,6 +401,17 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
+def _collect_released(df):
+    """Collect a pruned wand result, then release the aggregate it
+    persisted, so the next timed run recomputes it instead of reading
+    this run's cache."""
+    from modernsearchengines_spark.operators import query
+
+    rows = df.collect()
+    query.release(df)
+    return rows
+
+
 def _timed_runs(fn, n: int) -> list[float]:
     runs = []
     for _ in range(n):
@@ -478,9 +489,9 @@ def time_queries(
                 index["postings"], terms, 100
             ).collect(),
             "wand_topk",
-            lambda: wand.bm25_topk_wand(
+            lambda: _collect_released(wand.bm25_topk_wand(
                 index["postings"], index["blocks"], terms, 100
-            ).collect(),
+            )),
             repeat,
             True,
         ),
@@ -490,9 +501,9 @@ def time_queries(
                 index["postings"], terms, 100
             ).collect(),
             "payload_wand",
-            lambda: wand.bm25_prox_topk_wand(
+            lambda: _collect_released(wand.bm25_prox_topk_wand(
                 index["postings"], index["blocks"], terms, 100
-            ).collect(),
+            )),
             1,
             True,
         ),
@@ -510,10 +521,10 @@ def time_queries(
                     index["postings"], terms, 100, scorer=plm_score_vb_udf
                 ).collect(),
                 "plm_wand",
-                lambda: wand.bm25_prox_topk_wand(
+                lambda: _collect_released(wand.bm25_prox_topk_wand(
                     index["postings"], index["blocks"], terms, 100,
                     scorer=plm_score_vb_udf,
-                ).collect(),
+                )),
                 plm_runs,
                 False,
             )
@@ -563,9 +574,10 @@ def time_query_batch(cores: int, idx_dir: str, n_queries: int = 16) -> dict:
     spark = get_spark(
         f"bench-qscale-{cores}", cores=cores, shuffle_partitions=2 * cores
     )
-    # serve=True sizes the cached-scan splits to the core count — without
-    # it the 128 MB batch splits cache the postings as ~12 partitions and
-    # cap every scan stage at 12-way parallelism regardless of cores.
+    # serve=True caches the postings as ~3 doc_id shards per core: every
+    # scan stage is as wide as the session and per-doc scoring needs no
+    # shuffle (the 128 MB batch splits would cache ~12 partitions and cap
+    # every scan stage at 12-way parallelism regardless of cores).
     index = indexer.read_index(spark, idx_dir, serve=True)
     rng = random.Random(7)
     vocab = _vocab(rng)

@@ -251,6 +251,9 @@ def cooccurrence_counts(
     ``distinct_pairs`` fast path) → pair counts with a ``min_pair``
     support floor.  Returns (term, syn, n_ab, n_1, n_2), both directions
     of each pair, fully deterministic ordering keys.
+
+    The general path tolerates repeated (term, doc_id) rows: they count
+    once towards n_t, the cap and n_ab, and never pair a term with itself.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -367,8 +370,10 @@ def cooccurrence_counts(
     w_doc = Window.partitionBy("doc_id").orderBy(
         F.desc("_tf"), F.desc("n_t"), F.asc("term")
     )
+    # dense_rank: repeated (term, doc) rows share a rank, so they take one
+    # cap slot; with unique rows it equals row_number (term breaks ties)
     p = (
-        p.withColumn("_r", F.row_number().over(w_doc))
+        p.withColumn("_r", F.dense_rank().over(w_doc))
         .filter(F.col("_r") <= per_doc_cap)
         .select("term", "doc_id", "n_t")
     )
@@ -380,11 +385,15 @@ def cooccurrence_counts(
     # JVM higher-order functions.  The former a⨝b self-equi-join computed
     # the whole capped pipeline TWICE (once per side) and broadcast-built
     # the b side; this shape computes it once and shuffles nothing extra.
-    # sort_array makes the per-doc order deterministic (term asc — terms
-    # are unique within a doc), so pair (t1, t2) always has t1 < t2,
+    # array_distinct drops repeated (term, doc) rows, so a duplicated
+    # input row can neither pair a term with itself nor count a pair twice
+    # in one doc; sort_array then makes the per-doc order deterministic
+    # (term asc, terms now unique), so pair (t1, t2) always has t1 < t2,
     # exactly the old join's a.term < b.term predicate.
     capped = p.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("term", "n_t"))).alias("_ts")
+        F.sort_array(
+            F.array_distinct(F.collect_list(F.struct("term", "n_t")))
+        ).alias("_ts")
     )
     pair_structs = F.flatten(
         F.transform(

@@ -688,59 +688,38 @@ def unpersist_index(index: dict[str, DataFrame]) -> None:
         shutil.rmtree(work_dir, ignore_errors=True)
 
 
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """On-disk byte size of ``path`` via the Hadoop FS API (scheme-safe)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(hpath).getLength())
-
-
-# Serving-cache split floor: below ~8 MB the per-split footer/task overhead
-# outweighs the extra parallelism (measured on the 400k bench index).
-_SERVE_SPLIT_FLOOR = 8 << 20
-
-
 def read_index(
     spark: SparkSession, out_dir: str, serve: bool = False
 ) -> dict[str, DataFrame]:
     """Open a written index.  With ``serve=True`` the postings relation is
-    returned CACHED AND MATERIALIZED with its scan splits sized to ~3
-    partitions per session core (instead of the batch default 128 MB,
-    which packs a multi-GB postings table into a handful of partitions and
-    caps every cached-scan query stage at that parallelism — measured:
-    the 400k-doc index cached as 12 partitions, idling 20 of 32 cores and
-    flattening query-batch scaling).  Split sizing happens at scan
-    EXECUTION time, so the cache is materialized inside the temporary
-    conf window; no shuffle is involved.  On a real cluster the same
-    holds per executor core via ``defaultParallelism``.
+    returned CACHED AND MATERIALIZED as ``3·defaultParallelism`` doc_id
+    shards, each sorted by (term_bucket, term):
 
-    Caveat (ADVICE r5): the conf window temporarily mutates the
-    session-global ``spark.sql.files.maxPartitionBytes``; a query planned
-    CONCURRENTLY on the same session during cache materialization would
-    inherit the serve-sized splits.  Call from the session's single
-    driver thread (every in-repo call site does), or scope it with
-    ``spark.newSession()`` if serving must overlap other planning.
+    * the cache's hash partitioning on doc_id satisfies every
+      ``groupBy("qnum", "doc_id")`` over it, so the per-document score
+      aggregate runs inside the scan stage — no aggregate exchange;
+    * ~3 shards per session core keep every cached-scan stage as wide as
+      the session (on a cluster, per executor core via
+      ``defaultParallelism``);
+    * the term sort keeps each cached batch's term min/max tight, so the
+      literal ``term IN (...)`` filters of ``query.pruned_postings`` still
+      skip batches.
+
+    Opening pays one repartition of the postings.  The on-disk layout is
+    unchanged (term-bucketed); only the in-memory copy is doc-sharded.
     """
     from pyspark.errors import AnalysisException
 
+    postings = spark.read.parquet(f"{out_dir}/postings")
     if serve:
-        sc = spark.sparkContext
-        target = max(1, 3 * sc.defaultParallelism)
-        split = max(
-            _SERVE_SPLIT_FLOOR,
-            _dir_bytes(spark, f"{out_dir}/postings") // target,
+        postings = (
+            postings.repartition(
+                max(1, 3 * spark.sparkContext.defaultParallelism), "doc_id"
+            )
+            .sortWithinPartitions("term_bucket", "term")
+            .cache()
         )
-        key = "spark.sql.files.maxPartitionBytes"
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(split))
-        try:
-            postings = spark.read.parquet(f"{out_dir}/postings").cache()
-            postings.count()  # splits are planned here, under the temp conf
-        finally:
-            spark.conf.set(key, old)
-    else:
-        postings = spark.read.parquet(f"{out_dir}/postings")
+        postings.count()
 
     index = {
         "postings": postings,

@@ -13,10 +13,13 @@ top-k with deterministic (−score, doc_id) tie order (Q16 decision).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from . import wand
 from .expansion import TUEBINGEN_TERMS, CompiledQuery, compile_query
 from .indexer import DEFAULT_TERM_BUCKETS
 from .proximity import min_span_score_vb_udf
@@ -32,6 +35,20 @@ BOOST = 100.0
 #   ¬original ∧ ¬tueb   → 4.0·bm25, match +0.5
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` (tuples in the DDL ``schema``'s column order) as a local
+    relation.  Built from an Arrow table, the frame plans as a
+    ``LocalTableScan`` — empty or not — so collecting or broadcasting it
+    runs no Spark job; a Python list plans as an RDD scan, and
+    broadcasting that runs one."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def query_terms_df(
     spark: SparkSession,
     queries: list[CompiledQuery],
@@ -43,7 +60,8 @@ def query_terms_df(
 
     Everything driver-computable IS computed driver-side, in zero or one
     Spark jobs (warm-latency item, VERDICT r4 item 4 — the per-batch prep
-    previously cost ~6 jobs before the first real stage):
+    previously cost ~6 jobs before the first real stage), and the frame is
+    a :func:`local_frame`, so broadcasting it into the join runs no job:
 
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
       locked by tests/test_hashing.py) instead of a ``withColumn`` the
@@ -88,7 +106,7 @@ def query_terms_df(
             r + (idf_map[r[1]], avgdl) for r in rows if r[1] in idf_map
         ]
         schema += ", idf double, avgdl double"
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     df._pruning_pairs = sorted({(r[4], r[1]) for r in rows})
     return df
 
@@ -135,10 +153,8 @@ def attach_scoring_stats(
     ``_pruning_pairs`` like query_terms_df's."""
     pairs = _pruning_pairs(terms)
     idf_map = _idf_lut(index, pairs)
-    # a local relation (from pandas): broadcast without a Spark job
-    lut = terms.sparkSession.createDataFrame(
-        pd.DataFrame(sorted(idf_map.items()), columns=["term", "idf"]),
-        "term string, idf double",
+    lut = local_frame(
+        terms.sparkSession, sorted(idf_map.items()), "term string, idf double"
     )
     out = terms.join(F.broadcast(lut), "term", "inner").withColumn(
         "avgdl", F.lit(_cached_avgdl(index))
@@ -423,11 +439,8 @@ def rank(
     )
 
     # O-47/O-49: per-query top-k, total order (−score, doc_id) (Q16).
-    w_rank = Window.partitionBy("qnum").orderBy(F.desc("score"), F.asc("doc_id"))
-    topk = (
-        per_doc.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= top_k)
-        .select("qnum", "rank", "doc_id", "score", "bm25_sum", "match_count")
+    topk = wand._topk_per_qnum(
+        per_doc, top_k, keep=("bm25_sum", "match_count")
     )
 
     # O-27: hydration join — top-k side is tiny, broadcast it.
@@ -442,11 +455,12 @@ def rank(
 
 
 def release(results: DataFrame) -> None:
-    """Unpersist the intermediate frames a materialized :func:`rank`
-    pinned (``results._cached_frames``) — call after consuming the result
-    in a loop (interactive search, benchmark repeats) so cached storage
-    does not accumulate across batches.  No-op for frames without the
-    attribute (materialize=False, or results from other operators)."""
+    """Unpersist the intermediate frames a materialized :func:`rank` or a
+    pruned ``wand`` top-k pinned (``results._cached_frames``) — call after
+    consuming the result in a loop (interactive search, benchmark repeats)
+    so cached storage does not accumulate across batches.  No-op for
+    frames without the attribute (materialize=False, or results from other
+    operators)."""
     for df in getattr(results, "_cached_frames", []):
         df.unpersist()
 
@@ -505,8 +519,6 @@ def search(
             spark, index, [(1, corrected)], top_k=top_k, expansion=expansion
         )
     else:
-        from . import wand
-
         compiled = [compile_query(1, corrected, expansion)]
         terms = query_terms_df(spark, compiled, index=index)
         scored = wand.bm25_topk_auto(
@@ -518,6 +530,7 @@ def search(
             .join(F.broadcast(scored), "doc_id")
             .select("qnum", "rank", "doc_id", "url", "score")
         )
+        topk._cached_frames = getattr(scored, "_cached_frames", [])
     # Reference snippet query: the processed query sans the injected
     # "tuebingen" (retrieval.py:416-418).
     from .expansion import preprocess_query
@@ -525,11 +538,11 @@ def search(
     snippet_query = " ".join(
         w for w in preprocess_query(corrected).split() if w != "tuebingen"
     ) or "tuebingen"
-    queries = spark.createDataFrame([(1, snippet_query)], "qnum int, text string")
+    queries = local_frame(spark, [(1, snippet_query)], "qnum int, text string")
     out = add_snippets(topk, docs, queries).select(
         "rank", "doc_id", "url", "score", "snippet"
     ).orderBy("rank")
-    # ride the rank() cache handles so interactive loops can release()
+    # ride the top-k's cache handles so interactive loops can release()
     out._cached_frames = getattr(topk, "_cached_frames", [])
     return out
 

@@ -91,54 +91,52 @@ def _ub_and_exact(
     )
 
 
-TOPK_SALT = 16
-
-
 def _topk_per_qnum(
     scores: DataFrame, k: int, value_col: str = "score",
-    salt: int = TOPK_SALT, keep: tuple[str, ...] = (),
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per-query exact top-k WITHOUT a one-reducer-per-query window.
+    """Per-query exact top-k in total order (−value, doc_id): ONE
+    ``row_number()`` over ``partitionBy("qnum")`` filtered to ``rank ≤ k``.
 
-    ``Window.partitionBy("qnum")`` funnels each query's full matched set
-    (hundreds of thousands of rows) into a single sorted partition — 2
-    queries ⇒ 2 busy cores of 32.  Two-level instead: per-(qnum, salt)
-    partial top-k in parallel (the global top-k is a subset of the union of
-    per-salt top-ks), then the exact window over the ≤ k·salt survivors.
+    Spark plans the rank filter as a ``WindowGroupLimit`` pair: a Partial
+    limit BEFORE the qnum exchange keeps at most k rows per query from
+    each map task, and the Final one after it ranks ≤ k·tasks survivors —
+    so a query's matched set never funnels through one reducer.  Spark
+    applies it for k ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (1000); above that the plan is still exact, just unlimited before the
+    exchange.
 
     ``keep``: extra columns carried through to the output unchanged.
     """
-    vc, w_cols = F.col(value_col), [F.desc(value_col), F.asc("doc_id")]
-    w1 = Window.partitionBy("qnum", "_s").orderBy(*w_cols)
-    w2 = Window.partitionBy("qnum").orderBy(*w_cols)
+    w = Window.partitionBy("qnum").orderBy(F.desc(value_col), F.asc("doc_id"))
     return (
-        scores.withColumn("_s", F.pmod(F.xxhash64("doc_id"), F.lit(salt)))
-        .withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= k)
-        .withColumn("rank", F.row_number().over(w2))
+        scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qnum", "rank", "doc_id", vc.alias(value_col), *keep)
+        .select("qnum", "rank", "doc_id", value_col, *keep)
     )
 
 
 def _theta_literal(scores_for_seeds: DataFrame, k: int) -> DataFrame:
-    """θ per qnum, COLLECTED eagerly and re-inlined as a literal frame.
+    """θ per qnum, COLLECTED eagerly and re-inlined as a local frame.
 
     θ is one double per query.  Leaving it lazy makes the final action
     re-evaluate the whole ub+seed subtree a second time (Spark shares no
     work across branches of one DAG without an explicit materialization);
     collecting the per-query minimum splits the computation into two jobs
-    that each evaluate every subtree once.  Driver traffic: nq rows.
+    that each evaluate every subtree once.  Driver traffic: nq rows; the
+    local frame broadcasts without a job.
     """
-    spark = scores_for_seeds.sparkSession
+    from .query import local_frame
+
     rows = (
         _topk_per_qnum(scores_for_seeds, k)
         .groupBy("qnum")
         .agg(F.min("score").alias("theta"))
         .collect()
     )
-    return spark.createDataFrame(
-        [(r.qnum, float(r.theta)) for r in rows] or [(None, None)],
+    return local_frame(
+        scores_for_seeds.sparkSession,
+        [(r.qnum, float(r.theta)) for r in rows],
         "qnum int, theta double",
     )
 
@@ -146,7 +144,12 @@ def _theta_literal(scores_for_seeds: DataFrame, k: int) -> DataFrame:
 def bm25_topk_exhaustive(
     postings: DataFrame, terms: DataFrame, k: int = 100
 ) -> DataFrame:
-    """Baseline: score every matched doc, salted two-level top-k per query."""
+    """Baseline: score every matched doc, one windowed top-k per query.
+
+    Over a ``read_index(serve=True)`` cache the postings arrive
+    hash-partitioned by doc_id, so the per-(qnum, doc_id) sum runs inside
+    the scan stage; the only exchange is the qnum one of the top-k, fed
+    ≤ k rows per query per task (:func:`_topk_per_qnum`)."""
     scores = (
         _matched(postings, terms)
         .groupBy("qnum", "doc_id")
@@ -164,13 +167,13 @@ def bm25_topk_wand(
     aggregation producing each doc's upper bound carries its exact Σ bm25
     alongside, so θ = min exact score of the top-k-by-ub seeds needs no
     second scan, and phase C is a filter over the already-computed exact
-    scores.  The aggregated frame is materialized once (localCheckpoint —
-    on a cluster this pins the 4-column frame to executor storage;
-    recompute-on-failure is lost, the right trade for a cheap frame) and θ
-    is collected eagerly (see _theta_literal), so the whole path runs two
-    jobs over one scan.
+    scores.  The aggregated frame is persisted (lineage kept, so an
+    executor loss recomputes it) and filled by the eager θ collect (see
+    _theta_literal), so the whole path runs two jobs over one scan.  The
+    persisted frame rides on the result as ``_cached_frames``: call
+    ``query.release`` on the result once it is consumed.
     """
-    agg = _ub_and_exact(postings, blocks, terms).localCheckpoint(eager=False)
+    agg = _ub_and_exact(postings, blocks, terms).persist()
 
     # Seeds: top-k docs BY UPPER BOUND; their exact scores ride along, so
     # θ (the k-th best exact seed score) is one tiny aggregation away.
@@ -189,7 +192,9 @@ def bm25_topk_wand(
         .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
         .select("qnum", "doc_id", F.col("bm25_sum").alias("score"))
     )
-    return _topk_per_qnum(scores, k)
+    out = _topk_per_qnum(scores, k)
+    out._cached_frames = [agg]
+    return out
 
 
 PROX_ALPHA = 1.0
@@ -325,8 +330,12 @@ def bm25_prox_topk_wand(
     Phase C scans blobs ONLY (no bm25 column — Σ bm25 rides in from the
     narrow pass), semi-joined to candidates, so the expensive stage's rows
     shrink by the pruning ratio.
+
+    The narrow pass is persisted and rides on the result as
+    ``_cached_frames``, as in :func:`bm25_topk_wand`: ``query.release``
+    the result once it is consumed.
     """
-    agg = _cascade_agg(postings, terms, alpha).localCheckpoint(eager=False)
+    agg = _cascade_agg(postings, terms, alpha).persist()
     seeds = _topk_per_qnum(agg, k, value_col="bm25_sum")
     theta = _theta_literal(
         seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")), k
@@ -363,7 +372,9 @@ def bm25_prox_topk_wand(
         "doc_id",
         (F.col("bm25_sum") + F.lit(alpha) * F.col("prox")).alias("score"),
     )
-    return _topk_per_qnum(scores, k)
+    out = _topk_per_qnum(scores, k)
+    out._cached_frames = [agg]
+    return out
 
 
 def bm25_topk_auto(
@@ -414,7 +425,7 @@ def pruning_stats(
         agg = _ub_and_exact(postings, blocks, terms)
     else:
         agg = _cascade_agg(postings, terms, alpha)
-    agg = agg.localCheckpoint(eager=False)
+    agg = agg.persist()
     n_matched = agg.count()
     seeds = _topk_per_qnum(agg, k, value_col="ub", keep=("bm25_sum",))
     if alpha is None:
@@ -440,4 +451,5 @@ def pruning_stats(
         .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
         .count()
     )
+    agg.unpersist()
     return {"matched_docs": n_matched, "scored_docs": n_candidates}

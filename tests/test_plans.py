@@ -6,6 +6,8 @@ regression here means a full-scan or row-at-a-time Python stage snuck in.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,10 +55,12 @@ def test_retrieval_join_broadcasts_and_prunes_buckets(spark, docs_df, tmp_path):
     )
     plan = formatted_plan(ranked)
     assert "BroadcastHashJoin" in plan
-    # Static literal pruning reaches the scan: the bucket IN-list shows up in
-    # PartitionFilters and the term IN-list in PushedFilters.
+    # Static literal pruning reaches the scan: the bucket IN-list of
+    # literals shows up in PartitionFilters (as IN, or INSET past ten
+    # values) and the term IN-list in PushedFilters.
     assert any(
-        "PartitionFilters" in ln and "term_bucket" in ln and " IN " in ln.upper()
+        "PartitionFilters" in ln
+        and re.search(r"term_bucket#\d+ (IN \(|INSET )\d", ln)
         for ln in plan.splitlines()
     ), plan[:2000]
     assert any(
@@ -154,3 +158,58 @@ def test_bm25_topk_filters_terms_before_tf_shuffle(spark):
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in executed
     assert "TakeOrderedAndProject" in executed
+
+
+def _executed_nodes(df):
+    """Every node of ``df``'s executed (final adaptive) plan as its one-line
+    string, walking into query stages but NOT into a cache scan's cached
+    plan — so the nodes are exactly the ones that run per query."""
+    df.collect()
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        children = node.children()
+        kids = [children.apply(i) for i in range(children.size())]
+        out.append((node.simpleString(100), [k.nodeName() for k in kids]))
+        stack.extend(kids)
+    return out
+
+
+def test_served_topk_is_one_window_without_doc_exchange(spark, docs_df, tmp_path):
+    """Over read_index(serve=True) the light top-k runs with no aggregate
+    exchange (the doc_id-sharded cache already clusters each document),
+    one WindowGroupLimit top-k whose Partial half runs before the qnum
+    exchange, and a query-terms side that broadcasts from a local relation
+    (no job to build it)."""
+    from modernsearchengines_spark.operators import indexer, query, wand
+    from modernsearchengines_spark.operators.expansion import compile_query
+
+    idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
+    indexer.write_index(idx, str(tmp_path / "idx"))
+    indexer.unpersist_index(idx)
+    served = indexer.read_index(spark, str(tmp_path / "idx"), serve=True)
+    compiled = [compile_query(1, "castle museum"), compile_query(2, "beer wine")]
+    terms = query.query_terms_df(spark, compiled, index=served)
+    nodes = _executed_nodes(wand.bm25_topk_exhaustive(served["postings"], terms, 10))
+    names = [s for s, _ in nodes]
+
+    assert any(
+        s.startswith("WindowGroupLimit") and s.endswith("Partial") for s in names
+    ), names
+    assert sum(s.startswith("Window ") for s in names) == 1, names
+    doc_exchanges = [
+        s for s in names if re.match(r"Exchange hashpartitioning\([^)]*doc_id", s)
+    ]
+    assert not doc_exchanges, doc_exchanges
+    assert any(s.startswith("InMemoryTableScan") for s in names), names
+    broadcast_inputs = [k for s, k in nodes if s.startswith("BroadcastExchange")]
+    assert broadcast_inputs and all(
+        k == ["LocalTableScan"] for k in broadcast_inputs
+    ), broadcast_inputs
+    served["postings"].unpersist()

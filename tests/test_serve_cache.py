@@ -1,10 +1,10 @@
-"""read_index(serve=True): core-aligned cached postings for query serving.
+"""read_index(serve=True): doc_id-sharded cached postings for query serving.
 
-Regression context (round 5): the batch default 128 MB scan splits cached
-the 400k-doc bench index's 36M posting rows as 12 partitions, capping every
-cached-scan query stage at 12-way parallelism — query-batch wall at 32
-cores was 3.8x slower than with core-aligned splits.  serve=True sizes the
-splits to ~3 partitions per session core at cache-materialization time.
+serve=True caches the postings as 3·defaultParallelism hash shards on
+doc_id, each sorted by (term_bucket, term): every cached-scan stage is as
+wide as the session, and a per-(qnum, doc_id) score aggregate over the
+cache needs no exchange.  The content must equal the plain read's, and
+opening must leave the session conf as it found it.
 """
 
 from __future__ import annotations
@@ -30,13 +30,12 @@ def test_serve_true_is_cached_and_identical(spark, docs_df, tmp_path_factory):
     indexer.write_index(idx, out)
     indexer.unpersist_index(idx)
 
-    key = "spark.sql.files.maxPartitionBytes"
-    conf_before = spark.conf.get(key)
+    conf_before = spark.conf.getAll
     plain = indexer.read_index(spark, out)
     served = indexer.read_index(spark, out, serve=True)
 
-    # the temporary split conf must not leak into the session
-    assert spark.conf.get(key) == conf_before
+    # opening leaves the session conf as it found it
+    assert spark.conf.getAll == conf_before
 
     # served postings are cache-materialized in memory
     assert served["postings"].storageLevel.useMemory
@@ -46,30 +45,19 @@ def test_serve_true_is_cached_and_identical(spark, docs_df, tmp_path_factory):
     assert (a.h, a.n) == (b.h, b.n)
     assert a.n > 0
 
-    # split sizing never REDUCES parallelism vs the batch default
+    # 3 doc_id shards per session core, each doc wholly in one shard
     assert (
         served["postings"].rdd.getNumPartitions()
-        >= plain["postings"].rdd.getNumPartitions()
+        == 3 * spark.sparkContext.defaultParallelism
     )
+    spread = (
+        served["postings"]
+        .select("doc_id", F.spark_partition_id().alias("part"))
+        .distinct()
+        .groupBy("doc_id")
+        .count()
+        .agg(F.max("count"))
+        .collect()[0][0]
+    )
+    assert spread == 1
     served["postings"].unpersist()
-
-
-def test_dir_bytes_matches_filesystem(spark, docs_df, tmp_path_factory):
-    import os
-
-    out = str(tmp_path_factory.mktemp("idx") / "sz")
-    idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
-    indexer.write_index(idx, out)
-    indexer.unpersist_index(idx)
-
-    visible = 0
-    for root, _dirs, files in os.walk(f"{out}/postings"):
-        visible += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith((".", "_"))  # crc/_SUCCESS side files
-        )
-    got = indexer._dir_bytes(spark, f"{out}/postings")
-    # getContentSummary may or may not include FS side files depending on
-    # the scheme; the split math only needs the right order of magnitude
-    assert visible <= got <= int(visible * 1.25) + 4096

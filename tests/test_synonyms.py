@@ -105,3 +105,28 @@ def test_distinct_pairs_fast_path_matches_general_path(spark):
     s = {key(r): (r["n_ab"], r["n_1"], r["n_2"]) for r in slow.collect()}
     assert f == s
     assert f, "fixture must produce co-occurring pairs"
+
+
+def test_general_path_tolerates_duplicate_term_doc_rows(spark):
+    """Repeated (term, doc_id) rows must not change the general path's
+    output: no term pairs with itself, and every count equals the count
+    over the de-duplicated rows."""
+    from modernsearchengines_spark.operators.expansion import (
+        cooccurrence_counts,
+    )
+
+    rows = []
+    words = ["alpha", "beta", "gamma", "delta"]
+    for d in range(20):
+        for i, w in enumerate(words):
+            if (d + i) % 2 == 0 or d % 3 == i:
+                rows.append((d, w))
+    dup = rows + [r for r in rows if r[0] % 2 == 0]  # every even doc twice
+    kw = dict(vocab_top=4, per_doc_cap=3, min_pair=2)
+    schema = "doc_id long, term string"
+    got = cooccurrence_counts(spark.createDataFrame(dup, schema), **kw).collect()
+    want = cooccurrence_counts(spark.createDataFrame(rows, schema), **kw).collect()
+    assert want, "fixture must produce co-occurring pairs"
+    assert all(r["term"] != r["syn"] for r in got)
+    key = lambda r: (r["term"], r["syn"], r["n_ab"], r["n_1"], r["n_2"])
+    assert sorted(map(key, got)) == sorted(map(key, want))

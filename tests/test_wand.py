@@ -148,3 +148,62 @@ def test_payload_pruning_stats(spark_index, terms):
         alpha=wand.PROX_ALPHA,
     )
     assert 0 < casc["scored_docs"] <= casc["matched_docs"]
+
+
+@pytest.fixture(scope="module")
+def opened(spark, spark_index, tmp_path_factory):
+    """The fixture index written to disk, opened plain and served."""
+    out = str(tmp_path_factory.mktemp("wand_idx") / "idx")
+    indexer.write_index(spark_index, out)
+    plain = indexer.read_index(spark, out)
+    served = indexer.read_index(spark, out, serve=True)
+    yield plain, served
+    served["postings"].unpersist()
+
+
+@pytest.mark.parametrize("k", [10, 100])
+def test_served_exhaustive_equals_plain_read(spark, opened, k):
+    """The doc_id-sharded serve cache ranks exactly as the plain read."""
+    plain, served = opened
+    compiled = [compile_query(q, t) for q, t in QUERIES]
+    terms = query.query_terms_df(spark, compiled, index=plain)
+    base = wand.bm25_topk_exhaustive(plain["postings"], terms, k).collect()
+    got = wand.bm25_topk_exhaustive(served["postings"], terms, k).collect()
+    base_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in base}
+    got_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in got}
+    assert base_m.keys() == got_m.keys()
+    assert len(base_m) > k  # several queries fill their top k
+    for key, (doc_id, score) in base_m.items():
+        g_doc, g_score = got_m[key]
+        assert g_doc == doc_id, key
+        assert math.isclose(g_score, score, rel_tol=0, abs_tol=1e-12), key
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_release_returns_storage_to_baseline(spark, spark_index, terms):
+    """The pruned paths persist their aggregate and hand it back on the
+    result; query.release frees it, and pruning_stats frees its own."""
+    postings, blocks = spark_index["postings"], spark_index["blocks"]
+    # warm-up: materialize every lazily cached input, and release any
+    # same-plan aggregate an earlier test left cached, before the baseline
+    for warm in (
+        wand.bm25_topk_wand(postings, blocks, terms, 10),
+        wand.bm25_prox_topk_wand(postings, blocks, terms, 10),
+    ):
+        warm.collect()
+        query.release(warm)
+    base = _persisted_rdds(spark)
+
+    light = wand.bm25_topk_wand(postings, blocks, terms, 10)
+    heavy = wand.bm25_prox_topk_wand(postings, blocks, terms, 10)
+    light.collect(), heavy.collect()
+    assert _persisted_rdds(spark) == base + 2
+    query.release(light)
+    query.release(heavy)
+    assert _persisted_rdds(spark) == base
+
+    wand.pruning_stats(postings, blocks, terms, k=10)
+    assert _persisted_rdds(spark) == base
