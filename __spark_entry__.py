@@ -40,24 +40,28 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 @lru_cache(maxsize=None)
-def _row_groups(path: str) -> int:
-    """Total parquet row groups under ``path`` — the unit of scan
-    parallelism (a task reads whole row groups, so a single-row-group file
-    is read by ONE task no matter how many byte-range splits are planned).
-    Driver-side metadata footer read only; unknown layouts report
-    'plenty' so the spread below stays a no-op."""
-    import pyarrow.parquet as pq
+def _row_groups(spark: SparkSession, path: str) -> int:
+    """Parquet row groups under ``path`` — the unit of scan parallelism (a
+    task reads whole row groups, so a single-row-group file is read by ONE
+    task no matter how many byte-range splits are planned).  Lists
+    recursively, so partitioned ``key=value/`` layouts count, and stops
+    counting at the session's parallelism, all the spread below asks.
+    Driver-side footer reads through sources/fsio, so the probe works on
+    hdfs://, s3a:// and file: alike; unknown layouts report 'plenty' so
+    the spread stays a no-op."""
+    from modernsearchengines_spark.sources import fsio
 
+    cap = spark.sparkContext.defaultParallelism
+    n = 0
     try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_row_groups
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_row_groups
+        for f in fsio.walk_files(spark, path):
+            if f.endswith(".parquet"):
+                n += fsio.parquet_row_groups(spark, f)
+                if n >= cap:
+                    break
     except Exception:
-        return 1 << 30
+        return cap
+    return n
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str, key: str) -> DataFrame:
@@ -72,7 +76,7 @@ def _spread(spark: SparkSession, df: DataFrame, path: str, key: str) -> DataFram
     key keeps the redistribution deterministic under task retry
     (guide §2.5 on rand-derived keys)."""
     par = spark.sparkContext.defaultParallelism
-    if _row_groups(path) < par:
+    if _row_groups(spark, path) < par:
         return df.repartition(par, F.col(key))
     return df
 
@@ -218,7 +222,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @contextmanager
 def _payload_index(spark: SparkSession, sf_dir: str):
-    """Yields (postings, blocks, query terms) over `documents` for the
+    """Yields (postings, query terms) over `documents` for the
     pruned and payload contract entries (q_wand_pruned_topk, q_payload_topk,
     q_plm_topk), laid out and scored by the engine's own code: an enriched
     frame built from the JVM whitespace tokens goes through
@@ -278,11 +282,7 @@ def _payload_index(spark: SparkSession, sf_dir: str):
             F.pmod(F.xxhash64("term"), F.lit(indexer.DEFAULT_TERM_BUCKETS))
             .cast("int"),
         )
-        yield (
-            index["postings"],
-            index["blocks"],
-            query.attach_scoring_stats(qterms, index),
-        )
+        yield index["postings"], query.attach_scoring_stats(qterms, index)
     finally:
         enriched.unpersist()
 
@@ -300,7 +300,7 @@ def _collected(df: DataFrame, ranked: DataFrame) -> DataFrame:
 
 def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Payload-refined pruned top-k (wand.bm25_prox_topk_wand) driven over
-    a postings+blocks layout derived from `documents`: score = Σ bm25 +
+    a postings layout derived from `documents`: score = Σ bm25 +
     α·min-span over varbyte-decoded positions, rank-safe cascade-bound
     candidate pruning (exact light score + payload cap as the upper
     bound), rank-identical to the exhaustive twin (tests/test_wand.py).
@@ -310,8 +310,8 @@ def q_payload_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the full pruned payload pipeline's VALUES, not just rows."""
     from modernsearchengines_spark.operators import wand
 
-    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
-        out = wand.bm25_prox_topk_wand(postings, blocks, qterms, k=20)
+    with _payload_index(spark, sf_dir) as (postings, qterms):
+        out = wand.bm25_prox_topk_wand(postings, None, qterms, k=20)
         return _collected(
             out.select("rank", "doc_id", F.round("score", 6).alias("score")),
             out,
@@ -332,9 +332,9 @@ def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from modernsearchengines_spark.operators import wand
     from modernsearchengines_spark.operators.proximity import plm_score_vb_udf
 
-    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
+    with _payload_index(spark, sf_dir) as (postings, qterms):
         out = wand.bm25_prox_topk_wand(
-            postings, blocks, qterms, k=20, scorer=plm_score_vb_udf
+            postings, None, qterms, k=20, scorer=plm_score_vb_udf
         )
         return _collected(
             out.select("rank", "doc_id", F.round("score", 6).alias("score")),
@@ -343,16 +343,15 @@ def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_wand_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Light pruned top-k (wand.bm25_topk_wand): the block-max candidate
-    pipeline — fused ub+exact scan, θ-seeding, phase-C filter — with α=0
-    (pure Σ bm25, no payload UDF), so the WHOLE pruning machinery is
-    ANSI-SQL-expressible and hash-checked against the DuckDB BM25 oracle
-    (VERDICT r02 next-step 5).  Rank-identity with the exhaustive path is
-    separately locked by tests/test_wand.py."""
+    """Light (pure Σ bm25, no payload UDF) top-k as the engine serves it:
+    wand.bm25_topk_exhaustive — one narrow scan, one per-doc sum, one
+    windowed top-k — hash-checked against the DuckDB BM25 oracle.  The
+    name is kept from the deleted block-max pruned plan, which computed
+    the same exact sum in the same scan and then did more work on top."""
     from modernsearchengines_spark.operators import wand
 
-    with _payload_index(spark, sf_dir) as (postings, blocks, qterms):
-        out = wand.bm25_topk_wand(postings, blocks, qterms, k=20)
+    with _payload_index(spark, sf_dir) as (postings, qterms):
+        out = wand.bm25_topk_exhaustive(postings, qterms, k=20)
         return _collected(
             out.select(
                 "qnum", "rank", "doc_id", F.round("score", 6).alias("score")

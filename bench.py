@@ -303,7 +303,7 @@ def time_index_build(cores: int, corpus_path: str, out_dir: str) -> dict:
     # Python-CPU-bound work eagerly (clean + simhash + tokenize/encode
     # UDF + enriched segment write + stats); write_index is the JVM
     # shuffle/parquet layout (df agg, bucket exchange,
-    # postings/blocks/terms writes).
+    # postings/terms writes).
     idx = indexer.build_index(spark, clean)
     t1 = time.time()
     tok_cpu = _cpu_delta_sec(c0)
@@ -342,10 +342,10 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
     reported for a full 300+ MB blob scan), while footer sizes are exact
     and deterministic.
 
-    Evidences bm25_topk_auto's strategy choice: the pruned path's phase-A
-    upper-bound pass (term, doc_id, block_id, tf, dl) is a small fraction
-    of the payload scan (term, doc_id, tf, dl, positions_vb) because the
-    position blobs dominate on-disk bytes.
+    Evidences bm25_topk_auto's strategy choice: the light pass (term,
+    doc_id, tf, dl) is a small fraction of the payload scan (term, doc_id,
+    tf, dl, positions_vb) because the position blobs dominate on-disk
+    bytes.
     """
     import glob as _glob
 
@@ -378,17 +378,11 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
     def mb(cols):
         return round(sum(col_bytes.get(c, 0) for c in cols) / 1e6, 1)
 
-    blocks_mb = 0.0
-    for path in _glob.glob(f"{index_dir}/blocks/*.parquet"):
-        blocks_mb += os.path.getsize(path) / 1e6
     # Scoring columns: (tf, dl), scored at query time (indexer.bm25_expr).
     score = ["tf", "dl"]
     return {
         "available": True,
         "n_pruned_bucket_files": n_files,
-        "ub_pass_mb": round(
-            mb(["term", "doc_id", "block_id", *score]) + blocks_mb, 1
-        ),
         "light_exhaustive_mb": mb(["term", "doc_id", *score]),
         "payload_exhaustive_mb": mb(["term", "doc_id", *score, "positions_vb"]),
         "bucket_total_mb": mb(col_bytes.keys()),
@@ -440,7 +434,8 @@ def time_queries(
     (the r4 uncapped retry loop helped blow the driver budget), and the
     best-median attempt is reported with the attempt count.  The A/B
     pairs (exhaustive vs pruned per payload tier) run back-to-back inside
-    one epoch.  The PLM pair runs ``plm_runs`` times with NO extra untimed
+    one epoch; the light tier has one strategy, the exhaustive pass, timed
+    alone.  The PLM pair runs ``plm_runs`` times with NO extra untimed
     warmup (its exhaustive side costs ~a minute; scans and Python workers
     are already warm from the payload pair — the residual first-run bias
     is disclosed in BASELINE.md).  ``budget_left`` (callable → sec) lets
@@ -480,21 +475,17 @@ def time_queries(
     compiled = [compile_query(q, t) for q, t in REFERENCE_QUERIES]
     terms = query.query_terms_df(spark, compiled, index=index)
 
-    # A/B pairs, back-to-back per tier: (exhaustive, pruned) × (light,
-    # payload) — adjacency keeps each comparison inside one epoch.
+    def light():
+        wand.bm25_topk_exhaustive(index["postings"], terms, 100).collect()
+
+    light()  # untimed warmup of the shared scan/cache paths
+    runs = _timed_runs(light, repeat)
+    out["exhaustive_topk_warm_sec"] = round(_median(runs), 3)
+    out["exhaustive_topk_warm_runs"] = runs
+
+    # A/B pairs, back-to-back per payload tier: (exhaustive, pruned) —
+    # adjacency keeps each comparison inside one epoch.
     pairs = [
-        (
-            "exhaustive_topk",
-            lambda: wand.bm25_topk_exhaustive(
-                index["postings"], terms, 100
-            ).collect(),
-            "wand_topk",
-            lambda: _collect_released(wand.bm25_topk_wand(
-                index["postings"], index["blocks"], terms, 100
-            )),
-            repeat,
-            True,
-        ),
         (
             "payload_exhaustive",
             lambda: wand.bm25_prox_topk_exhaustive(
@@ -502,7 +493,7 @@ def time_queries(
             ).collect(),
             "payload_wand",
             lambda: _collect_released(wand.bm25_prox_topk_wand(
-                index["postings"], index["blocks"], terms, 100
+                index["postings"], None, terms, 100
             )),
             1,
             True,
@@ -522,7 +513,7 @@ def time_queries(
                 ).collect(),
                 "plm_wand",
                 lambda: _collect_released(wand.bm25_prox_topk_wand(
-                    index["postings"], index["blocks"], terms, 100,
+                    index["postings"], None, terms, 100,
                     scorer=plm_score_vb_udf,
                 )),
                 plm_runs,
@@ -543,11 +534,8 @@ def time_queries(
         out[f"{name_b}_warm_sec"] = round(_median(runs_b), 3)
         out[f"{name_b}_warm_runs"] = runs_b
 
-    out["pruning"] = wand.pruning_stats(
-        index["postings"], index["blocks"], terms, 100
-    )
     out["pruning_payload_cascade"] = wand.pruning_stats(
-        index["postings"], index["blocks"], terms, 100, alpha=wand.PROX_ALPHA
+        index["postings"], None, terms, 100
     )
     return out
 
@@ -1472,7 +1460,6 @@ def render_baseline_md(result: dict, n_bench_docs: int, sf_dir: str) -> str:
             "",
             "| pass | MB fetched |",
             "|---|---|",
-            f"| pruned path phase A (term/doc_id/block_id + blocks table) | {strategy_bytes['ub_pass_mb']} |",
             f"| light exhaustive (term/doc_id + tf/dl, NO blobs) | {strategy_bytes['light_exhaustive_mb']} |",
             f"| payload exhaustive (adds position blobs) | {strategy_bytes['payload_exhaustive_mb']} |",
             f"| pruned buckets, all columns ({strategy_bytes['n_pruned_bucket_files']} of 64 bucket dirs) | {strategy_bytes['bucket_total_mb']} |",

@@ -9,7 +9,7 @@ functions/   pure-Python text core (tokenizer, Porter stemmer, HTML extractor,
              in-repo oracle, plus JVM-side column-expression helpers.
 operators/   indexer (tokenize → explode → salted agg → BM25), posting codec
              (delta+varbyte), query engine (broadcast term join → weight
-             ladder → proximity → top-k), block-max WAND, dedup family,
+             ladder → proximity → top-k), cascade-pruned top-k, dedup family,
              ANN similarity, checkpoint/resume.
 sources/     deterministic fixture corpus generator (Common-Crawl-style docs
              table per BASELINE.json input_hint) and query TSV reader.

@@ -10,7 +10,7 @@ independently; a ``_segments`` manifest row records lineage + metrics
 by skipping segments whose manifest row is ``done`` — the anti-join resume
 of SURVEY O-14.
 
-The merge step (global N, avg_doc_len, collision guard, df, IDF, blocks)
+The merge step (global N, avg_doc_len, collision guard, df, IDF)
 runs over the union of segment outputs through the same
 indexer.score_and_layout that build_index uses.  Global stats CANNOT be
 finalized per-segment (Q2/Q3: N and avg span the whole corpus), which is
@@ -135,13 +135,12 @@ def merge_segments(
     out_dir: str,
     n_segments: int,
     term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
-    n_blocks: int = indexer.DEFAULT_N_BLOCKS,
     df_prune: int = indexer.DF_PRUNE,
 ) -> dict[str, DataFrame]:
     """Finalize the global index from completed segments (SURVEY M3 merge:
     the union of the committed enriched segments through the shared
-    indexer.score_and_layout — N, avg_doc_len, the doc_id collision guard,
-    df/IDF and blocks need corpus-global stats).
+    indexer.score_and_layout — N, avg_doc_len, the doc_id collision guard
+    and df/IDF need corpus-global stats).
 
     Validation is against the EXPECTED segment count, not just the manifest
     rows that happen to exist: a crash between a segment's (partial)
@@ -164,7 +163,7 @@ def merge_segments(
         spark.read.option("basePath", f"{out_dir}/enriched")
         .parquet(*[f"{out_dir}/enriched/segment={s}" for s in done])
     )
-    return indexer.score_and_layout(enriched, term_buckets, n_blocks, df_prune)
+    return indexer.score_and_layout(enriched, term_buckets, df_prune)
 
 
 def build_index_checkpointed(
@@ -189,7 +188,6 @@ def layout_segment(
     out_dir: str,
     seg: int | str,
     term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
-    n_blocks: int = indexer.DEFAULT_N_BLOCKS,
 ) -> None:
     """Append one committed enriched segment's postings
     (indexer.layout_postings) to ``out_dir/postings``, leaving every
@@ -200,7 +198,6 @@ def layout_segment(
         indexer.layout_postings(
             spark.read.parquet(f"{out_dir}/enriched/segment={seg}"),
             term_buckets,
-            n_blocks,
         )
         .repartition("term_bucket")
         .write.mode("append")

@@ -451,6 +451,13 @@ def connected_components(
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint() if reliable else df.localCheckpoint()
 
+    def _free(ckpt: DataFrame) -> None:
+        # DataFrame.unpersist only drops CacheManager entries; a checkpoint
+        # frame is a LogicalRDD over an RDD persisted in executor storage,
+        # so its blocks are freed through that RDD (a no-op for reliable
+        # checkpoints, whose data lives in the checkpoint files).
+        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
     edges = _ckpt(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
@@ -465,10 +472,10 @@ def connected_components(
         .withColumn("component", F.col("id"))
     )
     # Handle to the previous round's checkpointed labels: each round
-    # materializes a NEW full label table, so without an unpersist the
-    # loop accumulates up to max_iter copies in executor storage
-    # (ADVICE r5).  The new checkpoint is eager, so dropping the old
-    # blocks after it materializes is safe.
+    # materializes a NEW full label table, so without freeing the old one
+    # the loop accumulates up to max_iter copies in executor storage.  The
+    # new checkpoint is eager, so dropping the old blocks after it
+    # materializes is safe.
     prev = labels
     converged = False
     for _ in range(max_iter):
@@ -509,13 +516,13 @@ def connected_components(
         )
         updated = _ckpt(updated)
         changed = updated.filter(F.col("_chg")).limit(1).count()
-        if prev is not None:
-            prev.unpersist()
+        _free(prev)
         prev = updated
         labels = updated.drop("_chg")
         if changed == 0:
             converged = True
             break
+    _free(edges)  # the returned labels no longer read the edge table
     if not converged:
         import warnings
 

@@ -8,17 +8,17 @@ the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
          ──*doc_postings (url-words Q4 + tokenize + per-doc term agg +
             varbyte position encode — the ONE Arrow crossing of the whole
             build, NO token shuffle)──enriched parquet segment
-    then (pure JVM) three pieces, each defined once in this module and
+    then (pure JVM) two pieces, each defined once in this module and
     shared by build_index, the checkpointed build (checkpoint.py), the
     corpus append (sources/corpus_io.py) and the streaming ingest
     (:func:`score_and_layout` composes them over enriched segments):
-      * layout   — :func:`layout_postings`: enriched → unpruned deferred
-        (term_bucket, term, doc_id, tf, dl, positions_vb, block_id) rows;
+      * layout   — :func:`layout_postings`: enriched → the one postings
+        layout, unpruned deferred (term_bucket, term, doc_id, tf, dl,
+        positions_vb) rows under ``postings/term_bucket=b/``;
       * finalize — :func:`finalize_stats` (N, avg_doc_len, doc_id
         collision guard) and :func:`terms_table` over
         :func:`term_doc_frequency` (salted df agg [two-level, head-term
-        skew R5] → df>5 prune → IDF → term_bucket);
-      * blocks   — :func:`block_maxima` over the postings and terms.
+        skew R5] → df>5 prune → IDF → term_bucket).
 
 Reference semantics replicated: length cap counts toward N and avg_doc_len
 (Q2/Q3, reference indexing.py:182,193-200), token-count doc length over
@@ -75,7 +75,7 @@ def bm25_expr(idf, tf, dl, avgdl):
     materialized bm25 freezes idf/avgdl (corpus-global stats) into every
     posting row, so ANY corpus append would invalidate and rewrite the
     whole index.  Storing (tf, dl) makes appends touch only the new
-    segment's postings plus the small terms/corpus_stats/blocks tables,
+    segment's postings plus the small terms/corpus_stats tables,
     and makes the layout independent of every corpus-global stat
     (:func:`layout_postings`).  Consumers materialize bm25 with this
     expression right after their (broadcast) query-terms join — per-query
@@ -103,7 +103,6 @@ def idf_expr(n_docs, df):
 MAX_DOC_CHARS = 800_000
 DF_PRUNE = 5
 DEFAULT_TERM_BUCKETS = 64
-DEFAULT_N_BLOCKS = 256  # hash blocks per term for block-max pruning
 # media-URL suffixes the reference excludes from the corpus (O-18,
 # WebCrawler_basis.py:213-214 and the retroactive topic.py:156-174 cleanup)
 MEDIA_URL_SUFFIXES = (".jpg", ".png", ".pdf")
@@ -363,12 +362,10 @@ def _term_bucket(term, term_buckets: int):
 
 
 def layout_postings(
-    enriched: DataFrame,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    n_blocks: int = DEFAULT_N_BLOCKS,
+    enriched: DataFrame, term_buckets: int = DEFAULT_TERM_BUCKETS
 ) -> DataFrame:
     """Enriched segment(s) → the persisted postings rows
-    (term_bucket, term, doc_id, tf, dl, positions_vb, block_id).
+    (term_bucket, term, doc_id, tf, dl, positions_vb).
 
     DEFERRED SCORING (see bm25_expr): rows carry (tf, dl) and no bm25, and
     no df prune — both need corpus-global stats, and keeping them out makes
@@ -376,19 +373,6 @@ def layout_postings(
     its own segment.  df/idf live in the terms table; the df>5 rule is
     applied by the query-time terms join.  Positions arrive already
     varbyte-encoded from doc_postings_udf.
-
-    Block layout: ``block_id = pmod(doc_id, n_blocks)`` — a BOUNDED hash
-    partition of each term's postings (≤ n_blocks per-block maxima per term)
-    rather than classic contiguous doc ranges.  Contiguity only matters for
-    a sequential pointer-walk WAND; the distributed formulation in wand.py
-    needs only "every posting's score ≤ its block's max", which any doc
-    partition provides — and because block_id depends on doc_id alone, a
-    doc occupies the SAME block id across all terms, letting wand.py compute
-    per-block upper bounds from the compact blocks table without touching
-    postings.  Contiguous ranges were tried first and degenerate
-    catastrophically under sparse hash doc ids (one posting per block ⇒
-    blocks table as large as postings, zero pruning — observed as WAND
-    slower than exhaustive at 400k docs).
     """
     return enriched.select(
         "doc_id",
@@ -401,7 +385,6 @@ def layout_postings(
         F.col("p.tf").alias("tf"),
         "dl",
         F.col("p.positions_vb").alias("positions_vb"),
-        F.pmod(F.col("doc_id"), F.lit(n_blocks)).cast("int").alias("block_id"),
     )
 
 
@@ -473,42 +456,13 @@ def terms_table(
     )
 
 
-def block_maxima(
-    postings: DataFrame, terms: DataFrame, avg_doc_len: float
-) -> DataFrame:
-    """Per-(term, block_id) BM25 maxima for block-max WAND (wand.py).
-
-    Max over the idf-free length-normalized part g(tf, dl), scaled by idf
-    afterwards on the ALREADY-AGGREGATED (small) frame — idf > 0 so
-    max(idf·g) = idf·max(g).  The 1-ulp reassociation risk vs the
-    query-time idf·num/den order is absorbed by wand.py's relative guard on
-    every ub ≥ θ comparison.  The inner terms join drops the blocks of
-    df-pruned terms.
-    """
-    g = bm25_expr(
-        F.lit(1.0), F.col("tf"), F.col("dl"), F.lit(float(avg_doc_len))
-    )
-    return (
-        postings.groupBy("term_bucket", "term", "block_id")
-        .agg(F.max(g).alias("_max_g"))
-        .join(F.broadcast(terms.select("term", "idf")), "term")
-        .select(
-            "term_bucket",
-            "term",
-            "block_id",
-            (F.col("idf") * F.col("_max_g")).alias("block_max_bm25"),
-        )
-    )
-
-
 def score_and_layout(
     enriched: DataFrame,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
-    n_blocks: int = DEFAULT_N_BLOCKS,
     df_prune: int = DF_PRUNE,
 ) -> dict[str, DataFrame]:
-    """Enriched segment(s) → the index tables (postings, blocks, terms,
-    doc_stats, corpus_stats): the finalize step every build entry point
+    """Enriched segment(s) → the index tables (postings, terms, doc_stats,
+    corpus_stats): the finalize step every build entry point
     shares (build_index, checkpoint.merge_segments, the streaming ingest's
     segments).  One eager job (:func:`finalize_stats`); everything else is
     lazy until :func:`write_index`.
@@ -518,8 +472,7 @@ def score_and_layout(
     query-terms frame, see query.query_terms_df) — and keep every
     (term, doc) row; the df>5 prune is a rule of the terms table.
     """
-    n_total, avg_doc_len, corpus_stats = finalize_stats(enriched)
-    postings = layout_postings(enriched, term_buckets, n_blocks)
+    n_total, _, corpus_stats = finalize_stats(enriched)
     # df from a NARROW nested scan: extracting the term subfield BEFORE
     # the explode lets Parquet nested-schema pruning skip the fat
     # positions_vb blobs, so this pass streams a few MB of dictionary-
@@ -536,8 +489,7 @@ def score_and_layout(
         term_doc_frequency(term_rows), n_total, df_prune, term_buckets
     )
     return {
-        "postings": postings,
-        "blocks": block_maxima(postings, terms, avg_doc_len),
+        "postings": layout_postings(enriched, term_buckets),
         "terms": terms,
         "doc_stats": enriched.select(
             "doc_id", "url", "warc_ts", "aug_len", "doc_len"
@@ -550,11 +502,10 @@ def build_index(
     spark: SparkSession,
     clean: DataFrame,
     term_buckets: int = DEFAULT_TERM_BUCKETS,
-    n_blocks: int = DEFAULT_N_BLOCKS,
     df_prune: int = DF_PRUNE,
     work_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Build postings/blocks/terms/doc_stats/corpus_stats from a cleaned
+    """Build postings/terms/doc_stats/corpus_stats from a cleaned
     corpus: one enriched segment (:func:`write_enriched`) under
     ``work_dir``, then :func:`score_and_layout`.
 
@@ -576,8 +527,7 @@ def build_index(
     try:
         write_enriched(assign_doc_ids(clean), f"{work_dir}/enriched")
         index = score_and_layout(
-            spark.read.parquet(f"{work_dir}/enriched"),
-            term_buckets, n_blocks, df_prune,
+            spark.read.parquet(f"{work_dir}/enriched"), term_buckets, df_prune
         )
     except BaseException:
         if owned:
@@ -588,12 +538,7 @@ def build_index(
     return index
 
 
-def write_index(
-    index: dict[str, DataFrame],
-    out_dir: str,
-    cluster_terms: bool = False,
-    write_salt: int = 1,
-) -> None:
+def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
     """Persist the index tables (Iceberg-equivalent Parquet layout).
 
     postings are partitioned by ``term_bucket`` = bucket(K, term) so the
@@ -601,42 +546,17 @@ def write_index(
     terms (SURVEY O-24 partition pruning).  Repartition on the bucket column
     first so each bucket gets one coherent file instead of
     (#tasks × #buckets) shards.
-
-    ``cluster_terms``: additionally sortWithinPartitions(term) so each
-    term's postings are contiguous in the bucket file — dictionary indices
-    RLE away and term-equality scans skip pages via column-index stats.
-
-    ``write_salt``: the bucket-keyed repartition caps the write stage at
-    ≤ DEFAULT_TERM_BUCKETS (64) non-empty partitions — one reducer per
-    bucket — fine up to ~64-way parallelism, a hard cap on a 1000-executor
-    cluster.  write_salt=S shards each bucket across S reducers
-    (partition key (term_bucket, xxhash64(doc_id) % S)), so write
-    parallelism = buckets × S while every row still lands in its bucket's
-    directory (S files per dir; readers glob the dir, pruning unchanged).
-    Set S ≈ cluster_cores / DEFAULT_TERM_BUCKETS at scale; 1 (default)
-    keeps the one-coherent-file-per-bucket local layout.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     # The side tables are independent of the big postings job — submit them
     # from worker threads so the Spark scheduler interleaves their (small)
     # stages into slots the memory-bound postings exchange leaves idle,
-    # instead of paying their job latencies serially afterwards.  Only the
-    # blocks derivation orders after postings (it reads the written files —
-    # a narrow columnar re-read beats re-evaluating the scoring subtree).
+    # instead of paying their job latencies serially afterwards.
     def _write_postings() -> None:
-        if write_salt > 1:
-            p = index["postings"].repartition(
-                F.col("term_bucket"),
-                F.pmod(F.xxhash64("doc_id"), F.lit(write_salt)),
-            )
-        else:
-            p = index["postings"].repartition("term_bucket")
-        if cluster_terms:
-            p = p.sortWithinPartitions("term")
-        p.write.mode("overwrite").partitionBy("term_bucket").parquet(
-            f"{out_dir}/postings"
-        )
+        index["postings"].repartition("term_bucket").write.mode(
+            "overwrite"
+        ).partitionBy("term_bucket").parquet(f"{out_dir}/postings")
 
     def _write_side_tables() -> None:
         if "terms" in index:
@@ -657,22 +577,6 @@ def write_index(
         f_side = pool.submit(_write_side_tables)
         f_post.result()
         f_side.result()
-    write_blocks(index, out_dir)
-
-
-def write_blocks(index: dict[str, DataFrame], out_dir: str) -> None:
-    """(Re)derive the block-max table from the WRITTEN postings files (a
-    narrow columnar re-read beats re-evaluating the layout subtree) and
-    the current terms/corpus_stats.  Under deferred scoring this is also
-    the append-time refresh: after a corpus append changes idf/avgdl, only
-    this small derived table (≤ |terms|·n_blocks rows) is recomputed — the
-    fat postings stay untouched."""
-    spark = index["postings"].sparkSession
-    written = spark.read.parquet(f"{out_dir}/postings")
-    avgdl = index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-    block_maxima(written, index["terms"], avgdl).write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/blocks")
 
 
 def unpersist_index(index: dict[str, DataFrame]) -> None:
@@ -723,7 +627,9 @@ def read_index(
 
     index = {
         "postings": postings,
-        "blocks": spark.read.parquet(f"{out_dir}/blocks"),
+        # no block-max table: the key is kept (always None) for callers of
+        # the (postings, blocks, terms, …) wand call shape
+        "blocks": None,
         "doc_stats": spark.read.parquet(f"{out_dir}/doc_stats"),
         "corpus_stats": spark.read.parquet(f"{out_dir}/corpus_stats"),
     }

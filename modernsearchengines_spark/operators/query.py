@@ -266,8 +266,8 @@ def rank(
     """Rank the query batch → (qnum, rank, doc_id, url, score, bm25_sum,
     match_count).
 
-    ``prefilter`` (optional) is a (qnum, doc_id) DataFrame from the block-max
-    WAND stage (wand.py) restricting exact scoring to surviving candidates.
+    ``prefilter`` (optional) is a (qnum, doc_id) DataFrame — e.g. a
+    widened wand.py top-k — restricting exact scoring to those candidates.
 
     ``materialize=False`` skips the two persist/count sites and the
     literal-stats collects (keeping the whole plan lazy) — used by the
@@ -522,7 +522,7 @@ def search(
         compiled = [compile_query(1, corrected, expansion)]
         terms = query_terms_df(spark, compiled, index=index)
         scored = wand.bm25_topk_auto(
-            index["postings"], index["blocks"], terms,
+            index["postings"], None, terms,
             k=top_k, payload=payload,
         )
         topk = (

@@ -1,29 +1,30 @@
-"""Block-max WAND-style pruned BM25 top-k (BASELINE.json north_star/rule).
+"""BM25 top-k: the exhaustive pass and cascade-pruned payload scoring.
 
-Standard disjunctive BM25 top-k (``score(d) = Σ_t bm25(t, d)``) with the
-distributed analogue of block-max WAND (Ding & Suel 2011, "Faster top-k
-document retrieval using block-max indexes"):
+Standard disjunctive BM25 top-k (``score(d) = Σ_t bm25(t, d)``) runs as
+:func:`bm25_topk_exhaustive`: one narrow scan of the bucket-pruned
+postings (term, doc_id, tf, dl — Parquet column pruning keeps the
+positions blobs unread), one per-(qnum, doc_id) sum and one windowed
+top-k.  In columnar Spark that single scan-and-aggregate already yields
+every doc's exact score, so a separate upper-bound pass (the block-max
+WAND of a pointer-walk engine) would add work and prune none of it.
 
-  Phase A  read ONLY the light columns (term, doc_id, block_id,
-           block_max_bm25) of the bucket-pruned postings join and compute a
-           per-doc upper bound ``ub(d) = Σ_t block_max(t, block_t(d))`` —
-           Parquet column pruning keeps positions/positions_vb unread.
-  Phase B  exact-score the top-k docs BY UPPER BOUND (the seed set) and take
-           θ = the k-th exact seed score — a sound threshold, since every
-           true top-k doc has exact ≤ ub.
-  Phase C  exact-score only candidates with ub ≥ θ; window top-k.
+Pruning pays where per-doc scoring is expensive: payload scoring
+(Σ bm25 + α·proximity over varbyte-decoded positions).  There
+:func:`bm25_prox_topk_wand` runs the rank-safe cascade (the distributed
+form of WAND's "skip docs whose bound cannot reach θ"):
 
-In a single-node WAND the win is skipping posting blocks during a pointer
-walk; in columnar Spark the analogue is PROCESSING pruning: the cheap
-upper-bound pass (narrow columns, map-side-combined sum) cuts the set of
-docs that reach the expensive scoring stage (payload decode + heap scan +
-collect_list shuffle) by the pruning ratio (~3× on the bench fixture).  It
-is NOT a storage-bytes win — the candidate semi-join runs after the scan —
-so it pays only when per-doc scoring is expensive: :func:`bm25_topk_auto`
-serves payload scoring with the cascade-pruned plan and pure BM25 with
-the single exhaustive pass (measurements there).  Exactness (pruned ≡
-exhaustive, both scoring modes) is asserted by tests/test_wand.py over the
-whole query batch.
+  Phase A  one narrow scan + aggregate gives each doc its exact Σ bm25
+           and the cascade bound ub(d) = Σ bm25 + α·PROX_MAX for
+           multi-term docs (:func:`_cascade_agg`).
+  Phase B  θ = the k-th Σ bm25 among the top-k-by-Σ bm25 seeds — a sound
+           threshold, since Σ bm25 ≤ payload score pointwise.
+  Phase C  decode and payload-score only the candidates with ub ≥ θ;
+           window top-k.
+
+:func:`bm25_topk_auto` serves pure BM25 with the exhaustive pass and
+payload scoring with the cascade (measurements there).  Exactness (pruned
+≡ exhaustive for both payload scorers) is asserted by tests/test_wand.py
+over the whole query batch.
 
 Postings carry (tf, dl); every scan here scores them with
 ``indexer.bm25_expr`` against the (idf, avgdl) of the query-terms frame,
@@ -35,7 +36,7 @@ DESIGN: its query-global min-max normalizations (Q8/Q11) couple every
 document's final score to the min/max over ALL matched docs, so any pruning
 would change survivors' scores.  This module is the scale path a 100 TB
 corpus would serve standard queries with; ``rank(prefilter=...)`` accepts
-this module's candidates when quirk-parity is not required.
+this module's top-k candidates when quirk-parity is not required.
 """
 
 from __future__ import annotations
@@ -57,37 +58,6 @@ def _matched(postings: DataFrame, terms: DataFrame, *extra: str) -> DataFrame:
         pruned_postings(postings, terms)
         .select("term_bucket", "term", "doc_id", *extra, "tf", "dl")
         .join(qside, ["term_bucket", "term"])
-    )
-
-
-def _ub_and_exact(
-    postings: DataFrame, blocks: DataFrame, terms: DataFrame
-) -> DataFrame:
-    """The fused phase-A/B pass: ONE narrow scan of the light posting
-    columns (term, doc_id, block_id, tf, dl — positions blobs stay unread
-    via Parquet column pruning) joined with the compact blocks table, then
-    ONE per-(qnum, doc_id) aggregation producing BOTH
-
-      ``ub``       = Σ_t block_max(t, block_t(d))   (upper bound)
-      ``bm25_sum`` = Σ_t bm25(t, d)                 (exact light score)
-
-    Carrying the 8-byte bm25 column through the ub pass costs ~nothing and
-    collapses the round-2 design's separate exact-scoring scan: the seed
-    threshold θ and (for pure-BM25 scoring) the final scores come from this
-    same frame, so the light pruned path runs ONE scan total and the payload
-    pruned path saves its phase-B fat scan."""
-    b = blocks.join(
-        F.broadcast(terms.select("term_bucket", "term").distinct()),
-        ["term_bucket", "term"],
-    )
-    return (
-        _matched(postings, terms, "block_id")
-        .join(F.broadcast(b), ["term_bucket", "term", "block_id"])
-        .groupBy("qnum", "doc_id")
-        .agg(
-            F.sum("block_max_bm25").alias("ub"),
-            F.sum("bm25").alias("bm25_sum"),
-        )
     )
 
 
@@ -156,45 +126,6 @@ def bm25_topk_exhaustive(
         .agg(F.sum("bm25").alias("score"))
     )
     return _topk_per_qnum(scores, k)
-
-
-def bm25_topk_wand(
-    postings: DataFrame, blocks: DataFrame, terms: DataFrame, k: int = 100
-) -> DataFrame:
-    """Block-max-pruned top-k; identical output to the exhaustive path.
-
-    One scan total (fused phase A/B, :func:`_ub_and_exact`): the
-    aggregation producing each doc's upper bound carries its exact Σ bm25
-    alongside, so θ = min exact score of the top-k-by-ub seeds needs no
-    second scan, and phase C is a filter over the already-computed exact
-    scores.  The aggregated frame is persisted (lineage kept, so an
-    executor loss recomputes it) and filled by the eager θ collect (see
-    _theta_literal), so the whole path runs two jobs over one scan.  The
-    persisted frame rides on the result as ``_cached_frames``: call
-    ``query.release`` on the result once it is consumed.
-    """
-    agg = _ub_and_exact(postings, blocks, terms).persist()
-
-    # Seeds: top-k docs BY UPPER BOUND; their exact scores ride along, so
-    # θ (the k-th best exact seed score) is one tiny aggregation away.
-    seeds = _topk_per_qnum(agg, k, value_col="ub", keep=("bm25_sum",))
-    theta = _theta_literal(
-        seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")), k
-    )
-
-    # Phase C — keep candidates whose upper bound clears θ; their exact
-    # scores are already in hand.  1-ulp guard: when a doc sits alone in
-    # its blocks, ub(d) ≡ exact(d) mathematically but the two sums reduce
-    # in different orders, so ub can land one ulp BELOW θ at the boundary
-    # (observed; BM25 ≥ 0 so a relative shrink of θ is a sound slack).
-    scores = (
-        agg.join(F.broadcast(theta), "qnum")
-        .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
-        .select("qnum", "doc_id", F.col("bm25_sum").alias("score"))
-    )
-    out = _topk_per_qnum(scores, k)
-    out._cached_frames = [agg]
-    return out
 
 
 PROX_ALPHA = 1.0
@@ -272,15 +203,14 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
 
     (single-list docs score prox = 0, so their bound gains nothing.)
 
-    This bound strictly dominates the block-max bound Σ block_max + α used
-    in round 2: in a pointer-walk WAND the block maxima exist to avoid
+    This bound strictly dominates a block-max bound (Σ of per-block term
+    maxima + α): in a pointer-walk WAND the block maxima exist to avoid
     DECODING per-posting scores, but in columnar Spark the exact Σ bm25
-    costs the same one scan+agg the ub pass already runs — so the cascade
+    costs the same one scan+agg an upper-bound pass runs — so the cascade
     bound is the correct distributed formulation (measured on the 400k
     index, α=1, k=100, 8-query bench set: candidates 2.6% of matched docs
-    vs 41% under the block-max bound Σ block_max + α).
-    This is rank-safe first-stage cascading (cf. Wang/Lin/Metzler 2011)
-    with the block-max path retained for pure-BM25 scoring.
+    vs 41% under the block-max bound).  This is rank-safe first-stage
+    cascading (cf. Wang/Lin/Metzler 2011).
     """
     return (
         _matched(postings, terms)  # narrow: no blobs
@@ -299,7 +229,7 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
 
 
 def bm25_prox_topk_wand(
-    postings: DataFrame, blocks: DataFrame, terms: DataFrame, k: int = 100,
+    postings: DataFrame, _blocks: None, terms: DataFrame, k: int = 100,
     alpha: float = PROX_ALPHA, scorer=None,
 ) -> DataFrame:
     """Payload-refined top-k with rank-safe candidate pruning — identical
@@ -316,9 +246,7 @@ def bm25_prox_topk_wand(
 
     Upper bound: the cascade bound of :func:`_cascade_agg` —
     ub(d) = Σ bm25 + α·PROX_MAX for multi-term docs, the exact light score
-    plus the payload cap (``blocks`` is accepted for API symmetry with the
-    pure-BM25 path but unused: the cascade bound strictly dominates block
-    maxima here).  The narrow pass also yields each doc's exact Σ bm25,
+    plus the payload cap.  The narrow pass also yields each doc's exact Σ bm25,
     and θ = the k-th Σ bm25 among the top-k-by-Σbm25 seeds — sound
     (Σ bm25 ≤ payload score pointwise, so the true k-th best payload score
     dominates the seeds' k-th best lower bound) and free of extra scans,
@@ -332,8 +260,10 @@ def bm25_prox_topk_wand(
     shrink by the pruning ratio.
 
     The narrow pass is persisted and rides on the result as
-    ``_cached_frames``, as in :func:`bm25_topk_wand`: ``query.release``
-    the result once it is consumed.
+    ``_cached_frames``: ``query.release`` the result once it is consumed.
+
+    ``_blocks`` is ignored (pass None); it only holds the second slot of
+    the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.
     """
     agg = _cascade_agg(postings, terms, alpha).persist()
     seeds = _topk_per_qnum(agg, k, value_col="bm25_sum")
@@ -341,8 +271,9 @@ def bm25_prox_topk_wand(
         seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")), k
     )
 
-    # Same 1-ulp relative guard as the pure-BM25 path (ub ≥ score holds
-    # mathematically; float reduction order can land one ulp under θ).
+    # 1-ulp relative guard: ub ≥ score holds mathematically, but float
+    # reduction order can land one ulp under θ (BM25 ≥ 0, so a relative
+    # shrink of θ is a sound slack).
     candidates = (
         agg.join(F.broadcast(theta), "qnum")
         .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
@@ -379,7 +310,7 @@ def bm25_prox_topk_wand(
 
 def bm25_topk_auto(
     postings: DataFrame,
-    blocks: DataFrame,
+    _blocks: None,
     terms: DataFrame,
     k: int = 100,
     payload: bool = False,
@@ -388,64 +319,57 @@ def bm25_topk_auto(
 ) -> DataFrame:
     """Top-k with the measured-faster plan per scoring mode: payload
     scoring → cascade-pruned :func:`bm25_prox_topk_wand`; pure BM25 → the
-    single :func:`bm25_topk_exhaustive` pass (``blocks`` unused there).
+    single :func:`bm25_topk_exhaustive` pass.
 
     Measurements (tools/measure_wand.py, 400k-doc index, 32 cores, warm):
     min-span payload 9.0 s pruned vs 17.6 s exhaustive (2.0×); the PLM
     reranker 13.8 s vs 102.1 s (7.4×); light scoring 3.8 s exhaustive vs
-    7.3 s pruned.  The saving is PROCESSING — the pruned path
-    payload-scores (varbyte decode + position scan + collect_list shuffle)
-    the cascade pruning ratio fewer docs (38× at α=1) — not storage bytes:
-    the candidate semi-join runs after the scan and the narrow ub pass
-    ADDS reads (strategy-bytes table in BENCH/BASELINE.md).
+    7.3 s under the since-deleted block-max pruned plan.  The saving is
+    PROCESSING — the pruned path payload-scores (varbyte decode + position
+    scan + collect_list shuffle) the cascade pruning ratio fewer docs (38×
+    at α=1) — not storage bytes: the candidate semi-join runs after the
+    scan and the narrow ub pass ADDS reads.
+
+    ``_blocks`` is ignored (pass None); it only holds the second slot of
+    the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.
     """
     if payload:
-        return bm25_prox_topk_wand(postings, blocks, terms, k, alpha, scorer)
+        return bm25_prox_topk_wand(postings, None, terms, k, alpha, scorer)
     return bm25_topk_exhaustive(postings, terms, k)
 
 
 def pruning_stats(
     postings: DataFrame,
-    blocks: DataFrame,
+    _blocks: None,
     terms: DataFrame,
     k: int = 100,
-    alpha: float | None = None,
+    alpha: float = PROX_ALPHA,
     scorer=None,
 ) -> dict:
-    """Diagnostic: matched docs vs docs surviving the θ cut.
+    """Diagnostic for :func:`bm25_prox_topk_wand`: matched docs vs docs
+    surviving the θ cut under the cascade bound (Σbm25 + α·PROX_MAX·
+    [multi-term]), with θ the k-th exact payload score of the top-k-by-ub
+    seeds (the pruned path itself skips that seed-scoring job and cuts at
+    the Σbm25 θ).
 
-    ``alpha=None`` reports the light (pure-BM25) path's ratio (block-max
-    ub, exact-Σbm25 θ of the seeds — mirroring :func:`bm25_topk_wand`).
-    Passing an alpha reports the payload path's under the cascade bound of
-    :func:`bm25_prox_topk_wand` (Σbm25 + α·PROX_MAX·[multi-term]) with θ
-    the k-th exact payload score of the top-k-by-ub seeds (the pruned path
-    itself skips that seed-scoring job and cuts at the Σbm25 θ).
+    ``_blocks`` is ignored (pass None); it only holds the second slot of
+    the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.
     """
-    if alpha is None:
-        agg = _ub_and_exact(postings, blocks, terms)
-    else:
-        agg = _cascade_agg(postings, terms, alpha)
-    agg = agg.persist()
+    agg = _cascade_agg(postings, terms, alpha).persist()
     n_matched = agg.count()
-    seeds = _topk_per_qnum(agg, k, value_col="ub", keep=("bm25_sum",))
-    if alpha is None:
-        theta = _theta_literal(
-            seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")),
-            k,
-        )
-    else:
-        theta = _theta_literal(
-            _payload_scores(
-                _matched(postings, terms, "positions_vb").join(
-                    F.broadcast(seeds.select("qnum", "doc_id")),
-                    ["qnum", "doc_id"],
-                    "left_semi",
-                ),
-                alpha,
-                scorer,
+    seeds = _topk_per_qnum(agg, k, value_col="ub")
+    theta = _theta_literal(
+        _payload_scores(
+            _matched(postings, terms, "positions_vb").join(
+                F.broadcast(seeds.select("qnum", "doc_id")),
+                ["qnum", "doc_id"],
+                "left_semi",
             ),
-            k,
-        )
+            alpha,
+            scorer,
+        ),
+        k,
+    )
     n_candidates = (
         agg.join(F.broadcast(theta), "qnum")
         .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))

@@ -69,7 +69,6 @@ def append_to_index(
     new_docs: DataFrame,
     df_prune: int | None = None,
     term_buckets: int | None = None,
-    n_blocks: int | None = None,
 ) -> int:
     """Incremental index refresh: append the new docs' postings and
     re-finalize ONLY the small derived tables — the existing posting files
@@ -86,10 +85,10 @@ def append_to_index(
          (checkpoint.layout_segment — the unpruned layout every build
          writes, so a term whose df crosses the threshold through this
          batch finds all its postings already on disk);
-      4. refresh doc_stats (append), corpus_stats, terms (df re-agg over a
-         NARROW term/doc_id scan of the written postings + new idf) and
-         blocks (indexer.write_blocks) — all small relative to postings —
-         and drop the consumed enriched segment.
+      4. refresh doc_stats (append), corpus_stats and terms (df re-agg
+         over a NARROW term/doc_id scan of the written postings + new idf)
+         — all small relative to postings — and drop the consumed
+         enriched segment.
 
     Near-duplicates of ALREADY-INDEXED docs are not detected here (the
     batch is deduped internally; url is the append key) — cross-batch
@@ -111,7 +110,6 @@ def append_to_index(
     term_buckets = (
         indexer.DEFAULT_TERM_BUCKETS if term_buckets is None else term_buckets
     )
-    n_blocks = indexer.DEFAULT_N_BLOCKS if n_blocks is None else n_blocks
 
     doc_stats_path = f"{index_dir}/doc_stats"
     existing = spark.read.parquet(doc_stats_path)
@@ -133,7 +131,7 @@ def append_to_index(
         existing.unionByName(new_stats)
     )
 
-    checkpoint.layout_segment(spark, index_dir, seg, term_buckets, n_blocks)
+    checkpoint.layout_segment(spark, index_dir, seg, term_buckets)
     new_stats.write.mode("append").parquet(doc_stats_path)
     corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
 
@@ -145,14 +143,5 @@ def append_to_index(
     ).repartition("term_bucket").write.mode("overwrite").partitionBy(
         "term_bucket"
     ).parquet(f"{index_dir}/terms")
-
-    indexer.write_blocks(
-        {
-            "postings": written,
-            "terms": spark.read.parquet(f"{index_dir}/terms"),
-            "corpus_stats": spark.read.parquet(f"{index_dir}/corpus_stats"),
-        },
-        index_dir,
-    )
     fsio.rmtree(spark, f"{index_dir}/enriched/segment={seg}")
     return n_new

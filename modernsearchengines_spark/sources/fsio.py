@@ -1,8 +1,10 @@
 """Filesystem-scheme-safe small-file IO via the Hadoop FileSystem API.
 
-The checkpoint manifests (operators/checkpoint.py) and the idempotent
-corpus append (sources/corpus_io.py) need tiny metadata operations — list a
-directory, read/write a JSON file, move staged parquet parts — next to
+The checkpoint manifests (operators/checkpoint.py), the idempotent
+corpus append (sources/corpus_io.py) and the contract's row-group probe
+(``__spark_entry__._row_groups``) need tiny metadata operations — list a
+directory, read/write a JSON file or a parquet footer, move staged parquet
+parts — next to
 DataFrame reads/writes that already go through Hadoop.  Doing those with
 ``os.path``/``os.listdir`` silently breaks the moment ``out_dir`` is an
 ``hdfs://``/``s3a://`` (or even explicit ``file:``) URI, which is exactly
@@ -16,6 +18,8 @@ string paths; returned names/paths are plain strings.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +71,42 @@ def listdir(spark: SparkSession, path: str) -> list[str]:
     if not fs.exists(jpath):
         return []
     return sorted(st.getPath().getName() for st in fs.listStatus(jpath))
+
+
+def walk_files(spark: SparkSession, path: str) -> Iterator[str]:
+    """Full paths of the files under ``path``, recursing into
+    subdirectories (partitioned ``key=value/`` layouts), lazily so a
+    caller can stop early; ``path`` itself if it is a file, nothing if
+    absent.  Entries named ``_*`` or ``.*`` (commit markers, staging and
+    checksum files) are skipped, as Spark's file index skips them."""
+    fs, jpath, _ = _fs(spark, path)
+    if not fs.exists(jpath):
+        return
+    stack = [jpath]
+    while stack:
+        for st in fs.listStatus(stack.pop()):
+            if st.getPath().getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                stack.append(st.getPath())
+            else:
+                yield st.getPath().toString()
+
+
+def parquet_row_groups(spark: SparkSession, path: str) -> int:
+    """Row-group count of one parquet file, from its footer read by the
+    JVM's parquet-hadoop reader on ``path``'s filesystem."""
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(path),
+            spark._jsc.hadoopConfiguration(),
+        )
+    )
+    try:
+        return int(reader.getRowGroups().size())
+    finally:
+        reader.close()
 
 
 def read_text(spark: SparkSession, path: str) -> str:

@@ -65,6 +65,21 @@ def test_long_chain_needs_multiple_rounds(spark):
     assert set(got.values()) == {0}
 
 
+def test_round_labels_storage_released(spark):
+    """Each round checkpoints a new label table; the previous round's (and,
+    at the end, the edge table's) executor blocks are freed, so after a
+    many-round graph only the returned labels stay persisted."""
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    # a 64-node path: pointer jumping needs ≥ 4 rounds to converge
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    labels = connected_components(pairs)
+    assert jsc.getPersistentRDDs().size() <= base + 1
+    assert {r.component for r in labels.collect()} == {0}
+
+
 def test_random_graphs_match_union_find(spark):
     rng = random.Random(7)
     for _ in range(3):

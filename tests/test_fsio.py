@@ -74,3 +74,33 @@ def test_append_new_docs_idempotent_on_file_scheme(spark, docs_df, tmp_path):
     extra = docs_df.limit(25)
     assert append_new_docs(spark, corpus, extra) == 5
     assert spark.read.parquet(corpus).count() == 25
+
+
+def test_row_groups_probe_counts_partitioned_layout(spark, tmp_path):
+    """The contract's input-skew probe (``__spark_entry__._row_groups``)
+    lists recursively — a ``key=value/`` layout holds no parquet file at
+    its top level — reads footers through fsio (so a file: URI works), and
+    stops counting at the session's parallelism."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+
+    par = spark.sparkContext.defaultParallelism
+
+    def nested(name: str, n_keys: int) -> str:
+        # n_keys key=v/ dirs, one single-row-group file each
+        path = str(tmp_path / name)
+        spark.range(10 * n_keys).withColumn(
+            "key", F.col("id") % n_keys
+        ).repartition(1).write.partitionBy("key").parquet(path)
+        return path
+
+    few = nested("few", 2)
+    assert entrymod._row_groups(spark, few) == 2
+    assert entrymod._row_groups(spark, _file_uri(tmp_path, "few")) == 2
+    many = nested("many", par + 3)
+    assert entrymod._row_groups(spark, many) == par
+
+    if par > 2:  # fewer row groups than cores: the spread repartitions
+        spread = entrymod._spread(spark, spark.read.parquet(few), few, "id")
+        assert spread.rdd.getNumPartitions() == par

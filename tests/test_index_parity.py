@@ -165,38 +165,6 @@ def test_df_prune_applied(spark, spark_index, oracle_index):
         assert math.isclose(g.score, e.score, rel_tol=0, abs_tol=1e-9)
 
 
-def test_block_max_consistency(spark_index):
-    """blocks(term, block_id, block_max_bm25) exactly matches the per-
-    (term, doc-range-block) maxima of the postings, 1:1."""
-    avgdl = float(
-        spark_index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-    )
-    derived = (
-        spark_index["postings"]
-        .join(spark_index["terms"].select("term", "idf"), "term")
-        .withColumn(
-            "bm25", indexer.bm25_expr("idf", "tf", "dl", F.lit(avgdl))
-        )
-        .groupBy("term", "block_id")
-        .agg(F.max("bm25").alias("m"))
-    )
-    joined = derived.join(
-        spark_index["blocks"], ["term", "block_id"], "full_outer"
-    )
-    bad = joined.filter(
-        F.col("m").isNull()
-        | F.col("block_max_bm25").isNull()
-        | (F.abs(F.col("m") - F.col("block_max_bm25")) > 1e-12)
-    ).count()
-    assert bad == 0
-    # hash blocks: block_id is pmod(doc_id, n_blocks)
-    mis = spark_index["postings"].filter(
-        F.col("block_id")
-        != F.pmod(F.col("doc_id"), F.lit(indexer.DEFAULT_N_BLOCKS)).cast("int")
-    ).count()
-    assert mis == 0
-
-
 def test_collision_guard_detects_forced_collision(
     spark, docs_df, monkeypatch, tmp_path
 ):
@@ -250,39 +218,58 @@ def test_unpersist_removes_owned_work_dir(spark, docs_df, tmp_path):
     assert (mine / "enriched").is_dir()
 
 
-def test_write_salt_layout_is_query_identical(spark, docs_df, tmp_path):
-    """write_salt=S shards each bucket's write across S reducers (the
-    >64-way-cluster write-parallelism path); rows still land in their
-    term_bucket directory and the read-back index is row- and
-    query-identical to the default one-reducer-per-bucket layout."""
-    from modernsearchengines_spark.operators import query
-    from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
+POSTINGS_SCHEMA = {
+    "term_bucket": "int",
+    "term": "string",
+    "doc_id": "bigint",
+    "tf": "int",
+    "dl": "int",
+    "positions_vb": "binary",
+}
 
-    idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
-    d0, d4 = str(tmp_path / "plain"), str(tmp_path / "salted")
-    indexer.write_index(idx, d0)
-    indexer.write_index(idx, d4, write_salt=4)
+
+def test_one_postings_layout(spark, docs_df, tmp_path):
+    """Every way of writing an index — build_index + write_index, the
+    checkpointed build, and append_to_index onto a written index — leaves
+    the one postings layout: the six columns above under
+    postings/term_bucket=b/, no blocks/ table, and read_index's "blocks"
+    key None."""
+    import os
+
+    from modernsearchengines_spark.operators import checkpoint
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    def check(out):
+        assert not os.path.exists(os.path.join(out, "blocks")), out
+        assert all(
+            d.startswith("term_bucket=")
+            for d in os.listdir(os.path.join(out, "postings"))
+            if not d.startswith(("_", "."))
+        ), out
+        written = spark.read.parquet(f"{out}/postings")
+        assert {
+            f.name: f.dataType.simpleString() for f in written.schema
+        } == POSTINGS_SCHEMA, out
+        assert indexer.read_index(spark, out)["blocks"] is None
+
+    clean = indexer.clean_docs(docs_df)
+    first = clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
+    extra = clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
+
+    classic = str(tmp_path / "classic")
+    idx = indexer.build_index(spark, first)
+    assert idx["postings"].columns == list(POSTINGS_SCHEMA)
+    indexer.write_index(idx, classic)
     indexer.unpersist_index(idx)
+    check(classic)
 
-    p0 = spark.read.parquet(f"{d0}/postings")
-    p4 = spark.read.parquet(f"{d4}/postings")
-    assert p0.count() == p4.count()
-    # partition pruning intact: every row sits in its own bucket directory
-    mis = p4.filter(
-        F.col("term_bucket")
-        != F.pmod(F.xxhash64("term"), F.lit(indexer.DEFAULT_TERM_BUCKETS)).cast("int")
-    ).count()
-    assert mis == 0
-
-    r0 = query.run_query_batch(
-        spark, indexer.read_index(spark, d0), REFERENCE_QUERIES
-    ).collect()
-    r4 = query.run_query_batch(
-        spark, indexer.read_index(spark, d4), REFERENCE_QUERIES
-    ).collect()
-    assert [(r.qnum, r.rank, r.doc_id) for r in r0] == [
-        (r.qnum, r.rank, r.doc_id) for r in r4
-    ]
-    assert all(
-        abs(a.score - b.score) < 1e-9 for a, b in zip(r0, r4)
+    segmented = str(tmp_path / "segmented")
+    idx = checkpoint.build_index_checkpointed(
+        spark, clean, segmented, n_segments=2
     )
+    assert idx["postings"].columns == list(POSTINGS_SCHEMA)
+    indexer.write_index(idx, segmented)
+    check(segmented)
+
+    assert append_to_index(spark, classic, extra) > 0
+    check(classic)

@@ -66,7 +66,7 @@ def test_search_nonparity_routes_through_auto_dispatch(
     compiled = [compile_query(1, "tübingen attractions")]
     terms = query.query_terms_df(spark, compiled, index=idx)
     direct = (
-        real_auto(idx["postings"], idx["blocks"], terms, k=10)
+        real_auto(idx["postings"], None, terms, k=10)
         .orderBy("rank")
         .collect()
     )

@@ -1,4 +1,4 @@
-"""WAND-on ≡ WAND-off equality (SURVEY §5.2 item 5) + pruning effectiveness."""
+"""Pruned ≡ exhaustive equality (SURVEY §5.2 item 5) + pruning effectiveness."""
 
 from __future__ import annotations
 
@@ -31,21 +31,6 @@ def terms(spark, spark_index):
     return query.query_terms_df(spark, compiled, index=spark_index).cache()
 
 
-@pytest.mark.parametrize("k", [10, 100])
-def test_wand_equals_exhaustive(spark_index, terms, k):
-    base = wand.bm25_topk_exhaustive(spark_index["postings"], terms, k).collect()
-    pruned = wand.bm25_topk_wand(
-        spark_index["postings"], spark_index["blocks"], terms, k
-    ).collect()
-    base_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in base}
-    pruned_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in pruned}
-    assert set(base_m) == set(pruned_m)
-    for key, (doc_id, score) in base_m.items():
-        p_doc, p_score = pruned_m[key]
-        assert p_doc == doc_id, key
-        assert math.isclose(p_score, score, rel_tol=0, abs_tol=1e-12), key
-
-
 @pytest.mark.parametrize("k", [10, 25, 100])
 def test_payload_wand_equals_exhaustive(spark_index, terms, k):
     """Payload-refined (bm25 + α·min-span) pruned top-k ≡ exhaustive."""
@@ -53,7 +38,7 @@ def test_payload_wand_equals_exhaustive(spark_index, terms, k):
         spark_index["postings"], terms, k
     ).collect()
     pruned = wand.bm25_prox_topk_wand(
-        spark_index["postings"], spark_index["blocks"], terms, k
+        spark_index["postings"], None, terms, k
     ).collect()
     base_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in base}
     pruned_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in pruned}
@@ -68,10 +53,10 @@ def test_auto_dispatch(spark_index, terms):
     """bm25_topk_auto: light → exhaustive plan (single pass), payload →
     pruned payload plan; both return well-formed dense-rank results."""
     light = wand.bm25_topk_auto(
-        spark_index["postings"], spark_index["blocks"], terms, k=10
+        spark_index["postings"], None, terms, k=10
     ).collect()
     heavy = wand.bm25_topk_auto(
-        spark_index["postings"], spark_index["blocks"], terms, k=10,
+        spark_index["postings"], None, terms, k=10,
         payload=True,
     ).collect()
     for rows in (light, heavy):
@@ -82,23 +67,13 @@ def test_auto_dispatch(spark_index, terms):
             assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
 
 
-def test_wand_actually_prunes(spark_index, terms):
-    stats = wand.pruning_stats(
-        spark_index["postings"], spark_index["blocks"], terms, k=10
-    )
-    assert stats["scored_docs"] <= stats["matched_docs"]
-    # With k=10 on this corpus the θ cut must exclude a nontrivial share.
-    assert stats["scored_docs"] < stats["matched_docs"]
-
-
 def test_wand_candidates_feed_parity_prefilter(spark, spark_index, terms):
-    """rank(prefilter=...) composes with the WAND candidate set: the top-k of
-    the prefiltered parity ranking over a k'-widened candidate pool equals
-    heads of the exhaustive parity ranking only when normalization sets
-    match; here we just assert the plumbing returns a well-formed result."""
-    topk = wand.bm25_topk_wand(
-        spark_index["postings"], spark_index["blocks"], terms, 50
-    )
+    """rank(prefilter=...) composes with a wand top-k candidate set: the
+    top-k of the prefiltered parity ranking over a k'-widened candidate pool
+    equals heads of the exhaustive parity ranking only when normalization
+    sets match; here we just assert the plumbing returns a well-formed
+    result."""
+    topk = wand.bm25_topk_exhaustive(spark_index["postings"], terms, 50)
     pre = topk.select("qnum", "doc_id")
     res = query.rank(
         spark_index["postings"], terms, spark_index["doc_stats"], top_k=10,
@@ -118,7 +93,7 @@ def test_plm_payload_wand_equals_exhaustive(spark_index, terms):
         spark_index["postings"], terms, 25, scorer=plm_score_vb_udf
     ).collect()
     pruned = wand.bm25_prox_topk_wand(
-        spark_index["postings"], spark_index["blocks"], terms, 25,
+        spark_index["postings"], None, terms, 25,
         scorer=plm_score_vb_udf,
     ).collect()
     base_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in base}
@@ -144,7 +119,7 @@ def test_plm_score_properties():
 
 def test_payload_pruning_stats(spark_index, terms):
     casc = wand.pruning_stats(
-        spark_index["postings"], spark_index["blocks"], terms, k=10,
+        spark_index["postings"], None, terms, k=10,
         alpha=wand.PROX_ALPHA,
     )
     assert 0 < casc["scored_docs"] <= casc["matched_docs"]
@@ -184,26 +159,25 @@ def _persisted_rdds(spark) -> int:
 
 
 def test_release_returns_storage_to_baseline(spark, spark_index, terms):
-    """The pruned paths persist their aggregate and hand it back on the
-    result; query.release frees it, and pruning_stats frees its own."""
-    postings, blocks = spark_index["postings"], spark_index["blocks"]
+    """The pruned payload path persists its aggregate and hands it back on
+    the result; query.release frees it, and pruning_stats frees its own.
+    Two alphas give two distinct aggregate plans (one cache entry each)."""
+    postings = spark_index["postings"]
     # warm-up: materialize every lazily cached input, and release any
     # same-plan aggregate an earlier test left cached, before the baseline
-    for warm in (
-        wand.bm25_topk_wand(postings, blocks, terms, 10),
-        wand.bm25_prox_topk_wand(postings, blocks, terms, 10),
-    ):
+    for alpha in (wand.PROX_ALPHA, 0.5):
+        warm = wand.bm25_prox_topk_wand(postings, None, terms, 10, alpha)
         warm.collect()
         query.release(warm)
     base = _persisted_rdds(spark)
 
-    light = wand.bm25_topk_wand(postings, blocks, terms, 10)
-    heavy = wand.bm25_prox_topk_wand(postings, blocks, terms, 10)
-    light.collect(), heavy.collect()
+    one = wand.bm25_prox_topk_wand(postings, None, terms, 10)
+    two = wand.bm25_prox_topk_wand(postings, None, terms, 10, alpha=0.5)
+    one.collect(), two.collect()
     assert _persisted_rdds(spark) == base + 2
-    query.release(light)
-    query.release(heavy)
+    query.release(one)
+    query.release(two)
     assert _persisted_rdds(spark) == base
 
-    wand.pruning_stats(postings, blocks, terms, k=10)
+    wand.pruning_stats(postings, None, terms, k=10)
     assert _persisted_rdds(spark) == base

@@ -33,13 +33,11 @@ def warm(fn, n=3):
     return round(min(runs), 3), [round(r,3) for r in runs]
 
 out = {}
-P, B = index["postings"], index["blocks"]
+P = index["postings"]
 out["light_exhaustive"] = warm(lambda: wand.bm25_topk_exhaustive(P, terms, 100).collect())
-out["light_wand"] = warm(lambda: released(wand.bm25_topk_wand(P, B, terms, 100)))
 out["minspan_exhaustive"] = warm(lambda: wand.bm25_prox_topk_exhaustive(P, terms, 100).collect())
-out["minspan_wand"] = warm(lambda: released(wand.bm25_prox_topk_wand(P, B, terms, 100)))
+out["minspan_wand"] = warm(lambda: released(wand.bm25_prox_topk_wand(P, None, terms, 100)))
 out["plm_exhaustive"] = warm(lambda: wand.bm25_prox_topk_exhaustive(P, terms, 100, scorer=plm_score_vb_udf).collect(), n=2)
-out["plm_wand"] = warm(lambda: released(wand.bm25_prox_topk_wand(P, B, terms, 100, scorer=plm_score_vb_udf)), n=2)
-out["stats_light"] = wand.pruning_stats(P, B, terms, 100)
-out["stats_payload"] = wand.pruning_stats(P, B, terms, 100, alpha=wand.PROX_ALPHA)
+out["plm_wand"] = warm(lambda: released(wand.bm25_prox_topk_wand(P, None, terms, 100, scorer=plm_score_vb_udf)), n=2)
+out["stats_payload"] = wand.pruning_stats(P, None, terms, 100)
 print(json.dumps(out))
