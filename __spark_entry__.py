@@ -22,6 +22,7 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from functools import lru_cache
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -153,16 +154,20 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Per-doc term frequencies + doc length in one projection; codegen
     # subexpression elimination computes the split once per row.  The
-    # localCheckpoint materializes the NARROW feature frame (6 int columns,
-    # no text) exactly once in parallel and acts as an optimizer barrier:
-    # without it the scoring side's n_terms>0 filter is pushed below the
-    # spread exchange, re-evaluating every tf inside the single scan task
-    # and splitting the stats/scoring subtrees into two full passes.
+    # NARROW feature frame (6 int columns, no text) is persisted and
+    # counted, so it is computed exactly once in parallel, and its
+    # InMemoryRelation is an optimizer barrier: without one the scoring
+    # side's n_terms>0 filter is pushed below the spread exchange,
+    # re-evaluating every tf inside the single scan task and splitting the
+    # stats/scoring subtrees into two full passes.  persist (not
+    # localCheckpoint) keeps lineage, so a lost executor recomputes its
+    # blocks; the frame rides on the result for query.release.
     wt = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
         *[tf_of(t).alias(f"_tf{i}") for i, t in enumerate(BM25_QUERY_TERMS)],
-    ).localCheckpoint()
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    wt.count()
     # Corpus stats pass: avgdl over ALL docs (r5 doc_len semantics), df
     # per term over docs with a non-null id (r5 tf-subtree semantics).
     stats = wt.agg(
@@ -209,15 +214,14 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # enumerated afterwards over the already-k-bounded 20 rows
     # (_enumerate_rank).
     top = per_doc.orderBy(F.desc("raw_score"), F.asc("doc_id")).limit(20)
-    return (
-        _enumerate_rank(top, F.desc("raw_score"), F.asc("doc_id"))
-        .select(
-            "rank",
-            "doc_id",
-            F.round("raw_score", 6).alias("score"),
-            F.col("n_terms").cast("long").alias("n_terms"),
-        )
+    out = _enumerate_rank(top, F.desc("raw_score"), F.asc("doc_id")).select(
+        "rank",
+        "doc_id",
+        F.round("raw_score", 6).alias("score"),
+        F.col("n_terms").cast("long").alias("n_terms"),
     )
+    out._cached_frames = [wt]
+    return out
 
 
 @contextmanager
@@ -277,11 +281,7 @@ def _payload_index(spark: SparkSession, sf_dir: str):
         # it need no Spark job
         qterms = query.local_frame(
             spark, [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
-        ).withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(indexer.DEFAULT_TERM_BUCKETS))
-            .cast("int"),
-        )
+        ).withColumn("term_bucket", indexer.term_bucket(F.col("term")))
         yield index["postings"], query.attach_scoring_stats(qterms, index)
     finally:
         enriched.unpersist()
@@ -753,11 +753,10 @@ def q_simhash_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: treat each document's text bytes as an opaque
-    binary payload → metadata sniff + mapInPandas feature extraction
-    (deterministic fake decoder; real codec injectable).  Hash-checked:
-    the fake decoder (rolling every-32nd-byte checksum mod 997, float32)
-    is replayed in DuckDB — the fixture text is ASCII so byte positions
-    equal char positions in the SQL twin."""
+    binary payload → mapInPandas feature extraction (deterministic fake
+    decoder).  Hash-checked: the fake decoder (rolling every-32nd-byte
+    checksum mod 997, float32) is replayed in DuckDB — the fixture text is
+    ASCII so byte positions equal char positions in the SQL twin."""
     from modernsearchengines_spark.operators import multimodal
 
     docs = _ts(spark, sf_dir, "documents").select(
@@ -2084,6 +2083,7 @@ def bench_lite(sf_dir: str | None = None, cpus: int | None = None) -> dict:
     import time
 
     from bench import HEADLINE_QUERIES, _warm_jvm, _warm_page_cache
+    from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.session import get_spark
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -2100,8 +2100,10 @@ def bench_lite(sf_dir: str | None = None, cpus: int | None = None) -> dict:
     qtimes: dict[str, float] = {}
     for name in HEADLINE_QUERIES:
         t0 = time.time()
-        qmap[name](spark, sf_dir).collect()
+        df = qmap[name](spark, sf_dir)
+        df.collect()
         qtimes[name] = round(time.time() - t0, 3)
+        query.release(df)
     spark.stop()
     return {
         "metric": "bench_suite_wall",

@@ -42,6 +42,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
+    from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -64,21 +65,25 @@ def main() -> None:
                 df.explain("formatted")
             with open(os.path.join(pdir, f"{name}{args.suffix}.txt"), "w") as fh:
                 fh.write(buf.getvalue())
+            query.release(df)
 
     out: dict[str, dict[str, float]] = {}
     for r in range(args.repeat):
         for name in names:
             spark.sparkContext.setJobDescription(f"bx:{name}:collect:{r}")
             t0 = time.time()
-            qmap[name](spark, args.sf).collect()
+            df = qmap[name](spark, args.sf)
+            df.collect()
             out.setdefault(name, {}).setdefault("collect", []).append(
                 round(time.time() - t0, 3))
+            query.release(df)
             if args.noop:
                 spark.sparkContext.setJobDescription(f"bx:{name}:noop:{r}")
                 t0 = time.time()
-                qmap[name](spark, args.sf).write.format("noop").mode(
-                    "overwrite").save()
+                df = qmap[name](spark, args.sf)
+                df.write.format("noop").mode("overwrite").save()
                 out[name].setdefault("noop", []).append(round(time.time() - t0, 3))
+                query.release(df)
         spark.sparkContext.setJobDescription(None)
     print(json.dumps({"sf": args.sf, "cpus": cpus, "queries": out}))
     spark.stop()

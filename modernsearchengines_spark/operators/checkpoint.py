@@ -134,8 +134,6 @@ def merge_segments(
     spark: SparkSession,
     out_dir: str,
     n_segments: int,
-    term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
-    df_prune: int = indexer.DF_PRUNE,
 ) -> dict[str, DataFrame]:
     """Finalize the global index from completed segments (SURVEY M3 merge:
     the union of the committed enriched segments through the shared
@@ -163,7 +161,7 @@ def merge_segments(
         spark.read.option("basePath", f"{out_dir}/enriched")
         .parquet(*[f"{out_dir}/enriched/segment={s}" for s in done])
     )
-    return indexer.score_and_layout(enriched, term_buckets, df_prune)
+    return indexer.score_and_layout(enriched)
 
 
 def build_index_checkpointed(
@@ -183,12 +181,7 @@ def build_index_checkpointed(
     return merge_segments(spark, out_dir, n_segments)
 
 
-def layout_segment(
-    spark: SparkSession,
-    out_dir: str,
-    seg: int | str,
-    term_buckets: int = indexer.DEFAULT_TERM_BUCKETS,
-) -> None:
+def layout_segment(spark: SparkSession, out_dir: str, seg: int | str) -> None:
     """Append one committed enriched segment's postings
     (indexer.layout_postings) to ``out_dir/postings``, leaving every
     existing posting file untouched.  The layout needs no corpus-global
@@ -196,8 +189,7 @@ def layout_segment(
     df>5 prune stays a rule of the terms table."""
     (
         indexer.layout_postings(
-            spark.read.parquet(f"{out_dir}/enriched/segment={seg}"),
-            term_buckets,
+            spark.read.parquet(f"{out_dir}/enriched/segment={seg}")
         )
         .repartition("term_bucket")
         .write.mode("append")

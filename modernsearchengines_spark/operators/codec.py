@@ -5,15 +5,15 @@ Replaces the reference's JSON-text "compression" of position lists
 binary scheme (Witten/Moffat/Bell, "Managing Gigabytes"): sort-order deltas,
 then each gap as a little-endian 7-bit varint with a continuation bit.
 
-Exposed both as pure functions (oracle/tests) and as vectorized pandas UDFs
-(Arrow batch transfer — no per-row Python in the Spark plan).
+Exposed both as pure functions (oracle/tests) and as a vectorized pandas
+encode UDF (Arrow batch transfer — no per-row Python in the Spark plan).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, IntegerType
+from pyspark.sql.types import BinaryType
 
 
 def varbyte_encode(values: list[int]) -> bytes:
@@ -139,7 +139,3 @@ def varbyte_encode_udf(positions: pd.Series) -> pd.Series:
         varbyte_encode_batch(list(positions)), index=positions.index
     )
 
-
-@F.pandas_udf(ArrayType(IntegerType()))
-def varbyte_decode_udf(blob: pd.Series) -> pd.Series:
-    return blob.map(lambda b: varbyte_decode(bytes(b)) if b is not None else None)

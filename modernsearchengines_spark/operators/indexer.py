@@ -34,9 +34,9 @@ rewriting a posting file.
 Storage note: the target table layout is Iceberg
 ``CREATE TABLE postings ... USING iceberg PARTITIONED BY (bucket(K, term))``;
 the Iceberg runtime jar is not available in this sandbox, so writes use plain
-Parquet with an explicit ``term_bucket = pmod(xxhash64(term), K)`` partition
-column — the same physical layout and the same partition-pruning behavior at
-query time.
+Parquet with an explicit ``term_bucket = pmod(xxhash64(term), TERM_BUCKETS)``
+partition column (:func:`term_bucket`) — the same physical layout and the
+same partition-pruning behavior at query time.
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ import shutil
 import tempfile
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -102,7 +102,10 @@ def idf_expr(n_docs, df):
 
 MAX_DOC_CHARS = 800_000
 DF_PRUNE = 5
-DEFAULT_TERM_BUCKETS = 64
+# Postings directories per index.  A property of the written index: the
+# writer, the appender and query_terms_df's driver-side bucket must agree,
+# or a query bucket-prunes to the wrong directories.
+TERM_BUCKETS = 64
 # media-URL suffixes the reference excludes from the corpus (O-18,
 # WebCrawler_basis.py:213-214 and the retroactive topic.py:156-174 cleanup)
 MEDIA_URL_SUFFIXES = (".jpg", ".png", ".pdf")
@@ -357,13 +360,13 @@ def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
     )
 
 
-def _term_bucket(term, term_buckets: int):
-    return F.pmod(F.xxhash64(term), F.lit(term_buckets)).cast("int")
+def term_bucket(term: Column) -> Column:
+    """The index's bucket of a term column: ``pmod(xxhash64(term),
+    TERM_BUCKETS)``, the ``term_bucket`` partition of postings and terms."""
+    return F.pmod(F.xxhash64(term), F.lit(TERM_BUCKETS)).cast("int")
 
 
-def layout_postings(
-    enriched: DataFrame, term_buckets: int = DEFAULT_TERM_BUCKETS
-) -> DataFrame:
+def layout_postings(enriched: DataFrame) -> DataFrame:
     """Enriched segment(s) → the persisted postings rows
     (term_bucket, term, doc_id, tf, dl, positions_vb).
 
@@ -379,7 +382,7 @@ def layout_postings(
         F.col("doc_len").cast("int").alias("dl"),
         F.explode("postings").alias("p"),
     ).select(
-        _term_bucket(F.col("p.term"), term_buckets).alias("term_bucket"),
+        term_bucket(F.col("p.term")).alias("term_bucket"),
         F.col("p.term").alias("term"),
         "doc_id",
         F.col("p.tf").alias("tf"),
@@ -421,16 +424,16 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     return n_total, avg_doc_len, corpus_stats
 
 
-def term_doc_frequency(rows: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
+def term_doc_frequency(rows: DataFrame) -> DataFrame:
     """(term, df) from (term, doc_id) rows, one per (term, doc) pair.
 
     Two-level salted aggregation for head-term skew (R5: "tuebingen" is in
     nearly every doc by design): pre-aggregate per (term, salt-of-doc_id),
-    then merge the ≤ df_salt partials per term.  Exact counts.
+    then merge the ≤ DF_SALT partials per term.  Exact counts.
     """
     salted = (
         rows.select("term", "doc_id")
-        .withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(df_salt)))
+        .withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(DF_SALT)))
         .groupBy("term", "_salt")
         .agg(F.count(F.lit(1)).alias("_partial_df"))
     )
@@ -438,10 +441,7 @@ def term_doc_frequency(rows: DataFrame, df_salt: int = DF_SALT) -> DataFrame:
 
 
 def terms_table(
-    term_df: DataFrame,
-    n_total: int,
-    df_prune: int = DF_PRUNE,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
+    term_df: DataFrame, n_total: int, df_prune: int = DF_PRUNE
 ) -> DataFrame:
     """(term, df) → the terms table (term, df, idf, term_bucket): the df>5
     prune (Q6) and the reference IDF.  Per-term attributes live here, NOT
@@ -452,14 +452,12 @@ def terms_table(
     return (
         term_df.filter(F.col("df") > df_prune)
         .withColumn("idf", idf_expr(n_total, "df"))
-        .withColumn("term_bucket", _term_bucket(F.col("term"), term_buckets))
+        .withColumn("term_bucket", term_bucket(F.col("term")))
     )
 
 
 def score_and_layout(
-    enriched: DataFrame,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    df_prune: int = DF_PRUNE,
+    enriched: DataFrame, df_prune: int = DF_PRUNE
 ) -> dict[str, DataFrame]:
     """Enriched segment(s) → the index tables (postings, terms, doc_stats,
     corpus_stats): the finalize step every build entry point
@@ -485,11 +483,9 @@ def score_and_layout(
     term_rows = enriched.select(
         "doc_id", F.explode(F.col("postings.term")).alias("term")
     )
-    terms = terms_table(
-        term_doc_frequency(term_rows), n_total, df_prune, term_buckets
-    )
+    terms = terms_table(term_doc_frequency(term_rows), n_total, df_prune)
     return {
-        "postings": layout_postings(enriched, term_buckets),
+        "postings": layout_postings(enriched),
         "terms": terms,
         "doc_stats": enriched.select(
             "doc_id", "url", "warc_ts", "aug_len", "doc_len"
@@ -501,8 +497,6 @@ def score_and_layout(
 def build_index(
     spark: SparkSession,
     clean: DataFrame,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
-    df_prune: int = DF_PRUNE,
     work_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """Build postings/terms/doc_stats/corpus_stats from a cleaned
@@ -526,9 +520,7 @@ def build_index(
         work_dir = tempfile.mkdtemp(prefix="msengines_idx_")
     try:
         write_enriched(assign_doc_ids(clean), f"{work_dir}/enriched")
-        index = score_and_layout(
-            spark.read.parquet(f"{work_dir}/enriched"), term_buckets, df_prune
-        )
+        index = score_and_layout(spark.read.parquet(f"{work_dir}/enriched"))
     except BaseException:
         if owned:
             shutil.rmtree(work_dir, ignore_errors=True)

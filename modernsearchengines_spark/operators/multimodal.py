@@ -3,63 +3,25 @@
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata; at 100 TB the Spark-side concerns are schema, partitioning, batch
 shape, and UDF signatures — the codec itself is a library call.  The
-image/audio libraries are NOT in this container, so the decode step is
-STUBBED (clearly marked): ``decode_image_batch`` raises
-``NotImplementedError`` unless a decoder is injected, and the default
-pipeline uses a deterministic fake decoder so the Spark plumbing
-(mapInPandas over Arrow record batches, metadata passthrough, feature
-schema) is real and tested end-to-end.
+image/audio libraries are NOT in this container, so the decode step is a
+deterministic fake decoder: the Spark plumbing (mapInPandas over Arrow
+record batches, id passthrough, feature schema) is real and tested
+end-to-end.
 
 Operators:
-  * ``attach_media_metadata`` — size/sniffed-format columns (JVM exprs).
-  * ``extract_features``       — mapInPandas: binary → fixed-dim float
-    feature vector (pluggable decoder; deterministic fake by default).
-  * ``sample_frames``          — video-style frame sampling plumbing: emits
-    one row per sampled frame index with a per-frame payload slice.
+  * ``extract_features`` — mapInPandas: binary → fixed-dim float feature
+    vector.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 FEATURE_DIM = 32
-
-# Magic-byte sniffing — cheap JVM-side format detection.
-_MAGIC = {
-    "png": b"\x89PNG",
-    "jpeg": b"\xff\xd8\xff",
-    "gif": b"GIF8",
-    "riff": b"RIFF",  # wav/avi containers
-}
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Size + sniffed format as columns (pure JVM expressions)."""
-    fmt = F.lit("unknown")
-    for name, magic in reversed(_MAGIC.items()):
-        hexlit = magic.hex()
-        fmt = F.when(
-            F.hex(F.substring(F.col(payload_col), 1, len(magic)))
-            == F.lit(hexlit.upper()),
-            F.lit(name),
-        ).otherwise(fmt)
-    return df.withColumn("media_bytes", F.length(payload_col)).withColumn(
-        "media_format", fmt
-    )
-
-
-def decode_image_batch(payloads: list[bytes]) -> "np.ndarray":
-    """REAL decoder stub — wire Pillow/torchvision/ffmpeg here on a cluster
-    with the codec libraries installed."""
-    raise NotImplementedError(
-        "image/audio codecs are not available in this environment; "
-        "inject a decoder via extract_features(decoder=...)"
-    )
 
 
 def fake_decode(payloads: list[bytes]) -> "np.ndarray":
@@ -80,20 +42,18 @@ def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_col: str = "media_id",
-    decoder: Callable[[list[bytes]], "np.ndarray"] | None = None,
 ) -> DataFrame:
     """binary → array<float> features via mapInPandas (Arrow batches).
 
     The decoder sees a whole batch (vectorization-friendly shape for real
     codecs / GPU preprocessing).  Output schema: (id, features, n_bytes).
     """
-    dec = decoder or fake_decode
     schema = f"{id_col} long, features array<float>, n_bytes long"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = [bytes(x) if x is not None else b"" for x in pdf[payload_col]]
-            feats = dec(payloads)
+            feats = fake_decode(payloads)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
@@ -103,30 +63,3 @@ def extract_features(
             )
 
     return df.select(id_col, payload_col).mapInPandas(run, schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_frames: int = 4,
-) -> DataFrame:
-    """Frame-sampling plumbing: emit ``n_frames`` evenly spaced byte-slice
-    "frames" per payload (a real implementation would demux the container;
-    the slicing, explode shape, and per-frame schema are the Spark-side
-    contract).  Output: (id, frame_idx, frame_payload binary)."""
-    total = F.length(payload_col)
-    step = F.greatest((total / n_frames).cast("int"), F.lit(1))
-    idx = F.sequence(F.lit(0), F.lit(n_frames - 1))
-    return (
-        df.select(id_col, payload_col)
-        .withColumn("frame_idx", F.explode(idx))
-        .withColumn(
-            "frame_payload",
-            F.expr(
-                f"substring({payload_col}, frame_idx * greatest(cast(length({payload_col}) / {n_frames} as int), 1) + 1, "
-                f"greatest(cast(length({payload_col}) / {n_frames} as int), 1))"
-            ),
-        )
-        .select(id_col, "frame_idx", "frame_payload")
-    )

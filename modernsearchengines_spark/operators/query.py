@@ -21,7 +21,7 @@ from pyspark.sql.types import StructType
 
 from . import wand
 from .expansion import TUEBINGEN_TERMS, CompiledQuery, compile_query
-from .indexer import DEFAULT_TERM_BUCKETS
+from .indexer import TERM_BUCKETS
 from .proximity import min_span_score_vb_udf
 
 ALPHA = 0.8
@@ -52,7 +52,6 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 def query_terms_df(
     spark: SparkSession,
     queries: list[CompiledQuery],
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
     index: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Flatten compiled queries into (qnum, term, is_original, is_tueb,
@@ -64,8 +63,9 @@ def query_terms_df(
     a :func:`local_frame`, so broadcasting it into the join runs no job:
 
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
-      locked by tests/test_hashing.py) instead of a ``withColumn`` the
-      executors evaluate;
+      locked by tests/test_hashing.py) modulo the index's
+      ``TERM_BUCKETS`` — indexer.term_bucket's rule — instead of a
+      ``withColumn`` the executors evaluate;
     * with ``index``, (idf, avgdl) are fused INTO the created rows — one
       literal-pruned scan of the bucketed terms table for idf (the only
       job), avgdl cached on the index dict across batches.  INNER
@@ -91,7 +91,7 @@ def query_terms_df(
                     term,
                     term in originals,
                     term in tueb,
-                    xxhash64_str(term) % term_buckets,
+                    xxhash64_str(term) % TERM_BUCKETS,
                 )
             )
     schema = (
@@ -206,31 +206,18 @@ def ensure_bm25(matched: DataFrame) -> DataFrame:
     ).drop("tf", "dl", "idf", "avgdl")
 
 
-def _with_minmax(df: DataFrame, col: str, lo: str, hi: str) -> DataFrame:
-    """Attach per-query min/max of ``col`` as columns ``lo``/``hi``.
-
-    NOT a ``Window.partitionBy(qnum)``: that exchange funnels every row of a
-    query into one partition (worst-case skew — a query matching 10^9 docs
-    lands on one reducer).  A groupBy aggregate gets map-side partial
-    min/max and the tiny per-query stats broadcast back."""
-    stats = df.groupBy("qnum").agg(
-        F.min(col).alias(lo), F.max(col).alias(hi)
-    )
-    return df.join(F.broadcast(stats), "qnum")
-
-
 def _qnum_literal_cols(df: DataFrame, aggs: dict[str, object]) -> DataFrame:
     """Attach per-query aggregate values as LITERAL map lookups instead of
     a broadcast join: one collect of the (O(#queries)-row) stats frame,
     then ``map(qnum -> value)[qnum]`` literal expressions.
 
-    Used on the materialized rank() path where ``df`` is already cached:
-    the collect is a fast scan, and it replaces a broadcast-exchange
-    build job + hash join per stats site — on the bench box each such
-    build cost 0.5-1 s of per-batch fixed latency (warm-latency item,
-    VERDICT r4 item 4).  The broadcast-join form (:func:`_with_minmax`)
-    remains for the lazy path, where an extra eager collect would defeat
-    ``materialize=False``'s purpose.
+    Used by rank() where ``df`` is already cached: the collect is a fast
+    scan, and it replaces a broadcast-exchange build job + hash join per
+    stats site — on the bench box each such build cost 0.5-1 s of
+    per-batch fixed latency (warm-latency item, VERDICT r4 item 4).  A
+    ``groupBy(qnum)`` aggregate (not a ``Window.partitionBy(qnum)``, which
+    funnels every row of a query into one partition) gets map-side
+    partial min/max.
     """
     rows = df.groupBy("qnum").agg(
         *[expr.alias(name) for name, expr in aggs.items()]
@@ -260,26 +247,21 @@ def rank(
     doc_stats: DataFrame,
     top_k: int = TOP_K,
     alpha: float = ALPHA,
-    prefilter: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Rank the query batch → (qnum, rank, doc_id, url, score, bm25_sum,
     match_count).
 
-    ``prefilter`` (optional) is a (qnum, doc_id) DataFrame — e.g. a
-    widened wand.py top-k — restricting exact scoring to those candidates.
-
-    ``materialize=False`` skips the two persist/count sites and the
-    literal-stats collects (keeping the whole plan lazy) — used by the
-    plan-shape tests to assert pushdown/broadcast on the full logical plan;
-    production callers keep the default.  Measured rationale (r5): without
-    materialization the min-max stats passes re-evaluate the
-    scan+join+bm25 and agg+prox-UDF subtrees, and with a LAZY
-    localCheckpoint (the r4 shape) the stats broadcast build and the main
-    pass race as concurrent jobs that EACH compute the unmaterialized
-    subtree — two ~4 s twin jobs per stats site per warm batch, the bulk
-    of the 13 s warm parity latency.  Eager persist()+materialize runs each
-    subtree exactly once; every later branch scans the cached blocks.
+    Two frames are persisted and materialized eagerly: the matched
+    (qnum, doc_id, bm25, ...) rows and the per-doc aggregate.  Measured
+    rationale (r5): without them the min-max stats passes re-evaluate the
+    scan+join+bm25 and agg+prox-UDF subtrees, and a LAZY materialization
+    (the r4 localCheckpoint shape) lets the stats build and the main pass
+    race as concurrent jobs that EACH compute the subtree — two ~4 s twin
+    jobs per stats site per warm batch, the bulk of the 13 s warm parity
+    latency.  Eager persist()+materialize runs each subtree exactly once;
+    every later branch scans the cached blocks.  The plan-shape tests read
+    the retrieval scan and join under the cached frame's
+    ``InMemoryRelation``.
 
     CACHE LIFECYCLE (closes the r4 ADVICE): the two persisted frames ride
     on the returned DataFrame as ``result._cached_frames``; call
@@ -300,8 +282,6 @@ def rank(
             F.broadcast(terms), ["term_bucket", "term"], "inner"
         )
     )
-    if prefilter is not None:
-        matched = matched.join(prefilter, ["qnum", "doc_id"], "left_semi")
 
     # Q8 needs per-query min/max BEFORE the weight ladder, and the stats
     # aggregate plus the main pass would otherwise each evaluate the
@@ -314,26 +294,20 @@ def rank(
     # which both stats passes then re-read (DRAM-bound on this box).
     matched = matched.select(
         "qnum", "doc_id", "bm25", "is_original", "is_tueb"
-    )
-    cached_frames = []
-    if materialize:
-        matched = matched.persist()
-        cached_frames.append(matched)
+    ).persist()
+    cached_frames = [matched]
 
     # Q8: min-max normalize ALL fetched bm25 values per query; silently
-    # skipped when max == min (reference retrieval.py:58-67).  On the
-    # materialized path the per-query extrema become literal map lookups
-    # (one collect over the cached frame) instead of a broadcast join —
-    # fewer fixed-latency jobs per batch (_qnum_literal_cols docstring).
-    if materialize:
-        # this collect doubles as the eager cache materialization: the
-        # aggregate scan over the just-persisted frame caches every
-        # partition it reads, so no separate count() job is needed
-        matched = _qnum_literal_cols(
-            matched, {"_blo": F.min("bm25"), "_bhi": F.max("bm25")}
-        )
-    else:
-        matched = _with_minmax(matched, "bm25", "_blo", "_bhi")
+    # skipped when max == min (reference retrieval.py:58-67).  The
+    # per-query extrema become literal map lookups (one collect over the
+    # cached frame) instead of a broadcast join — fewer fixed-latency jobs
+    # per batch (_qnum_literal_cols docstring).  This collect doubles as
+    # the eager cache materialization: the aggregate scan over the
+    # just-persisted frame caches every partition it reads, so no
+    # separate count() job is needed.
+    matched = _qnum_literal_cols(
+        matched, {"_blo": F.min("bm25"), "_bhi": F.max("bm25")}
+    )
     matched = matched.withColumn(
         "nbm25",
         F.when(
@@ -380,8 +354,6 @@ def rank(
     prox_src = postings.select(
         "term_bucket", "term", "doc_id", "positions_vb"
     ).join(F.broadcast(orig_terms), ["term_bucket", "term"])
-    if prefilter is not None:
-        prox_src = prox_src.join(prefilter, ["qnum", "doc_id"], "left_semi")
     prox_df = prox_src.groupBy("qnum", "doc_id").agg(
         F.collect_list("positions_vb").alias("prox_lists")
     )
@@ -390,7 +362,7 @@ def rank(
     # Q11: per-query min-max for BOTH normalization sites (combined and
     # prox) in ONE stats pass: prox is computed first, then a single
     # groupBy(qnum) aggregate produces all four extrema and broadcasts
-    # back.  (Three separate _with_minmax rounds each re-walked the per-doc
+    # back.  (Three separate min-max rounds each re-walked the per-doc
     # lineage; fusing them halves the post-aggregation passes — the bm25
     # min-max above cannot fuse, Q8 requires it before the weight ladder.)
     per_doc = per_doc.withColumn(
@@ -403,26 +375,17 @@ def rank(
     # stored frame is a dozen scalar columns; eager for the same reason as
     # the matched site (the stats and topk broadcast builds otherwise race
     # to compute this subtree twice).
-    if materialize:
-        per_doc = per_doc.persist()
-        cached_frames.append(per_doc)
-        per_doc = _qnum_literal_cols(
-            per_doc,
-            {
-                "_clo": F.min("combined"),
-                "_chi": F.max("combined"),
-                "_plo": F.min("prox"),
-                "_phi": F.max("prox"),
-            },
-        )
-    else:
-        stats = per_doc.groupBy("qnum").agg(
-            F.min("combined").alias("_clo"),
-            F.max("combined").alias("_chi"),
-            F.min("prox").alias("_plo"),
-            F.max("prox").alias("_phi"),
-        )
-        per_doc = per_doc.join(F.broadcast(stats), "qnum")
+    per_doc = per_doc.persist()
+    cached_frames.append(per_doc)
+    per_doc = _qnum_literal_cols(
+        per_doc,
+        {
+            "_clo": F.min("combined"),
+            "_chi": F.max("combined"),
+            "_plo": F.min("prox"),
+            "_phi": F.max("prox"),
+        },
+    )
     per_doc = per_doc.withColumn(
         "norm_combined",
         F.when(F.col("_chi") == F.col("_clo"), 0.0).otherwise(
@@ -455,12 +418,11 @@ def rank(
 
 
 def release(results: DataFrame) -> None:
-    """Unpersist the intermediate frames a materialized :func:`rank` or a
-    pruned ``wand`` top-k pinned (``results._cached_frames``) — call after
-    consuming the result in a loop (interactive search, benchmark repeats)
-    so cached storage does not accumulate across batches.  No-op for
-    frames without the attribute (materialize=False, or results from other
-    operators)."""
+    """Unpersist the intermediate frames a :func:`rank`, a pruned ``wand``
+    top-k or a contract entry pinned (``results._cached_frames``) — call
+    after consuming the result in a loop (interactive search, benchmark
+    repeats, the contract check) so cached storage does not accumulate
+    across batches.  No-op for frames without the attribute."""
     for df in getattr(results, "_cached_frames", []):
         df.unpersist()
 
@@ -471,10 +433,9 @@ def run_query_batch(
     queries: list[tuple[int, str]],
     top_k: int = TOP_K,
     expansion: dict[str, list[str]] | None = None,
-    term_buckets: int = DEFAULT_TERM_BUCKETS,
 ) -> DataFrame:
     compiled = [compile_query(qnum, text, expansion) for qnum, text in queries]
-    terms = query_terms_df(spark, compiled, term_buckets, index=index)
+    terms = query_terms_df(spark, compiled, index=index)
     return rank(index["postings"], terms, index["doc_stats"], top_k=top_k)
 
 

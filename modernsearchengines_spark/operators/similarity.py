@@ -1,22 +1,16 @@
 """Similarity search over embedding columns (training-data pipeline op).
 
-Brute-force cosine top-k as the correctness baseline, plus TWO scale
-paths: a sign-LSH (random-hyperplane, Charikar 2002) bucketed variant,
-and an IVF coarse quantizer (Jégou et al. 2011) — k-means cells trained
-on a bounded driver-side sample, equi-join on cell id, nprobe recall
-knob.  At 100 TB the brute-force cross join is quadratic, while both
-scale paths bucket the vectors so only same-bucket candidates are scored
-(recall measured against brute force in tests/test_dedup_similarity.py).
+Brute-force cosine top-k per query, exact all-pairs cosine as the
+correctness baseline, and one bucketed scale path: sign-LSH
+(random-hyperplane, Charikar 2002) near-duplicate pairs, where only
+vectors sharing a bucket are compared (recall measured against the exact
+pairs in tests/test_dedup_similarity.py).
 
 Scoring arithmetic stays JVM-side: dot products via
-``aggregate(zip_with(...))`` higher-order functions.  The one Python
-crossing is the IVF centroid assignment — an Arrow-batched pandas UDF
-doing a single batch matmul (no per-row Python).
+``aggregate(zip_with(...))`` higher-order functions, no Python crossing.
 """
 
 from __future__ import annotations
-
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -84,155 +78,6 @@ def make_hyperplanes(dim: int, n_planes: int = 8, seed: int = 7) -> list[list[fl
             row.append(state / float(1 << 31) - 0.5)
         planes.append(row)
     return planes
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k: score only vectors sharing the query's LSH bucket.
-
-    Equi join on the bucket signature replaces the cross join — the shuffle
-    key is the bucket, so cost scales with bucket occupancy, not n×q.
-    """
-    planes = make_hyperplanes(dim, n_planes)
-    v = vectors.withColumn("bucket", _sign_bits(F.col(vec_col), planes))
-    q = queries.withColumn("bucket", _sign_bits(F.col(qvec_col), planes))
-    joined = v.join(F.broadcast(q), "bucket").withColumn(
-        "cos", cosine(F.col(vec_col), F.col(qvec_col))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cos")
-    )
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    sample_rows: int = 20_000,
-    iters: int = 10,
-    seed: int = 7,
-):
-    """Lloyd's k-means on a BOUNDED driver-side sample → (k, dim) ndarray.
-
-    IVF training is the one deliberately driver-side step: the coarse
-    quantizer needs only a sample (`sample_rows` caps the collect — at
-    100 TB that is a ~10 MB draw, not a table scan; the sample fraction
-    is estimated from a cheap count).  Deterministic: seeded NumPy RNG,
-    fixed iteration count, ties broken by lowest centroid index, and the
-    sampled rows are made order-stable by sorting on a content hash before
-    the limit — sample(seed) alone is partition-layout dependent, so the
-    same data repartitioned differently would otherwise yield different
-    centroids.
-    """
-    import numpy as np
-
-    n = vectors.count()
-    frac = min(1.0, (sample_rows * 1.2) / max(n, 1))
-    rows = (
-        vectors.select(vec_col).sample(fraction=frac, seed=seed)
-        .orderBy(F.xxhash64(F.to_json(F.struct(vec_col))))
-        .limit(sample_rows).collect()
-    )
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
-    for _ in range(iters):
-        # argmin ||x−c||² = argmax (x·c − ½||c||²); ties → lowest index
-        scores = x @ cents.T - 0.5 * (cents * cents).sum(axis=1)
-        assign = scores.argmax(axis=1)
-        for j in range(len(cents)):
-            m = assign == j
-            if m.any():
-                cents[j] = x[m].mean(axis=0)
-    return cents
-
-
-def _centroid_assign_udf(centroids, nprobe: int):
-    """mapInPandas-free vectorized assignment: a pandas UDF returning the
-    ``nprobe`` nearest centroid ids per vector (batch matmul — one Arrow
-    crossing, no per-row Python).  The (k, dim) centroid matrix rides in
-    the closure (broadcast with the task binary; ~k·dim·8 bytes)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.asarray(centroids, dtype=np.float64)
-    half_c2 = 0.5 * (c * c).sum(axis=1)
-
-    @pandas_udf("array<int>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        x = np.asarray(list(vecs), dtype=np.float64)
-        if x.ndim != 2:
-            # Ragged dims or null embeddings collapse np.asarray to a 1-D
-            # object array; silently bucketing such rows (the old [[0]]
-            # fallback) skews every malformed vector into cell 0 and masks
-            # the data problem — fail loudly instead, naming the cause.
-            bad = [
-                i for i, v in enumerate(vecs)
-                if v is None or len(v) != len(c[0])
-            ]
-            raise ValueError(
-                f"IVF centroid assignment got null/ragged embeddings "
-                f"(expected dim {len(c[0])}); {len(bad)} bad rows in this "
-                f"batch, first offsets {bad[:5]} — filter nulls and enforce "
-                "a fixed dim upstream"
-            )
-        scores = x @ c.T - half_c2
-        top = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.tolist() for row in top.astype("int32")])
-
-    return probes
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    centroids,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
-) -> DataFrame:
-    """IVF approximate top-k: score only vectors whose cell is among the
-    query's ``nprobe`` nearest centroids.
-
-    The alternative scale path to :func:`lsh_topk` (Jégou et al. 2011
-    coarse-quantizer stage, Voronoi cells instead of hyperplane buckets):
-    vectors carry ONE cell id (top-1 probe), queries fan out to ``nprobe``
-    cells, and the match is an equi-join on the cell id — shuffle keyed on
-    ~k cells; recall is the nprobe/k knob.  Cell skew (a hot Voronoi cell)
-    is the known hazard: raise k or let AQE split the skewed partition.
-    """
-    assign1 = _centroid_assign_udf(centroids, 1)
-    assignp = _centroid_assign_udf(centroids, nprobe)
-    v = vectors.withColumn("cell", assign1(F.col(vec_col))[0])
-    q = queries.withColumn(
-        "cell", F.explode(assignp(F.col(qvec_col)))
-    )
-    joined = v.join(F.broadcast(q), "cell").withColumn(
-        "cos", cosine(F.col(vec_col), F.col(qvec_col))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cos")
-    )
 
 
 def cosine_pairs_exact(

@@ -35,8 +35,8 @@ The reference-parity ranking mode (operators/query.py) stays exhaustive BY
 DESIGN: its query-global min-max normalizations (Q8/Q11) couple every
 document's final score to the min/max over ALL matched docs, so any pruning
 would change survivors' scores.  This module is the scale path a 100 TB
-corpus would serve standard queries with; ``rank(prefilter=...)`` accepts
-this module's top-k candidates when quirk-parity is not required.
+corpus would serve standard queries with when quirk-parity is not
+required (``query.search(parity=False)``).
 """
 
 from __future__ import annotations

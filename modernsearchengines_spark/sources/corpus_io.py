@@ -64,11 +64,7 @@ def append_new_docs(
 
 
 def append_to_index(
-    spark: SparkSession,
-    index_dir: str,
-    new_docs: DataFrame,
-    df_prune: int | None = None,
-    term_buckets: int | None = None,
+    spark: SparkSession, index_dir: str, new_docs: DataFrame
 ) -> int:
     """Incremental index refresh: append the new docs' postings and
     re-finalize ONLY the small derived tables — the existing posting files
@@ -106,10 +102,6 @@ def append_to_index(
     # guard (both countDistincts collapse identically).  Keep-first is
     # arbitrary-but-deterministic only per-batch, matching append_new_docs.
     new_docs = new_docs.dropDuplicates(["url"])
-    df_prune = indexer.DF_PRUNE if df_prune is None else df_prune
-    term_buckets = (
-        indexer.DEFAULT_TERM_BUCKETS if term_buckets is None else term_buckets
-    )
 
     doc_stats_path = f"{index_dir}/doc_stats"
     existing = spark.read.parquet(doc_stats_path)
@@ -131,7 +123,7 @@ def append_to_index(
         existing.unionByName(new_stats)
     )
 
-    checkpoint.layout_segment(spark, index_dir, seg, term_buckets)
+    checkpoint.layout_segment(spark, index_dir, seg)
     new_stats.write.mode("append").parquet(doc_stats_path)
     corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
 
@@ -139,7 +131,7 @@ def append_to_index(
     # term/doc_id columns are the df source (narrow columnar scan)
     written = spark.read.parquet(f"{index_dir}/postings")
     indexer.terms_table(
-        indexer.term_doc_frequency(written), n_total, df_prune, term_buckets
+        indexer.term_doc_frequency(written), n_total
     ).repartition("term_bucket").write.mode("overwrite").partitionBy(
         "term_bucket"
     ).parquet(f"{index_dir}/terms")

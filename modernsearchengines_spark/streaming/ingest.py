@@ -17,39 +17,8 @@ per-batch parquet directories, mirroring the `_segments` lineage protocol.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators import checkpoint, indexer
-
-
-def windowed_counts_stream(
-    events: DataFrame, window: str = "1 hour", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation (the streaming twin of the
-    batch ``events_hourly`` contract entry).
-
-    Append-mode semantics: a window row is emitted exactly once, when the
-    event-time watermark (max observed ts − ``watermark``) passes the
-    window end; later-than-watermark stragglers are dropped — hence the
-    10-minute default late tolerance (a 1-second watermark would silently
-    drop any mildly out-of-order event; the deterministic-replay test
-    passes ``watermark="1 second"`` explicitly).  State is
-    O(open windows × groups) and ages out with the watermark — the
-    standard unbounded-stream formulation (no growing state, unlike a
-    naive groupBy on event time).  tests/test_streaming_sessions.py
-    replays a time-split file sequence and asserts the emitted rows equal
-    the batch aggregation restricted to closed windows.
-    """
-    # watermarks require TIMESTAMP (with zone); fixture tables carry NTZ
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("ts_hour"), "event_type", "n_events"
-        )
-    )
 
 
 def start_ingest(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):

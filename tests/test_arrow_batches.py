@@ -76,10 +76,7 @@ def test_index_build_over_huge_docs(spark, tmp_path):
     byte cap keeps doc_postings_udf batches bounded; postings stay exact."""
     docs = _long_docs(spark, 24, 500_000)
     clean = indexer.clean_docs(docs)
-    # df_prune=0: per-doc-distinct vocabularies have df=1 by design
-    idx = indexer.build_index(
-        spark, clean, df_prune=0, work_dir=str(tmp_path / "hugework")
-    )
+    idx = indexer.build_index(spark, clean, work_dir=str(tmp_path / "hugework"))
     stats = idx["corpus_stats"].collect()[0]
     assert stats.n_docs == 24 and clean.count() == 24
     # every doc is under the 800k cap -> all indexed with real lengths

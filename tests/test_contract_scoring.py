@@ -12,6 +12,7 @@ import pytest
 from test_plans import SF_DIR
 
 import __spark_entry__ as entrymod
+from modernsearchengines_spark.operators import query
 from tools import check_contract
 
 
@@ -28,6 +29,20 @@ def oracle():
 def test_scoring_entry_matches_oracle(spark, oracle, name):
     sdf = entrymod.queries()[name](spark, SF_DIR)
     srows = [r.asDict() for r in sdf.collect()]
+    query.release(sdf)
     ddf = oracle.sql(entrymod.oracle_sql()[name]).df()
     assert len(srows) == 20
     assert check_contract.mismatch(srows, sdf.columns, ddf) is None
+
+
+def test_bm25_entry_storage_released(spark):
+    """``bm25_topk`` caches its feature frame with persist (lineage kept,
+    so a lost executor recomputes it) and hands it to query.release: after
+    collect + release, no persisted RDD is left behind (a localCheckpoint
+    would stay registered for the session)."""
+    jsc = spark.sparkContext._jsc.sc()
+    base = jsc.getPersistentRDDs().size()
+    sdf = entrymod.q_bm25_topk(spark, SF_DIR)
+    assert len(sdf.collect()) == 20
+    query.release(sdf)
+    assert jsc.getPersistentRDDs().size() == base

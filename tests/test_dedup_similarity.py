@@ -51,33 +51,6 @@ def test_minhash_lsh_finds_near_duplicates(spark):
     assert jac[(1, 2)] > 0.8
 
 
-def test_ann_lsh_recall_vs_brute_force(spark):
-    import random
-
-    rng = random.Random(3)
-    dim = 16
-    rows = [
-        (i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(300)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (
-        vecs.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-    )
-    exact = similarity.brute_force_topk(vecs, queries, k=5)
-    approx = similarity.lsh_topk(vecs, queries, dim=dim, k=5, n_planes=4)
-    exact_ids = {(r.query_id, r.vec_id) for r in exact.collect()}
-    approx_ids = {(r.query_id, r.vec_id) for r in approx.collect()}
-    # The query vector itself always shares its own bucket (cos=1 rank 1).
-    for q in range(5):
-        assert (q, q) in approx_ids
-    recall = len(exact_ids & approx_ids) / len(exact_ids)
-    assert recall >= 0.3  # approximate, bucketed — sanity floor
-
-
 def test_simhash_near_dup_block_schemes_agree(spark, docs):
     """The n_blocks=6 (Manku-style, C(6,3)=20 tables × 32-bit keys) scheme
     must return EXACTLY the pairs of the n_blocks=4 original — both are
@@ -251,47 +224,6 @@ def test_cosine_pairs_exact_is_lsh_superset(spark):
     }
     assert lsh <= exact
     assert exact and len(lsh & exact) / len(exact) >= 0.9
-
-
-def test_ivf_topk_recall_vs_brute_force(spark):
-    """IVF coarse-quantizer ANN: self-hit always survives (its own cell is
-    its top probe), recall grows with nprobe, and nprobe=k degenerates to
-    exhaustive (every cell probed ⇒ identical to brute force)."""
-    import random
-
-    rng = random.Random(17)
-    dim = 16
-    rows = [(i, [rng.gauss(0, 1) for _ in range(dim)]) for i in range(400)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (
-        vecs.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-    )
-    n_cells = 8
-    cents = similarity.train_ivf_centroids(vecs, k=n_cells)
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in similarity.brute_force_topk(vecs, queries, k=5).collect()
-    }
-    got2 = {
-        (r.query_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            vecs, queries, cents, k=5, nprobe=2
-        ).collect()
-    }
-    got_all = {
-        (r.query_id, r.vec_id)
-        for r in similarity.ivf_topk(
-            vecs, queries, cents, k=5, nprobe=n_cells
-        ).collect()
-    }
-    for q in range(5):
-        assert (q, q) in got2  # self-hit: own cell is the top probe
-    assert got_all == exact  # all cells probed ⇒ exhaustive
-    assert len(got2 & exact) / len(exact) >= 0.3
 
 
 def test_streaming_ingest_foreachbatch(spark, docs_parquet, tmp_path):

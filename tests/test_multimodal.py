@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from modernsearchengines_spark.operators import multimodal
 from modernsearchengines_spark.operators.dedup import simhash_near_dup_pairs
@@ -21,16 +20,6 @@ def media(spark):
     return spark.createDataFrame(rows, "media_id long, payload binary")
 
 
-def test_attach_media_metadata(spark, media):
-    got = {
-        r.media_id: (r.media_format, r.media_bytes)
-        for r in multimodal.attach_media_metadata(media).collect()
-    }
-    assert got[1][0] == "png" and got[2][0] == "jpeg" and got[3][0] == "riff"
-    assert got[4][0] == "unknown"
-    assert got[1][1] == len(b"\x89PNG\r\n" + bytes(range(256)) * 8)
-
-
 def test_extract_features_fake_decoder(spark, media):
     feats = multimodal.extract_features(media).collect()
     by_id = {r.media_id: r for r in feats}
@@ -45,20 +34,6 @@ def test_extract_features_fake_decoder(spark, media):
     assert all(again[r.media_id] == r.features for r in feats)
     # null payload → zero vector, n_bytes 0
     assert by_id[5].n_bytes == 0 and set(by_id[5].features) == {0.0}
-
-
-def test_real_decoder_is_marked_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_batch([b"x"])
-
-
-def test_sample_frames_shape(spark, media):
-    frames = multimodal.sample_frames(media.filter("media_id = 1"), n_frames=4)
-    rows = frames.collect()
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]
-    payload = b"\x89PNG\r\n" + bytes(range(256)) * 8
-    step = len(payload) // 4
-    assert bytes(rows[0].frame_payload) == payload[:step]
 
 
 def test_simhash_near_dup_pairs(spark):

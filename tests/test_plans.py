@@ -45,14 +45,9 @@ def test_retrieval_join_broadcasts_and_prunes_buckets(spark, docs_df, tmp_path):
     indexer.write_index(idx, str(tmp_path / "idx"))
     disk = indexer.read_index(spark, str(tmp_path / "idx"))
     terms = query.query_terms_df(spark, [compile_query(1, "castle museum")], index=disk)
-    # materialize=False: the production localCheckpoint sites truncate
-    # lineage (the scan disappears from explain); the plan properties are
-    # asserted on the unmaterialized twin, which is plan-identical upstream
-    # of the checkpoints.
-    ranked = query.rank(
-        disk["postings"], terms, disk["doc_stats"], top_k=10,
-        materialize=False,
-    )
+    # rank persists its matched frame; the scan and join it cached are
+    # printed under that frame's InMemoryRelation.
+    ranked = query.rank(disk["postings"], terms, disk["doc_stats"], top_k=10)
     plan = formatted_plan(ranked)
     assert "BroadcastHashJoin" in plan
     # Static literal pruning reaches the scan: the bucket IN-list of
@@ -66,6 +61,7 @@ def test_retrieval_join_broadcasts_and_prunes_buckets(spark, docs_df, tmp_path):
     assert any(
         "PushedFilters" in ln and "In(term" in ln for ln in plan.splitlines()
     )
+    query.release(ranked)
     indexer.unpersist_index(idx)
 
 

@@ -90,31 +90,3 @@ def test_proximity_udf_matches_oracle_fn():
     ]
     for lists in cases:
         assert min_span_score(lists) == oracle.min_span_proximity(lists)
-
-
-def test_materialize_flag_is_result_invariant(spark, spark_index):
-    """rank(materialize=False) (the plan-test twin, no localCheckpoint)
-    must return exactly the rows of the production materialized path."""
-    from modernsearchengines_spark.operators.expansion import compile_query
-
-    compiled = [compile_query(q, t) for q, t in REFERENCE_QUERIES]
-    terms = query.query_terms_df(spark, compiled, index=spark_index)
-    a = query.rank(
-        spark_index["postings"], terms, spark_index["doc_stats"], top_k=20
-    ).collect()
-    b = query.rank(
-        spark_index["postings"], terms, spark_index["doc_stats"], top_k=20,
-        materialize=False,
-    ).collect()
-    key = lambda r: (r.qnum, r.rank)
-    a, b = sorted(a, key=key), sorted(b, key=key)
-    # Ranks/ids compare exactly; the double columns (score, bm25_sum) go
-    # through F.sum, which is row-order-sensitive — a partitioning
-    # difference between the checkpointed and recomputed paths may
-    # legitimately differ in the last ulp, so compare those approximately.
-    assert [(r.qnum, r.rank, r.doc_id, r.url, r.match_count) for r in a] == [
-        (r.qnum, r.rank, r.doc_id, r.url, r.match_count) for r in b
-    ]
-    for ra, rb in zip(a, b):
-        assert ra.score == pytest.approx(rb.score, rel=1e-9)
-        assert ra.bm25_sum == pytest.approx(rb.bm25_sum, rel=1e-9)

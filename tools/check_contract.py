@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from modernsearchengines_spark.operators import query
 from modernsearchengines_spark.session import get_spark
 
 TABLES = [
@@ -81,6 +82,7 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             srows = [r.asDict() for r in sdf.collect()]
             scols = sdf.columns
+            query.release(sdf)
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"spark error: {e}"))
             print(f"FAIL  {name}: spark error: {e}")
