@@ -93,10 +93,7 @@ def _ts(
 def _doc_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, token, pos) whitespace token stream — JVM split/posexplode."""
     return docs.select(
-        "doc_id",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda t: t != "")
-        ).alias("pos", "token"),
+        "doc_id", F.posexplode(ta.tokens(F.col("text"))).alias("pos", "token")
     )
 
 
@@ -145,7 +142,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(
         spark, raw, f"{sf_dir}/documents.parquet", "doc_id"
     )
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = ta.tokens(F.col("text"))
 
     def tf_of(term: str):
         # single-parameter lambda: a 2-arg lambda would be read by Spark
@@ -230,8 +227,9 @@ def _payload_index(spark: SparkSession, sf_dir: str):
     pruned and payload contract entries (q_wand_pruned_topk, q_payload_topk,
     q_plm_topk), laid out and scored by the engine's own code: an enriched
     frame built from the JVM whitespace tokens goes through
-    indexer.score_and_layout, and the query-terms side gets (idf, avgdl)
-    from query.attach_scoring_stats.
+    indexer.score_and_layout, and the query-terms side is
+    query.query_terms_df over that index for BM25_QUERY_TERMS (one query,
+    every term original).
 
     Per doc the frame carries doc_id, url = doc_id as a string, a NULL
     warc_ts, aug_len = doc_len = token count, and postings for the four
@@ -245,12 +243,13 @@ def _payload_index(spark: SparkSession, sf_dir: str):
     (:func:`_collected`)."""
     from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.operators.codec import varbyte_encode_udf
+    from modernsearchengines_spark.operators.expansion import CompiledQuery
 
     # Unspread: the per-doc work is four array scans and four short
     # encodes, computed once into the cache — one scan task beats a text
     # shuffle here (measured 5-12% faster at sf0.1).
     toks = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.filter(F.split("text", " "), lambda t: t != "").alias("_t")
+        "doc_id", ta.tokens(F.col("text")).alias("_t")
     )
 
     def posting(term: str):
@@ -277,12 +276,11 @@ def _payload_index(spark: SparkSession, sf_dir: str):
     ).persist()
     try:
         index = indexer.score_and_layout(enriched, df_prune=0)
-        # a local relation: collecting its pruning pairs and broadcasting
-        # it need no Spark job
-        qterms = query.local_frame(
-            spark, [(1, t) for t in BM25_QUERY_TERMS], "qnum int, term string"
-        ).withColumn("term_bucket", indexer.term_bucket(F.col("term")))
-        yield index["postings"], query.attach_scoring_stats(qterms, index)
+        terms = tuple(BM25_QUERY_TERMS)
+        qterms = query.query_terms_df(
+            spark, [CompiledQuery(1, " ".join(terms), terms, terms)], index
+        )
+        yield index["postings"], qterms
     finally:
         enriched.unpersist()
 
@@ -369,37 +367,32 @@ def q_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty array... which produced none — hence the explicit guard below
     keeping ONLY docs with ≥1 token, the r5 row set."""
     docs = _ts(spark, sf_dir, "documents")
-    dl = F.size(F.filter(F.split("text", " "), lambda t: t != ""))
     return (
-        docs.select("doc_id", dl.alias("doc_len"))
+        docs.select("doc_id", ta.token_count(F.col("text")).alias("doc_len"))
         .filter(F.col("doc_len") > 0)
     )
 
 
-def q_term_df_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-33 + O-19: document frequency with the df>5 persistence prune (Q6),
-    via the two-level salted aggregation used by the index build (R5).
-    r6: the per-doc token dedup happens in-array (array_distinct) during
-    the scan stage instead of a global 1M-row .distinct() aggregation —
-    identical (doc_id, token) set, one fewer aggregation pass; the salted
-    two-level df aggregation itself is unchanged."""
-    docs = _ts(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    tokens = docs.select(
+def _distinct_doc_terms(docs: DataFrame) -> DataFrame:
+    """(doc_id, term): each doc's distinct whitespace tokens, deduped
+    in-array (array_distinct) during the scan stage rather than by a global
+    .distinct() aggregation."""
+    return docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            )
-        ).alias("token"),
+        F.explode(F.array_distinct(ta.tokens(F.col("text")))).alias("term"),
     )
-    salted = tokens.withColumn(
-        "salt", F.pmod(F.col("doc_id"), F.lit(8))
-    ).groupBy("token", "salt").agg(F.count(F.lit(1)).alias("c"))
+
+
+def q_term_df_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O-33 + O-19: document frequency with the df>5 persistence prune (Q6)
+    over English docs, by the index build's own operators: the two-level
+    salted df aggregation (indexer.term_doc_frequency, head-term skew R5)
+    and the indexer.DF_PRUNE rule."""
+    docs = _ts(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     return (
-        salted.groupBy("token")
-        .agg(F.sum("c").alias("df"))
-        .filter(F.col("df") > 5)
-        .select("token", "df")
+        indexer.term_doc_frequency(_distinct_doc_terms(docs))
+        .filter(F.col("df") > indexer.DF_PRUNE)
+        .select(F.col("term").alias("token"), "df")
     )
 
 
@@ -410,7 +403,7 @@ def q_postings_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan stage, so the former explode → broadcast join → groupBy
     shuffle disappears entirely (identical rows)."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = ta.tokens(F.col("text"))
 
     def tf_struct(term: str):
         return F.struct(
@@ -429,25 +422,21 @@ def q_postings_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-35: BM25+ IDF per term over the full corpus (N counts all docs)."""
+    """O-35: BM25+ IDF per term over the full corpus (N counts all docs),
+    by the index build's terms rule (indexer.terms_table: df > DF_PRUNE,
+    then the reference IDF).  The df itself is a one-level count, not
+    indexer.term_doc_frequency's salted two-level one: on this shape the
+    salted aggregation measured about 25% slower at sf0.1."""
     raw = _t(spark, sf_dir, "documents")
     n_docs = raw.count()
     docs = _spread(spark, raw, f"{sf_dir}/documents.parquet", "doc_id")
-    # in-array per-doc dedup (same set as the former global .distinct())
-    tokens = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            )
-        ).alias("token"),
-    )
-    return (
-        tokens.groupBy("token")
+    df = (
+        _distinct_doc_terms(docs)
+        .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > 5)
-        .withColumn("idf", F.round(indexer.idf_expr(n_docs, "df"), 6))
-        .select("token", "df", "idf")
+    )
+    return indexer.terms_table(df, n_docs).select(
+        F.col("term").alias("token"), "df", F.round("idf", 6).alias("idf")
     )
 
 
@@ -648,13 +637,16 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.floor(F.col("rn") / 5) == F.floor(F.col("rn_b") / 5)),
     ).select(F.col("doc_id").alias("id_a"), F.col("doc_b").alias("id_b"))
     comp = connected_components(edges)
-    return (
+    out = (
         docs.select("doc_id")
         .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .select(
             "doc_id", F.coalesce("component", "doc_id").alias("component")
         )
     )
+    # the labels are a checkpointed frame: query.release frees its RDD
+    out._cached_frames = [comp]
+    return out
 
 
 def q_synonym_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,9 +706,7 @@ def q_simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5 + shingle lists + per-bit vote), so the UDF's VALUES are verified,
     which transitively grounds the dedup/near-dup entries built on it."""
     docs = _ts(spark, sf_dir, "documents")
-    from modernsearchengines_spark.operators.indexer import simhash_udf
-
-    return docs.select("doc_id", simhash_udf("text").alias("simhash"))
+    return docs.select("doc_id", dedup.simhash_udf("text").alias("simhash"))
 
 
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -836,6 +826,19 @@ def q_proximity_2term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minspan_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lists): per doc, the sorted token-index lists of each of
+    spark/join/merge it contains — the min-span UDF's input."""
+    toks = _doc_tokens(_ts(spark, sf_dir, "documents"))
+    return (
+        toks.filter(F.col("token").isin("spark", "join", "merge"))
+        .groupBy("doc_id", "token")
+        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+        .groupBy("doc_id")
+        .agg(F.collect_list("positions").alias("lists"))
+    )
+
+
 def q_minspan_proximity_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-53 general k-list min-span via the engine's heap-scan pandas UDF.
     Hash-checked: for this entry's fixed 3-term list the heap scan equals
@@ -844,16 +847,7 @@ def q_minspan_proximity_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), so DuckDB verifies the UDF over every matched-set shape."""
     from modernsearchengines_spark.operators.proximity import min_span_score_udf
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _doc_tokens(docs)
-    lists = (
-        toks.filter(F.col("token").isin("spark", "join", "merge"))
-        .groupBy("doc_id", "token")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("positions").alias("lists"))
-    )
-    return lists.select(
+    return _minspan_lists(spark, sf_dir).select(
         "doc_id", F.round(min_span_score_udf("lists"), 6).alias("prox")
     )
 
@@ -867,25 +861,19 @@ def q_minspan_proximity_3term(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree bit-for-bit under the same 1/(span/3) operand order)."""
     from modernsearchengines_spark.operators.proximity import min_span_score_udf
 
-    docs = _ts(spark, sf_dir, "documents")
-    toks = _doc_tokens(docs)
-    lists = (
-        toks.filter(F.col("token").isin("spark", "join", "merge"))
-        .groupBy("doc_id", "token")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("positions").alias("lists"))
+    return (
+        _minspan_lists(spark, sf_dir)
         .filter(F.size("lists") == 3)
-    )
-    return lists.select(
-        "doc_id", F.round(min_span_score_udf("lists"), 6).alias("prox")
+        .select(
+            "doc_id", F.round(min_span_score_udf("lists"), 6).alias("prox")
+        )
     )
 
 
 def q_token_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-55/O-56 set union/difference over token arrays (JVM array fns)."""
     docs = _ts(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda t: t != ""))
+    toks = F.array_distinct(ta.tokens(F.col("text")))
     extra = F.array(F.lit("spark"), F.lit("flink"), F.lit("trino"))
     stop = F.array(F.lit("the"), F.lit("a"))
     return docs.select(

@@ -355,12 +355,15 @@ def measure_strategy_bytes(spark, index_dir: str) -> dict:
 
     import pyarrow.parquet as pq
 
+    from modernsearchengines_spark.operators import indexer
     from modernsearchengines_spark.operators.expansion import compile_query
     from modernsearchengines_spark.operators.query import query_terms_df
     from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
 
     compiled = [compile_query(q, t) for q, t in REFERENCE_QUERIES]
-    terms = query_terms_df(spark, compiled)
+    terms = query_terms_df(
+        spark, compiled, indexer.read_index(spark, index_dir)
+    )
     buckets = {r.term_bucket for r in terms.select("term_bucket").distinct().collect()}
 
     col_bytes: dict[str, int] = {}

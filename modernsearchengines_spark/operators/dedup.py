@@ -24,10 +24,13 @@ default at scale.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
-from .indexer import simhash_udf
+from ..functions.simhash import simhash64
+from ..functions.text_analysis import tokens
 
 # Affine MinHash parameters: h_i(x) = (A_i·x + B_i) mod P, P prime.
 MINHASH_P = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
@@ -51,6 +54,19 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> Da
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+@F.pandas_udf(LongType())
+def simhash_udf(text: pd.Series) -> pd.Series:
+    """64-bit simhash, two's-complement into a Spark long (O-70)."""
+
+    def _h(t: str | None) -> int:
+        if t is None:
+            return 0
+        v = simhash64(t)
+        return v - (1 << 64) if v >= (1 << 63) else v
+
+    return text.map(_h)
 
 
 def simhash_dedup(df: DataFrame, text_col: str, order_cols: list[str]) -> DataFrame:
@@ -189,10 +205,9 @@ def simhash_near_dup_pairs(
 
 
 def tokens_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, token) distinct pairs via whitespace split — JVM-side."""
+    """(id, token) distinct pairs of the whitespace tokens — JVM-side."""
     return (
-        df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("token"))
-        .filter(F.col("token") != "")
+        df.select(id_col, F.explode(tokens(F.col(text_col))).alias("token"))
         .distinct()
     )
 
@@ -298,7 +313,7 @@ def shingles_df(
     tokens → one shingle of all tokens joined; otherwise the L−n+1
     sliding windows joined with single spaces.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = tokens(F.col(text_col))
     shingle_arr = (
         F.when(F.size(toks) == 0, F.array().cast("array<string>"))
         .when(F.size(toks) < n, F.array(F.array_join(toks, " ")))
@@ -446,17 +461,15 @@ def connected_components(
     rerun-from-zero mid-loop on a real cluster.  The caller must set a
     checkpoint dir first (any Hadoop scheme) and owns its lifecycle
     (Spark does not clean reliable checkpoint files by default).
+
+    The returned labels are the last round's checkpoint: free them with
+    ``query.release_frame`` once consumed.
     """
+
+    from .query import release_frame
 
     def _ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint() if reliable else df.localCheckpoint()
-
-    def _free(ckpt: DataFrame) -> None:
-        # DataFrame.unpersist only drops CacheManager entries; a checkpoint
-        # frame is a LogicalRDD over an RDD persisted in executor storage,
-        # so its blocks are freed through that RDD (a no-op for reliable
-        # checkpoints, whose data lives in the checkpoint files).
-        ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     edges = _ckpt(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -516,13 +529,13 @@ def connected_components(
         )
         updated = _ckpt(updated)
         changed = updated.filter(F.col("_chg")).limit(1).count()
-        _free(prev)
+        release_frame(prev)
         prev = updated
         labels = updated.drop("_chg")
         if changed == 0:
             converged = True
             break
-    _free(edges)  # the returned labels no longer read the edge table
+    release_frame(edges)  # the returned labels no longer read the edge table
     if not converged:
         import warnings
 
@@ -549,18 +562,13 @@ def dedup_by_components(
 
     Composes any of this module's pair generators with
     :func:`connected_components`: df ⟕ components (rows outside the pair
-    graph form their own singleton component), then the same two-level
-    keep-first used by exact_dedup, keyed on the component label.
+    graph form their own singleton component), then :func:`exact_dedup`
+    keyed on the component label.
     """
     comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     withc = df.join(
         comp.withColumnRenamed("id", id_col), id_col, "left"
     ).withColumn("component", F.coalesce("component", F.col(id_col)))
-    w = Window.partitionBy("component").orderBy(
-        *[F.col(c) for c in order_cols], F.col(id_col)
-    )
-    return (
-        withc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "component")
+    return exact_dedup(withc, ["component"], [*order_cols, id_col]).drop(
+        "component"
     )

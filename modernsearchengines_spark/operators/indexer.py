@@ -57,8 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.simhash import simhash64
 from ..functions.tokenizer import tokenize, url_to_words
+from . import dedup
 from .codec import varbyte_encode_batch
 
 K1 = 1.5
@@ -200,19 +200,6 @@ def doc_postings_udf(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["aug_len", "doc_len", "postings"])
 
 
-@F.pandas_udf(LongType())
-def simhash_udf(text: pd.Series) -> pd.Series:
-    """64-bit simhash, two's-complement into a Spark long (O-70)."""
-
-    def _h(t: str | None) -> int:
-        if t is None:
-            return 0
-        v = simhash64(t)
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    return text.map(_h)
-
-
 # --------------------------------------------------------------------------
 # Cleaning (O-12/O-17/O-28): English filter + exact simhash dedup
 # --------------------------------------------------------------------------
@@ -239,7 +226,9 @@ def domain_histogram(docs: DataFrame) -> DataFrame:
 def clean_docs(docs: DataFrame, derive_text_from_html: bool = False) -> DataFrame:
     """English-only, media-URL-filtered, simhash-deduped corpus (reference
     establish_workingDB, WebCrawler_basis.py:311-362; Q12: threshold 0.99 ⟺
-    exact hash match; O-18 media exclusion).
+    exact hash match; O-18 media exclusion).  The dedup is
+    :func:`dedup.simhash_dedup`, the operator the ``simhash_dedup`` contract
+    entry hash-checks.
 
     Keep-first policy within a duplicate group: min (warc_ts, url) —
     deterministic stand-in for the reference's crawl-insertion order.
@@ -255,13 +244,7 @@ def clean_docs(docs: DataFrame, derive_text_from_html: bool = False) -> DataFram
     # purely for parallelism the scan already had — measured 3.4s of the
     # 32-core 400k-doc build, and its cost grows linearly with corpus size.
     english = docs.filter(F.col("lang").startswith("en"))
-    hashed = english.withColumn("simhash", simhash_udf("text"))
-    w = Window.partitionBy("simhash").orderBy("warc_ts", "url")
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return dedup.simhash_dedup(english, "text", ["warc_ts", "url"])
 
 
 # --------------------------------------------------------------------------
@@ -551,12 +534,11 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
         ).partitionBy("term_bucket").parquet(f"{out_dir}/postings")
 
     def _write_side_tables() -> None:
-        if "terms" in index:
-            # Same bucket layout as postings (a global single-file write
-            # would bottleneck at billion-term vocabularies).
-            index["terms"].repartition("term_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("term_bucket").parquet(f"{out_dir}/terms")
+        # Same bucket layout as postings (a global single-file write would
+        # bottleneck at billion-term vocabularies).
+        index["terms"].repartition("term_bucket").write.mode(
+            "overwrite"
+        ).partitionBy("term_bucket").parquet(f"{out_dir}/terms")
         index["doc_stats"].write.mode("overwrite").parquet(
             f"{out_dir}/doc_stats"
         )
@@ -604,8 +586,6 @@ def read_index(
     Opening pays one repartition of the postings.  The on-disk layout is
     unchanged (term-bucketed); only the in-memory copy is doc-sharded.
     """
-    from pyspark.errors import AnalysisException
-
     postings = spark.read.parquet(f"{out_dir}/postings")
     if serve:
         postings = (
@@ -617,19 +597,12 @@ def read_index(
         )
         postings.count()
 
-    index = {
+    return {
         "postings": postings,
         # no block-max table: the key is kept (always None) for callers of
         # the (postings, blocks, terms, …) wand call shape
         "blocks": None,
         "doc_stats": spark.read.parquet(f"{out_dir}/doc_stats"),
         "corpus_stats": spark.read.parquet(f"{out_dir}/corpus_stats"),
+        "terms": spark.read.parquet(f"{out_dir}/terms"),
     }
-    # Probe via the reader, not os.path: out_dir may be any Hadoop
-    # filesystem scheme (hdfs://, s3a://) where a local isdir check would
-    # silently drop the terms table for df/idf consumers.
-    try:  # absent in pre-terms-table layouts
-        index["terms"] = spark.read.parquet(f"{out_dir}/terms")
-    except AnalysisException:
-        pass
-    return index

@@ -52,10 +52,11 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 def query_terms_df(
     spark: SparkSession,
     queries: list[CompiledQuery],
-    index: dict[str, DataFrame] | None = None,
+    index: dict[str, DataFrame],
 ) -> DataFrame:
     """Flatten compiled queries into (qnum, term, is_original, is_tueb,
-    term_bucket) rows — the broadcast side of the retrieval join.
+    term_bucket, idf, avgdl) rows — the broadcast side of the retrieval
+    join, and the one query-terms frame every scorer reads.
 
     Everything driver-computable IS computed driver-side, in zero or one
     Spark jobs (warm-latency item, VERDICT r4 item 4 — the per-batch prep
@@ -66,7 +67,7 @@ def query_terms_df(
       locked by tests/test_hashing.py) modulo the index's
       ``TERM_BUCKETS`` — indexer.term_bucket's rule — instead of a
       ``withColumn`` the executors evaluate;
-    * with ``index``, (idf, avgdl) are fused INTO the created rows — one
+    * (idf, avgdl) from ``index`` are fused INTO the created rows — one
       literal-pruned scan of the bucketed terms table for idf (the only
       job), avgdl cached on the index dict across batches.  INNER
       semantics: a query term absent from the terms table (df-pruned,
@@ -94,19 +95,15 @@ def query_terms_df(
                     xxhash64_str(term) % TERM_BUCKETS,
                 )
             )
-    schema = (
+    idf_map = _idf_lut(index, sorted({(r[4], r[1]) for r in rows}))
+    avgdl = _cached_avgdl(index)
+    rows = [r + (idf_map[r[1]], avgdl) for r in rows if r[1] in idf_map]
+    df = local_frame(
+        spark,
+        rows,
         "qnum int, term string, is_original boolean, is_tueb boolean, "
-        "term_bucket int"
+        "term_bucket int, idf double, avgdl double",
     )
-    if index is not None:
-        pairs = sorted({(r[4], r[1]) for r in rows})
-        idf_map = _idf_lut(index, pairs)
-        avgdl = _cached_avgdl(index)
-        rows = [
-            r + (idf_map[r[1]], avgdl) for r in rows if r[1] in idf_map
-        ]
-        schema += ", idf double, avgdl double"
-    df = local_frame(spark, rows, schema)
     df._pruning_pairs = sorted({(r[4], r[1]) for r in rows})
     return df
 
@@ -142,51 +139,17 @@ def _cached_avgdl(index: dict[str, DataFrame]) -> float:
     return index["_avgdl"]
 
 
-def attach_scoring_stats(
-    terms: DataFrame, index: dict[str, DataFrame]
-) -> DataFrame:
-    """Attach (idf, avgdl) to an ARBITRARY (qnum, term, term_bucket, ...)
-    query-terms frame, with the df-prune inner-join semantics documented
-    in :func:`query_terms_df` (which fuses these columns driver-side for
-    compiled queries — this broadcast-join form serves terms frames not
-    built by it).  The surviving (term_bucket, term) pairs ride along as
-    ``_pruning_pairs`` like query_terms_df's."""
-    pairs = _pruning_pairs(terms)
-    idf_map = _idf_lut(index, pairs)
-    lut = local_frame(
-        terms.sparkSession, sorted(idf_map.items()), "term string, idf double"
-    )
-    out = terms.join(F.broadcast(lut), "term", "inner").withColumn(
-        "avgdl", F.lit(_cached_avgdl(index))
-    )
-    out._pruning_pairs = [p for p in pairs if p[1] in idf_map]
-    return out
-
-
-def _pruning_pairs(terms: DataFrame) -> list[tuple[int, str]]:
-    """The (term_bucket, term) pairs of a query-terms frame: free from
-    ``terms._pruning_pairs`` when the frame was built by
-    :func:`query_terms_df` or :func:`attach_scoring_stats` (zero jobs).
-    Frames from other sources are collected and deduplicated driver-side:
-    a query-terms frame is O(#query terms) rows, and a local frame
-    collects without a Spark job where ``distinct()`` would run one."""
-    pairs = getattr(terms, "_pruning_pairs", None)
-    if pairs is None:
-        pairs = sorted(
-            {(r.term_bucket, r.term)
-             for r in terms.select("term_bucket", "term").collect()}
-        )
-    return pairs
-
-
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
     """Static pushdown for the retrieval scan: the compiled query terms are
     driver-side and tiny, so emit literal ``term_bucket IN (...)`` and
     ``term IN (...)`` filters.  The bucket predicate prunes partition
     directories (the Iceberg bucket-pruning equivalent); the term predicate
     hits parquet row-group min/max stats.  Relying on runtime DPP for this
-    is fragile — the literal filters make the pruning unconditional."""
-    pairs = _pruning_pairs(terms)
+    is fragile — the literal filters make the pruning unconditional.
+
+    ``terms`` is a :func:`query_terms_df` frame: its (term_bucket, term)
+    pairs ride along as ``terms._pruning_pairs`` (zero jobs)."""
+    pairs = terms._pruning_pairs
     buckets = sorted({b for b, _ in pairs})
     term_list = sorted({t for _, t in pairs})
     return postings.filter(
@@ -197,7 +160,7 @@ def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:
 def ensure_bm25(matched: DataFrame) -> DataFrame:
     """Materialize bm25 on a postings⨝query-terms frame
     (indexer.bm25_expr over the postings' (tf, dl) and the terms side's
-    (idf, avgdl), see query_terms_df / attach_scoring_stats), dropping
+    (idf, avgdl), see query_terms_df), dropping
     those four scratch columns."""
     from .indexer import bm25_expr
 
@@ -418,13 +381,29 @@ def rank(
 
 
 def release(results: DataFrame) -> None:
-    """Unpersist the intermediate frames a :func:`rank`, a pruned ``wand``
+    """Free the intermediate frames a :func:`rank`, a pruned ``wand``
     top-k or a contract entry pinned (``results._cached_frames``) — call
     after consuming the result in a loop (interactive search, benchmark
-    repeats, the contract check) so cached storage does not accumulate
+    repeats, the contract check) so stored blocks do not accumulate
     across batches.  No-op for frames without the attribute."""
     for df in getattr(results, "_cached_frames", []):
-        df.unpersist()
+        release_frame(df)
+
+
+def release_frame(df: DataFrame) -> None:
+    """Free the storage one frame pins, persisted or checkpointed.
+
+    ``DataFrame.unpersist`` drops the frame's cache entry, but never
+    reaches a checkpoint: a ``localCheckpoint`` frame is a ``LogicalRDD``
+    (under any column projections) over an RDD persisted in executor
+    storage, so that RDD is unpersisted directly (a no-op for reliable
+    checkpoints, whose data lives in the checkpoint files)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def run_query_batch(

@@ -28,8 +28,7 @@ over the whole query batch.
 
 Postings carry (tf, dl); every scan here scores them with
 ``indexer.bm25_expr`` against the (idf, avgdl) of the query-terms frame,
-which must come from ``query.query_terms_df(..., index=)`` or
-``query.attach_scoring_stats``.
+which comes from ``query.query_terms_df``.
 
 The reference-parity ranking mode (operators/query.py) stays exhaustive BY
 DESIGN: its query-global min-max normalizations (Q8/Q11) couple every
@@ -83,31 +82,6 @@ def _topk_per_qnum(
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qnum", "rank", "doc_id", value_col, *keep)
-    )
-
-
-def _theta_literal(scores_for_seeds: DataFrame, k: int) -> DataFrame:
-    """θ per qnum, COLLECTED eagerly and re-inlined as a local frame.
-
-    θ is one double per query.  Leaving it lazy makes the final action
-    re-evaluate the whole ub+seed subtree a second time (Spark shares no
-    work across branches of one DAG without an explicit materialization);
-    collecting the per-query minimum splits the computation into two jobs
-    that each evaluate every subtree once.  Driver traffic: nq rows; the
-    local frame broadcasts without a job.
-    """
-    from .query import local_frame
-
-    rows = (
-        _topk_per_qnum(scores_for_seeds, k)
-        .groupBy("qnum")
-        .agg(F.min("score").alias("theta"))
-        .collect()
-    )
-    return local_frame(
-        scores_for_seeds.sparkSession,
-        [(r.qnum, float(r.theta)) for r in rows],
-        "qnum int, theta double",
     )
 
 
@@ -228,6 +202,41 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
     )
 
 
+def _theta_cut(agg: DataFrame, k: int) -> DataFrame:
+    """The cascade cut of :func:`bm25_prox_topk_wand`: the rows of the
+    :func:`_cascade_agg` frame whose bound reaches θ, the k-th Σ bm25 among
+    the top-k-by-Σ bm25 seeds of the query (all matched docs when fewer
+    than k match).
+
+    θ is one double per query, COLLECTED eagerly and re-inlined as a local
+    frame.  Leaving it lazy makes the final action re-evaluate the whole
+    ub+seed subtree a second time (Spark shares no work across branches of
+    one DAG without an explicit materialization); collecting the
+    per-query minimum splits the computation into two jobs that each
+    evaluate every subtree once.  Driver traffic: nq rows; the local frame
+    broadcasts without a job.
+    """
+    from .query import local_frame
+
+    rows = (
+        _topk_per_qnum(agg, k, value_col="bm25_sum")
+        .groupBy("qnum")
+        .agg(F.min("bm25_sum").alias("theta"))
+        .collect()
+    )
+    theta = local_frame(
+        agg.sparkSession,
+        [(r.qnum, float(r.theta)) for r in rows],
+        "qnum int, theta double",
+    )
+    # 1-ulp relative guard: ub ≥ score holds mathematically, but float
+    # reduction order can land one ulp under θ (BM25 ≥ 0, so a relative
+    # shrink of θ is a sound slack).
+    return agg.join(F.broadcast(theta), "qnum").filter(
+        F.col("ub") >= F.col("theta") * (1 - 1e-9)
+    )
+
+
 def bm25_prox_topk_wand(
     postings: DataFrame, _blocks: None, terms: DataFrame, k: int = 100,
     alpha: float = PROX_ALPHA, scorer=None,
@@ -266,19 +275,7 @@ def bm25_prox_topk_wand(
     the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.
     """
     agg = _cascade_agg(postings, terms, alpha).persist()
-    seeds = _topk_per_qnum(agg, k, value_col="bm25_sum")
-    theta = _theta_literal(
-        seeds.select("qnum", "doc_id", F.col("bm25_sum").alias("score")), k
-    )
-
-    # 1-ulp relative guard: ub ≥ score holds mathematically, but float
-    # reduction order can land one ulp under θ (BM25 ≥ 0, so a relative
-    # shrink of θ is a sound slack).
-    candidates = (
-        agg.join(F.broadcast(theta), "qnum")
-        .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
-        .select("qnum", "doc_id", "bm25_sum")
-    )
+    candidates = _theta_cut(agg, k).select("qnum", "doc_id", "bm25_sum")
 
     # Phase C: blobs-only scan for surviving candidates; Σ bm25 joins back
     # from the narrow pass (AQE broadcasts the candidate side when small).
@@ -344,36 +341,17 @@ def pruning_stats(
     terms: DataFrame,
     k: int = 100,
     alpha: float = PROX_ALPHA,
-    scorer=None,
 ) -> dict:
-    """Diagnostic for :func:`bm25_prox_topk_wand`: matched docs vs docs
-    surviving the θ cut under the cascade bound (Σbm25 + α·PROX_MAX·
-    [multi-term]), with θ the k-th exact payload score of the top-k-by-ub
-    seeds (the pruned path itself skips that seed-scoring job and cuts at
-    the Σbm25 θ).
+    """Diagnostic for :func:`bm25_prox_topk_wand`: ``matched_docs``, the
+    (qnum, doc) pairs the narrow pass aggregates, and ``scored_docs``, the
+    pairs surviving its θ cut (:func:`_theta_cut`) — the docs the served
+    plan payload-scores.
 
     ``_blocks`` is ignored (pass None); it only holds the second slot of
     the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.
     """
     agg = _cascade_agg(postings, terms, alpha).persist()
     n_matched = agg.count()
-    seeds = _topk_per_qnum(agg, k, value_col="ub")
-    theta = _theta_literal(
-        _payload_scores(
-            _matched(postings, terms, "positions_vb").join(
-                F.broadcast(seeds.select("qnum", "doc_id")),
-                ["qnum", "doc_id"],
-                "left_semi",
-            ),
-            alpha,
-            scorer,
-        ),
-        k,
-    )
-    n_candidates = (
-        agg.join(F.broadcast(theta), "qnum")
-        .filter(F.col("ub") >= F.col("theta") * (1 - 1e-9))
-        .count()
-    )
+    n_candidates = _theta_cut(agg, k).count()
     agg.unpersist()
     return {"matched_docs": n_matched, "scored_docs": n_candidates}

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
 import pytest
 
+import oracle
 from modernsearchengines_spark.operators import indexer, query, wand
 from modernsearchengines_spark.operators.expansion import compile_query
 from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
@@ -106,6 +108,35 @@ def test_payload_pruning_stats(spark_index, terms):
         alpha=wand.PROX_ALPHA,
     )
     assert 0 < casc["scored_docs"] <= casc["matched_docs"]
+
+
+@pytest.mark.parametrize("k", [10, 100])
+def test_pruning_stats_counts_the_served_cut(spark_index, terms, corpus_rows, k):
+    """``scored_docs`` is the served plan's candidate count: the docs whose
+    bound Σ bm25 + α·[≥ 2 matched terms] reaches θ, the query's k-th best
+    Σ bm25 — counted here from the independent oracle index."""
+    oidx = oracle.build_index(oracle.clean_corpus(corpus_rows))
+    matched = scored = 0
+    for _, text in QUERIES:
+        light: dict[int, float] = defaultdict(float)
+        n_terms: dict[int, int] = defaultdict(int)
+        for term in oracle.compile_query(text)[0]:
+            for doc_id, (bm25, _) in oidx.postings.get(term, {}).items():
+                light[doc_id] += bm25
+                n_terms[doc_id] += 1
+        if not light:
+            continue
+        theta = sorted(light.values(), reverse=True)[:k][-1]
+        matched += len(light)
+        # the served cut's 1-ulp relative slack on θ
+        scored += sum(
+            light[d] + wand.PROX_ALPHA * (n_terms[d] >= 2) >= theta * (1 - 1e-9)
+            for d in light
+        )
+    got = wand.pruning_stats(
+        spark_index["postings"], None, terms, k=k, alpha=wand.PROX_ALPHA
+    )
+    assert got == {"matched_docs": matched, "scored_docs": scored}
 
 
 @pytest.fixture(scope="module")

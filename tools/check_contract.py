@@ -1,7 +1,8 @@
 """Local replica of the driver's correctness gate: run every
 __spark_entry__.queries() entry on Spark and its oracle_sql() twin on DuckDB
 at the given scale factor; compare row count, column names, and
-order-insensitive values.
+order-insensitive values.  An entry also fails when it leaves more
+persisted RDDs behind than before it ran (after collect + query.release).
 
 Usage: python tools/check_contract.py [sf_dir] [only_query ...]
 """
@@ -67,6 +68,12 @@ def mismatch(srows: list[dict], scols: list[str], ddf) -> str | None:
     return None
 
 
+def persisted_rdds(spark) -> int:
+    """RDDs registered as persisted in the session: an entry that returns
+    this count higher after its collect + query.release leaked storage."""
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -79,13 +86,19 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
+            before = persisted_rdds(spark)
             sdf = fn(spark, sf_dir)
             srows = [r.asDict() for r in sdf.collect()]
             scols = sdf.columns
             query.release(sdf)
+            leaked = persisted_rdds(spark) - before
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"spark error: {e}"))
             print(f"FAIL  {name}: spark error: {e}")
+            continue
+        if leaked > 0:
+            failures.append((name, f"left {leaked} persisted RDDs"))
+            print(f"FAIL  {name}: left {leaked} persisted RDDs")
             continue
         if name not in oracles:
             print(f"ROWS  {name}: {len(srows)} rows (rows-only check)")
