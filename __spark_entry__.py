@@ -2063,10 +2063,11 @@ FROM sess GROUP BY user_id, session_id
 # ---------------------------------------------------------------------------
 
 
-def bench_lite(sf_dir: str | None = None, cpus: int | None = None) -> dict:
-    """Time only bench.py's HEADLINE_QUERIES at ``sf_dir`` and return the
-    bench-compatible result dict (also printed as ONE JSON line by the
-    ``python __spark_entry__.py --bench-lite`` entrypoint)."""
+def bench_lite() -> dict:
+    """Time only bench.py's HEADLINE_QUERIES at ``$SPARK_GRAFT_SF_DIR`` on
+    ``$SPARK_GRAFT_CPUS`` cores and return the bench-compatible result dict
+    (also printed as ONE JSON line by the ``python __spark_entry__.py
+    --bench-lite`` entrypoint)."""
     import os
     import time
 
@@ -2074,8 +2075,8 @@ def bench_lite(sf_dir: str | None = None, cpus: int | None = None) -> dict:
     from modernsearchengines_spark.operators import query
     from modernsearchengines_spark.session import get_spark
 
-    sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench-lite", cores=cpus, shuffle_partitions=2 * cpus)
     qmap = queries()

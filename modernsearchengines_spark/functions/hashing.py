@@ -15,16 +15,17 @@ n = 10^12 the same bound gives ≈ 27,000 expected colliding pairs, each
 silently merging two documents' postings and doc stats — NOT negligible.
 ``indexer.build_index`` therefore guards every build with a
 ``count(distinct url) == count(distinct doc_id)`` invariant (one agg over
-a frame it already materializes) and fails on collision; the escape
-hatches for the 10^12 regime are ``indexer.assign_doc_ids(mode="dense")``
-(coordinated dense ids, collision-free by construction) or widening the
-key to two independent 64-bit hash columns.
+a frame it already materializes) and fails on collision.  The remedy for
+the 10^12 regime is widening the key to two independent 64-bit hash
+columns; that wider key is NOT implemented.
 
 Parity with the JVM implementation is locked by tests/test_determinism.py.
 """
 
 from __future__ import annotations
 
+# Spark's seed for F.xxhash64 / the SQL xxhash64 function.
+SEED = 42
 _MASK = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -48,15 +49,15 @@ def _merge(h: int, acc: int) -> int:
     return (h * _P1 + _P4) & _MASK
 
 
-def xxhash64_bytes(data: bytes, seed: int = 42) -> int:
-    """Unsigned xxHash64 of ``data``."""
+def xxhash64_bytes(data: bytes) -> int:
+    """Unsigned xxHash64 of ``data`` under Spark's seed."""
     n = len(data)
     i = 0
     if n >= 32:
-        v1 = (seed + _P1 + _P2) & _MASK
-        v2 = (seed + _P2) & _MASK
-        v3 = seed & _MASK
-        v4 = (seed - _P1) & _MASK
+        v1 = (SEED + _P1 + _P2) & _MASK
+        v2 = (SEED + _P2) & _MASK
+        v3 = SEED & _MASK
+        v4 = (SEED - _P1) & _MASK
         while i + 32 <= n:
             v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
             v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
@@ -71,7 +72,7 @@ def xxhash64_bytes(data: bytes, seed: int = 42) -> int:
         h = _merge(h, v3)
         h = _merge(h, v4)
     else:
-        h = (seed + _P5) & _MASK
+        h = (SEED + _P5) & _MASK
     h = (h + n) & _MASK
     while i + 8 <= n:
         h ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
@@ -93,7 +94,7 @@ def xxhash64_bytes(data: bytes, seed: int = 42) -> int:
     return h
 
 
-def xxhash64_str(s: str, seed: int = 42) -> int:
+def xxhash64_str(s: str) -> int:
     """Signed 64-bit xxHash64 of a string — equals Spark ``xxhash64(col)``."""
-    v = xxhash64_bytes(s.encode("utf-8"), seed)
+    v = xxhash64_bytes(s.encode("utf-8"))
     return v - (1 << 64) if v >= (1 << 63) else v

@@ -11,9 +11,11 @@ a single space, then replace newlines with spaces.
 Per SURVEY.md §7 R1 the byte-identity invariant (BASELINE.json input_hint:
 "byte-identical extracted text per url") is defined engine-vs-oracle over the
 fixture corpus: the fixture generator writes ``text`` as exactly this
-function's output on ``html``, and the engine re-derives ``text`` from
-``html`` through the same code inside an Arrow UDF.  ``<script>``/``<style>``
-payloads are excluded from the text (documented decision, FIXTURES.md §1).
+function's output on ``html``, and the engine's Arrow UDF
+(``indexer.extract_text_udf``) re-derives ``text`` from ``html`` through
+the same code; tests/test_index_parity.py checks the two byte for byte.
+``<script>``/``<style>`` payloads are excluded from the text (documented
+decision, FIXTURES.md §1).
 
 Character references are decoded (``convert_charrefs=True``), matching
 html.parser defaults.
@@ -21,7 +23,6 @@ html.parser defaults.
 
 from __future__ import annotations
 
-import re
 from html.parser import HTMLParser
 
 _SKIP_CONTENT = frozenset({"script", "style"})
@@ -36,25 +37,14 @@ class _TextCollector(HTMLParser):
         super().__init__(convert_charrefs=True)
         self._skip_depth = 0
         self.pieces: list[str] = []
-        self.lang: str | None = None
-        self.title_pieces: list[str] = []
-        self._in_title = False
 
     def handle_starttag(self, tag: str, attrs) -> None:
         if tag in _SKIP_CONTENT:
             self._skip_depth += 1
-        elif tag == "html" and self.lang is None:
-            for k, v in attrs:
-                if k == "lang" and v:
-                    self.lang = v
-        elif tag == "title":
-            self._in_title = True
 
     def handle_endtag(self, tag: str) -> None:
         if tag in _SKIP_CONTENT and self._skip_depth > 0:
             self._skip_depth -= 1
-        elif tag == "title":
-            self._in_title = False
 
     def handle_data(self, data: str) -> None:
         if self._skip_depth:
@@ -62,8 +52,6 @@ class _TextCollector(HTMLParser):
         stripped = data.strip()
         if stripped:
             self.pieces.append(stripped)
-            if self._in_title:
-                self.title_pieces.append(stripped)
 
 
 def extract_text(html: str | bytes) -> str:
@@ -74,32 +62,3 @@ def extract_text(html: str | bytes) -> str:
     collector.feed(html)
     collector.close()
     return " ".join(collector.pieces).replace("\n", " ")
-
-
-def extract_lang(html: str | bytes, default: str = "en") -> str:
-    """``<html lang>`` attribute, defaulting like the reference
-    (WebCrawler_basis.py:224-227)."""
-    if isinstance(html, (bytes, bytearray)):
-        html = html.decode("utf-8", errors="replace")
-    collector = _TextCollector()
-    collector.feed(html)
-    collector.close()
-    return collector.lang or default
-
-
-_WWW_RE = re.compile(r"^www\.")
-
-
-def extract_title(html: str | bytes, url: str) -> str:
-    """``<title>`` text, falling back to the domain sans ``www.``
-    (reference WebCrawler_basis.py:229-238)."""
-    if isinstance(html, (bytes, bytearray)):
-        html = html.decode("utf-8", errors="replace")
-    collector = _TextCollector()
-    collector.feed(html)
-    collector.close()
-    if collector.title_pieces:
-        return " ".join(collector.title_pieces)
-    from urllib.parse import urlparse
-
-    return _WWW_RE.sub("", urlparse(url).netloc)

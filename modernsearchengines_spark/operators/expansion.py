@@ -69,11 +69,7 @@ def preprocess_query(text: str) -> str:
     return " ".join(sorted(chosen))
 
 
-def spellcheck(
-    text: str,
-    fixture: dict[str, str] | None = None,
-    checker: "VocabSpellchecker | None" = None,
-) -> str:
+def spellcheck(text: str, checker: "VocabSpellchecker | None" = None) -> str:
     """Spellcheck stage (O-77, reference retrieval.py:333-359).
 
     Default is the frozen fixture (the parity spec — pyspellchecker's
@@ -86,8 +82,7 @@ def spellcheck(
     """
     if checker is not None:
         return checker.correct(text)
-    table = SPELLCHECK_FIXTURE if fixture is None else fixture
-    return " ".join(table.get(w, w) for w in text.split())
+    return " ".join(SPELLCHECK_FIXTURE.get(w, w) for w in text.split())
 
 
 # Norvig-corrector alphabet: ascii + the German letters the reference's

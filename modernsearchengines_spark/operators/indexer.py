@@ -3,7 +3,7 @@
 Pipeline (all Catalyst-planned; Python crosses the JVM boundary only inside
 the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
 
-    docs ──derive text from html (*extract)──filter(lang)──dedup(*simhash)
+    docs ──filter(lang)──dedup(*simhash)
          ──doc_id = xxhash64(url)──length-cap gate (Q2/Q3)
          ──*doc_postings (url-words Q4 + tokenize + per-doc term agg +
             varbyte position encode — the ONE Arrow crossing of the whole
@@ -45,7 +45,7 @@ import shutil
 import tempfile
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -116,7 +116,11 @@ DF_SALT = 16  # salt fan-out for the head-term df aggregation
 # --------------------------------------------------------------------------
 @F.pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html(binary) → text with stripped_strings semantics (O-58)."""
+    """html(binary) → text with stripped_strings semantics (O-58).
+
+    The build reads the corpus's ``text`` column as given; this UDF is the
+    engine side of the byte-identical extraction invariant (html_extract
+    module doc), which tests/test_index_parity.py checks per url."""
     from ..functions.html_extract import extract_text
 
     return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
@@ -223,7 +227,7 @@ def domain_histogram(docs: DataFrame) -> DataFrame:
     )
 
 
-def clean_docs(docs: DataFrame, derive_text_from_html: bool = False) -> DataFrame:
+def clean_docs(docs: DataFrame) -> DataFrame:
     """English-only, media-URL-filtered, simhash-deduped corpus (reference
     establish_workingDB, WebCrawler_basis.py:311-362; Q12: threshold 0.99 ⟺
     exact hash match; O-18 media exclusion).  The dedup is
@@ -234,8 +238,6 @@ def clean_docs(docs: DataFrame, derive_text_from_html: bool = False) -> DataFram
     deterministic stand-in for the reference's crawl-insertion order.
     """
     docs = media_url_filter(docs)
-    if derive_text_from_html:
-        docs = docs.withColumn("text", extract_text_udf("html"))
     # No pre-UDF repartition: Spark sizes file splits as
     # max(openCost, bytes/defaultParallelism) capped at maxPartitionBytes,
     # so the scan stage that runs the simhash UDF already gets ≈ one split
@@ -248,65 +250,17 @@ def clean_docs(docs: DataFrame, derive_text_from_html: bool = False) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# Deterministic dense doc_id over url (replaces SQLite rowid, SURVEY O-1)
+# Content-hash doc_id over url (replaces SQLite rowid, SURVEY O-1)
 # --------------------------------------------------------------------------
-def assign_doc_ids(docs: DataFrame, mode: str = "hash", n_ranges: int = 32) -> DataFrame:
-    """Deterministic doc ids over url (replaces SQLite rowid, SURVEY O-1).
-
-    ``mode="hash"`` (default): ``doc_id = xxhash64(url)`` — a pure column
-    expression, zero coordination, the only formulation that scales to
-    10^12 docs without a global ordering pass.  The oracle computes the
-    identical ids via the vendored pure-Python xxHash64
+def assign_doc_ids(docs: DataFrame) -> DataFrame:
+    """``doc_id = xxhash64(url)`` (replaces SQLite rowid, SURVEY O-1) — a
+    pure column expression, zero coordination, the only formulation that
+    scales to 10^12 docs without a global ordering pass.  The oracle
+    computes the identical ids via the vendored pure-Python xxHash64
     (functions/hashing.py), so engine↔oracle doc ids agree bit-for-bit.
     Collision risk documented there.
-
-    ``mode="dense"``: dense 0-based rank of url (closest analogue of the
-    reference's SQLite rowid).  A global ``row_number() OVER (ORDER BY
-    url)`` would single-partition at 100 TB; instead the URL COLUMN ALONE is
-    range-repartitioned and numbered within each sorted range, per-range
-    offsets are added back, and the tiny (url, doc_id) map is hash-joined
-    onto the full rows.  The numbered intermediate is persisted before the
-    offsets are derived: ``spark_partition_id()`` is nondeterministic and
-    upstream row order is shuffle-dependent, so evaluating the subtree twice
-    (offsets branch + join branch) can disagree on range boundaries and mint
-    duplicate ids — observed in benchmarking as colliding doc_ids and a
-    wobbling posting count.  Single evaluation makes the assignment exact by
-    construction (tests/test_determinism.py).
     """
-    if mode == "hash":
-        return docs.withColumn("doc_id", F.xxhash64("url"))
-    urls = docs.select("url")
-    numbered = (
-        urls.repartitionByRange(n_ranges, "url")
-        .sortWithinPartitions("url")
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy("url"))
-        )
-        .persist()
-    )
-    offsets = (
-        numbered.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_offset",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_cnt")
-    )
-    ids = (
-        numbered.join(F.broadcast(offsets), "_pid")
-        .withColumn("doc_id", (F.col("_offset") + F.col("_rn") - 1).cast("long"))
-        .select("url", "doc_id")
-    )
-    return docs.join(ids, "url")
+    return docs.withColumn("doc_id", F.xxhash64("url"))
 
 
 # --------------------------------------------------------------------------
@@ -384,8 +338,8 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     xxhash64(url) merges two documents iff distinct urls exceed distinct
     ids (birthday bound ≈ n²/2^65 expected colliding pairs — ~27k at
     10^12 docs; see functions/hashing.py).  Failing here beats silently
-    merging postings; escape hatches: assign_doc_ids(mode="dense") or a
-    wider two-column key.
+    merging postings.  The remedy is a wider two-column key, which is not
+    implemented.
     """
     row = doc_stats.agg(
         F.count(F.lit(1)).alias("n"),
@@ -396,8 +350,8 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     if row.n_ids != row.n_urls:
         raise ValueError(
             f"doc_id hash collision: {row.n_urls} distinct urls map to "
-            f"{row.n_ids} distinct xxhash64 ids; rebuild with "
-            "assign_doc_ids(mode='dense') or a wider key"
+            f"{row.n_ids} distinct xxhash64 ids; the remedy, a wider "
+            "two-column key, is not implemented"
         )
     n_total = row.n
     avg_doc_len = float((row.chars or 0) / n_total) if n_total else 0.0
@@ -524,10 +478,15 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     # The side tables are independent of the big postings job — submit them
     # from worker threads so the Spark scheduler interleaves their (small)
     # stages into slots the memory-bound postings exchange leaves idle,
-    # instead of paying their job latencies serially afterwards.
+    # instead of paying their job latencies serially afterwards.  Each
+    # target is wrapped here, in the calling thread, so its jobs carry the
+    # caller's local properties (job group, description, tags); a plain
+    # worker thread would submit them with none.
     def _write_postings() -> None:
         index["postings"].repartition("term_bucket").write.mode(
             "overwrite"
@@ -547,8 +506,8 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(_write_postings)
-        f_side = pool.submit(_write_side_tables)
+        f_post = pool.submit(inheritable_thread_target(_write_postings))
+        f_side = pool.submit(inheritable_thread_target(_write_side_tables))
         f_post.result()
         f_side.result()
 

@@ -38,28 +38,25 @@ def fake_decode(payloads: list[bytes]) -> "np.ndarray":
     return out
 
 
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """binary → array<float> features via mapInPandas (Arrow batches).
+def extract_features(df: DataFrame) -> DataFrame:
+    """(media_id, payload binary) → (media_id, features array<float>,
+    n_bytes) via mapInPandas (Arrow batches).
 
     The decoder sees a whole batch (vectorization-friendly shape for real
-    codecs / GPU preprocessing).  Output schema: (id, features, n_bytes).
+    codecs / GPU preprocessing).
     """
-    schema = f"{id_col} long, features array<float>, n_bytes long"
+    schema = "media_id long, features array<float>, n_bytes long"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [bytes(x) if x is not None else b"" for x in pdf[payload_col]]
+            payloads = [bytes(x) if x is not None else b"" for x in pdf["payload"]]
             feats = fake_decode(payloads)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "media_id": pdf["media_id"].values,
                     "features": [row.tolist() for row in feats],
                     "n_bytes": [len(p) for p in payloads],
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return df.select("media_id", "payload").mapInPandas(run, schema)

@@ -26,6 +26,7 @@ from .proximity import min_span_score_vb_udf
 
 ALPHA = 0.8
 TOP_K = 100
+SEARCH_TOP_K = 10  # hits per interactive search (reference top-10)
 BOOST = 100.0
 
 # Q13 weight ladder (reference retrieval.py:233-251).
@@ -209,10 +210,9 @@ def rank(
     terms: DataFrame,
     doc_stats: DataFrame,
     top_k: int = TOP_K,
-    alpha: float = ALPHA,
 ) -> DataFrame:
     """Rank the query batch → (qnum, rank, doc_id, url, score, bm25_sum,
-    match_count).
+    match_count), blending at α = ``ALPHA``.
 
     Two frames are persisted and materialized eagerly: the matched
     (qnum, doc_id, bm25, ...) rows and the per-doc aggregate.  Measured
@@ -361,7 +361,7 @@ def rank(
             (F.col("prox") - F.col("_plo")) / (F.col("_phi") - F.col("_plo"))
         ),
     ).withColumn(
-        "score", alpha * F.col("norm_combined") + (1 - alpha) * F.col("norm_prox")
+        "score", ALPHA * F.col("norm_combined") + (1 - ALPHA) * F.col("norm_prox")
     )
 
     # O-47/O-49: per-query top-k, total order (−score, doc_id) (Q16).
@@ -423,15 +423,14 @@ def search(
     index: dict[str, DataFrame],
     docs: DataFrame,
     text: str,
-    top_k: int = 10,
     need_spellcheck: bool = True,
     expansion: dict[str, list[str]] | None = None,
     parity: bool = True,
-    payload: bool = False,
     spellchecker=None,
 ) -> DataFrame:
     """Interactive search path (reference main_retrival, retrieval.py:406-422
-    / SURVEY §3.3): spellcheck → compile → rank top-10 → snippet per hit.
+    / SURVEY §3.3): spellcheck → compile → rank top-``SEARCH_TOP_K`` →
+    snippet per hit.
 
     ``docs`` must carry (doc_id, text) for snippet hydration.  Returns
     (rank, doc_id, url, score, snippet).
@@ -439,11 +438,9 @@ def search(
     ``parity=True`` (default) reproduces the reference scoring quirks
     exactly (weight ladder, +100 boost, global min-max couplings Q8/Q11 —
     necessarily exhaustive, the normalizations read every matched score).
-    ``parity=False`` routes through wand.bm25_topk_auto: plain BM25 top-k
-    by the exhaustive pass, or — with ``payload=True`` — blended with the
-    min-span payload and served by the cascade-pruned plan.  This is the
-    non-reference deployment surface; scores are pure BM25(+α·prox), not
-    the reference ladder.
+    ``parity=False`` routes through wand.bm25_topk_auto with light scoring:
+    plain BM25 top-k by the exhaustive pass.  This is the non-reference
+    deployment surface; scores are pure BM25, not the reference ladder.
     """
     from .expansion import spellcheck
     from .snippets import add_snippets
@@ -456,14 +453,14 @@ def search(
     )
     if parity:
         topk = run_query_batch(
-            spark, index, [(1, corrected)], top_k=top_k, expansion=expansion
+            spark, index, [(1, corrected)], top_k=SEARCH_TOP_K,
+            expansion=expansion,
         )
     else:
         compiled = [compile_query(1, corrected, expansion)]
         terms = query_terms_df(spark, compiled, index=index)
         scored = wand.bm25_topk_auto(
-            index["postings"], None, terms,
-            k=top_k, payload=payload,
+            index["postings"], None, terms, k=SEARCH_TOP_K
         )
         topk = (
             index["doc_stats"].select("doc_id", "url")
@@ -485,11 +482,3 @@ def search(
     # ride the top-k's cache handles so interactive loops can release()
     out._cached_frames = getattr(topk, "_cached_frames", [])
     return out
-
-
-def format_batch_results(results: DataFrame) -> DataFrame:
-    """Reference batch sink shape: qnum, rank, url, score as %.3f string
-    (O-5, reference retrieval.py:324-331)."""
-    return results.select(
-        "qnum", "rank", "url", F.format_number("score", 3).alias("score")
-    )

@@ -8,12 +8,17 @@ pairs in tests/test_dedup_similarity.py).
 
 Scoring arithmetic stays JVM-side: dot products via
 ``aggregate(zip_with(...))`` higher-order functions, no Python crossing.
+
+Vector tables carry ``(vec_id, embedding)``; query tables carry
+``(query_id, query_vec)``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+HYPERPLANE_SEED = 7  # first LSH table's hyperplane seed
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -35,24 +40,18 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "query_vec",
+    vectors: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast the (small) query side against
     the vector table; window top-k with (−cos, id) tie order."""
     joined = vectors.crossJoin(F.broadcast(queries)).withColumn(
-        "cos", cosine(F.col(vec_col), F.col(qvec_col))
+        "cos", cosine(F.col("embedding"), F.col("query_vec"))
     )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cos")
+        .select("query_id", "rank", "vec_id", "cos")
     )
 
 
@@ -66,7 +65,9 @@ def _sign_bits(vec_col: Column, hyperplanes: list[list[float]]) -> Column:
     return F.concat(*bits)
 
 
-def make_hyperplanes(dim: int, n_planes: int = 8, seed: int = 7) -> list[list[float]]:
+def make_hyperplanes(
+    dim: int, n_planes: int = 8, seed: int = HYPERPLANE_SEED
+) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (seeded LCG, no numpy RNG
     state dependence)."""
     state = seed
@@ -80,12 +81,7 @@ def make_hyperplanes(dim: int, n_planes: int = 8, seed: int = 7) -> list[list[fl
     return planes
 
 
-def cosine_pairs_exact(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_exact(vectors: DataFrame, threshold: float) -> DataFrame:
     """EXACT embedding-cosine pairs ≥ threshold → (id_a, id_b, cos).
 
     The declared brute-force baseline (all-pairs self-join): correct at any
@@ -94,8 +90,8 @@ def cosine_pairs_exact(
     this for ≤10^5 vectors or verification samples; use the LSH variant at
     100 TB.
     """
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos", cosine(F.col("va"), F.col("vb")))
@@ -110,9 +106,6 @@ def cosine_near_dup_pairs(
     dim: int,
     n_planes: int = 6,
     n_tables: int = 1,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH-bucketed self-join.
 
@@ -129,11 +122,11 @@ def cosine_near_dup_pairs(
     """
     v = vectors
     for t in range(n_tables):
-        planes = make_hyperplanes(dim, n_planes, seed=seed + 101 * t)
-        v = v.withColumn(f"_b{t}", _sign_bits(F.col(vec_col), planes))
+        planes = make_hyperplanes(dim, n_planes, seed=HYPERPLANE_SEED + 101 * t)
+        v = v.withColumn(f"_b{t}", _sign_bits(F.col("embedding"), planes))
     banded = v.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         F.explode(
             F.array(
                 *[
@@ -145,12 +138,13 @@ def cosine_near_dup_pairs(
             )
         ).alias("tb"),
     ).select(
-        id_col, vec_col, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
+        "vec_id", "embedding",
+        F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"),
     )
     a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "tbl", "bucket"
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "tbl", "bucket"
     )
-    b = banded.select(F.col(id_col).alias("id_b"), "tbl", "bucket")
+    b = banded.select(F.col("vec_id").alias("id_b"), "tbl", "bucket")
     # Multi-table collisions are deduped on the PAIR KEY with only one
     # vector side aboard (va rides — it is functionally dependent on id_a,
     # so dropDuplicates keeps a consistent row); the b-side vector joins
@@ -164,7 +158,7 @@ def cosine_near_dup_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     vb_side = vectors.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
     return (
         pairs.join(vb_side, "id_b")

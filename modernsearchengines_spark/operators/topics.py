@@ -25,21 +25,17 @@ MAX_DF = 0.6
 MIN_DF = 3.0
 
 
-def fit_topics(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = K_TOPICS,
-):
-    """Fit CountVectorizer→IDF→LDA; returns (model_bundle, assignments).
+def fit_topics(docs: DataFrame, k: int = K_TOPICS):
+    """Fit CountVectorizer→IDF→LDA over ``docs``' (doc_id, text); returns
+    (model_bundle, assignments).
 
-    assignments: (id, topics array<int> — top-3 topic indices, weights
+    assignments: (doc_id, topics array<int> — top-3 topic indices, weights
     array<double>).
     """
     from pyspark.ml.clustering import LDA
     from pyspark.ml.feature import IDF, CountVectorizer, Tokenizer
 
-    tok = Tokenizer(inputCol=text_col, outputCol="_words")
+    tok = Tokenizer(inputCol="text", outputCol="_words")
     words = tok.transform(docs)
     cv = CountVectorizer(
         inputCol="_words",
@@ -55,7 +51,6 @@ def fit_topics(
     dist = lda.transform(tfidf)
 
     # top-3 topics per doc: argsort of the topicDistribution vector (O-50).
-    arr = F.expr("transform(sequence(0, {k}), i -> _topicDistribution[i])")
     from pyspark.ml.functions import vector_to_array
 
     assignments = (
@@ -68,7 +63,7 @@ def fit_topics(
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("_idx").cast("array<int>").alias("topics"),
             F.col("_d").alias("weights"),
         )

@@ -114,9 +114,15 @@ PROX_ALPHA = 1.0
 # bm25_sum + α·PROX_MAX ≥ θ, so its selectivity collapses once α exceeds
 # the query's within-top BM25 spread — at α=10 (the round-2 default) EVERY
 # matched doc survived (ratio 1.05×), because prox then DOMINATES the
-# ranking instead of refining it; at α=1 the cascade-bound filter keeps
+# ranking instead of refining it; at α=1 the cascade-bound filter kept
 # 2.6% of matched docs (38×; k=100 over the 8-query bench set, 400k
-# index).  prox ∈ (0, 1] is a tie-refiner at α≈1.
+# index) — measured under an earlier θ (the seeds' k-th exact payload
+# score), tighter than the served :func:`_theta_cut`, so it is not the
+# served plan's ratio.  The served cut, measured: 2.2% of matched
+# (qnum, doc) pairs payload-scored (80 of 3,580; perfbench serve --trace 1
+# --seed 1, ``wand.prox_topk.scored_ratio`` 0.022, k=10, 4 queries,
+# 1,000-doc index, local[4]).  Not re-measured at 400k docs.
+# prox ∈ (0, 1] is a tie-refiner at α≈1.
 PROX_MAX = 1.0
 
 
@@ -183,8 +189,10 @@ def _cascade_agg(postings: DataFrame, terms: DataFrame, alpha: float) -> DataFra
     costs the same one scan+agg an upper-bound pass runs — so the cascade
     bound is the correct distributed formulation (measured on the 400k
     index, α=1, k=100, 8-query bench set: candidates 2.6% of matched docs
-    vs 41% under the block-max bound).  This is rank-safe first-stage
-    cascading (cf. Wang/Lin/Metzler 2011).
+    vs 41% under the block-max bound, both under an earlier, tighter θ
+    than the served :func:`_theta_cut`; see the ``PROX_MAX`` note for the
+    served cut's ratio).  This is rank-safe first-stage cascading (cf.
+    Wang/Lin/Metzler 2011).
     """
     return (
         _matched(postings, terms)  # narrow: no blobs
@@ -246,9 +254,10 @@ def bm25_prox_topk_wand(
 
     This is where distributed pruning actually pays: the per-doc work is
     not an 8-byte sum but a varbyte decode + position scan in Python, so
-    cutting the scored set 38× (pruning_stats cascade bound, α=1, k=100,
-    400k bench index) cuts the expensive stage's input rows, Arrow
-    transfer, and collect_list shuffle by the same factor.  Measured wins
+    cutting the scored set (38× under an earlier, tighter θ at α=1, k=100
+    on the 400k bench index; see the ``PROX_MAX`` note for the served
+    cut's ratio) cuts the expensive stage's input rows, Arrow transfer,
+    and collect_list shuffle by the same factor.  Measured wins
     (tools/measure_wand.py, 32 cores, warm best-of-3): min-span payload
     9.0 s pruned vs 17.6 s exhaustive (2.0×); PLM reranking payload
     13.8 s vs 102.1 s (7.4×).
@@ -323,9 +332,10 @@ def bm25_topk_auto(
     reranker 13.8 s vs 102.1 s (7.4×); light scoring 3.8 s exhaustive vs
     7.3 s under the since-deleted block-max pruned plan.  The saving is
     PROCESSING — the pruned path payload-scores (varbyte decode + position
-    scan + collect_list shuffle) the cascade pruning ratio fewer docs (38×
-    at α=1) — not storage bytes: the candidate semi-join runs after the
-    scan and the narrow ub pass ADDS reads.
+    scan + collect_list shuffle) only the docs that pass the cascade cut
+    (``PROX_MAX`` note: 38× fewer under an earlier θ at α=1; the served
+    cut's ratio is quoted there) — not storage bytes: the candidate
+    semi-join runs after the scan and the narrow ub pass ADDS reads.
 
     ``_blocks`` is ignored (pass None); it only holds the second slot of
     the ``(postings, blocks, terms, …)`` call shape perfbench/ still uses.

@@ -74,9 +74,11 @@ def append_to_index(
     Steps (the build's own pieces, indexer module docstring):
       1. clean + id the batch, drop urls already in doc_stats (INSERT OR
          IGNORE semantics, same key as :func:`append_new_docs`);
-      2. tokenize the survivors into a new enriched segment and run the
-         collision guard over old ∪ new doc stats (indexer.finalize_stats)
-         before any table is touched;
+      2. tokenize the survivors into a new enriched segment — the batch's
+         one evaluation: its size is counted from the written segment, and
+         an empty segment is removed and nothing else is touched — then
+         run the collision guard over old ∪ new doc stats
+         (indexer.finalize_stats) before any table is touched;
       3. bucket-layout the segment APPEND-mode into ``postings/``
          (checkpoint.layout_segment — the unpruned layout every build
          writes, so a term whose df crosses the threshold through this
@@ -110,15 +112,19 @@ def append_to_index(
     docs = indexer.assign_doc_ids(clean).join(
         existing.select("url"), "url", "left_anti"
     )
-    n_new = docs.count()
-    if n_new == 0:
-        return 0
 
+    # Write first, count the written rows: counting the anti-joined batch
+    # up front would run clean, simhash and the anti-join twice.
     seg = f"append-{uuid.uuid4().hex[:8]}"
+    seg_dir = f"{index_dir}/enriched/segment={seg}"
     checkpoint.write_enriched_segment(docs, index_dir, seg)
-    new_stats = spark.read.parquet(f"{index_dir}/enriched/segment={seg}").select(
+    new_stats = spark.read.parquet(seg_dir).select(
         "doc_id", "url", "warc_ts", "aug_len", "doc_len"
     )
+    n_new = new_stats.count()
+    if n_new == 0:
+        fsio.rmtree(spark, seg_dir)
+        return 0
     n_total, _, corpus_stats = indexer.finalize_stats(
         existing.unionByName(new_stats)
     )
@@ -135,5 +141,5 @@ def append_to_index(
     ).repartition("term_bucket").write.mode("overwrite").partitionBy(
         "term_bucket"
     ).parquet(f"{index_dir}/terms")
-    fsio.rmtree(spark, f"{index_dir}/enriched/segment={seg}")
+    fsio.rmtree(spark, seg_dir)
     return n_new

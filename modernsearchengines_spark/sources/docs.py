@@ -51,11 +51,14 @@ _BASE_WORDS = [
 ]
 
 
-def _vocab(rng: random.Random, size: int = 2000) -> list[str]:
+_VOCAB_SIZE = 2000
+
+
+def _vocab(rng: random.Random) -> list[str]:
     vocab = list(TUEBINGEN_TERMS) + list(_BASE_WORDS)
     syllables = ["ba", "ko", "ri", "ta", "lu", "me", "so", "ne", "vi", "da",
                  "pe", "gu", "ha", "zo", "fi", "wa", "ce", "ju", "xi", "qua"]
-    while len(vocab) < size:
+    while len(vocab) < _VOCAB_SIZE:
         w = "".join(rng.choice(syllables) for _ in range(rng.randint(2, 4)))
         vocab.append(w)
     return vocab
@@ -207,15 +210,3 @@ def write_docs_parquet(rows: list[dict], path: str) -> None:
     # maxPartitionBytes cut ≥3 tasks/core — the shape a real multi-file
     # 100 TB table has naturally.
     pq.write_table(table, path, row_group_size=4096)
-
-
-def read_queries_tsv(path: str) -> list[tuple[int, str]]:
-    """TSV ``qnum\\ttext`` reader (reference retrieval.py:296-302 shape)."""
-    out = []
-    with open(path, encoding="utf-8") as fh:
-        for line in fh:
-            line = line.strip()
-            if line:
-                num, text = line.split("\t", 1)
-                out.append((int(num), text))
-    return out

@@ -73,8 +73,7 @@ class OracleIndex:
 
 def build_index(clean_rows: list[dict]) -> OracleIndex:
     """Index the cleaned corpus; doc_id = xxhash64(url) — identical to the
-    engine default (functions/hashing.py; dense-rank ids remain an engine
-    option)."""
+    engine's ids (functions/hashing.py)."""
     from modernsearchengines_spark.functions.hashing import xxhash64_str
 
     idx = OracleIndex()

@@ -1,19 +1,14 @@
-"""connected_components / dedup_by_components: cluster step of the dedup
-ladder, verified against a driver-side union-find oracle on seeded random
-graphs plus structured worst cases (chains force multi-round propagation).
+"""connected_components: cluster step of the dedup ladder, verified
+against a driver-side union-find oracle on seeded random graphs plus
+structured worst cases (chains force multi-round propagation).
 """
 
 from __future__ import annotations
 
 import random
+import warnings
 
-import pytest
-from pyspark.sql import functions as F
-
-from modernsearchengines_spark.operators.dedup import (
-    connected_components,
-    dedup_by_components,
-)
+from modernsearchengines_spark.operators.dedup import connected_components
 
 
 def _uf_oracle(pairs):
@@ -91,33 +86,15 @@ def test_random_graphs_match_union_find(spark):
         assert _spark_components(spark, pairs) == _uf_oracle(pairs)
 
 
-def test_dedup_by_components_keep_first(spark):
-    docs = spark.createDataFrame(
-        [(i, f"d{i}", i % 3) for i in range(8)],
-        "doc_id long, text string, ord int",
-    )
-    # components: {0,1,2} via chain, {5,6}; 3,4,7 singletons
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6)], "id_a long, id_b long"
-    )
-    kept = dedup_by_components(
-        docs, pairs, "doc_id", ["ord"]
-    ).collect()
-    ids = sorted(r.doc_id for r in kept)
-    # {0,1,2}: min ord = 0 at doc 0 (tie-break doc_id) -> keep 0
-    # {5,6}: ord 2 at 5, ord 0 at 6 -> keep 6
-    assert ids == [0, 3, 4, 6, 7]
-    # schema passes through unchanged (no component column leaks)
-    assert set(kept[0].asDict()) == {"doc_id", "text", "ord"}
-
-
 def test_empty_pairs_passthrough(spark):
-    docs = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "doc_id long, text string"
-    )
+    """An empty pair set runs the loop over no edges and yields no labels,
+    so every row of the corpus stays its own singleton."""
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    kept = dedup_by_components(docs, pairs, "doc_id", ["text"])
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 2]
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        labels = connected_components(pairs).collect()
+    assert labels == []
+    assert not any("max_iter" in str(w.message) for w in caught)
 
 
 def test_max_iter_exhaustion_warns(spark):

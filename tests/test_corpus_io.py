@@ -81,8 +81,10 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     }
     n_added = append_to_index(spark, out_inc, extra)
     assert n_added == extra.count()
-    # idempotent: re-appending the same batch is a no-op
+    # idempotent: re-appending the same batch is a no-op, and the empty
+    # segment it wrote to find that out does not stay behind
     assert append_to_index(spark, out_inc, extra) == 0
+    assert not glob.glob(f"{out_inc}/enriched/segment=append-*")
     after = {
         p: os.path.getmtime(p)
         for p in glob.glob(f"{out_inc}/postings/**/*.parquet", recursive=True)

@@ -46,8 +46,8 @@ def test_clean_corpus_matches_oracle(spark, docs_df, corpus_rows):
 
 
 def test_doc_ids_hash_default(spark, docs_df):
-    """Default ids are xxhash64(url), unique, matching the vendored oracle
-    hash bit-for-bit."""
+    """Ids are xxhash64(url), unique, matching the vendored oracle hash
+    bit-for-bit."""
     from modernsearchengines_spark.functions.hashing import xxhash64_str
 
     ids = indexer.assign_doc_ids(indexer.clean_docs(docs_df)).select(
@@ -57,14 +57,6 @@ def test_doc_ids_hash_default(spark, docs_df):
     assert len({r.doc_id for r in rows}) == len(rows)
     for r in rows[:50]:
         assert r.doc_id == xxhash64_str(r.url)
-
-
-def test_doc_ids_dense_mode(spark, docs_df):
-    ids = indexer.assign_doc_ids(
-        indexer.clean_docs(docs_df), mode="dense"
-    ).select("doc_id", "url")
-    rows = sorted(ids.collect(), key=lambda r: r.url)
-    assert [r.doc_id for r in rows] == list(range(len(rows)))
 
 
 def test_corpus_stats_match(spark_index, oracle_index):
@@ -175,7 +167,7 @@ def test_collision_guard_detects_forced_collision(
     countDistinct(url) == countDistinct(doc_id) invariant to raise."""
     from modernsearchengines_spark.operators import checkpoint
 
-    def colliding_ids(docs, mode="hash", n_ranges=32):
+    def colliding_ids(docs):
         return docs.withColumn("doc_id", F.lit(12345).cast("long"))
 
     monkeypatch.setattr(indexer, "assign_doc_ids", colliding_ids)
@@ -186,6 +178,28 @@ def test_collision_guard_detects_forced_collision(
         checkpoint.build_index_checkpointed(
             spark, clean, str(tmp_path / "segidx"), n_segments=2
         )
+
+
+def test_write_index_jobs_carry_callers_job_group(spark, spark_index, tmp_path):
+    """write_index submits its writers from worker threads; every job they
+    run must still land in the caller's job group, so a per-operator trace
+    attributes the write to its caller and no write job runs group-less."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "test.write_index"
+    bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        indexer.write_index(spark_index, str(tmp_path / "idx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    bus.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
 
 
 def test_unpersist_removes_owned_work_dir(spark, docs_df, tmp_path):

@@ -1,10 +1,9 @@
 """Interactive search path (reference main_retrival, SURVEY §3.3):
-spellcheck → compile → top-10 → snippets, plus a watermark streaming agg."""
+spellcheck → compile → top-10 → snippets."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from modernsearchengines_spark.operators import indexer, query
 
@@ -77,43 +76,6 @@ def test_search_nonparity_routes_through_auto_dispatch(
         assert a.score == pytest.approx(b.score, rel=1e-9)
     # full search() surface intact: snippets + urls hydrate
     assert all(r.snippet and r.url.startswith("http") for r in got)
-
-
-def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
-    """Structured Streaming surface: event-time tumbling window + watermark
-    over a file source, availableNow trigger (late-data-capable path)."""
-    src = spark.createDataFrame(
-        [(i, f"2024-01-01 00:{i % 50:02d}:00", "click") for i in range(200)],
-        "event_id long, ts_str string, event_type string",
-    ).withColumn("ts", F.to_timestamp("ts_str"))
-    in_dir = str(tmp_path / "stream_in")
-    src.write.mode("overwrite").parquet(in_dir)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(in_dir).schema
-    ).parquet(in_dir)
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # Append mode emits only windows closed by the watermark; rerun the same
-    # data through a complete-mode batch check for the full picture.
-    batch = (
-        spark.read.parquet(in_dir)
-        .groupBy(F.window("ts", "15 minutes"), "event_type")
-        .count()
-    )
-    assert batch.count() == 4  # 00:00-:15, :15-:30, :30-:45, :45-:50
 
 
 def test_release_unpersists_rank_cache(spark, search_setup):

@@ -69,15 +69,6 @@ def test_ranks_are_dense_from_one(spark_results):
         assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
 
 
-def test_batch_output_format(spark, spark_index):
-    df = query.run_query_batch(spark, spark_index, REFERENCE_QUERIES, top_k=5)
-    formatted = query.format_batch_results(df).collect()
-    # qnum, rank, url, score-as-%.3f (reference retrieval.py:330)
-    for row in formatted:
-        assert isinstance(row.score, str)
-        assert len(row.score.split(".")[1]) == 3
-
-
 def test_proximity_udf_matches_oracle_fn():
     from modernsearchengines_spark.operators.proximity import min_span_score
 

@@ -6,11 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from modernsearchengines_spark.functions import porter, simhash, tokenizer
-from modernsearchengines_spark.functions.html_extract import (
-    extract_lang,
-    extract_text,
-    extract_title,
-)
+from modernsearchengines_spark.functions.html_extract import extract_text
 from modernsearchengines_spark.operators.codec import (
     varbyte_decode,
     varbyte_encode,
@@ -103,9 +99,6 @@ def test_html_extraction_contract():
         "</body></html>"
     )
     assert extract_text(html_doc) == "A & B Hello world Tübingen rocks"
-    assert extract_lang(html_doc) == "en-US"
-    assert extract_title(html_doc, "https://www.x.de/") == "A & B"
-    assert extract_title("<html></html>", "https://www.x.de/a") == "x.de"
 
 
 def test_simhash_exact_dup_semantics():

@@ -33,14 +33,20 @@ def terms(spark, spark_index):
     return query.query_terms_df(spark, compiled, index=spark_index).cache()
 
 
-@pytest.mark.parametrize("k", [10, 25, 100])
-def test_payload_wand_equals_exhaustive(spark_index, terms, k):
-    """Payload-refined (bm25 + α·min-span) pruned top-k ≡ exhaustive."""
+@pytest.mark.parametrize(
+    "k, alpha",
+    [pytest.param(k, wand.PROX_ALPHA, id=str(k)) for k in (10, 25, 100)]
+    + [pytest.param(k, 0.5, id=f"{k}-alpha0.5") for k in (10, 25, 100)],
+)
+def test_payload_wand_equals_exhaustive(spark_index, terms, k, alpha):
+    """Payload-refined (bm25 + α·min-span) pruned top-k ≡ exhaustive, at
+    the served α and at a smaller one (the cascade bound adds α·PROX_MAX,
+    so its soundness must not depend on α = 1)."""
     base = wand.bm25_prox_topk_exhaustive(
-        spark_index["postings"], terms, k
+        spark_index["postings"], terms, k, alpha
     ).collect()
     pruned = wand.bm25_prox_topk_wand(
-        spark_index["postings"], None, terms, k
+        spark_index["postings"], None, terms, k, alpha
     ).collect()
     base_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in base}
     pruned_m = {(r.qnum, r.rank): (r.doc_id, r.score) for r in pruned}
