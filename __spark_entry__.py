@@ -322,8 +322,8 @@ def q_plm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SIGIR 2009) over varbyte-decoded positions
     (proximity.plm_score_vb_udf) — the measured P/S ≫ crossover regime
     where cascade pruning beats exhaustive scoring 4-7× on the 400k bench
-    index (tools/measure_wand.py; rank-identical twin pair in
-    tests/test_wand.py).  Hash-checked: with the 4 query terms fixed, the
+    index (bench.py's ``plm_exhaustive``/``plm_wand`` keys; rank-identical
+    twin pair in tests/test_wand.py).  Hash-checked: with the 4 query terms fixed, the
     Gaussian-kernel ladder is replayable in SQL (exp over position pairs,
     per-term clip, per-point max, σ-average; worst observed divergence vs
     numpy is 1 ulp on the fixture)."""

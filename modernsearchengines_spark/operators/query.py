@@ -50,6 +50,13 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.createDataFrame(table, struct)
 
 
+def lookup(df: DataFrame, ids: list[int], col: str) -> dict:
+    """doc_id → ``col`` for ``ids``: one collect of a literal doc_id IN (…)
+    filter (SURVEY O-7's key lookup; cost model: ``snippets`` docstring)."""
+    rows = df.filter(F.col("doc_id").isin(ids)).select("doc_id", col)
+    return dict(rows.collect())
+
+
 def query_terms_df(
     spark: SparkSession,
     queries: list[CompiledQuery],
@@ -226,13 +233,12 @@ def rank(
     the retrieval scan and join under the cached frame's
     ``InMemoryRelation``.
 
-    CACHE LIFECYCLE (closes the r4 ADVICE): the two persisted frames ride
-    on the returned DataFrame as ``result._cached_frames``; call
-    :func:`release` after consuming the result to unpersist them.  A
-    caller that skips release() leaks two small cached frames (blob-free
-    scalar columns) per batch until the session ends — bounded, disclosed,
-    and reclaimable.  persist() (not localCheckpoint) keeps lineage, so an
-    executor loss on a real cluster recomputes instead of failing the job.
+    CACHE LIFECYCLE: the two persisted frames ride on the result as
+    ``result._cached_frames``; :func:`release` unpersists them once the
+    result is consumed (:func:`search` does; a caller that skips it pins
+    them until the session ends).  persist() (not localCheckpoint) keeps
+    lineage, so an executor loss on a real cluster recomputes instead of
+    failing the job.
     """
     # O-24: broadcast-hash equi join, bucket-pruned on term_bucket via the
     # static literal filters of pruned_postings.  The fat positions column
@@ -383,7 +389,7 @@ def rank(
 def release(results: DataFrame) -> None:
     """Free the intermediate frames a :func:`rank`, a pruned ``wand``
     top-k or a contract entry pinned (``results._cached_frames``) — call
-    after consuming the result in a loop (interactive search, benchmark
+    after consuming the result in a loop (:func:`search`, benchmark
     repeats, the contract check) so stored blocks do not accumulate
     across batches.  No-op for frames without the attribute."""
     for df in getattr(results, "_cached_frames", []):
@@ -411,9 +417,8 @@ def run_query_batch(
     index: dict[str, DataFrame],
     queries: list[tuple[int, str]],
     top_k: int = TOP_K,
-    expansion: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    compiled = [compile_query(qnum, text, expansion) for qnum, text in queries]
+    compiled = [compile_query(qnum, text) for qnum, text in queries]
     terms = query_terms_df(spark, compiled, index=index)
     return rank(index["postings"], terms, index["doc_stats"], top_k=top_k)
 
@@ -432,8 +437,9 @@ def search(
     / SURVEY §3.3): spellcheck → compile → rank top-``SEARCH_TOP_K`` →
     snippet per hit.
 
-    ``docs`` must carry (doc_id, text) for snippet hydration.  Returns
-    (rank, doc_id, url, score, snippet).
+    ``docs`` must carry (doc_id, text) for snippet hydration.  Returns a
+    local frame of (rank, doc_id, url, score, snippet) ordered by rank,
+    having freed the caches the ranking pinned (:func:`release`).
 
     ``parity=True`` (default) reproduces the reference scoring quirks
     exactly (weight ladder, +100 boost, global min-max couplings Q8/Q11 —
@@ -442,8 +448,8 @@ def search(
     plain BM25 top-k by the exhaustive pass.  This is the non-reference
     deployment surface; scores are pure BM25, not the reference ladder.
     """
-    from .expansion import spellcheck
-    from .snippets import add_snippets
+    from .expansion import preprocess_query, spellcheck
+    from .snippets import snippet_pairs
 
     # ``spellchecker``: a VocabSpellchecker built from the corpus
     # (expansion.VocabSpellchecker.from_docs) — the real Norvig corrector;
@@ -451,34 +457,25 @@ def search(
     corrected = (
         spellcheck(text, checker=spellchecker) if need_spellcheck else text
     )
+    compiled = [compile_query(1, corrected, expansion)]
+    terms = query_terms_df(spark, compiled, index=index)
     if parity:
-        topk = run_query_batch(
-            spark, index, [(1, corrected)], top_k=SEARCH_TOP_K,
-            expansion=expansion,
-        )
+        topk = rank(index["postings"], terms, index["doc_stats"], SEARCH_TOP_K)
+        hits = topk.collect()
+        urls = {h["doc_id"]: h["url"] for h in hits}
     else:
-        compiled = [compile_query(1, corrected, expansion)]
-        terms = query_terms_df(spark, compiled, index=index)
-        scored = wand.bm25_topk_auto(
-            index["postings"], None, terms, k=SEARCH_TOP_K
-        )
-        topk = (
-            index["doc_stats"].select("doc_id", "url")
-            .join(F.broadcast(scored), "doc_id")
-            .select("qnum", "rank", "doc_id", "url", "score")
-        )
-        topk._cached_frames = getattr(scored, "_cached_frames", [])
+        topk = wand.bm25_topk_auto(index["postings"], None, terms, SEARCH_TOP_K)
+        hits = sorted(topk.collect(), key=lambda h: h["rank"])
+        urls = lookup(index["doc_stats"], [h["doc_id"] for h in hits], "url")
+    release(topk)
     # Reference snippet query: the processed query sans the injected
     # "tuebingen" (retrieval.py:416-418).
-    from .expansion import preprocess_query
-
     snippet_query = " ".join(
         w for w in preprocess_query(corrected).split() if w != "tuebingen"
     ) or "tuebingen"
-    queries = local_frame(spark, [(1, snippet_query)], "qnum int, text string")
-    out = add_snippets(topk, docs, queries).select(
-        "rank", "doc_id", "url", "score", "snippet"
-    ).orderBy("rank")
-    # ride the top-k's cache handles so interactive loops can release()
-    out._cached_frames = getattr(topk, "_cached_frames", [])
-    return out
+    rows = [
+        (h["rank"], h["doc_id"], urls[h["doc_id"]], h["score"], snippet)
+        for h, snippet in snippet_pairs(hits, docs, {1: snippet_query})
+    ]
+    schema = "rank int, doc_id long, url string, score double, snippet string"
+    return local_frame(spark, rows, schema)

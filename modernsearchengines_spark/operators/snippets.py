@@ -5,12 +5,12 @@ The reference (/root/reference/retrieval.py:376-404) sentence-splits the
 document with NLTK, fits a per-document TF-IDF over sentences + query, and
 returns the argmax-cosine sentence.  Neither NLTK nor sklearn is in this
 environment, so this module implements the same observable contract with a
-regex sentence splitter and an explicit per-document TF-IDF cosine — all
-inside one Arrow-vectorized pandas UDF (the computation is inherently
-per-(query, doc) and tiny: top-k docs only).
+regex sentence splitter and an explicit per-document TF-IDF cosine.
 
-Dataflow: top-k results (qnum, doc_id, query_text) broadcast-joined to
-doc texts → snippet UDF → (qnum, doc_id, snippet).
+Dataflow: collected top-k hits → their texts by :func:`query.lookup`'s
+``doc_id IN (…)`` filter → :func:`best_sentence` on the driver.  O(k) rows
+leave the executors per search; on a real corpus the filter skips files
+only if the docs table is clustered or sorted by doc_id.
 """
 
 from __future__ import annotations
@@ -19,10 +19,9 @@ import math
 import re
 from collections import Counter
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql import DataFrame, Row
+
+from .query import local_frame, lookup
 
 _SENT_RE = re.compile(r"(?<=[.!?])\s+")
 _WORD_RE = re.compile(r"[a-z0-9]+")
@@ -69,25 +68,28 @@ def best_sentence(query: str, text: str) -> str:
     return sentences[best_i]
 
 
-@F.pandas_udf(StringType())
-def snippet_udf(query: pd.Series, text: pd.Series) -> pd.Series:
-    return pd.Series(
-        [best_sentence(q or "", t or "") for q, t in zip(query, text)]
-    )
+def snippet_pairs(
+    hits: list[Row], docs: DataFrame, query_texts: dict[int, str]
+) -> list[tuple[Row, str]]:
+    """(hit, snippet) per hit, in order; a hit whose qnum has no query
+    text or whose doc_id no row in ``docs`` (doc_id, text) is dropped."""
+    texts = lookup(docs, [h["doc_id"] for h in hits], "text")
+    return [
+        (h, best_sentence(query_texts[h["qnum"]] or "", texts[h["doc_id"]] or ""))
+        for h in hits
+        if h["qnum"] in query_texts and h["doc_id"] in texts
+    ]
 
 
 def add_snippets(
     topk: DataFrame, docs: DataFrame, query_texts: DataFrame
 ) -> DataFrame:
-    """Hydrate top-k results with snippets.
-
-    ``topk``: (qnum, rank, doc_id, url, ...); ``docs``: (doc_id, text);
-    ``query_texts``: (qnum, text) — both small sides broadcast.
-    """
-    q = query_texts.select("qnum", F.col("text").alias("_qtext"))
-    return (
-        topk.join(F.broadcast(q), "qnum")
-        .join(docs.select("doc_id", F.col("text").alias("_dtext")), "doc_id")
-        .withColumn("snippet", snippet_udf("_qtext", "_dtext"))
-        .drop("_qtext", "_dtext")
+    """Hydrate top-k results with snippets: collects ``topk`` (qnum, rank,
+    doc_id, ...) and ``query_texts`` (qnum, text), reads ``docs`` (doc_id,
+    text) by :func:`snippet_pairs`, and returns a local frame of ``topk``'s
+    columns plus ``snippet``, whose collect runs no Spark job."""
+    qtexts = dict(query_texts.select("qnum", "text").collect())
+    rows = [(*h, s) for h, s in snippet_pairs(topk.collect(), docs, qtexts)]
+    return local_frame(
+        topk.sparkSession, rows, f"{topk.schema.toDDL()}, snippet string"
     )

@@ -257,10 +257,10 @@ def bm25_prox_topk_wand(
     cutting the scored set (38× under an earlier, tighter θ at α=1, k=100
     on the 400k bench index; see the ``PROX_MAX`` note for the served
     cut's ratio) cuts the expensive stage's input rows, Arrow transfer,
-    and collect_list shuffle by the same factor.  Measured wins
-    (tools/measure_wand.py, 32 cores, warm best-of-3): min-span payload
-    9.0 s pruned vs 17.6 s exhaustive (2.0×); PLM reranking payload
-    13.8 s vs 102.1 s (7.4×).
+    and collect_list shuffle by the same factor.  Measured wins (bench.py
+    ``payload_*``/``plm_*`` keys, 32 cores, warm best-of-3): min-span
+    payload 9.0 s pruned vs 17.6 s exhaustive (2.0×); PLM reranking
+    payload 13.8 s vs 102.1 s (7.4×).
 
     Upper bound: the cascade bound of :func:`_cascade_agg` —
     ub(d) = Σ bm25 + α·PROX_MAX for multi-term docs, the exact light score
@@ -327,7 +327,7 @@ def bm25_topk_auto(
     scoring → cascade-pruned :func:`bm25_prox_topk_wand`; pure BM25 → the
     single :func:`bm25_topk_exhaustive` pass.
 
-    Measurements (tools/measure_wand.py, 400k-doc index, 32 cores, warm):
+    Measurements (bench.py ``*_warm_sec`` keys, 400k-doc index, 32 cores):
     min-span payload 9.0 s pruned vs 17.6 s exhaustive (2.0×); the PLM
     reranker 13.8 s vs 102.1 s (7.4×); light scoring 3.8 s exhaustive vs
     7.3 s under the since-deleted block-max pruned plan.  The saving is

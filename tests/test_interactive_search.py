@@ -78,6 +78,22 @@ def test_search_nonparity_routes_through_auto_dispatch(
     assert all(r.snippet and r.url.startswith("http") for r in got)
 
 
+@pytest.mark.parametrize("parity", [True, False])
+def test_search_frees_its_caches(spark, search_setup, parity):
+    """search() collects its hits and releases what the ranking persisted:
+    no cached frame outlives the call (a search loop would pin two per
+    call otherwise)."""
+    idx, docs = search_setup
+    jsc = spark.sparkContext._jsc.sc()
+    # warm the index's own caches, which a first read may materialize
+    query.search(spark, idx, docs, "castle", parity=parity).collect()
+    before = jsc.getPersistentRDDs().size()
+    query.search(
+        spark, idx, docs, "tübingen attractions", parity=parity
+    ).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_release_unpersists_rank_cache(spark, search_setup):
     """rank() cache lifecycle (r5): a materialized batch pins exactly two
     intermediate frames; release() returns their storage to NONE so tight

@@ -209,3 +209,37 @@ def test_served_topk_is_one_window_without_doc_exchange(spark, docs_df, tmp_path
         k == ["LocalTableScan"] for k in broadcast_inputs
     ), broadcast_inputs
     served["postings"].unpersist()
+
+
+def test_snippet_text_read_is_a_pushed_key_filter(spark, tmp_path, monkeypatch):
+    """add_snippets reads the top-k's texts by a literal doc_id IN (…)
+    filter that reaches the parquet scan: no broadcast join against the
+    docs relation and no Python UDF in any frame it collects."""
+    from modernsearchengines_spark.operators.query import local_frame
+    from modernsearchengines_spark.operators.snippets import add_snippets
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(10, "A castle. A river."), (11, "Bread."), (12, "Wine.")],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    topk = local_frame(
+        spark, [(1, 1, 10), (1, 2, 11)], "qnum int, rank int, doc_id long"
+    )
+    queries = local_frame(spark, [(1, "castle")], "qnum int, text string")
+    collected = []
+    cls = type(docs)
+    real_collect = cls.collect
+    monkeypatch.setattr(
+        cls, "collect", lambda df: collected.append(df) or real_collect(df)
+    )
+    add_snippets(topk, docs, queries)
+    monkeypatch.undo()
+    reads = [df for df in collected if "parquet" in formatted_plan(df)]
+    assert len(reads) == 1
+    assert has_pushed_filter(reads[0], "In(doc_id")
+    for df in collected:
+        assert "BroadcastExchange" not in formatted_plan(df)
+        assert not uses_broadcast_join(df)
+        assert python_eval_nodes(df) == []

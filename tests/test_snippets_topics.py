@@ -35,8 +35,10 @@ def test_best_sentence_picks_query_overlap():
 
 
 def test_add_snippets_pipeline(spark):
+    # doc 12 has no text row and qnum 2 no query text: both hits drop.
     topk = spark.createDataFrame(
-        [(1, 1, 10), (1, 2, 11)], "qnum int, rank int, doc_id long"
+        [(1, 1, 10), (1, 2, 11), (1, 3, 12), (2, 1, 10)],
+        "qnum int, rank int, doc_id long",
     )
     docs = spark.createDataFrame(
         [
@@ -48,7 +50,17 @@ def test_add_snippets_pipeline(spark):
     queries = spark.createDataFrame(
         [(1, "castle tours")], "qnum int, text string"
     )
-    out = {r.doc_id: r.snippet for r in add_snippets(topk, docs, queries).collect()}
+    result = add_snippets(topk, docs, queries)
+    assert result.columns == topk.columns + ["snippet"]
+    status = spark.sparkContext._jsc.sc().statusStore()
+    jobs = status.jobsList(None).size()
+    rows = result.collect()
+    assert status.jobsList(None).size() == jobs  # a local frame
+    assert sorted((r.qnum, r.doc_id) for r in rows) == [(1, 10), (1, 11)]
+    texts = dict(docs.collect())
+    for r in rows:
+        assert r.snippet == best_sentence("castle tours", texts[r.doc_id])
+    out = {r.doc_id: r.snippet for r in rows}
     assert out[10] == "Castle tours run daily."
     assert out[11] in (
         "Bread is fresh.",
