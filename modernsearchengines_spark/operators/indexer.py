@@ -340,6 +340,9 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     10^12 docs; see functions/hashing.py).  Failing here beats silently
     merging postings.  The remedy is a wider two-column key, which is not
     implemented.
+
+    The corpus_stats frame is a :func:`query.local_frame` (a
+    ``LocalRelation``), so writing it runs no Python-worker task.
     """
     row = doc_stats.agg(
         F.count(F.lit(1)).alias("n"),
@@ -353,10 +356,14 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
             f"{row.n_ids} distinct xxhash64 ids; the remedy, a wider "
             "two-column key, is not implemented"
         )
+    from .query import local_frame  # query imports this module
+
     n_total = row.n
     avg_doc_len = float((row.chars or 0) / n_total) if n_total else 0.0
-    corpus_stats = doc_stats.sparkSession.createDataFrame(
-        [(n_total, avg_doc_len)], "n_docs long, avg_doc_len double"
+    corpus_stats = local_frame(
+        doc_stats.sparkSession,
+        [(n_total, avg_doc_len)],
+        "n_docs long, avg_doc_len double",
     )
     return n_total, avg_doc_len, corpus_stats
 

@@ -39,9 +39,10 @@ BOOST = 100.0
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """``rows`` (tuples in the DDL ``schema``'s column order) as a local
     relation.  Built from an Arrow table, the frame plans as a
-    ``LocalTableScan`` — empty or not — so collecting or broadcasting it
-    runs no Spark job; a Python list plans as an RDD scan, and
-    broadcasting that runs one."""
+    ``LocalTableScan`` — empty or not — so collecting it runs no Spark
+    job; a Python list plans as an RDD scan, whose collect runs one job
+    of Python-worker tasks.  Broadcasting either runs one job: for the
+    local relation, one task per row up to ``defaultParallelism``."""
     struct = StructType.fromDDL(schema)
     table = pa.Table.from_pylist(
         [dict(zip(struct.names, r)) for r in rows],
@@ -66,22 +67,23 @@ def query_terms_df(
     term_bucket, idf, avgdl) rows — the broadcast side of the retrieval
     join, and the one query-terms frame every scorer reads.
 
-    Everything driver-computable IS computed driver-side, in zero or one
-    Spark jobs (warm-latency item, VERDICT r4 item 4 — the per-batch prep
-    previously cost ~6 jobs before the first real stage), and the frame is
-    a :func:`local_frame`, so broadcasting it into the join runs no job:
+    Everything driver-computable IS computed driver-side, and after the
+    first call on an index dict no Spark job runs here at all; the frame
+    is a :func:`local_frame`, so it plans as a ``LocalTableScan`` (the
+    broadcast that ships it into the join still runs one small job, one
+    task per row up to ``defaultParallelism``):
 
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
       locked by tests/test_hashing.py) modulo the index's
       ``TERM_BUCKETS`` — indexer.term_bucket's rule — instead of a
       ``withColumn`` the executors evaluate;
-    * (idf, avgdl) from ``index`` are fused INTO the created rows — one
-      literal-pruned scan of the bucketed terms table for idf (the only
-      job), avgdl cached on the index dict across batches.  INNER
+    * (idf, avgdl) come from the index's driver-side lookup
+      (:func:`_idf_lut`) and are fused INTO the created rows.  INNER
       semantics: a query term absent from the terms table (df-pruned,
       O-19) is dropped here, so its postings — which the unpruned layout
-      keeps on disk — never enter the retrieval join.  This is the df>5 prune rule; results equal a
-      pruned store (same matched rows, match_count, scores);
+      keeps on disk — never enter the retrieval join.  This is the df>5
+      prune rule; results equal a pruned store (same matched rows,
+      match_count, scores);
     * the distinct (term_bucket, term) pairs ride along as
       ``df._pruning_pairs`` so :func:`pruned_postings` never needs a
       ``distinct().collect()`` job to recover what the driver already
@@ -89,11 +91,14 @@ def query_terms_df(
     """
     from ..functions.hashing import xxhash64_str
 
+    idf, avgdl = _idf_lut(index)
     tueb = set(TUEBINGEN_TERMS)
     rows = []
     for q in queries:
         originals = set(q.original_terms)
         for term in q.terms:
+            if term not in idf:  # df-pruned: inner semantics, see above
+                continue
             rows.append(
                 (
                     q.qnum,
@@ -101,11 +106,10 @@ def query_terms_df(
                     term in originals,
                     term in tueb,
                     xxhash64_str(term) % TERM_BUCKETS,
+                    idf[term],
+                    avgdl,
                 )
             )
-    idf_map = _idf_lut(index, sorted({(r[4], r[1]) for r in rows}))
-    avgdl = _cached_avgdl(index)
-    rows = [r + (idf_map[r[1]], avgdl) for r in rows if r[1] in idf_map]
     df = local_frame(
         spark,
         rows,
@@ -116,35 +120,28 @@ def query_terms_df(
     return df
 
 
-def _idf_lut(
-    index: dict[str, DataFrame], pairs: list[tuple[int, str]]
-) -> dict[str, float]:
-    """idf per query term from ONE literal-pruned scan of the bucketed
-    terms table, collected driver-side — O(#query terms) rows, the same
-    "small side stays driver-resident" discipline as query compilation."""
-    buckets = sorted({b for b, _ in pairs})
-    term_list = sorted({t for _, t in pairs})
-    rows = (
-        index["terms"]
-        .filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(term_list)
-        )
-        .select("term", "idf")
-        .collect()
-    )
-    return {r.term: float(r.idf) for r in rows}
+def _idf_lut(index: dict[str, DataFrame]) -> tuple[dict[str, float], float]:
+    """(term → idf, avg_doc_len) of ``index``, collected on first use and
+    cached on the index dict (SURVEY §0: the reference keeps its idf in
+    memory), so every later query batch prepares with no Spark job.
 
-
-def _cached_avgdl(index: dict[str, DataFrame]) -> float:
-    """corpus avg_doc_len, collected once per index dict (a scalar that
-    cannot change under the read index; repeated query batches previously
-    paid one job per batch re-reading it)."""
-    if "_avgdl" not in index:
-        index["_avgdl"] = float(
+    Cost model: two collects per index dict (the terms table's
+    (term, idf) and corpus_stats' avg_doc_len); driver memory
+    O(#terms with df > ``DF_PRUNE``) — 1,646 terms, about 30 KB pickled,
+    on the 1,000-doc perfbench corpus.  The load is lazy, so opening an
+    index that is never queried pays nothing.  The dict is a snapshot:
+    reopen the index after ``append_to_index`` (a dict read before the
+    append keeps the idf and avgdl it first loaded)."""
+    if "_idf_lut" not in index:
+        idf = {
+            r.term: float(r.idf)
+            for r in index["terms"].select("term", "idf").collect()
+        }
+        avgdl = float(
             index["corpus_stats"].select("avg_doc_len").collect()[0][0]
         )
-    return index["_avgdl"]
+        index["_idf_lut"] = (idf, avgdl)
+    return index["_idf_lut"]
 
 
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:

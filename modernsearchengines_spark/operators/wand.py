@@ -221,8 +221,9 @@ def _theta_cut(agg: DataFrame, k: int) -> DataFrame:
     ub+seed subtree a second time (Spark shares no work across branches of
     one DAG without an explicit materialization); collecting the
     per-query minimum splits the computation into two jobs that each
-    evaluate every subtree once.  Driver traffic: nq rows; the local frame
-    broadcasts without a job.
+    evaluate every subtree once.  Driver traffic: nq rows; broadcasting the
+    local frame runs one small job (one task per row, up to
+    ``defaultParallelism``) and re-evaluates nothing.
     """
     from .query import local_frame
 

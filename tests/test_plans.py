@@ -182,7 +182,8 @@ def test_served_topk_is_one_window_without_doc_exchange(spark, docs_df, tmp_path
     exchange (the doc_id-sharded cache already clusters each document),
     one WindowGroupLimit top-k whose Partial half runs before the qnum
     exchange, and a query-terms side that broadcasts from a local relation
-    (no job to build it)."""
+    (no scan or Python-worker stage under the broadcast; the broadcast
+    itself still runs one small job)."""
     from modernsearchengines_spark.operators import indexer, query, wand
     from modernsearchengines_spark.operators.expansion import compile_query
 
@@ -243,3 +244,55 @@ def test_snippet_text_read_is_a_pushed_key_filter(spark, tmp_path, monkeypatch):
         assert "BroadcastExchange" not in formatted_plan(df)
         assert not uses_broadcast_join(df)
         assert python_eval_nodes(df) == []
+
+
+def test_corpus_stats_is_a_local_relation(spark):
+    """finalize_stats returns corpus_stats as an Arrow-backed local
+    relation, so writing it runs no Python-worker task."""
+    from modernsearchengines_spark.operators.indexer import finalize_stats
+
+    doc_stats = spark.createDataFrame(
+        [(1, "u1", 10), (2, "u2", None), (3, "u3", 20)],
+        "doc_id long, url string, aug_len long",
+    )
+    n, avg, stats = finalize_stats(doc_stats)
+    assert stats._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    assert stats.schema.simpleString() == "struct<n_docs:bigint,avg_doc_len:double>"
+    assert [tuple(r) for r in stats.collect()] == [(3, 10.0)] == [(n, avg)]
+
+
+def test_query_prep_after_first_batch_runs_no_job(spark, docs_df, tmp_path):
+    """query_terms_df loads an opened index's idf table once: a later call
+    on the same dict, with other queries, runs no Spark job, carries the
+    terms table's idf and corpus_stats' avgdl, and still drops a df≤5
+    term (inner semantics)."""
+    from modernsearchengines_spark.operators import indexer, query
+    from modernsearchengines_spark.operators.expansion import compile_query
+
+    idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
+    indexer.write_index(idx, str(tmp_path / "idx"))
+    indexer.unpersist_index(idx)
+    disk = indexer.read_index(spark, str(tmp_path / "idx"))
+    idf = {r.term: r.idf for r in disk["terms"].select("term", "idf").collect()}
+    avgdl = disk["corpus_stats"].collect()[0]["avg_doc_len"]
+    rare = sorted(
+        r.term
+        for r in disk["postings"].groupBy("term").count().collect()
+        if r["count"] <= 5 and r.term.isalpha()
+    )
+    rare = next(t for t in rare if t in compile_query(2, t).terms)
+    query.query_terms_df(spark, [compile_query(1, "castle museum")], index=disk)
+
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None).size()
+    compiled = [compile_query(1, "beer wine"), compile_query(2, f"river {rare}")]
+    rows = query.query_terms_df(spark, compiled, index=disk).collect()
+    sc.listenerBus().waitUntilEmpty()
+    assert sc.statusStore().jobsList(None).size() == jobs
+
+    assert rare not in idf and rare not in {r.term for r in rows}
+    assert sorted((r.qnum, r.term) for r in rows) == sorted(
+        (q.qnum, t) for q in compiled for t in q.terms if t in idf
+    )
+    assert all(r.idf == idf[r.term] and r.avgdl == avgdl for r in rows)
