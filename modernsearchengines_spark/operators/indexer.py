@@ -45,8 +45,10 @@ import shutil
 import tempfile
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -328,6 +330,21 @@ def layout_postings(enriched: DataFrame) -> DataFrame:
     )
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` (tuples in the DDL ``schema``'s column order) as a local
+    relation.  Built from an Arrow table, the frame plans as a
+    ``LocalTableScan`` — empty or not — so collecting it runs no Spark
+    job; a Python list plans as an RDD scan, whose collect runs one job
+    of Python-worker tasks.  Broadcasting either runs one job: for the
+    local relation, one task per row up to ``defaultParallelism``."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     """(N, avg_doc_len, corpus_stats frame) from ONE aggregation over doc
     stats rows (doc_id, url, aug_len).  N counts ALL cleaned docs even
@@ -341,7 +358,7 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
     merging postings.  The remedy is a wider two-column key, which is not
     implemented.
 
-    The corpus_stats frame is a :func:`query.local_frame` (a
+    The corpus_stats frame is a :func:`local_frame` (a
     ``LocalRelation``), so writing it runs no Python-worker task.
     """
     row = doc_stats.agg(
@@ -356,8 +373,6 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
             f"{row.n_ids} distinct xxhash64 ids; the remedy, a wider "
             "two-column key, is not implemented"
         )
-    from .query import local_frame  # query imports this module
-
     n_total = row.n
     avg_doc_len = float((row.chars or 0) / n_total) if n_total else 0.0
     corpus_stats = local_frame(

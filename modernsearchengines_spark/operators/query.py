@@ -13,42 +13,27 @@ top-k with deterministic (−score, doc_id) tie order (Q16 decision).
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from . import wand
 from .expansion import TUEBINGEN_TERMS, CompiledQuery, compile_query
-from .indexer import TERM_BUCKETS
+from .indexer import TERM_BUCKETS, local_frame
 from .proximity import min_span_score_vb_udf
 
 ALPHA = 0.8
 TOP_K = 100
 SEARCH_TOP_K = 10  # hits per interactive search (reference top-10)
 BOOST = 100.0
+# Largest Spark size estimate of an index's terms (term, idf) that
+# query_terms_df loads whole onto the driver (cost model: _idf_lut).
+IDF_LUT_MAX_BYTES = 1 << 20
 
 # Q13 weight ladder (reference retrieval.py:233-251).
 #   original ∧ tueb     → 0.5·bm25, match +0.2
 #   original ∧ ¬tueb    → 6.0·bm25, match +1.0
 #   ¬original ∧ tueb    → 0.5·bm25, match +0.0
 #   ¬original ∧ ¬tueb   → 4.0·bm25, match +0.5
-
-
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """``rows`` (tuples in the DDL ``schema``'s column order) as a local
-    relation.  Built from an Arrow table, the frame plans as a
-    ``LocalTableScan`` — empty or not — so collecting it runs no Spark
-    job; a Python list plans as an RDD scan, whose collect runs one job
-    of Python-worker tasks.  Broadcasting either runs one job: for the
-    local relation, one task per row up to ``defaultParallelism``."""
-    struct = StructType.fromDDL(schema)
-    table = pa.Table.from_pylist(
-        [dict(zip(struct.names, r)) for r in rows],
-        schema=to_arrow_schema(struct),
-    )
-    return spark.createDataFrame(table, struct)
 
 
 def lookup(df: DataFrame, ids: list[int], col: str) -> dict:
@@ -67,11 +52,13 @@ def query_terms_df(
     term_bucket, idf, avgdl) rows — the broadcast side of the retrieval
     join, and the one query-terms frame every scorer reads.
 
-    Everything driver-computable IS computed driver-side, and after the
-    first call on an index dict no Spark job runs here at all; the frame
-    is a :func:`local_frame`, so it plans as a ``LocalTableScan`` (the
-    broadcast that ships it into the join still runs one small job, one
-    task per row up to ``defaultParallelism``):
+    Everything driver-computable IS computed driver-side, and a batch
+    whose terms the index dict has already looked up runs no Spark job
+    here at all (with a small terms table, every batch after the first;
+    see :func:`_idf_lut`).  The frame is a :func:`local_frame`, so it
+    plans as a ``LocalTableScan`` (the broadcast that ships it into the
+    join still runs one small job, one task per row up to
+    ``defaultParallelism``):
 
     * ``term_bucket`` via the vendored :func:`xxhash64_str` (JVM-parity
       locked by tests/test_hashing.py) modulo the index's
@@ -91,14 +78,11 @@ def query_terms_df(
     """
     from ..functions.hashing import xxhash64_str
 
-    idf, avgdl = _idf_lut(index)
     tueb = set(TUEBINGEN_TERMS)
     rows = []
     for q in queries:
         originals = set(q.original_terms)
         for term in q.terms:
-            if term not in idf:  # df-pruned: inner semantics, see above
-                continue
             rows.append(
                 (
                     q.qnum,
@@ -106,10 +90,11 @@ def query_terms_df(
                     term in originals,
                     term in tueb,
                     xxhash64_str(term) % TERM_BUCKETS,
-                    idf[term],
-                    avgdl,
                 )
             )
+    idf = _idf_lut(index, {(r[4], r[1]) for r in rows})
+    avgdl = _cached_avgdl(index)
+    rows = [r + (idf[r[1]], avgdl) for r in rows if idf.get(r[1]) is not None]
     df = local_frame(
         spark,
         rows,
@@ -120,28 +105,64 @@ def query_terms_df(
     return df
 
 
-def _idf_lut(index: dict[str, DataFrame]) -> tuple[dict[str, float], float]:
-    """(term → idf, avg_doc_len) of ``index``, collected on first use and
-    cached on the index dict (SURVEY §0: the reference keeps its idf in
-    memory), so every later query batch prepares with no Spark job.
+def _idf_lut(
+    index: dict[str, DataFrame], pairs: set[tuple[int, str]]
+) -> dict[str, float | None]:
+    """term → idf covering every term of the (term_bucket, term) ``pairs``
+    (absent or None: df-pruned), cached on the index dict, so a batch
+    whose terms this dict has already looked up runs no Spark job.
 
-    Cost model: two collects per index dict (the terms table's
-    (term, idf) and corpus_stats' avg_doc_len); driver memory
-    O(#terms with df > ``DF_PRUNE``) — 1,646 terms, about 30 KB pickled,
-    on the 1,000-doc perfbench corpus.  The load is lazy, so opening an
-    index that is never queried pays nothing.  The dict is a snapshot:
-    reopen the index after ``append_to_index`` (a dict read before the
-    append keeps the idf and avgdl it first loaded)."""
+    The mode is chosen once per dict, with no job, from Spark's size
+    estimate of the terms table's (term, idf): file sizes for a read
+    index, a plan estimate for a built one:
+
+    * at most ``IDF_LUT_MAX_BYTES``: the whole table is collected on first
+      use (SURVEY §0: the reference keeps its idf in memory), and every
+      later batch runs no job.  A 1 MiB estimate is about 60k terms and
+      about 7 MB of driver dict (measured: 200k random terms estimate
+      3.5 MB and take 24 MB as a dict); the generated corpora of
+      perfbench and bench.py top out near 2,000 terms (74 KB);
+    * larger: one literal-pruned ``term_bucket IN … AND term IN …`` scan
+      per batch that has terms this dict has not seen, caching each as
+      term → idf or term → None, so driver memory stays
+      O(distinct queried terms).
+
+    The cache is a snapshot: reopen the index after ``append_to_index``
+    (a dict read before the append keeps the idf it first looked up)."""
+    terms = index["terms"]
     if "_idf_lut" not in index:
-        idf = {
-            r.term: float(r.idf)
-            for r in index["terms"].select("term", "idf").collect()
-        }
-        avgdl = float(
+        plan = terms.select("term", "idf")._jdf.queryExecution().optimizedPlan()
+        whole = int(plan.stats().sizeInBytes()) <= IDF_LUT_MAX_BYTES
+        index["_idf_lut"] = (whole, _collect_idf(terms) if whole else {})
+    whole, lut = index["_idf_lut"]
+    unseen = [] if whole else [(b, t) for b, t in pairs if t not in lut]
+    if unseen:
+        found = dict.fromkeys(t for _, t in unseen)
+        found.update(
+            _collect_idf(
+                terms.filter(
+                    F.col("term_bucket").isin(sorted({b for b, _ in unseen}))
+                    & F.col("term").isin(sorted(found))
+                )
+            )
+        )
+        lut.update(found)
+    return lut
+
+
+def _collect_idf(terms: DataFrame) -> dict[str, float]:
+    return {r.term: float(r.idf) for r in terms.select("term", "idf").collect()}
+
+
+def _cached_avgdl(index: dict[str, DataFrame]) -> float:
+    """corpus avg_doc_len, collected once per index dict (a scalar that
+    cannot change under the read index; repeated query batches previously
+    paid one job per batch re-reading it)."""
+    if "_avgdl" not in index:
+        index["_avgdl"] = float(
             index["corpus_stats"].select("avg_doc_len").collect()[0][0]
         )
-        index["_idf_lut"] = (idf, avgdl)
-    return index["_idf_lut"]
+    return index["_avgdl"]
 
 
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .indexer import local_frame
+
 
 def _matched(postings: DataFrame, terms: DataFrame, *extra: str) -> DataFrame:
     """(term_bucket, term, doc_id, *extra, qnum, bm25) rows of the
@@ -225,8 +227,6 @@ def _theta_cut(agg: DataFrame, k: int) -> DataFrame:
     local frame runs one small job (one task per row, up to
     ``defaultParallelism``) and re-evaluates nothing.
     """
-    from .query import local_frame
-
     rows = (
         _topk_per_qnum(agg, k, value_col="bm25_sum")
         .groupBy("qnum")

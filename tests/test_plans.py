@@ -261,12 +261,9 @@ def test_corpus_stats_is_a_local_relation(spark):
     assert [tuple(r) for r in stats.collect()] == [(3, 10.0)] == [(n, avg)]
 
 
-def test_query_prep_after_first_batch_runs_no_job(spark, docs_df, tmp_path):
-    """query_terms_df loads an opened index's idf table once: a later call
-    on the same dict, with other queries, runs no Spark job, carries the
-    terms table's idf and corpus_stats' avgdl, and still drops a df≤5
-    term (inner semantics)."""
-    from modernsearchengines_spark.operators import indexer, query
+def _opened_index(spark, docs_df, tmp_path):
+    """(read_index dict, its terms' idf, its avgdl, one df≤5 query term)."""
+    from modernsearchengines_spark.operators import indexer
     from modernsearchengines_spark.operators.expansion import compile_query
 
     idx = indexer.build_index(spark, indexer.clean_docs(docs_df))
@@ -281,18 +278,79 @@ def test_query_prep_after_first_batch_runs_no_job(spark, docs_df, tmp_path):
         if r["count"] <= 5 and r.term.isalpha()
     )
     rare = next(t for t in rare if t in compile_query(2, t).terms)
-    query.query_terms_df(spark, [compile_query(1, "castle museum")], index=disk)
+    return disk, idf, avgdl, rare
 
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None).size()
-    compiled = [compile_query(1, "beer wine"), compile_query(2, f"river {rare}")]
-    rows = query.query_terms_df(spark, compiled, index=disk).collect()
+    before = sc.statusStore().jobsList(None).size()
+    out = fn()
     sc.listenerBus().waitUntilEmpty()
-    assert sc.statusStore().jobsList(None).size() == jobs
+    return out, sc.statusStore().jobsList(None).size() - before
+
+
+def test_query_prep_after_first_batch_runs_no_job(spark, docs_df, tmp_path):
+    """query_terms_df loads a small opened index's idf table once: a later
+    call on the same dict, with other queries and terms, runs no Spark
+    job, carries the terms table's idf and corpus_stats' avgdl, and still
+    drops a df≤5 term (inner semantics)."""
+    from modernsearchengines_spark.operators import query
+    from modernsearchengines_spark.operators.expansion import compile_query
+
+    disk, idf, avgdl, rare = _opened_index(spark, docs_df, tmp_path)
+    query.query_terms_df(spark, [compile_query(1, "castle museum")], index=disk)
+
+    compiled = [compile_query(1, "beer wine"), compile_query(2, f"river {rare}")]
+    rows, jobs = _jobs_run(
+        spark, lambda: query.query_terms_df(spark, compiled, index=disk).collect()
+    )
+    assert jobs == 0
 
     assert rare not in idf and rare not in {r.term for r in rows}
     assert sorted((r.qnum, r.term) for r in rows) == sorted(
         (q.qnum, t) for q in compiled for t in q.terms if t in idf
     )
     assert all(r.idf == idf[r.term] and r.avgdl == avgdl for r in rows)
+
+
+def test_query_prep_above_the_size_gate_caches_each_term(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """A terms table estimated above IDF_LUT_MAX_BYTES is never collected
+    whole: each batch with unseen terms runs one literal-pruned scan, and
+    the dict caches each looked-up term (hit → idf, df≤5 miss → None), so
+    a batch of seen terms runs no job and the driver holds only the
+    queried terms."""
+    from modernsearchengines_spark.operators import query
+    from modernsearchengines_spark.operators.expansion import compile_query
+
+    monkeypatch.setattr(query, "IDF_LUT_MAX_BYTES", 0)
+    disk, idf, avgdl, rare = _opened_index(spark, docs_df, tmp_path)
+    first = [compile_query(1, "castle museum"), compile_query(2, f"river {rare}")]
+    query.query_terms_df(spark, first, index=disk)
+    seen = {t for q in first for t in q.terms}
+
+    again = [compile_query(5, f"{rare} museum"), compile_query(6, "river castle")]
+    assert {t for q in again for t in q.terms} <= seen
+    rows, jobs = _jobs_run(
+        spark, lambda: query.query_terms_df(spark, again, index=disk).collect()
+    )
+    assert jobs == 0
+    assert rare not in {r.term for r in rows}
+    assert sorted((r.qnum, r.term) for r in rows) == sorted(
+        (q.qnum, t) for q in again for t in q.terms if t in idf
+    )
+    assert all(r.idf == idf[r.term] and r.avgdl == avgdl for r in rows)
+
+    fresh = [compile_query(1, "beer wine")]
+    rows, jobs = _jobs_run(
+        spark, lambda: query.query_terms_df(spark, fresh, index=disk).collect()
+    )
+    assert jobs == 1
+    assert rows and all(r.idf == idf[r.term] for r in rows)
+    whole, lut = disk["_idf_lut"]
+    assert not whole
+    assert set(lut) == seen | {t for q in fresh for t in q.terms}
+    assert lut[rare] is None
