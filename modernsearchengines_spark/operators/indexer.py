@@ -16,9 +16,12 @@ the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
         layout, unpruned deferred (term_bucket, term, doc_id, tf, dl,
         positions_vb) rows under ``postings/term_bucket=b/``;
       * finalize — :func:`finalize_stats` (N, avg_doc_len, doc_id
-        collision guard) and :func:`terms_table` over
-        :func:`term_doc_frequency` (salted df agg [two-level, head-term
-        skew R5] → df>5 prune → IDF → term_bucket).
+        collision guard) and :func:`enriched_term_df` (the salted df agg
+        of :func:`term_doc_frequency` [two-level, head-term skew R5]).
+        The df is stored unpruned, every term, as ``term_df/``; the terms
+        frame (df>5 prune → IDF → term_bucket, :func:`terms_table`) is
+        derived from it when an index is built or opened, so an append
+        merges its batch's df into ``term_df`` without reading a posting.
 
 Reference semantics replicated: length cap counts toward N and avg_doc_len
 (Q2/Q3, reference indexing.py:182,193-200), token-count doc length over
@@ -77,7 +80,7 @@ def bm25_expr(idf, tf, dl, avgdl):
     materialized bm25 freezes idf/avgdl (corpus-global stats) into every
     posting row, so ANY corpus append would invalidate and rewrite the
     whole index.  Storing (tf, dl) makes appends touch only the new
-    segment's postings plus the small terms/corpus_stats tables,
+    segment's postings plus the small term_df/corpus_stats tables,
     and makes the layout independent of every corpus-global stat
     (:func:`layout_postings`).  Consumers materialize bm25 with this
     expression right after their (broadcast) query-terms join — per-query
@@ -301,7 +304,8 @@ def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
 
 def term_bucket(term: Column) -> Column:
     """The index's bucket of a term column: ``pmod(xxhash64(term),
-    TERM_BUCKETS)``, the ``term_bucket`` partition of postings and terms."""
+    TERM_BUCKETS)``, the ``term_bucket`` partition of postings (and a
+    column of the terms frame)."""
     return F.pmod(F.xxhash64(term), F.lit(TERM_BUCKETS)).cast("int")
 
 
@@ -399,14 +403,31 @@ def term_doc_frequency(rows: DataFrame) -> DataFrame:
     return salted.groupBy("term").agg(F.sum("_partial_df").alias("df"))
 
 
+def enriched_term_df(enriched: DataFrame) -> DataFrame:
+    """(term, df) of enriched segment(s), from a NARROW nested scan:
+    extracting the term subfield BEFORE the explode lets Parquet
+    nested-schema pruning skip the fat positions_vb blobs, so this pass
+    streams a few MB of dictionary-encoded strings instead of the whole
+    segment.  Keeping it a separate scan (instead of forking the one fat
+    flatten of :func:`layout_postings`) matters under AQE: forked branches
+    of a shared exchange materialize as two full shuffles of the wide
+    posting rows (measured: two ~4-5s × 32-task stages at 400k docs),
+    while this narrow re-scan costs less than either."""
+    return term_doc_frequency(
+        enriched.select("doc_id", F.explode(F.col("postings.term")).alias("term"))
+    )
+
+
 def terms_table(
     term_df: DataFrame, n_total: int, df_prune: int = DF_PRUNE
 ) -> DataFrame:
-    """(term, df) → the terms table (term, df, idf, term_bucket): the df>5
+    """(term, df) → the terms frame (term, df, idf, term_bucket): the df>5
     prune (Q6) and the reference IDF.  Per-term attributes live here, NOT
     on every posting row: repeating 8-byte per-term constants on the fat
     postings inflated the layout shuffle + parquet by ~30% (measured at
     400k docs) for values any consumer re-joins from a table 100× smaller.
+    It is derived, never written: :func:`read_index` applies it to the
+    stored unpruned ``term_df`` with the stored N.
     """
     return (
         term_df.filter(F.col("df") > df_prune)
@@ -418,8 +439,8 @@ def terms_table(
 def score_and_layout(
     enriched: DataFrame, df_prune: int = DF_PRUNE
 ) -> dict[str, DataFrame]:
-    """Enriched segment(s) → the index tables (postings, terms, doc_stats,
-    corpus_stats): the finalize step every build entry point
+    """Enriched segment(s) → the index tables (postings, term_df, terms,
+    doc_stats, corpus_stats): the finalize step every build entry point
     shares (build_index, checkpoint.merge_segments, the streaming ingest's
     segments).  One eager job (:func:`finalize_stats`); everything else is
     lazy until :func:`write_index`.
@@ -430,22 +451,11 @@ def score_and_layout(
     (term, doc) row; the df>5 prune is a rule of the terms table.
     """
     n_total, _, corpus_stats = finalize_stats(enriched)
-    # df from a NARROW nested scan: extracting the term subfield BEFORE
-    # the explode lets Parquet nested-schema pruning skip the fat
-    # positions_vb blobs, so this pass streams a few MB of dictionary-
-    # encoded strings instead of the whole segment.  Keeping it a separate
-    # scan (instead of forking the one fat flatten) matters under AQE:
-    # forked branches of a shared exchange materialize as two full
-    # shuffles of the wide posting rows (measured: two ~4-5s × 32-task
-    # stages at 400k docs), while this narrow re-scan costs less than
-    # either.
-    term_rows = enriched.select(
-        "doc_id", F.explode(F.col("postings.term")).alias("term")
-    )
-    terms = terms_table(term_doc_frequency(term_rows), n_total, df_prune)
+    term_df = enriched_term_df(enriched)
     return {
         "postings": layout_postings(enriched),
-        "terms": terms,
+        "term_df": term_df,
+        "terms": terms_table(term_df, n_total, df_prune),
         "doc_stats": enriched.select(
             "doc_id", "url", "warc_ts", "aug_len", "doc_len"
         ),
@@ -458,7 +468,7 @@ def build_index(
     clean: DataFrame,
     work_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Build postings/terms/doc_stats/corpus_stats from a cleaned
+    """Build postings/term_df/terms/doc_stats/corpus_stats from a cleaned
     corpus: one enriched segment (:func:`write_enriched`) under
     ``work_dir``, then :func:`score_and_layout`.
 
@@ -515,11 +525,15 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
         ).partitionBy("term_bucket").parquet(f"{out_dir}/postings")
 
     def _write_side_tables() -> None:
-        # Same bucket layout as postings (a global single-file write would
-        # bottleneck at billion-term vocabularies).
-        index["terms"].repartition("term_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("term_bucket").parquet(f"{out_dir}/terms")
+        # The unpruned vocabulary, range-ordered by term: each file holds
+        # a contiguous term range, so parquet min/max stats skip row
+        # groups on a ``term IN (…)`` lookup, and AQE sizes the file count
+        # to the vocabulary (one file for a small corpus, many at scale)
+        # where a bucket-partitioned write pays one file per bucket at any
+        # size.  The terms frame is derived from it on open (read_index).
+        index["term_df"].orderBy("term").write.mode("overwrite").parquet(
+            f"{out_dir}/term_df"
+        )
         index["doc_stats"].write.mode("overwrite").parquet(
             f"{out_dir}/doc_stats"
         )
@@ -566,6 +580,13 @@ def read_index(
 
     Opening pays one repartition of the postings.  The on-disk layout is
     unchanged (term-bucketed); only the in-memory copy is doc-sharded.
+
+    Returns the tables postings, doc_stats, corpus_stats and term_df as
+    read, ``terms`` derived from term_df and corpus_stats' N by
+    :func:`terms_table` (nothing writes a terms table), ``"blocks": None``,
+    and ``"_avgdl"``, corpus_stats' avg_doc_len: the one corpus_stats
+    collect an open runs yields both N and avgdl, so
+    query.query_terms_df needs no job for avgdl.
     """
     postings = spark.read.parquet(f"{out_dir}/postings")
     if serve:
@@ -578,12 +599,17 @@ def read_index(
         )
         postings.count()
 
+    corpus_stats = spark.read.parquet(f"{out_dir}/corpus_stats")
+    stats = corpus_stats.collect()[0]
+    term_df = spark.read.parquet(f"{out_dir}/term_df")
     return {
         "postings": postings,
         # no block-max table: the key is kept (always None) for callers of
         # the (postings, blocks, terms, …) wand call shape
         "blocks": None,
         "doc_stats": spark.read.parquet(f"{out_dir}/doc_stats"),
-        "corpus_stats": spark.read.parquet(f"{out_dir}/corpus_stats"),
-        "terms": spark.read.parquet(f"{out_dir}/terms"),
+        "corpus_stats": corpus_stats,
+        "term_df": term_df,
+        "terms": terms_table(term_df, stats.n_docs),
+        "_avgdl": float(stats.avg_doc_len),
     }

@@ -92,7 +92,7 @@ def query_terms_df(
                     xxhash64_str(term) % TERM_BUCKETS,
                 )
             )
-    idf = _idf_lut(index, {(r[4], r[1]) for r in rows})
+    idf = _idf_lut(index, {r[1] for r in rows})
     avgdl = _cached_avgdl(index)
     rows = [r + (idf[r[1]], avgdl) for r in rows if idf.get(r[1]) is not None]
     df = local_frame(
@@ -106,46 +106,42 @@ def query_terms_df(
 
 
 def _idf_lut(
-    index: dict[str, DataFrame], pairs: set[tuple[int, str]]
+    index: dict[str, DataFrame], terms: set[str]
 ) -> dict[str, float | None]:
-    """term → idf covering every term of the (term_bucket, term) ``pairs``
-    (absent or None: df-pruned), cached on the index dict, so a batch
-    whose terms this dict has already looked up runs no Spark job.
+    """term → idf covering every term of ``terms`` (absent or None:
+    df-pruned), cached on the index dict, so a batch whose terms this
+    dict has already looked up runs no Spark job.
 
     The mode is chosen once per dict, with no job, from Spark's size
-    estimate of the terms table's (term, idf): file sizes for a read
-    index, a plan estimate for a built one:
+    estimate of the terms frame's (term, idf): for a read index, the
+    file size of the unpruned ``term_df`` it is derived from (15.8 KB,
+    one file, for the 2,573 terms of ``generate_docs(1000, seed=1)``),
+    for a built one a plan estimate:
 
     * at most ``IDF_LUT_MAX_BYTES``: the whole table is collected on first
       use (SURVEY §0: the reference keeps its idf in memory), and every
-      later batch runs no job.  A 1 MiB estimate is about 60k terms and
-      about 7 MB of driver dict (measured: 200k random terms estimate
-      3.5 MB and take 24 MB as a dict); the generated corpora of
-      perfbench and bench.py top out near 2,000 terms (74 KB);
-    * larger: one literal-pruned ``term_bucket IN … AND term IN …`` scan
-      per batch that has terms this dict has not seen, caching each as
-      term → idf or term → None, so driver memory stays
-      O(distinct queried terms).
+      later batch runs no job.  A 1 MiB estimate is about 100k terms and
+      about 11 MB of driver dict (measured: 200k random 5–12-letter
+      terms take 2.0 MB as ``term_df``, and their 183k df>5 terms 23 MB
+      as a dict);
+    * larger: one literal ``term IN …`` scan per batch that has terms
+      this dict has not seen, caching each as term → idf or term → None,
+      so driver memory stays O(distinct queried terms).  ``term_df`` is
+      written sorted by term, so parquet min/max stats skip the row
+      groups whose term range holds no queried term.
 
     The cache is a snapshot: reopen the index after ``append_to_index``
     (a dict read before the append keeps the idf it first looked up)."""
-    terms = index["terms"]
+    table = index["terms"]
     if "_idf_lut" not in index:
-        plan = terms.select("term", "idf")._jdf.queryExecution().optimizedPlan()
+        plan = table.select("term", "idf")._jdf.queryExecution().optimizedPlan()
         whole = int(plan.stats().sizeInBytes()) <= IDF_LUT_MAX_BYTES
-        index["_idf_lut"] = (whole, _collect_idf(terms) if whole else {})
+        index["_idf_lut"] = (whole, _collect_idf(table) if whole else {})
     whole, lut = index["_idf_lut"]
-    unseen = [] if whole else [(b, t) for b, t in pairs if t not in lut]
+    unseen = [] if whole else sorted(t for t in terms if t not in lut)
     if unseen:
-        found = dict.fromkeys(t for _, t in unseen)
-        found.update(
-            _collect_idf(
-                terms.filter(
-                    F.col("term_bucket").isin(sorted({b for b, _ in unseen}))
-                    & F.col("term").isin(sorted(found))
-                )
-            )
-        )
+        found = dict.fromkeys(unseen)
+        found.update(_collect_idf(table.filter(F.col("term").isin(unseen))))
         lut.update(found)
     return lut
 

@@ -13,6 +13,7 @@ same batch is a no-op (exactly-once by key).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import fsio
 
@@ -83,10 +84,19 @@ def append_to_index(
          (checkpoint.layout_segment — the unpruned layout every build
          writes, so a term whose df crosses the threshold through this
          batch finds all its postings already on disk);
-      4. refresh doc_stats (append), corpus_stats and terms (df re-agg
-         over a NARROW term/doc_id scan of the written postings + new idf)
-         — all small relative to postings — and drop the consumed
-         enriched segment.
+      4. refresh doc_stats (append) and corpus_stats, and merge the
+         batch's df (indexer.enriched_term_df over the new segment) into
+         the unpruned ``term_df`` — old ⊎ batch, summed per term, written
+         sorted by term to an underscore-prefixed staging dir and swapped
+         in — then drop the consumed enriched segment.  No posting file
+         is read: the refresh costs O(batch + vocabulary), and the terms
+         frame (df>5, idf from the new N) is derived from term_df when
+         the index is opened.  A crash after the postings append and
+         before the swap leaves postings, doc_stats and corpus_stats
+         ahead of term_df, and the segment's ``enriched/segment=append-*``
+         directory behind; re-running the batch cannot repair it (its
+         urls are already in doc_stats), so such an index needs a
+         rebuild.
 
     Near-duplicates of ALREADY-INDEXED docs are not detected here (the
     batch is deduped internally; url is the append key) — cross-batch
@@ -125,7 +135,7 @@ def append_to_index(
     if n_new == 0:
         fsio.rmtree(spark, seg_dir)
         return 0
-    n_total, _, corpus_stats = indexer.finalize_stats(
+    _, _, corpus_stats = indexer.finalize_stats(
         existing.unionByName(new_stats)
     )
 
@@ -133,13 +143,20 @@ def append_to_index(
     new_stats.write.mode("append").parquet(doc_stats_path)
     corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
 
-    # every posting row is one (term, doc) pair, so the written postings'
-    # term/doc_id columns are the df source (narrow columnar scan)
-    written = spark.read.parquet(f"{index_dir}/postings")
-    indexer.terms_table(
-        indexer.term_doc_frequency(written), n_total
-    ).repartition("term_bucket").write.mode("overwrite").partitionBy(
-        "term_bucket"
-    ).parquet(f"{index_dir}/terms")
+    # Stage the merged vocabulary BEFORE touching term_df (it is read
+    # while the merge writes), then swap it in.
+    term_df_dir = f"{index_dir}/term_df"
+    staging = f"{index_dir}/_term_df_{uuid.uuid4().hex[:8]}"
+    (
+        spark.read.parquet(term_df_dir)
+        .unionByName(indexer.enriched_term_df(spark.read.parquet(seg_dir)))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .orderBy("term")
+        .write.mode("overwrite")
+        .parquet(staging)
+    )
+    fsio.rmtree(spark, term_df_dir)
+    fsio.move(spark, staging, term_df_dir)
     fsio.rmtree(spark, seg_dir)
     return n_new

@@ -39,10 +39,12 @@ def test_append_dedups_within_batch(spark, tmp_path):
 
 
 def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
-    """build → append_to_index → queries equal a from-scratch rebuild of
-    the union corpus, WITHOUT touching any pre-existing posting file (the
-    deferred-scoring append claim) — on the layout build_index writes,
-    including terms that cross the df prune only through the batch."""
+    """build → three append_to_index calls (and a no-op re-append) →
+    term_df, terms, corpus_stats and queries equal a from-scratch rebuild
+    of the union corpus, WITHOUT touching any pre-existing posting file
+    (the deferred-scoring append claim) — on the layout build_index
+    writes, including a term that crosses the df prune only through a
+    later batch."""
     import glob
     import os
 
@@ -58,32 +60,34 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         indexer.write_index(idx, out)
         indexer.unpersist_index(idx)
 
+    def term_df(out):
+        return {r.term: r.df for r in indexer.read_index(spark, out)["term_df"].collect()}
+
     # Split AFTER full-corpus cleaning so cross-batch near-dups cannot
-    # diverge the two paths (append_to_index docstring caveat).
+    # diverge the two paths (append_to_index docstring caveat): 4/5 of the
+    # urls build the index, the other fifth arrives in three batches.
     clean_full = indexer.clean_docs(docs_df).localCheckpoint()
-    first = clean_full.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
-    extra = clean_full.filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
-    assert extra.count() > 0
+    h = F.xxhash64("url")
+    first = clean_full.filter(F.pmod(h, F.lit(5)) != 0)
+    batches = [clean_full.filter(F.pmod(h, F.lit(15)) == 5 * i) for i in range(3)]
+    assert all(b.count() > 0 for b in batches)
 
     out_inc = str(tmp_path / "idx_inc")
     out_full = str(tmp_path / "idx_full")
     build(first, out_inc)
-    idx_first = indexer.read_index(spark, out_inc)
-    terms_before = {r.term for r in idx_first["terms"].collect()}
-    df_first = {
-        r.term: r["count"]
-        for r in idx_first["postings"].groupBy("term").count().collect()
-    }
 
     before = {
         p: os.path.getmtime(p)
         for p in glob.glob(f"{out_inc}/postings/**/*.parquet", recursive=True)
     }
-    n_added = append_to_index(spark, out_inc, extra)
-    assert n_added == extra.count()
-    # idempotent: re-appending the same batch is a no-op, and the empty
-    # segment it wrote to find that out does not stay behind
-    assert append_to_index(spark, out_inc, extra) == 0
+    dfs = [term_df(out_inc)]
+    for i, batch in enumerate(batches):
+        assert append_to_index(spark, out_inc, batch) == batch.count()
+        if i == 0:
+            # idempotent: re-appending the same batch is a no-op, and the
+            # empty segment it wrote to find that out does not stay behind
+            assert append_to_index(spark, out_inc, batch) == 0
+        dfs.append(term_df(out_inc))
     assert not glob.glob(f"{out_inc}/enriched/segment=append-*")
     after = {
         p: os.path.getmtime(p)
@@ -93,6 +97,14 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     assert set(before) <= set(after)
     assert all(after[p] == before[p] for p in before)
     assert len(after) > len(before)
+    # term_df is the one unpruned, unpartitioned vocabulary table, and
+    # the merge's staging directory is swapped in, not left behind
+    assert not [d for d in os.listdir(out_inc) if d.startswith("_")]
+    assert not os.path.exists(f"{out_inc}/terms")
+    assert not [
+        d for d in os.listdir(f"{out_inc}/term_df") if d.startswith("term_bucket=")
+    ]
+    assert min(dfs[-1].values()) <= indexer.DF_PRUNE
 
     build(clean_full, out_full)
     idx_inc = indexer.read_index(spark, out_inc)
@@ -103,7 +115,8 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     s_full = idx_full["corpus_stats"].collect()[0]
     assert s_inc.n_docs == s_full.n_docs
     assert s_inc.avg_doc_len == pytest.approx(s_full.avg_doc_len, rel=1e-12)
-    # terms (df/idf after query-time prune semantics) agree exactly
+    # the unpruned df, and terms (df/idf after the df>5 rule), agree exactly
+    assert dfs[-1] == term_df(out_full)
     t_inc = {
         r.term: (r.df, r.idf) for r in idx_inc["terms"].collect()
     }
@@ -111,10 +124,12 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         r.term: (r.df, r.idf) for r in idx_full["terms"].collect()
     }
     assert t_inc.keys() == t_full.keys()
-    # some term reaches df > DF_PRUNE only through the appended batch, and
-    # its df≤5 postings from the first build count toward that df
-    crossed = t_inc.keys() - terms_before
-    assert any(0 < df_first.get(t, 0) <= indexer.DF_PRUNE for t in crossed)
+    # some term reaches df > DF_PRUNE only through a later batch, and its
+    # df≤5 count from the build and the first append counts toward that df
+    assert any(
+        0 < dfs[1].get(t, 0) <= indexer.DF_PRUNE < df
+        for t, df in dfs[-1].items()
+    )
     for term, (df_i, idf_i) in t_inc.items():
         assert df_i == t_full[term][0]
         assert idf_i == pytest.approx(t_full[term][1], rel=1e-12)
@@ -133,3 +148,35 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
     ]
     for a, b in zip(res_inc, res_full):
         assert a.score == pytest.approx(b.score, rel=1e-9)
+
+
+def test_append_to_index_reads_no_postings(spark, docs_df, tmp_path, monkeypatch):
+    """An append's df refresh is O(batch + vocabulary): no parquet read
+    during append_to_index names a path under postings/ (the batch's
+    postings are written there, which is not a read)."""
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql import functions as F
+
+    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    clean = indexer.clean_docs(docs_df.limit(80)).localCheckpoint()
+    out = str(tmp_path / "idx")
+    idx = indexer.build_index(
+        spark, clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
+    )
+    indexer.write_index(idx, out)
+    indexer.unpersist_index(idx)
+
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        read.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    batch = clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
+    assert append_to_index(spark, out, batch) > 0
+    assert not [p for p in read if "/postings" in p], read
+    assert f"{out}/term_df" in read

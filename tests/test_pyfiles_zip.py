@@ -133,5 +133,5 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert status["status"] == "ok"
     assert status["n_docs"] > 0
     # the written index is complete and loadable
-    for table in ("postings", "doc_stats", "terms", "corpus_stats"):
+    for table in ("postings", "doc_stats", "term_df", "corpus_stats"):
         assert os.path.exists(os.path.join(out_dir, table)), table
