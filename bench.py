@@ -307,7 +307,7 @@ def time_index_build(cores: int, corpus_path: str, out_dir: str) -> dict:
     # Python-CPU-bound work eagerly (clean + simhash + tokenize/encode
     # UDF + enriched segment write + stats); write_index is the JVM
     # shuffle/parquet layout (df agg, bucket exchange,
-    # postings/terms writes).
+    # postings/term_df writes).
     idx = indexer.build_index(spark, clean)
     t1 = time.time()
     tok_cpu = _cpu_delta_sec(c0)

@@ -96,7 +96,9 @@ def append_to_index(
          ahead of term_df, and the segment's ``enriched/segment=append-*``
          directory behind; re-running the batch cannot repair it (its
          urls are already in doc_stats), so such an index needs a
-         rebuild.
+         rebuild.  A crash inside the swap (old term_df deleted, staging
+         not yet renamed) leaves no ``term_df/`` and the complete merged
+         table in ``_term_df_*``.
 
     Near-duplicates of ALREADY-INDEXED docs are not detected here (the
     batch is deduped internally; url is the append key) — cross-batch

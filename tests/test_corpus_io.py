@@ -61,7 +61,8 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         indexer.unpersist_index(idx)
 
     def term_df(out):
-        return {r.term: r.df for r in indexer.read_index(spark, out)["term_df"].collect()}
+        rows = indexer.read_index(spark, out)["term_df"].collect()
+        return {r.term: r.df for r in rows}
 
     # Split AFTER full-corpus cleaning so cross-batch near-dups cannot
     # diverge the two paths (append_to_index docstring caveat): 4/5 of the
