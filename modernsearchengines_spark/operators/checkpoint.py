@@ -4,18 +4,19 @@ checkpoint at /root/reference/WebCrawler_basis.py:13-24).
 
 The corpus is split into ``n_segments`` deterministic url-hash segments.
 Each segment's enriched table (doc stats + local postings — no
-corpus-global stats yet, indexer.write_enriched) is built and committed
-independently; a ``_segments`` manifest row records lineage + metrics
-(n_docs, n_tokens, n_postings, wall_ms, status).  A crashed build resumes
-by skipping segments whose manifest row is ``done`` — the anti-join resume
-of SURVEY O-14.
+corpus-global stats yet, indexer.write_enriched at indexer.segment_dir) is
+built and committed independently; a ``_segments`` manifest row records
+lineage + metrics (n_docs, n_tokens, n_postings, wall_ms, status).  A
+crashed build resumes by skipping segments whose manifest row is ``done``
+— the anti-join resume of SURVEY O-14.
 
 The merge step (global N, avg_doc_len, collision guard, df, IDF)
 runs over the union of segment outputs through the same
-indexer.score_and_layout that build_index uses.  Global stats CANNOT be
-finalized per-segment (Q2/Q3: N and avg span the whole corpus), which is
-exactly why the reference's single-shot design doesn't scale and the
-rebuild separates raw-posting construction (resumable, embarrassingly
+indexer.score_and_layout that build_index uses, and indexer.write_index
+persists the result; this module writes no index table.  Global stats
+CANNOT be finalized per-segment (Q2/Q3: N and avg span the whole corpus),
+which is exactly why the reference's single-shot design doesn't scale and
+the rebuild separates raw-posting construction (resumable, embarrassingly
 parallel) from the cheap stats finalization pass.
 
 Target layout is an Iceberg ``_segments`` table + snapshot per segment; in
@@ -65,19 +66,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> dict[int, dict]:
     return out
 
 
-def write_enriched_segment(
-    seg_docs: DataFrame, out_dir: str, seg: int | str
-) -> None:
-    """Commit one segment's enriched table (indexer.write_enriched — doc
-    stats + local postings, the build's one Arrow crossing) at
-    ``enriched/segment=<seg>``; everything else derives from the written
-    parquet at merge time.  Length-capped docs stay in the segment's doc
-    stats (and hence in N / avg_doc_len, Q2/Q3) with doc_len=0 / NULL
-    aug_len, so the checkpointed and single-shot builds return identical
-    doc_stats (the reference keeps all pages in its pages table)."""
-    indexer.write_enriched(seg_docs, f"{out_dir}/enriched/segment={seg}")
-
-
 def build_segments(
     spark: SparkSession,
     docs_with_ids: DataFrame,
@@ -104,22 +92,23 @@ def build_segments(
         if fail_after is not None and built >= fail_after:
             break
         t0 = time.time()
-        seg_docs = docs.filter(F.col("_seg") == seg)
-        n_docs = seg_docs.count()
-        write_enriched_segment(seg_docs, out_dir, seg)
-        seg_written = spark.read.parquet(f"{out_dir}/enriched/segment={seg}")
-        stats = seg_written.agg(
+        seg_dir = indexer.segment_dir(out_dir, seg)
+        # The segment's input is evaluated once, by the write; its counts
+        # come from the written segment.
+        indexer.write_enriched(docs.filter(F.col("_seg") == seg), seg_dir)
+        stats = spark.read.parquet(seg_dir).agg(
+            F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size("postings")).alias("n_postings"),
             F.sum("doc_len").alias("n_tokens"),
         ).collect()[0]
         row = {
             "segment_id": seg,
-            "n_docs": n_docs,
+            "n_docs": stats.n_docs,
             "n_tokens": int(stats.n_tokens or 0),
             "n_postings": int(stats.n_postings or 0),
             "wall_ms": int((time.time() - t0) * 1000),
             "status": "done",
-            "input_fingerprint": n_docs,
+            "input_fingerprint": stats.n_docs,
         }
         # temp-write + rename commit via the Hadoop FS (fsio docstring)
         fsio.write_text_atomic(
@@ -159,7 +148,7 @@ def merge_segments(
         )
     enriched = (
         spark.read.option("basePath", f"{out_dir}/enriched")
-        .parquet(*[f"{out_dir}/enriched/segment={s}" for s in done])
+        .parquet(*[indexer.segment_dir(out_dir, s) for s in done])
     )
     return indexer.score_and_layout(enriched)
 
@@ -179,20 +168,3 @@ def build_index_checkpointed(
     if len([r for r in manifest.values() if r["status"] == "done"]) < n_segments:
         return None
     return merge_segments(spark, out_dir, n_segments)
-
-
-def layout_segment(spark: SparkSession, out_dir: str, seg: int | str) -> None:
-    """Append one committed enriched segment's postings
-    (indexer.layout_postings) to ``out_dir/postings``, leaving every
-    existing posting file untouched.  The layout needs no corpus-global
-    stat, so this is all an append has to write into the fat table; the
-    df>5 prune stays a rule of the terms table."""
-    (
-        indexer.layout_postings(
-            spark.read.parquet(f"{out_dir}/enriched/segment={seg}")
-        )
-        .repartition("term_bucket")
-        .write.mode("append")
-        .partitionBy("term_bucket")
-        .parquet(f"{out_dir}/postings")
-    )

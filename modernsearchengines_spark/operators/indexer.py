@@ -9,9 +9,10 @@ the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
             varbyte position encode — the ONE Arrow crossing of the whole
             build, NO token shuffle)──enriched parquet segment
     then (pure JVM) two pieces, each defined once in this module and
-    shared by build_index, the checkpointed build (checkpoint.py), the
-    corpus append (sources/corpus_io.py) and the streaming ingest
-    (:func:`score_and_layout` composes them over enriched segments):
+    shared by build_index, the checkpointed build (checkpoint.py) and the
+    append (sources/corpus_io.py, which the streaming ingest calls per
+    micro-batch); :func:`score_and_layout` composes them over enriched
+    segments:
       * layout   — :func:`layout_postings`: enriched → the one postings
         layout, unpruned deferred (term_bucket, term, doc_id, tf, dl,
         positions_vb) rows under ``postings/term_bucket=b/``;
@@ -22,6 +23,9 @@ the Arrow-vectorized UDFs marked *; ONE map-side job builds local postings):
         frame (df>5 prune → IDF → term_bucket, :func:`terms_table`) is
         derived from it when an index is built or opened, so an append
         merges its batch's df into ``term_df`` without reading a posting.
+
+The on-disk layout is written here only (:func:`write_enriched`,
+:func:`write_postings`, :func:`write_term_df`), by the builds and the append.
 
 Reference semantics replicated: length cap counts toward N and avg_doc_len
 (Q2/Q3, reference indexing.py:182,193-200), token-count doc length over
@@ -302,6 +306,12 @@ def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
     )
 
 
+def segment_dir(out_dir: str, seg: int | str) -> str:
+    """The enriched segment ``seg`` of ``out_dir``, as the checkpointed
+    build and the append write it with :func:`write_enriched`."""
+    return f"{out_dir}/enriched/segment={seg}"
+
+
 def term_bucket(term: Column) -> Column:
     """The index's bucket of a term column: ``pmod(xxhash64(term),
     TERM_BUCKETS)``, the ``term_bucket`` partition of postings (and a
@@ -332,6 +342,31 @@ def layout_postings(enriched: DataFrame) -> DataFrame:
         "dl",
         F.col("p.positions_vb").alias("positions_vb"),
     )
+
+
+def write_postings(postings: DataFrame, out_dir: str, mode: str) -> None:
+    """Write :func:`layout_postings` rows to ``out_dir/postings``
+    partitioned by ``term_bucket``, so the query-time terms join prunes to
+    the query terms' buckets (SURVEY O-24).  Repartitioning on the bucket
+    first gives each bucket one file per write, not (#tasks × #buckets)
+    shards.  ``mode``: "overwrite" for a build, "append" for an append."""
+    (
+        postings.repartition("term_bucket")
+        .write.mode(mode)
+        .partitionBy("term_bucket")
+        .parquet(f"{out_dir}/postings")
+    )
+
+
+def write_term_df(term_df: DataFrame, path: str) -> None:
+    """Write the unpruned vocabulary (term, df) to ``path``, range-ordered
+    by term: each file holds a contiguous term range, so parquet min/max
+    stats skip row groups on a ``term IN (…)`` lookup, and AQE sizes the
+    file count to the vocabulary (one file for a small corpus, many at
+    scale) where a bucket-partitioned write pays one file per bucket at
+    any size.  The terms frame is derived from it on open
+    (:func:`read_index`)."""
+    term_df.orderBy("term").write.mode("overwrite").parquet(path)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
@@ -441,16 +476,17 @@ def score_and_layout(
 ) -> dict[str, DataFrame]:
     """Enriched segment(s) → the index tables (postings, term_df, terms,
     doc_stats, corpus_stats): the finalize step every build entry point
-    shares (build_index, checkpoint.merge_segments, the streaming ingest's
-    segments).  One eager job (:func:`finalize_stats`); everything else is
-    lazy until :func:`write_index`.
+    shares (build_index, checkpoint.merge_segments).  One eager job
+    (:func:`finalize_stats`); everything else is lazy until
+    :func:`write_index`.  ``"_avgdl"`` is the avg_doc_len that job
+    yields, which query.query_terms_df reads, as on a read index.
 
     Postings carry (tf, dl) and NO bm25 — consumers materialize it via
     :func:`bm25_expr` after their terms join (idf/avgdl ride the broadcast
     query-terms frame, see query.query_terms_df) — and keep every
     (term, doc) row; the df>5 prune is a rule of the terms table.
     """
-    n_total, _, corpus_stats = finalize_stats(enriched)
+    n_total, avg_doc_len, corpus_stats = finalize_stats(enriched)
     term_df = enriched_term_df(enriched)
     return {
         "postings": layout_postings(enriched),
@@ -460,6 +496,7 @@ def score_and_layout(
             "doc_id", "url", "warc_ts", "aug_len", "doc_len"
         ),
         "corpus_stats": corpus_stats,
+        "_avgdl": avg_doc_len,
     }
 
 
@@ -500,14 +537,9 @@ def build_index(
 
 
 def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
-    """Persist the index tables (Iceberg-equivalent Parquet layout).
-
-    postings are partitioned by ``term_bucket`` = bucket(K, term) so the
-    query-time broadcast term join prunes to the buckets containing the query
-    terms (SURVEY O-24 partition pruning).  Repartition on the bucket column
-    first so each bucket gets one coherent file instead of
-    (#tasks × #buckets) shards.
-    """
+    """Persist the index tables (Iceberg-equivalent Parquet layout):
+    postings through :func:`write_postings`, the unpruned vocabulary
+    through :func:`write_term_df`, doc_stats and corpus_stats as is."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -516,24 +548,15 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
     # from worker threads so the Spark scheduler interleaves their (small)
     # stages into slots the memory-bound postings exchange leaves idle,
     # instead of paying their job latencies serially afterwards.  Each
-    # target is wrapped here, in the calling thread, so its jobs carry the
-    # caller's local properties (job group, description, tags); a plain
-    # worker thread would submit them with none.
+    # target is wrapped here, in the calling thread and with the session,
+    # so its jobs carry the caller's local properties (job group,
+    # description, job tags) and the session's tags; a plain worker
+    # thread would submit them with none.
     def _write_postings() -> None:
-        index["postings"].repartition("term_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("term_bucket").parquet(f"{out_dir}/postings")
+        write_postings(index["postings"], out_dir, "overwrite")
 
     def _write_side_tables() -> None:
-        # The unpruned vocabulary, range-ordered by term: each file holds
-        # a contiguous term range, so parquet min/max stats skip row
-        # groups on a ``term IN (…)`` lookup, and AQE sizes the file count
-        # to the vocabulary (one file for a small corpus, many at scale)
-        # where a bucket-partitioned write pays one file per bucket at any
-        # size.  The terms frame is derived from it on open (read_index).
-        index["term_df"].orderBy("term").write.mode("overwrite").parquet(
-            f"{out_dir}/term_df"
-        )
+        write_term_df(index["term_df"], f"{out_dir}/term_df")
         index["doc_stats"].write.mode("overwrite").parquet(
             f"{out_dir}/doc_stats"
         )
@@ -541,9 +564,10 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
             f"{out_dir}/corpus_stats"
         )
 
+    inherit = inheritable_thread_target(index["postings"].sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(inheritable_thread_target(_write_postings))
-        f_side = pool.submit(inheritable_thread_target(_write_side_tables))
+        f_post = pool.submit(inherit(_write_postings))
+        f_side = pool.submit(inherit(_write_side_tables))
         f_post.result()
         f_side.result()
 

@@ -64,8 +64,8 @@ def query_terms_df(
       locked by tests/test_hashing.py) modulo the index's
       ``TERM_BUCKETS`` — indexer.term_bucket's rule — instead of a
       ``withColumn`` the executors evaluate;
-    * (idf, avgdl) come from the index's driver-side lookup
-      (:func:`_idf_lut`) and are fused INTO the created rows.  INNER
+    * idf (from :func:`_idf_lut`) and the dict's ``_avgdl`` (set where
+      the index is built or opened) are fused INTO the created rows.  INNER
       semantics: a query term absent from the terms table (df-pruned,
       O-19) is dropped here, so its postings — which the unpruned layout
       keeps on disk — never enter the retrieval join.  This is the df>5
@@ -93,7 +93,7 @@ def query_terms_df(
                 )
             )
     idf = _idf_lut(index, {r[1] for r in rows})
-    avgdl = _cached_avgdl(index)
+    avgdl = index["_avgdl"]
     rows = [r + (idf[r[1]], avgdl) for r in rows if idf.get(r[1]) is not None]
     df = local_frame(
         spark,
@@ -148,17 +148,6 @@ def _idf_lut(
 
 def _collect_idf(terms: DataFrame) -> dict[str, float]:
     return {r.term: float(r.idf) for r in terms.select("term", "idf").collect()}
-
-
-def _cached_avgdl(index: dict[str, DataFrame]) -> float:
-    """corpus avg_doc_len, collected once per index dict (a scalar that
-    cannot change under the read index; repeated query batches previously
-    paid one job per batch re-reading it)."""
-    if "_avgdl" not in index:
-        index["_avgdl"] = float(
-            index["corpus_stats"].select("avg_doc_len").collect()[0][0]
-        )
-    return index["_avgdl"]
 
 
 def pruned_postings(postings: DataFrame, terms: DataFrame) -> DataFrame:

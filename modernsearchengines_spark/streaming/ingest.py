@@ -1,36 +1,32 @@
-"""Incremental ingestion demo: Structured Streaming → index segments.
+"""Incremental ingestion: Structured Streaming → an index, one append per
+micro-batch.
 
 The reference has NO streaming surface (SURVEY §2.10): its crawler is an
-incremental batch process with a pickle checkpoint.  The Spark-native
-analogue offered here is a ``foreachBatch`` pipeline: a stream of docs
-(file source in production; any streaming DataFrame here) is cleaned, given
-xxhash64(url) doc ids and written per micro-batch as an enriched segment
-``enriched/segment=stream<epoch>`` by checkpoint.write_enriched_segment —
-the same segment the batch builds write (doc stats + local postings,
-length cap included), so indexer.score_and_layout over the accumulated
-segments turns them into a queryable index.
-
-This keeps exactly-once semantics via the streaming checkpoint + idempotent
-per-batch parquet directories, mirroring the `_segments` lineage protocol.
+incremental batch process with a pickle checkpoint.  Here a
+``foreachBatch`` appends each micro-batch of docs to an index written by
+indexer.build_index + write_index, through corpus_io.append_to_index, the
+one incremental write path.  After every batch the directory is a complete
+index.  The streaming checkpoint records finished epochs, and a replayed
+epoch appends nothing (append_to_index drops urls already in doc_stats;
+an epoch that stopped part-way makes the next append raise).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators import checkpoint, indexer
+from ..sources import corpus_io
 
 
-def start_ingest(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
-    """writeStream.foreachBatch writing one enriched segment per
-    micro-batch under ``out_dir/enriched``."""
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        docs = indexer.assign_doc_ids(indexer.clean_docs(batch_df))
-        checkpoint.write_enriched_segment(docs, out_dir, f"stream{epoch_id}")
-
+def start_ingest(stream_df: DataFrame, index_dir: str, checkpoint_dir: str):
+    """writeStream.foreachBatch appending each micro-batch to the index
+    at ``index_dir``; returns the started query."""
     return (
-        stream_df.writeStream.foreachBatch(_write)
+        stream_df.writeStream.foreachBatch(
+            lambda batch, _: corpus_io.append_to_index(
+                batch.sparkSession, index_dir, batch
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -151,23 +151,45 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         assert a.score == pytest.approx(b.score, rel=1e-9)
 
 
+def _small_index(spark, docs_df, out):
+    """Write an index of 4/5 of 80 cleaned fixture docs to ``out``;
+    return the other fifth, an append batch."""
+    from pyspark.sql import functions as F
+
+    from modernsearchengines_spark.operators import indexer
+
+    clean = indexer.clean_docs(docs_df.limit(80)).localCheckpoint()
+    in_batch = F.pmod(F.xxhash64("url"), F.lit(5)) == 0
+    idx = indexer.build_index(spark, clean.filter(~in_batch))
+    indexer.write_index(idx, out)
+    indexer.unpersist_index(idx)
+    return clean.filter(in_batch)
+
+
+def _files(root):
+    """relative path → (size, mtime) of every file and directory under
+    ``root``."""
+    import os
+
+    out = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        for name in dirnames + filenames:
+            path = os.path.join(dirpath, name)
+            st = os.stat(path)
+            out[os.path.relpath(path, root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
 def test_append_to_index_reads_no_postings(spark, docs_df, tmp_path, monkeypatch):
     """An append's df refresh is O(batch + vocabulary): no parquet read
     during append_to_index names a path under postings/ (the batch's
     postings are written there, which is not a read)."""
     from pyspark.sql import DataFrameReader
-    from pyspark.sql import functions as F
 
-    from modernsearchengines_spark.operators import indexer
     from modernsearchengines_spark.sources.corpus_io import append_to_index
 
-    clean = indexer.clean_docs(docs_df.limit(80)).localCheckpoint()
     out = str(tmp_path / "idx")
-    idx = indexer.build_index(
-        spark, clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) != 0)
-    )
-    indexer.write_index(idx, out)
-    indexer.unpersist_index(idx)
+    batch = _small_index(spark, docs_df, out)
 
     read = []
     parquet = DataFrameReader.parquet
@@ -177,7 +199,56 @@ def test_append_to_index_reads_no_postings(spark, docs_df, tmp_path, monkeypatch
         return parquet(self, *paths, **options)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    batch = clean.filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
     assert append_to_index(spark, out, batch) > 0
     assert not [p for p in read if "/postings" in p], read
     assert f"{out}/term_df" in read
+
+
+def test_append_failing_before_any_table_write_leaves_no_segment(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """A batch that fails the collision guard (every doc forced onto one
+    doc_id) raises before any table is written, and its enriched segment
+    is removed with it, so the next append is not refused."""
+    import glob
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    out = str(tmp_path / "idx")
+    batch = _small_index(spark, docs_df, out)
+    before = _files(out)
+    monkeypatch.setattr(
+        indexer,
+        "assign_doc_ids",
+        lambda docs: docs.withColumn("doc_id", F.lit(12345).cast("long")),
+    )
+    with pytest.raises(ValueError, match="collision"):
+        append_to_index(spark, out, batch)
+    assert not glob.glob(f"{out}/enriched/segment=append-*")
+    after = _files(out)
+    after.pop("enriched", None)  # the emptied parent of the removed segment
+    assert after == before
+
+
+def test_append_refuses_a_left_segment(spark, docs_df, tmp_path):
+    """A ``segment=append-*`` directory left by an append that stopped
+    part-way makes the next append raise, naming it, before any table is
+    read or written: re-running a batch in that state could append its
+    postings twice."""
+    import os
+
+    import pytest
+
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    out = str(tmp_path / "idx")
+    batch = _small_index(spark, docs_df, out)
+    os.makedirs(f"{out}/enriched/segment=append-x")
+    before = _files(out)
+    with pytest.raises(RuntimeError, match="segment=append-x"):
+        append_to_index(spark, out, batch)
+    assert _files(out) == before

@@ -226,39 +226,99 @@ def test_cosine_pairs_exact_is_lsh_superset(spark):
     assert exact and len(lsh & exact) / len(exact) >= 0.9
 
 
-def test_streaming_ingest_foreachbatch(spark, docs_parquet, tmp_path):
-    """Streamed micro-batches land as enriched segments that, through the
-    shared indexer.score_and_layout, index exactly like build_index on the
-    same docs."""
+def test_streaming_ingest_foreachbatch(spark, docs_df, tmp_path, monkeypatch):
+    """Two streamed micro-batches append, through append_to_index, onto an
+    index built from the first 3/5 of a cleaned corpus, and the result
+    equals build_index over the union (postings, term_df, terms,
+    corpus_stats, reference-query rankings); replaying the stream under a
+    fresh checkpoint appends nothing."""
+    import glob
     import shutil
 
-    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.operators import query
+    from modernsearchengines_spark.sources import corpus_io
+    from modernsearchengines_spark.sources.docs import REFERENCE_QUERIES
     from modernsearchengines_spark.streaming.ingest import start_ingest
 
-    schema = spark.read.parquet(docs_parquet).schema
+    # Split AFTER full-corpus cleaning, as test_corpus_io does, so
+    # cross-batch near-dups cannot diverge the two paths.
+    clean = indexer.clean_docs(docs_df).localCheckpoint()
+    part = F.pmod(F.xxhash64("url"), F.lit(5))
+    out = str(tmp_path / "idx")
+    idx = indexer.build_index(spark, clean.filter(part < 3))
+    indexer.write_index(idx, out)
+    indexer.unpersist_index(idx)
+
+    # One parquet file per micro-batch (maxFilesPerTrigger=1).
     in_dir = tmp_path / "stream_in"
     in_dir.mkdir()
-    shutil.copy(docs_parquet, in_dir / "part-0.parquet")
-    stream = spark.readStream.schema(schema).parquet(str(in_dir))
-    q = start_ingest(
-        stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    streamed = indexer.score_and_layout(
-        spark.read.parquet(str(tmp_path / "out" / "enriched"))
-    )
-    built = indexer.build_index(
-        spark, indexer.clean_docs(spark.read.parquet(docs_parquet))
-    )
+    sizes = []
+    for p in (3, 4):
+        batch = clean.filter(part == p).select(*docs_df.columns)
+        sizes.append(batch.count())
+        batch.coalesce(1).write.parquet(str(tmp_path / f"b{p}"))
+        (part_file,) = glob.glob(str(tmp_path / f"b{p}" / "part-*.parquet"))
+        shutil.move(part_file, in_dir / f"batch-{p}.parquet")
+
+    appended = []
+    append = corpus_io.append_to_index
+
+    def counted(*args):
+        appended.append(append(*args))
+        return appended[-1]
+
+    monkeypatch.setattr(corpus_io, "append_to_index", counted)
+
+    def stream(ckpt):
+        q = start_ingest(
+            spark.readStream.schema(docs_df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(in_dir)),
+            out,
+            str(tmp_path / ckpt),
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    stream("ckpt")
+    assert len(appended) == 2 and all(appended)
+    assert sorted(appended) == sorted(sizes)
+    stream("ckpt_replay")
+    assert appended[2:] == [0, 0]
+
+    streamed = indexer.read_index(spark, out)
+    built = indexer.build_index(spark, clean)
 
     def postings(idx):
         rows = idx["postings"].select("term", "doc_id", "tf", "dl").collect()
         return sorted(tuple(r) for r in rows)
 
-    def terms(idx):
-        return {r.term: (r.df, r.idf) for r in idx["terms"].collect()}
+    def table(idx, name, *cols):
+        return {r[0]: tuple(r[1:]) for r in idx[name].select(*cols).collect()}
 
-    assert postings(streamed)
     assert postings(streamed) == postings(built)
-    assert terms(streamed) == terms(built)
+    assert table(streamed, "term_df", "term", "df") == table(
+        built, "term_df", "term", "df"
+    )
+    t_streamed = table(streamed, "terms", "term", "df", "idf", "term_bucket")
+    t_built = table(built, "terms", "term", "df", "idf", "term_bucket")
+    assert t_streamed.keys() == t_built.keys()
+    for term, (df, idf, bucket) in t_streamed.items():
+        assert (df, bucket) == (t_built[term][0], t_built[term][2])
+        assert idf == pytest.approx(t_built[term][1], rel=1e-12)
+    s_streamed = streamed["corpus_stats"].collect()[0]
+    s_built = built["corpus_stats"].collect()[0]
+    assert s_streamed.n_docs == s_built.n_docs
+    assert s_streamed.avg_doc_len == pytest.approx(s_built.avg_doc_len, rel=1e-12)
+
+    def ranked(idx):
+        rows = query.run_query_batch(spark, idx, REFERENCE_QUERIES, top_k=20)
+        return sorted(
+            (r.qnum, r.rank, r.doc_id, r.url, r.score) for r in rows.collect()
+        )
+
+    r_streamed, r_built = ranked(streamed), ranked(built)
+    assert [r[:4] for r in r_streamed] == [r[:4] for r in r_built]
+    for a, b in zip(r_streamed, r_built):
+        assert a[4] == pytest.approx(b[4], rel=1e-9)
     indexer.unpersist_index(built)

@@ -182,24 +182,42 @@ def test_collision_guard_detects_forced_collision(
 
 def test_write_index_jobs_carry_callers_job_group(spark, spark_index, tmp_path):
     """write_index submits its writers from worker threads; every job they
-    run must still land in the caller's job group, so a per-operator trace
-    attributes the write to its caller and no write job runs group-less."""
+    run must still land in the caller's job group and carry the caller's
+    session tags, so a per-operator trace attributes the write to its
+    caller and no write job runs group-less or untagged.  The threads are
+    wrapped with the session, so pyspark raises no "Spark session is not
+    provided" warning."""
+    import warnings
+
     sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
+    jsc = sc._jsc.sc()
+    bus = jsc.listenerBus()
     tracker = sc.statusTracker()
     group = "test.write_index"
+    tag = "test.write_index.session_tag"
     bus.waitUntilEmpty()
     ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    spark.addTag(tag)
     sc.setJobGroup(group, group)
     try:
-        indexer.write_index(spark_index, str(tmp_path / "idx"))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            indexer.write_index(spark_index, str(tmp_path / "idx"))
     finally:
+        spark.removeTag(tag)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     bus.waitUntilEmpty()
-    assert tracker.getJobIdsForGroup(group)
+    assert not [
+        w for w in caught if "Spark session is not provided" in str(w.message)
+    ]
+    ids = set(tracker.getJobIdsForGroup(group))
+    assert ids
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    for job_id in ids:
+        tags = jsc.statusStore().job(job_id).jobTags().mkString("\n")
+        assert any(t.endswith(tag) for t in tags.split("\n")), (job_id, tags)
 
 
 def test_unpersist_removes_owned_work_dir(spark, docs_df, tmp_path):

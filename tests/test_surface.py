@@ -1,4 +1,5 @@
 """Option ratchet: every defaulted parameter of the program is set somewhere.
+Structure ratchet: only ``operators/indexer.py`` writes partitioned files.
 
 A parameter with a default that no call site in the repository ever sets
 (by keyword or by position, tests included) is a constant dressed up as
@@ -134,6 +135,37 @@ def test_every_defaulted_parameter_is_set_by_some_call():
         "site; make each a constant or give it a caller:\n"
         + "\n".join(f"  {where}: {param}" for where, param in unset)
     )
+
+
+def _writer_partition_calls(tree: ast.AST) -> list[int]:
+    """Lines of ``.partitionBy(`` calls that are not ``Window.partitionBy``
+    (a window spec partitions rows, not files)."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "partitionBy"
+        and not (
+            isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "Window"
+        )
+    ]
+
+
+def test_only_indexer_partitions_written_files():
+    """Structure ratchet: the partitioned postings write lives in
+    ``operators/indexer.py`` alone, so every build and append writes the
+    one postings layout through it."""
+    found = {
+        os.path.relpath(path, REPO): lines
+        for path in _py_files(REPO)
+        if _is_program(path)
+        and (lines := _writer_partition_calls(_parse(path)))
+    }
+    indexer = os.path.join(PROGRAM[0], "operators", "indexer.py")
+    assert len(found.pop(indexer, [])) == 1, "indexer.py writes no partitioned table"
+    assert not found, f"partitioned writes outside indexer.py: {found}"
 
 
 if __name__ == "__main__":
