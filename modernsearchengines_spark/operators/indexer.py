@@ -50,9 +50,11 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -275,10 +277,12 @@ def assign_doc_ids(docs: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Index build
 # --------------------------------------------------------------------------
-def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
+def write_enriched(docs_with_ids: DataFrame, path: str) -> StructType:
     """The build's ONE Arrow crossing: per doc, (aug_len, doc_len) and the
     local postings array, written as the enriched parquet segment that the
-    layout and finalize steps below read.
+    layout and finalize steps below read.  Returns the written frame's
+    schema, so a caller can read the segment back without the job that
+    infers a parquet schema.
 
     Length-capped docs (Q2/Q3) ride along with NULL text into the UDF,
     which emits (aug_len=NULL, doc_len=0, postings=[]) for them: they stay
@@ -287,23 +291,20 @@ def write_enriched(docs_with_ids: DataFrame, path: str) -> None:
     falls back to slow row-based access for nested array<struct> columns,
     while parquet keeps nested reads vectorized.
     """
-    (
-        docs_with_ids.withColumn(
-            "dp",
-            doc_postings_udf(
-                "url",
-                F.when(F.length("text") <= MAX_DOC_CHARS, F.col("text")),
-            ),
-        )
-        .select(
-            "doc_id", "url", "warc_ts",
-            F.col("dp.aug_len").alias("aug_len"),
-            F.col("dp.doc_len").alias("doc_len"),
-            F.col("dp.postings").alias("postings"),
-        )
-        .write.mode("overwrite")
-        .parquet(path)
+    enriched = docs_with_ids.withColumn(
+        "dp",
+        doc_postings_udf(
+            "url",
+            F.when(F.length("text") <= MAX_DOC_CHARS, F.col("text")),
+        ),
+    ).select(
+        "doc_id", "url", "warc_ts",
+        F.col("dp.aug_len").alias("aug_len"),
+        F.col("dp.doc_len").alias("doc_len"),
+        F.col("dp.postings").alias("postings"),
     )
+    enriched.write.mode("overwrite").parquet(path)
+    return enriched.schema
 
 
 def segment_dir(out_dir: str, seg: int | str) -> str:
@@ -349,9 +350,17 @@ def write_postings(postings: DataFrame, out_dir: str, mode: str) -> None:
     partitioned by ``term_bucket``, so the query-time terms join prunes to
     the query terms' buckets (SURVEY O-24).  Repartitioning on the bucket
     first gives each bucket one file per write, not (#tasks × #buckets)
-    shards.  ``mode``: "overwrite" for a build, "append" for an append."""
+    shards.  ``mode``: "overwrite" for a build, "append" for an append.
+
+    The partition count is explicit, ``defaultParallelism``: AQE coalesces
+    a count-less ``repartition("term_bucket")`` of a small write (an
+    append batch) into ONE partition, so one task wrote all 64 bucket
+    files one after another (845 ms of a 1,000-doc index's append, local[4]).
+    AQE leaves an explicit count alone, so the write runs on every core,
+    and hash partitioning still puts each bucket in one task."""
+    n_tasks = postings.sparkSession.sparkContext.defaultParallelism
     (
-        postings.repartition("term_bucket")
+        postings.repartition(n_tasks, "term_bucket")
         .write.mode(mode)
         .partitionBy("term_bucket")
         .parquet(f"{out_dir}/postings")
@@ -384,21 +393,22 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.createDataFrame(table, struct)
 
 
-def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
-    """(N, avg_doc_len, corpus_stats frame) from ONE aggregation over doc
-    stats rows (doc_id, url, aug_len).  N counts ALL cleaned docs even
-    length-capped ones (Q2/Q3); the char sum skips them (NULL aug_len,
-    Q1/Q2).
+CORPUS_STATS_SCHEMA = "n_docs long, avg_doc_len double, chars long"
+
+
+def doc_stats_sums(doc_stats: DataFrame) -> tuple[int, int]:
+    """(N, char sum) of doc stats rows (doc_id, url, aug_len) from ONE
+    aggregation.  N counts ALL cleaned docs even length-capped ones
+    (Q2/Q3); the char sum skips them (NULL aug_len, Q1/Q2).
 
     The same pass checks the doc_id collision invariant: doc_id =
     xxhash64(url) merges two documents iff distinct urls exceed distinct
     ids (birthday bound ≈ n²/2^65 expected colliding pairs — ~27k at
-    10^12 docs; see functions/hashing.py).  Failing here beats silently
+    10^12 docs; see functions/hashing.py).  A NULL doc_id counts as no id,
+    so a row whose id is taken elsewhere fails the check when its doc_id
+    is nulled (the append's probe does so).  Failing here beats silently
     merging postings.  The remedy is a wider two-column key, which is not
     implemented.
-
-    The corpus_stats frame is a :func:`local_frame` (a
-    ``LocalRelation``), so writing it runs no Python-worker task.
     """
     row = doc_stats.agg(
         F.count(F.lit(1)).alias("n"),
@@ -412,14 +422,33 @@ def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
             f"{row.n_ids} distinct xxhash64 ids; the remedy, a wider "
             "two-column key, is not implemented"
         )
-    n_total = row.n
-    avg_doc_len = float((row.chars or 0) / n_total) if n_total else 0.0
-    corpus_stats = local_frame(
-        doc_stats.sparkSession,
-        [(n_total, avg_doc_len)],
-        "n_docs long, avg_doc_len double",
-    )
-    return n_total, avg_doc_len, corpus_stats
+    return row.n, row.chars or 0
+
+
+def corpus_stats_frame(
+    spark: SparkSession, n_docs: int, chars: int
+) -> tuple[float, DataFrame]:
+    """(avg_doc_len, corpus_stats frame) of a corpus of ``n_docs`` docs
+    whose ``aug_len`` sum is ``chars``.  avg_doc_len is chars / N, one
+    rounding, however the sums were reached (a build's one aggregate, or
+    an append's stored sums plus its batch's).  The frame is a
+    :func:`local_frame` (a ``LocalRelation``), so writing it runs no
+    Python-worker task."""
+    avg_doc_len = float(chars / n_docs) if n_docs else 0.0
+    frame = local_frame(spark, [(n_docs, avg_doc_len, chars)], CORPUS_STATS_SCHEMA)
+    return avg_doc_len, frame
+
+
+def finalize_stats(doc_stats: DataFrame) -> tuple[int, float, DataFrame]:
+    """(N, avg_doc_len, corpus_stats frame) of doc stats rows: their
+    :func:`doc_stats_sums` (one aggregation and the collision guard), then
+    :func:`corpus_stats_frame`.  corpus_stats stores ``chars``, the char sum,
+    beside ``n_docs`` and ``avg_doc_len``, so an append adds its batch's
+    sums to the stored ones instead of re-aggregating the corpus (avg·N
+    would round twice)."""
+    n_total, chars = doc_stats_sums(doc_stats)
+    avg_doc_len, frame = corpus_stats_frame(doc_stats.sparkSession, n_total, chars)
+    return n_total, avg_doc_len, frame
 
 
 def term_doc_frequency(rows: DataFrame) -> DataFrame:
@@ -536,22 +565,37 @@ def build_index(
     return index
 
 
+def run_concurrently(spark: SparkSession, *targets) -> None:
+    """Run each no-argument callable of ``targets`` on its own thread and
+    return once all have finished, raising the first failure (in
+    ``targets`` order).  Independent writes submitted this way let the
+    scheduler interleave their stages into slots the others leave idle,
+    instead of paying their job latencies one after another.
+
+    Each target is wrapped here, in the calling thread and with the
+    session (pyspark's ``inheritable_thread_target(spark)``), so its jobs
+    carry the caller's local properties (job group, description, job
+    tags) and the session's tags; a plain worker thread would submit them
+    with none.  The wrapper is taken once per target: it installs the
+    properties object it cloned, so targets sharing one wrapper would
+    share one object, and a SQL execution id one thread sets would show
+    in the others."""
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(target))
+            for target in targets
+        ]
+    for future in futures:
+        future.result()
+
+
 def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
     """Persist the index tables (Iceberg-equivalent Parquet layout):
     postings through :func:`write_postings`, the unpruned vocabulary
-    through :func:`write_term_df`, doc_stats and corpus_stats as is."""
-    from concurrent.futures import ThreadPoolExecutor
+    through :func:`write_term_df`, doc_stats and corpus_stats as is.  The
+    side tables are independent of the big postings job, so they are
+    written beside it (:func:`run_concurrently`)."""
 
-    from pyspark import inheritable_thread_target
-
-    # The side tables are independent of the big postings job — submit them
-    # from worker threads so the Spark scheduler interleaves their (small)
-    # stages into slots the memory-bound postings exchange leaves idle,
-    # instead of paying their job latencies serially afterwards.  Each
-    # target is wrapped here, in the calling thread and with the session,
-    # so its jobs carry the caller's local properties (job group,
-    # description, job tags) and the session's tags; a plain worker
-    # thread would submit them with none.
     def _write_postings() -> None:
         write_postings(index["postings"], out_dir, "overwrite")
 
@@ -564,12 +608,9 @@ def write_index(index: dict[str, DataFrame], out_dir: str) -> None:
             f"{out_dir}/corpus_stats"
         )
 
-    inherit = inheritable_thread_target(index["postings"].sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(inherit(_write_postings))
-        f_side = pool.submit(inherit(_write_side_tables))
-        f_post.result()
-        f_side.result()
+    run_concurrently(
+        index["postings"].sparkSession, _write_postings, _write_side_tables
+    )
 
 
 def unpersist_index(index: dict[str, DataFrame]) -> None:

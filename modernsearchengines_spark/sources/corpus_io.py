@@ -77,31 +77,41 @@ def append_to_index(
     Steps (the build's own pieces, indexer module docstring):
       1. refuse, naming it, while an ``enriched/segment=append-*``
          directory is in the index (crash windows below);
-      2. clean + id the batch, drop urls already in doc_stats (INSERT OR
-         IGNORE semantics, same key as :func:`append_new_docs`);
+      2. clean + id the batch and probe its doc_ids against doc_stats'
+         (doc_id, url) — the append's one doc_stats read: a doc_id held by
+         the same url is already indexed and dropped (INSERT OR IGNORE,
+         same key as :func:`append_new_docs`); one held by another url is
+         a collision, kept with a NULL doc_id so the guard below counts it;
       3. write the survivors as a new enriched segment — the batch's one
          evaluation — and read it once; the doc stats, postings and df
-         below all come from that frame.  An empty segment is removed and
-         nothing else is touched.  Then run the collision guard over
-         old ∪ new doc stats (indexer.finalize_stats).  If this step
-         raises, the segment is removed and no table has been touched;
-      4. append the segment's postings (indexer.write_postings — the
-         unpruned layout every build writes, so a term whose df crosses
-         the threshold through this batch finds its postings on disk);
-      5. refresh doc_stats (append) and corpus_stats, and merge the
-         batch's df into the unpruned ``term_df`` (old ⊎ batch, summed per
-         term, staged by indexer.write_term_df and swapped in), then
-         remove the segment.  No posting file is read: the refresh costs
+         below all come from that frame.  One aggregate over it gives the
+         batch's n, char sum and collision guard
+         (indexer.doc_stats_sums); an empty segment is removed and nothing
+         else is touched.  corpus_stats becomes N + n and (chars + c) / N'
+         from its stored sums (an index written before ``chars`` was
+         stored sums doc_stats' aug_len once).  If this step raises, the
+         segment is removed and no table has been touched;
+      4. on concurrent threads (indexer.run_concurrently): append the
+         segment's postings (indexer.write_postings — the unpruned layout
+         every build writes, so a term whose df crosses the threshold
+         through this batch finds its postings on disk); append doc_stats,
+         then overwrite corpus_stats; stage the merged unpruned
+         ``term_df`` (old ⊎ batch, summed per term, indexer.write_term_df)
+         beside the live one;
+      5. once all three have finished, swap the staged ``term_df`` in and
+         remove the segment.  No posting file is read and no corpus-wide
+         aggregate runs: the refresh costs one narrow doc_stats probe plus
          O(batch + vocabulary); the terms frame is derived on open.
 
-    Crash windows.  An append that stops after step 3 began leaves its
-    segment directory, so step 1 refuses every later append:
+    Crash windows.  Nothing is written before step 3's guard passes.  An
+    append that stops after step 3 began leaves its segment directory, so
+    step 1 refuses every later append:
       * killed inside step 3: no table changed; remove the directory and
         re-run the batch;
-      * after the postings append, before the swap: the batch is in
-        postings but not yet in term_df (nor, before the doc_stats
-        append, in doc_stats); a re-run, were it let through, would
-        append its postings twice or repair nothing; rebuild;
+      * inside step 4, or after it but before the swap: any subset of
+        postings, doc_stats and corpus_stats may hold the batch, and
+        term_df does not; a re-run, were it let through, would append its
+        postings twice or repair nothing; rebuild;
       * inside the swap: no ``term_df/``, the complete merged table in
         ``_term_df_*``; rename it to ``term_df``, remove the directory;
       * after the swap: the index is complete; remove the directory.
@@ -129,23 +139,43 @@ def append_to_index(
     new_docs = new_docs.dropDuplicates(["url"])
 
     doc_stats_path = f"{index_dir}/doc_stats"
-    existing = spark.read.parquet(doc_stats_path)
-    docs = indexer.assign_doc_ids(indexer.clean_docs(new_docs)).join(
-        existing.select("url"), "url", "left_anti"
+    indexed_url = F.col("_indexed_url")
+    docs = (
+        indexer.assign_doc_ids(indexer.clean_docs(new_docs))
+        .join(
+            spark.read.schema("doc_id long, url string")
+            .parquet(doc_stats_path)
+            .withColumnRenamed("url", "_indexed_url"),
+            "doc_id",
+            "left",
+        )
+        .filter(indexed_url.isNull() | (indexed_url != F.col("url")))
+        .withColumn("doc_id", F.when(indexed_url.isNull(), F.col("doc_id")))
     )
 
-    # Write first, count the written rows: counting the anti-joined batch
-    # up front would run clean, simhash and the anti-join twice.
+    # Write first, aggregate the written rows: counting the probed batch
+    # up front would run clean, simhash and the probe twice.
     try:
-        indexer.write_enriched(docs, seg_dir)
-        segment = spark.read.parquet(seg_dir)
-        new_stats = segment.select(
-            "doc_id", "url", "warc_ts", "aug_len", "doc_len"
-        )
-        n_new = new_stats.count()
+        schema = indexer.write_enriched(docs, seg_dir)
+        segment = spark.read.schema(schema).parquet(seg_dir)
+        n_new, chars_new = indexer.doc_stats_sums(segment)
         if n_new:
-            _, _, corpus_stats = indexer.finalize_stats(
-                existing.unionByName(new_stats)
+            stored = (
+                spark.read.schema(indexer.CORPUS_STATS_SCHEMA)
+                .parquet(f"{index_dir}/corpus_stats")
+                .collect()[0]
+            )
+            chars = stored.chars
+            if chars is None:  # written before corpus_stats stored it
+                chars = (
+                    spark.read.schema("aug_len long")
+                    .parquet(doc_stats_path)
+                    .agg(F.sum("aug_len"))
+                    .collect()[0][0]
+                    or 0
+                )
+            _, corpus_stats = indexer.corpus_stats_frame(
+                spark, stored.n_docs + n_new, chars + chars_new
             )
     except BaseException:
         fsio.rmtree(spark, seg_dir)
@@ -154,21 +184,33 @@ def append_to_index(
         fsio.rmtree(spark, seg_dir)
         return 0
 
-    indexer.write_postings(indexer.layout_postings(segment), index_dir, "append")
-    new_stats.write.mode("append").parquet(doc_stats_path)
-    corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
-
     # Stage the merged vocabulary BEFORE touching term_df (it is read
-    # while the merge writes), then swap it in.
+    # while the merge writes), then swap it in once every write is done.
     term_df_dir = f"{index_dir}/term_df"
     staging = f"{index_dir}/_term_df_{uuid.uuid4().hex[:8]}"
-    indexer.write_term_df(
-        spark.read.parquet(term_df_dir)
-        .unionByName(indexer.enriched_term_df(segment))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df")),
-        staging,
-    )
+
+    def append_postings() -> None:
+        indexer.write_postings(
+            indexer.layout_postings(segment), index_dir, "append"
+        )
+
+    def append_stats() -> None:
+        segment.select(
+            "doc_id", "url", "warc_ts", "aug_len", "doc_len"
+        ).write.mode("append").parquet(doc_stats_path)
+        corpus_stats.write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
+
+    def stage_term_df() -> None:
+        indexer.write_term_df(
+            spark.read.schema("term string, df long")
+            .parquet(term_df_dir)
+            .unionByName(indexer.enriched_term_df(segment))
+            .groupBy("term")
+            .agg(F.sum("df").alias("df")),
+            staging,
+        )
+
+    indexer.run_concurrently(spark, append_postings, append_stats, stage_term_df)
     fsio.rmtree(spark, term_df_dir)
     fsio.move(spark, staging, term_df_dir)
     fsio.rmtree(spark, seg_dir)

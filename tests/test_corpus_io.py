@@ -151,18 +151,30 @@ def test_append_to_index_no_posting_rewrite(spark, docs_df, tmp_path):
         assert a.score == pytest.approx(b.score, rel=1e-9)
 
 
-def _small_index(spark, docs_df, out):
-    """Write an index of 4/5 of 80 cleaned fixture docs to ``out``;
-    return the other fifth, an append batch."""
+def _write_index(spark, clean, out):
+    from modernsearchengines_spark.operators import indexer
+
+    idx = indexer.build_index(spark, clean)
+    indexer.write_index(idx, out)
+    indexer.unpersist_index(idx)
+
+
+def _split(spark, docs_df):
+    """(80 cleaned fixture docs, the fifth of them that is the append
+    batch)."""
     from pyspark.sql import functions as F
 
     from modernsearchengines_spark.operators import indexer
 
     clean = indexer.clean_docs(docs_df.limit(80)).localCheckpoint()
-    in_batch = F.pmod(F.xxhash64("url"), F.lit(5)) == 0
-    idx = indexer.build_index(spark, clean.filter(~in_batch))
-    indexer.write_index(idx, out)
-    indexer.unpersist_index(idx)
+    return clean, F.pmod(F.xxhash64("url"), F.lit(5)) == 0
+
+
+def _small_index(spark, docs_df, out):
+    """Write an index of 4/5 of 80 cleaned fixture docs to ``out``;
+    return the other fifth, an append batch."""
+    clean, in_batch = _split(spark, docs_df)
+    _write_index(spark, clean.filter(~in_batch), out)
     return clean.filter(in_batch)
 
 
@@ -252,3 +264,114 @@ def test_append_refuses_a_left_segment(spark, docs_df, tmp_path):
     with pytest.raises(RuntimeError, match="segment=append-x"):
         append_to_index(spark, out, batch)
     assert _files(out) == before
+
+
+def test_append_collision_with_an_indexed_doc(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """A batch url whose doc_id is already held by ANOTHER indexed url is
+    a collision: the append raises before any table is written, and its
+    segment is removed.  (The test above collides inside the batch.)"""
+    import glob
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    out = str(tmp_path / "idx")
+    batch = _small_index(spark, docs_df, out)
+    taken = indexer.read_index(spark, out)["doc_stats"].first().doc_id
+    victim = batch.first().url
+    assign = indexer.assign_doc_ids
+    monkeypatch.setattr(
+        indexer,
+        "assign_doc_ids",
+        lambda docs: assign(docs).withColumn(
+            "doc_id",
+            F.when(F.col("url") == victim, F.lit(taken)).otherwise(
+                F.col("doc_id")
+            ),
+        ),
+    )
+    before = _files(out)
+    with pytest.raises(ValueError, match="collision"):
+        append_to_index(spark, out, batch)
+    assert not glob.glob(f"{out}/enriched/segment=append-*")
+    after = _files(out)
+    after.pop("enriched", None)  # the emptied parent of the removed segment
+    assert after == before
+
+
+def test_append_to_an_index_without_stored_chars(spark, docs_df, tmp_path):
+    """An index written before corpus_stats stored ``chars`` gets it from
+    one doc_stats sum on its first append: N and avg_doc_len then equal a
+    build over the union, and the rewritten corpus_stats stores chars."""
+    import pytest
+
+    from modernsearchengines_spark.operators import indexer
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    clean, in_batch = _split(spark, docs_df)
+    out, full = str(tmp_path / "idx"), str(tmp_path / "full")
+    _write_index(spark, clean.filter(~in_batch), out)
+    _write_index(spark, clean, full)
+
+    old = spark.read.parquet(f"{out}/corpus_stats").collect()[0]
+    spark.createDataFrame(
+        [(old.n_docs, old.avg_doc_len)], "n_docs long, avg_doc_len double"
+    ).write.mode("overwrite").parquet(f"{out}/corpus_stats")
+    assert spark.read.parquet(f"{out}/corpus_stats").columns == [
+        "n_docs", "avg_doc_len"
+    ]
+
+    assert append_to_index(spark, out, clean.filter(in_batch)) > 0
+    got = spark.read.parquet(f"{out}/corpus_stats").collect()[0]
+    want = spark.read.parquet(f"{full}/corpus_stats").collect()[0]
+    assert got.n_docs == want.n_docs
+    assert got.avg_doc_len == pytest.approx(want.avg_doc_len, rel=1e-12)
+    assert got.chars == want.chars
+
+
+def test_append_jobs_carry_callers_job_group(spark, docs_df, tmp_path):
+    """append_to_index runs its writes on worker threads; every job of the
+    append must still land in the caller's job group and carry the
+    caller's session tags, so a per-operator trace attributes the whole
+    append to its caller.  The threads are wrapped with the session, so
+    pyspark raises no "Spark session is not provided" warning."""
+    import warnings
+
+    from modernsearchengines_spark.sources.corpus_io import append_to_index
+
+    out = str(tmp_path / "idx")
+    batch = _small_index(spark, docs_df, out)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    bus = jsc.listenerBus()
+    tracker = sc.statusTracker()
+    group = "test.append_to_index"
+    tag = "test.append_to_index.session_tag"
+    bus.waitUntilEmpty()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    spark.addTag(tag)
+    sc.setJobGroup(group, group)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert append_to_index(spark, out, batch) > 0
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    bus.waitUntilEmpty()
+    assert not [
+        w for w in caught if "Spark session is not provided" in str(w.message)
+    ]
+    ids = set(tracker.getJobIdsForGroup(group))
+    assert ids
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    for job_id in ids:
+        tags = jsc.statusStore().job(job_id).jobTags().mkString("\n")
+        assert any(t.endswith(tag) for t in tags.split("\n")), (job_id, tags)

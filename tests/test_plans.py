@@ -257,8 +257,11 @@ def test_corpus_stats_is_a_local_relation(spark):
     )
     n, avg, stats = finalize_stats(doc_stats)
     assert stats._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
-    assert stats.schema.simpleString() == "struct<n_docs:bigint,avg_doc_len:double>"
-    assert [tuple(r) for r in stats.collect()] == [(3, 10.0)] == [(n, avg)]
+    assert stats.schema.simpleString() == (
+        "struct<n_docs:bigint,avg_doc_len:double,chars:bigint>"
+    )
+    assert [tuple(r) for r in stats.collect()] == [(3, 10.0, 30)]
+    assert (n, avg) == (3, 10.0)
 
 
 def _opened_index(spark, docs_df, tmp_path):

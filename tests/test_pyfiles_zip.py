@@ -101,6 +101,10 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     write_docs_parquet(generate_docs(120), docs_path)
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # the job's own temp root, so a temporary directory it leaves is seen
+    tmp_root = tmp_path / "tmp"
+    tmp_root.mkdir()
+    env["TMPDIR"] = str(tmp_root)
     out = subprocess.run(
         [
             SPARK_SUBMIT,
@@ -135,3 +139,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     # the written index is complete and loadable
     for table in ("postings", "doc_stats", "term_df", "corpus_stats"):
         assert os.path.exists(os.path.join(out_dir, table)), table
+    # the build's temporary enriched segment is removed, not leaked
+    assert not [
+        d for d in os.listdir(tmp_root) if d.startswith("msengines_idx_")
+    ], os.listdir(tmp_root)

@@ -41,6 +41,9 @@ def main() -> int:
     indexer.write_index(index, out_dir)
     wall = time.time() - t0
     n_docs = index["corpus_stats"].collect()[0].n_docs
+    # the classic build's enriched segment lives in a temporary directory
+    # that only unpersist_index removes
+    indexer.unpersist_index(index)
     print(
         json.dumps(
             {
